@@ -20,10 +20,11 @@ Semantics parity notes (reference = /root/reference/src/drift_autopsy):
   the exact ``np.linspace`` doubles as cutoffs.
 * KS D == the max |ECDF_ref - ECDF_test| over pooled sample points, i.e.
   exactly scipy.stats.ks_2samp's statistic: computed distributed via
-  per-value pre-aggregation + a per-feature cumulative window (§2.4 A10 in
-  SURVEY.md).  The groupBy(feature, value) partial aggregation shrinks the
-  window input to distinct values, so the single-reducer-per-feature window
-  only ever sees the value domain, not the row count.
+  per-value pre-aggregation + ONE exact cumulative-count frame
+  (``_cdf_cum_frame``, §2.4 A10 in SURVEY.md) that W1, CvM/AD,
+  per-partition W1 and the reference-ECDF thinning share.  The
+  groupBy(feature, value) partial aggregation shrinks the window input to
+  distinct values, and the value buckets split each feature's window.
 """
 
 from __future__ import annotations
@@ -78,6 +79,11 @@ def quantile_edges(
     best-of-3 at sf0.1: 2.26 s → 1.56 s for 4 columns).  Values are
     bit-identical (same per-column aggregate expression; locked by the
     pd.qcut parity tests).
+
+    Cost note: each per-column job re-runs ``df``'s whole lineage.  On a
+    plain columnar scan that is the cheap disjoint read above; when ``df``
+    is a derived plan (joins, UDFs, shuffles) every column repeats that
+    upstream work — persist or checkpoint such an input first.
     """
     if not cols:
         return {}
@@ -402,12 +408,15 @@ def categorical_proportions(
 
 
 # ---------------------------------------------------------------------------
-# Distributed two-sample KS statistic
+# Exact two-sample CDF statistics (KS, W1, CvM/AD): one cumulative frame
 # ---------------------------------------------------------------------------
 
 
-def _melt(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """(feature, value) long form; NaN/null dropped (pandas dropna parity).
+def _melt(
+    df: DataFrame, cols: Sequence[str], part_col: Optional[str] = None
+) -> DataFrame:
+    """(feature, value) long form, led by ``part`` when ``part_col`` is
+    given; NaN/null dropped (pandas dropna parity).
 
     Deliberately NOT spread_input-guarded: an interleaved A/B at sf0.1
     showed the extra round-robin exchange costs more than the explode
@@ -418,18 +427,28 @@ def _melt(df: DataFrame, cols: Sequence[str]) -> DataFrame:
         F.struct(F.lit(c).alias("feature"), F.col(c).cast("double").alias("value"))
         for c in cols
     ]
+    sel = [F.col(part_col).alias("part")] if part_col else []
+    keys = ["part"] if part_col else []
     return (
-        df.select(F.explode(F.array(*structs)).alias("fv"))
-        .select("fv.feature", "fv.value")
+        df.select(*sel, F.explode(F.array(*structs)).alias("fv"))
+        .select(*keys, "fv.feature", "fv.value")
         .where(F.col("value").isNotNull() & ~F.isnan("value"))
     )
 
 
-#: fused-path load-balance targets: aim for ~this many distinct values per
-#: (feature, bucket) window group, with at most this many buckets per
+#: uniform-rule load-balance targets: aim for ~this many distinct values
+#: per (keys, bucket) window group, with at most this many buckets per
 #: feature (the per-bucket offsets frame stays a tiny broadcast)
 _CDF_ROWS_PER_BUCKET = 16_000
 _CDF_MAX_BUCKETS = 1024
+#: features whose approximate distinct count exceeds this take the
+#: equal-mass rule instead: this many buckets cut at approx percentiles
+_CDF_BUCKETED_THRESHOLD = 4_000_000
+_CDF_PERCENTILE_BUCKETS = 64
+#: decimals each W1 / CvM-AD term is rounded to before its exact decimal
+#: sum (see wasserstein_all and cvm_ad_all)
+_W1_QUANTIZE = 9
+_CVM_AD_QUANTIZE = 18
 
 
 def _cdf_prescan(
@@ -530,35 +549,15 @@ def _cdf_route(
     return nm, fused, big
 
 
-def _cdf_cum_frame(
-    g: DataFrame,
-    prescan: Dict[str, tuple],
-    feats: Sequence[str],
-    with_gap: bool = False,
-) -> DataFrame:
-    """The fused exact-cumulative frame over the per-value counts ``g``:
-    one action computes, for every (feature, value), the exact global
-    cumulative side counts and side totals — with the per-feature
-    cumulative window split into value-ordered UNIFORM buckets so the
-    sort/window/term work runs bucket-parallel instead of one task per
-    feature.
-
-    Shape: bucket id = floor((value - lo) / (hi - lo) * nb) (a flat
-    arithmetic expression from the prescan bounds — deterministic and
-    order-preserving, so within-bucket running sums + exact cross-bucket
-    prefix offsets reconstruct the EXACT global cumulative counts) →
-    running window per (feature, bkt) → the per-bucket totals aggregate
-    re-reads the same shuffled exchange (ReuseExchange; the offsets frame
-    is O(features x buckets) and broadcasts) → prefix offsets, per-feature
-    totals (and, for W1, the next non-empty bucket's minimum — the
-    boundary gap) come from tiny windows over that aggregate.
-
-    Returns columns: feature, value, r, t, cr, ct, n, m (+ nxt when
-    ``with_gap`` — NULL at the last distinct value of a feature).
-    Uniform buckets are a LOAD-BALANCE choice only; any deterministic
-    monotone bucketing yields identical statistics (locked by the
-    layout/bucketed bit-parity tests)."""
-    bucket = F.lit(0)
+def _uniform_buckets(
+    prescan: Dict[str, tuple], feats: Sequence[str]
+) -> Dict[str, Column]:
+    """{feature: bucket column} by the UNIFORM rule: bucket id =
+    floor((value - lo) / (hi - lo) * nb) from the prescan bounds, with nb
+    sized to ~``_CDF_ROWS_PER_BUCKET`` distinct values (capped at
+    ``_CDF_MAX_BUCKETS``).  A flat arithmetic expression — no job.
+    Features that get one bucket are left out (bucket 0)."""
+    out: Dict[str, Column] = {}
     for c in feats:
         n, m, lo, hi, nd = prescan[c]
         nb = max(1, min(
@@ -569,7 +568,7 @@ def _cdf_cum_frame(
             and lo is not None and hi is not None
             and math.isfinite(lo) and math.isfinite(hi) and hi > lo
         ):
-            bc = F.least(
+            out[c] = F.least(
                 F.greatest(
                     F.floor(
                         (F.col("value") - F.lit(float(lo)))
@@ -579,94 +578,133 @@ def _cdf_cum_frame(
                 ),
                 F.lit(nb - 1),
             )
-        else:
-            bc = F.lit(0)
+    return out
+
+
+def _equal_mass_buckets(
+    g: DataFrame, feats: Sequence[str]
+) -> Dict[str, Column]:
+    """{feature: bucket column} by the EQUAL-MASS rule: one collect of
+    per-feature ``percentile_approx`` edges over the distinct values in
+    ``g`` at ``_CDF_PERCENTILE_BUCKETS`` equal-mass cuts; the bucket id
+    counts the edges below the value.  Robust to value-skew where the
+    uniform rule could leave one bucket hot."""
+    nb = _CDF_PERCENTILE_BUCKETS
+    probs = F.array(*[F.lit(i / nb) for i in range(1, nb)])
+    edge_rows = (
+        g.where(F.col("feature").isin(list(feats)))
+        .groupBy("feature")
+        .agg(F.percentile_approx("value", probs, 10_000).alias("edges"))
+        .collect()
+    )
+    out: Dict[str, Column] = {}
+    for r in edge_rows:
+        b = F.lit(0)
+        for e in r["edges"]:
+            b = b + (F.col("value") > F.lit(float(e))).cast("int")
+        out[r["feature"]] = b
+    return out
+
+
+def _cdf_cum_frame(
+    g: DataFrame,
+    keys: Sequence[str],
+    buckets: Dict[str, Column],
+    with_gap: bool = False,
+) -> DataFrame:
+    """THE exact cumulative-count primitive: over per-value side counts
+    ``g(*keys, value, r, t)`` (``keys`` = ["feature"] or ["part",
+    "feature"]), one plan computes for every row the exact cumulative
+    side counts within its ``keys`` group and the group's side totals —
+    with the cumulative window split into value-ordered buckets so the
+    sort/window/term work runs bucket-parallel instead of one task per
+    group.
+
+    ``buckets`` maps a feature to its bucket-id column (from
+    :func:`_uniform_buckets` or :func:`_equal_mass_buckets`; absent
+    features take bucket 0).  Any deterministic, value-monotone bucketing
+    reconstructs the EXACT cumulative counts: running window per
+    (keys, bkt) → the per-bucket totals aggregate re-reads the same
+    shuffled exchange (ReuseExchange; the offsets frame is
+    O(groups x buckets) and broadcasts) → prefix offsets, group totals
+    (and, for W1, the next non-empty bucket's minimum — the boundary gap)
+    come from tiny windows over that aggregate.  Bucket layout is a
+    LOAD-BALANCE choice only (locked by the layout/route bit-parity
+    tests).
+
+    Returns columns: keys, value, r, t, cr, ct, n, m (+ nxt when
+    ``with_gap`` — NULL at the last distinct value of a group)."""
+    keys = list(keys)
+    bucket = F.lit(0)
+    for c, bc in buckets.items():
         bucket = F.when(F.col("feature") == c, bc).otherwise(bucket)
     gb = g.withColumn("bkt", bucket)
 
     bt_aggs = [F.sum("r").alias("rs"), F.sum("t").alias("ts")]
     if with_gap:
         bt_aggs.append(F.min("value").alias("mn"))
-    bt = gb.groupBy("feature", "bkt").agg(*bt_aggs)
-    w_off = (
-        Window.partitionBy("feature")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = Window.partitionBy("feature")
+    bt = gb.groupBy(*keys, "bkt").agg(*bt_aggs)
+    w_bkt = Window.partitionBy(*keys).orderBy("bkt")
+    w_off = w_bkt.rowsBetween(Window.unboundedPreceding, -1)
+    w_tot = Window.partitionBy(*keys)
     off_cols = [
-        F.col("feature"), F.col("bkt"),
+        *keys, "bkt",
         F.coalesce(F.sum("rs").over(w_off), F.lit(0)).alias("roff"),
         F.coalesce(F.sum("ts").over(w_off), F.lit(0)).alias("toff"),
         F.sum("rs").over(w_tot).alias("n"),
         F.sum("ts").over(w_tot).alias("m"),
     ]
     if with_gap:
-        off_cols.append(
-            F.lead("mn").over(Window.partitionBy("feature").orderBy("bkt"))
-            .alias("nxt_bkt")
-        )
+        off_cols.append(F.lead("mn").over(w_bkt).alias("nxt_bkt"))
     offs = bt.select(*off_cols)
 
-    w_loc = (
-        Window.partitionBy("feature", "bkt")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w_ord = Window.partitionBy(*keys, "bkt").orderBy("value")
+    w_loc = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     pre_cols = [
-        F.col("feature"), F.col("bkt"), F.col("value"),
-        F.col("r"), F.col("t"),
+        *keys, "bkt", "value", "r", "t",
         F.sum("r").over(w_loc).alias("lcr"),
         F.sum("t").over(w_loc).alias("lct"),
     ]
     if with_gap:
-        pre_cols.append(
-            F.lead("value")
-            .over(Window.partitionBy("feature", "bkt").orderBy("value"))
-            .alias("nxt_in")
-        )
+        pre_cols.append(F.lead("value").over(w_ord).alias("nxt_in"))
     pre = gb.select(*pre_cols)
 
     sel = [
-        F.col("feature"), F.col("value"), F.col("r"), F.col("t"),
+        *keys, "value", "r", "t",
         (F.col("lcr") + F.col("roff")).alias("cr"),
         (F.col("lct") + F.col("toff")).alias("ct"),
-        F.col("n"), F.col("m"),
+        "n", "m",
     ]
     if with_gap:
         sel.append(F.coalesce("nxt_in", "nxt_bkt").alias("nxt"))
-    return pre.join(F.broadcast(offs), ["feature", "bkt"]).select(*sel)
+    return pre.join(F.broadcast(offs), [*keys, "bkt"]).select(*sel)
 
 
-def ks_d_all(
+def _cdf_statistic(
+    fn_name: str,
     ref_df: DataFrame,
     test_df: DataFrame,
     cols: Sequence[str],
-    bucketed_threshold: int = 4_000_000,
-    n_buckets: int = 64,
-) -> Dict[str, Tuple[float, int, int]]:
-    """Exact KS D per feature, fully distributed.
+    aggs: Sequence[Column],
+    with_gap: bool = False,
+) -> Dict[str, tuple]:
+    """{feature: (*aggs, n_ref, m_test)} — the shared plan of the exact
+    two-sample CDF statistics; ``aggs`` are per-feature aggregates over
+    :func:`_cdf_cum_frame`'s columns (the statistic's scoring).
 
-    Plan: ONE light prescan (per-column counts/min/max/HLL — no explode,
-    no shuffle) for sample sizes and routing, then ONE fused job: melt
-    both sides → union → groupBy(feature, value) pre-aggregate side
-    counts (partial agg map-side) → bucket-parallel cumulative windows
-    (:func:`_cdf_cum_frame`) → max |cdf_ref - cdf_test|.  D is attained
-    at sample points, and the cumulative count at a distinct value equals
-    searchsorted(..., side='right'), so this is exactly scipy's
-    statistic.
-
-    Features whose approximate distinct count exceeds
-    ``bucketed_threshold`` switch to the equal-mass percentile
-    decomposition (:func:`_ks_d_bucketed`) — same exact D, robust to
-    value-skew where the fused path's uniform buckets could run hot.
-
-    Returns {feature: (d, n_ref, m_test)}.
-    """
+    ONE light prescan (per-column counts/min/max, HLL only where it can
+    matter — no explode, no shuffle) gives the sample sizes and the route,
+    then ONE fused job: melt both sides → union → groupBy(feature, value)
+    pre-aggregated side counts (partial agg map-side; the shuffle carries
+    only distinct values) → bucket-parallel cumulative frame → ``aggs``.
+    Features above ``_CDF_BUCKETED_THRESHOLD`` approximate distinct values
+    get equal-mass buckets, which costs one edges collect first; every
+    route is exact.  Features empty on either side are skipped with a
+    warning (KS convention)."""
     if not cols:
         return {}
-    prescan = _cdf_prescan(ref_df, test_df, cols, bucketed_threshold)
-    nm, fused, big = _cdf_route("ks_d_all", prescan, bucketed_threshold)
+    prescan = _cdf_prescan(ref_df, test_df, cols, _CDF_BUCKETED_THRESHOLD)
+    nm, fused, big = _cdf_route(fn_name, prescan, _CDF_BUCKETED_THRESHOLD)
     if not fused and not big:
         return {}
     u = _melt(ref_df, cols).withColumn("r", F.lit(1)).withColumn("t", F.lit(0)).unionByName(
@@ -674,103 +712,50 @@ def ks_d_all(
     )
     g = u.groupBy("feature", "value").agg(
         F.sum("r").alias("r"), F.sum("t").alias("t")
-    )
-    out: Dict[str, Tuple[float, int, int]] = {}
+    ).where(F.col("feature").isin(fused + big))
+    buckets = _uniform_buckets(prescan, fused)
     if big:
-        # the percentile path runs 3 actions over g — persist it
+        # the edges collect and the scoring job both read g — persist it
         g = g.persist()
     try:
-        if fused:
-            cum = _cdf_cum_frame(
-                g.where(F.col("feature").isin(fused)), prescan, fused
-            )
-            scored = cum.select(
-                "feature",
-                F.abs(
-                    F.col("cr") / F.col("n") - F.col("ct") / F.col("m")
-                ).alias("diff"),
-            )
-            rows = scored.groupBy("feature").agg(F.max("diff").alias("d")).collect()
-            out.update(
-                {r["feature"]: (float(r["d"]), *nm[r["feature"]]) for r in rows}
-            )
         if big:
-            out.update(
-                _ks_d_bucketed(g.where(F.col("feature").isin(big)), nm, n_buckets)
-            )
-        return out
+            buckets.update(_equal_mass_buckets(g, big))
+        rows = (
+            _cdf_cum_frame(g, ["feature"], buckets, with_gap)
+            .groupBy("feature")
+            .agg(*aggs)
+            .collect()
+        )
     finally:
         if big:
             g.unpersist()
+    return {
+        r["feature"]: (*(float(v) for v in r[1:]), *nm[r["feature"]])
+        for r in rows
+    }
 
 
-def _ks_d_bucketed(
-    g: DataFrame, nm: Dict[str, Tuple[int, int]], n_buckets: int
-) -> Dict:
-    """Exact D via coarse value-buckets: within-bucket cumulative windows
-    run ``n_buckets``-way parallel per feature; exact prefix offsets of
-    earlier buckets are added through a broadcast join."""
-    import pandas as pd
+def _cdf_diff():
+    """|CDF_ref - CDF_test| at each pooled distinct value."""
+    return F.abs(F.col("cr") / F.col("n") - F.col("ct") / F.col("m"))
 
-    spark = g.sparkSession
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    edge_rows = g.groupBy("feature").agg(
-        F.percentile_approx(
-            "value", F.array(*[F.lit(p) for p in probs]), 10_000
-        ).alias("edges")
-    ).collect()
-    bucket = F.lit(0)
-    for r in edge_rows:
-        b = F.lit(0)
-        for e in r["edges"]:
-            b = b + (F.col("value") > F.lit(float(e))).cast("int")
-        bucket = F.when(F.col("feature") == r["feature"], b).otherwise(bucket)
-    bucketed = g.withColumn("bkt", bucket)
 
-    offs_rows = bucketed.groupBy("feature", "bkt").agg(
-        F.sum("r").alias("rs"), F.sum("t").alias("ts")
-    ).collect()
-    per_feat: Dict[str, list] = {}
-    for r in offs_rows:
-        per_feat.setdefault(r["feature"], []).append(r)
-    offs = []
-    for feat, rows in per_feat.items():
-        roff = toff = 0
-        for r in sorted(rows, key=lambda x: x["bkt"]):
-            offs.append((feat, int(r["bkt"]), roff, toff))
-            roff += int(r["rs"])
-            toff += int(r["ts"])
-    offs_df = spark.createDataFrame(
-        pd.DataFrame(offs, columns=["feature", "bkt", "roff", "toff"])
+def ks_d_all(
+    ref_df: DataFrame,
+    test_df: DataFrame,
+    cols: Sequence[str],
+) -> Dict[str, Tuple[float, int, int]]:
+    """Exact KS D per feature, fully distributed (:func:`_cdf_statistic`):
+    max |cdf_ref - cdf_test| over the pooled distinct values.  D is
+    attained at sample points, and the cumulative count at a distinct
+    value equals searchsorted(..., side='right'), so this is exactly
+    scipy's statistic.
+
+    Returns {feature: (d, n_ref, m_test)}.
+    """
+    return _cdf_statistic(
+        "ks_d_all", ref_df, test_df, cols, [F.max(_cdf_diff()).alias("d")]
     )
-    nm_df = spark.createDataFrame(
-        pd.DataFrame(
-            [(f, n, m) for f, (n, m) in nm.items()], columns=["feature", "n", "m"]
-        )
-    )
-    w_cum = (
-        Window.partitionBy("feature", "bkt")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    scored = (
-        bucketed.select(
-            "feature", "bkt",
-            F.sum("r").over(w_cum).alias("lcr"),
-            F.sum("t").over(w_cum).alias("lct"),
-        )
-        .join(F.broadcast(offs_df), ["feature", "bkt"])
-        .join(F.broadcast(nm_df), "feature")
-        .select(
-            "feature",
-            F.abs(
-                (F.col("lcr") + F.col("roff")) / F.col("n")
-                - (F.col("lct") + F.col("toff")) / F.col("m")
-            ).alias("diff"),
-        )
-    )
-    rows = scored.groupBy("feature").agg(F.max("diff").alias("d")).collect()
-    return {r["feature"]: (float(r["d"]), *nm[r["feature"]]) for r in rows}
 
 
 # ---------------------------------------------------------------------------
@@ -782,9 +767,6 @@ def wasserstein_all(
     ref_df: DataFrame,
     test_df: DataFrame,
     cols: Sequence[str],
-    bucketed_threshold: int = 4_000_000,
-    n_buckets: int = 64,
-    quantize: int = 9,
 ) -> Dict[str, Tuple[float, int, int]]:
     """Exact two-sample Wasserstein-1 distance per feature (beyond the
     reference's detector set — W1 is the scale-bearing complement to KS:
@@ -794,159 +776,34 @@ def wasserstein_all(
     pooled sorted distinct values — scipy.stats.wasserstein_distance's
     quantile-integral identity on empirical CDFs.
 
-    Same distributed shape as :func:`ks_d_all`: light prescan, then melt
-    -> per-value pre-aggregated side counts (map-side combine; the
-    shuffle carries only distinct values) -> bucket-parallel cumulative
-    windows (:func:`_cdf_cum_frame`, which also carries the cross-bucket
-    boundary gap from the next non-empty bucket's minimum), routed to
-    the equal-mass percentile decomposition above ``bucketed_threshold``
-    distinct values.
+    Same distributed plan as :func:`ks_d_all` (:func:`_cdf_statistic`);
+    the cumulative frame also carries the next distinct value, across
+    bucket boundaries too.
 
-    Determinism: each term is rounded to ``quantize`` decimals and summed
-    as decimal(38, quantize) — an EXACT, order-independent sum, so the
-    result is bit-identical under any layout/parallelism and any
-    window-vs-bucketed routing, and engine-portable (DuckDB reproduces
-    every rounded term from the same doubles; the float-sum-order flake
-    class is structurally impossible).  The <= 0.5e-9 per-term quantum is
-    immaterial for a drift statistic.
+    Determinism: each term is rounded to ``_W1_QUANTIZE`` decimals and
+    summed as decimal(38, q) — an EXACT, order-independent sum, so the
+    result is bit-identical under any layout/parallelism and any bucket
+    route, and engine-portable (DuckDB reproduces every rounded term from
+    the same doubles; the float-sum-order flake class is structurally
+    impossible).  The <= 0.5e-9 per-term quantum is immaterial for a
+    drift statistic.  A feature whose pooled support is ONE distinct
+    value has no gap terms: both samples are the same constant, W1 = 0.
 
     Returns {feature: (w1, n_ref, m_test)}; features with no non-null
     values on either side are skipped with a warning (KS convention).
     """
-    if not cols:
-        return {}
-    prescan = _cdf_prescan(ref_df, test_df, cols, bucketed_threshold)
-    nm, fused, big = _cdf_route("wasserstein_all", prescan, bucketed_threshold)
-    ok = set(fused) | set(big)
-    if not ok:
-        return {}
-    u = _melt(ref_df, cols).withColumn("r", F.lit(1)).withColumn("t", F.lit(0)).unionByName(
-        _melt(test_df, cols).withColumn("r", F.lit(0)).withColumn("t", F.lit(1))
+    term = _w1_term_quantized(
+        _cdf_diff() * (F.col("nxt") - F.col("value")), _W1_QUANTIZE
     )
-    g = u.groupBy("feature", "value").agg(
-        F.sum("r").alias("r"), F.sum("t").alias("t")
+    w1 = F.coalesce(F.sum(term).cast("double"), F.lit(0.0)).alias("w1")
+    return _cdf_statistic(
+        "wasserstein_all", ref_df, test_df, cols, [w1], with_gap=True
     )
-    out: Dict[str, Tuple[float, int, int]] = {}
-    if big:
-        g = g.persist()
-    try:
-        if fused:
-            cum = _cdf_cum_frame(
-                g.where(F.col("feature").isin(fused)), prescan, fused,
-                with_gap=True,
-            )
-            term = F.abs(
-                F.col("cr") / F.col("n") - F.col("ct") / F.col("m")
-            ) * (F.col("nxt") - F.col("value"))
-            scored = cum.select(
-                "feature", _w1_term_quantized(term, quantize).alias("term")
-            ).where(F.col("term").isNotNull())
-            rows = scored.groupBy("feature").agg(
-                F.sum("term").cast("double").alias("w1")
-            ).collect()
-            out.update(
-                {r["feature"]: (float(r["w1"]), *nm[r["feature"]]) for r in rows}
-            )
-        if big:
-            out.update(
-                _w1_bucketed(
-                    g.where(F.col("feature").isin(big)), nm, n_buckets, quantize
-                )
-            )
-        # a feature whose pooled support is ONE distinct value has no gap
-        # rows at all (every lead is null): both samples are the same
-        # constant, W1 = 0 by definition
-        for f in ok - set(out):
-            out[f] = (0.0, *nm[f])
-        return out
-    finally:
-        if big:
-            g.unpersist()
 
 
 def _w1_term_quantized(term, quantize: int):
     """round(term, q) :: decimal(38, q) — the order-independent summand."""
     return F.round(term, quantize).cast(f"decimal(38,{quantize})")
-
-
-def _w1_bucketed(
-    g: DataFrame, nm: Dict[str, Tuple[int, int]], n_buckets: int, quantize: int
-) -> Dict:
-    """Exact W1 via coarse value-buckets (same decomposition as
-    :func:`_ks_d_bucketed`): within-bucket cumulative windows run
-    ``n_buckets``-way parallel; exact prefix offsets AND the next
-    non-empty bucket's minimum value (the boundary gap) broadcast-join
-    back from one tiny per-bucket aggregate."""
-    import pandas as pd
-
-    spark = g.sparkSession
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    edge_rows = g.groupBy("feature").agg(
-        F.percentile_approx(
-            "value", F.array(*[F.lit(p) for p in probs]), 10_000
-        ).alias("edges")
-    ).collect()
-    bucket = F.lit(0)
-    for r in edge_rows:
-        b = F.lit(0)
-        for e in r["edges"]:
-            b = b + (F.col("value") > F.lit(float(e))).cast("int")
-        bucket = F.when(F.col("feature") == r["feature"], b).otherwise(bucket)
-    bucketed = g.withColumn("bkt", bucket)
-
-    offs_rows = bucketed.groupBy("feature", "bkt").agg(
-        F.sum("r").alias("rs"),
-        F.sum("t").alias("ts"),
-        F.min("value").alias("mn"),
-    ).collect()
-    per_feat: Dict[str, list] = {}
-    for r in offs_rows:
-        per_feat.setdefault(r["feature"], []).append(r)
-    offs = []
-    for feat, rows in per_feat.items():
-        rows = sorted(rows, key=lambda x: x["bkt"])
-        roff = toff = 0
-        for i, r in enumerate(rows):
-            nxt = float(rows[i + 1]["mn"]) if i + 1 < len(rows) else None
-            offs.append((feat, int(r["bkt"]), roff, toff, nxt))
-            roff += int(r["rs"])
-            toff += int(r["ts"])
-    # explicit schema (NOT via pandas): the last bucket's next_v must be a
-    # real SQL NULL for coalesce(), not the NaN a float ndarray would carry
-    offs_df = spark.createDataFrame(
-        offs, "feature string, bkt int, roff long, toff long, next_v double"
-    )
-    nm_df = spark.createDataFrame(
-        pd.DataFrame(
-            [(f, n, m) for f, (n, m) in nm.items()], columns=["feature", "n", "m"]
-        )
-    )
-    w_cum = (
-        Window.partitionBy("feature", "bkt")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_ord = Window.partitionBy("feature", "bkt").orderBy("value")
-    pre = bucketed.select(
-        "feature", "bkt", "value",
-        F.sum("r").over(w_cum).alias("lcr"),
-        F.sum("t").over(w_cum).alias("lct"),
-        F.lead("value").over(w_ord).alias("nxt_in"),
-    )
-    term = F.abs(
-        (F.col("lcr") + F.col("roff")) / F.col("n")
-        - (F.col("lct") + F.col("toff")) / F.col("m")
-    ) * (F.coalesce("nxt_in", "next_v") - F.col("value"))
-    scored = (
-        pre.join(F.broadcast(offs_df), ["feature", "bkt"])
-        .join(F.broadcast(nm_df), "feature")
-        .select("feature", _w1_term_quantized(term, quantize).alias("term"))
-        .where(F.col("term").isNotNull())
-    )
-    rows = scored.groupBy("feature").agg(
-        F.sum("term").cast("double").alias("w1")
-    ).collect()
-    return {r["feature"]: (float(r["w1"]), *nm[r["feature"]]) for r in rows}
 
 
 # ---------------------------------------------------------------------------
@@ -958,9 +815,6 @@ def cvm_ad_all(
     ref_df: DataFrame,
     test_df: DataFrame,
     cols: Sequence[str],
-    bucketed_threshold: int = 4_000_000,
-    n_buckets: int = 64,
-    quantize: int = 18,
 ) -> Dict[str, Tuple[float, float, int, int]]:
     """Exact two-sample Cramér–von Mises T and Anderson–Darling A² per
     feature, fused in ONE job (beyond the reference's detector set — both
@@ -984,16 +838,13 @@ def cvm_ad_all(
     integer cancellation that would overflow/lose precision at 10^12
     rows.
 
-    Same distributed shape and determinism contract as
-    :func:`wasserstein_all`: light prescan -> melt -> per-value pre-agg
-    -> bucket-parallel cumulative windows (:func:`_cdf_cum_frame`;
-    equal-mass percentile decomposition above ``bucketed_threshold``
-    distinct values — no boundary gap needed here, only exact prefix
-    offsets), every term rounded to ``quantize`` decimals and summed as
-    decimal(38, quantize) — order-independent, bit-identical under any
-    layout/routing, engine-portable to DuckDB.
+    Same distributed plan and determinism contract as
+    :func:`wasserstein_all` (:func:`_cdf_statistic`; no boundary gap
+    needed here): every term rounded to ``_CVM_AD_QUANTIZE`` decimals and
+    summed as decimal(38, q) — order-independent, bit-identical under any
+    layout/route, engine-portable to DuckDB.
 
-    ``quantize`` defaults to 18 (not W1's 9): these terms SQUARE the CDF
+    The quantum is 18 decimals (not W1's 9): these terms SQUARE the CDF
     gap, so on tie-free continuous data the null per-term magnitude is
     ~1/(4N) — a 9-decimal quantum zeroes every term past N ~ 5e8, the
     exact scale this path exists for.  At 18 decimals terms survive to
@@ -1004,55 +855,16 @@ def cvm_ad_all(
     Returns {feature: (cvm, ad, n_ref, m_test)}; features empty on either
     side are skipped with a warning (KS convention).
     """
-    if not cols:
-        return {}
-    prescan = _cdf_prescan(ref_df, test_df, cols, bucketed_threshold)
-    nm, fused, big = _cdf_route("cvm_ad_all", prescan, bucketed_threshold)
-    if not fused and not big:
-        return {}
-    u = _melt(ref_df, cols).withColumn("r", F.lit(1)).withColumn("t", F.lit(0)).unionByName(
-        _melt(test_df, cols).withColumn("r", F.lit(0)).withColumn("t", F.lit(1))
+    cvm, ad = _cvm_ad_terms(
+        F.col("cr"), F.col("ct"),
+        F.col("r"), F.col("t"),
+        F.col("n"), F.col("m"),
+        _CVM_AD_QUANTIZE,
     )
-    g = u.groupBy("feature", "value").agg(
-        F.sum("r").alias("r"), F.sum("t").alias("t")
+    return _cdf_statistic(
+        "cvm_ad_all", ref_df, test_df, cols,
+        [F.sum(cvm).cast("double").alias("cvm"), F.sum(ad).cast("double").alias("ad")],
     )
-    out: Dict[str, Tuple[float, float, int, int]] = {}
-    if big:
-        g = g.persist()
-    try:
-        if fused:
-            cum = _cdf_cum_frame(
-                g.where(F.col("feature").isin(fused)), prescan, fused
-            )
-            cvm, ad = _cvm_ad_terms(
-                F.col("cr"), F.col("ct"),
-                F.col("r"), F.col("t"),
-                F.col("n"), F.col("m"),
-                quantize,
-            )
-            rows = (
-                cum.select("feature", cvm.alias("cvm"), ad.alias("ad"))
-                .groupBy("feature")
-                .agg(
-                    F.sum("cvm").cast("double").alias("cvm"),
-                    F.sum("ad").cast("double").alias("ad"),
-                )
-                .collect()
-            )
-            out.update({
-                r["feature"]: (float(r["cvm"]), float(r["ad"]), *nm[r["feature"]])
-                for r in rows
-            })
-        if big:
-            out.update(
-                _cvm_ad_bucketed(
-                    g.where(F.col("feature").isin(big)), nm, n_buckets, quantize
-                )
-            )
-        return out
-    finally:
-        if big:
-            g.unpersist()
 
 
 def _cvm_ad_terms(cr, ct, rl, tl, n, m, quantize: int):
@@ -1079,86 +891,6 @@ def _cvm_ad_terms(cr, ct, rl, tl, n, m, quantize: int):
         _w1_term_quantized(cvm, quantize),
         _w1_term_quantized(ad, quantize),
     )
-
-
-def _cvm_ad_bucketed(
-    g: DataFrame, nm: Dict[str, Tuple[int, int]], n_buckets: int, quantize: int
-) -> Dict:
-    """Exact CvM/AD via the :func:`_w1_bucketed` decomposition, minus the
-    boundary gap (these statistics have no value-gap factor): within-
-    bucket cumulative windows run ``n_buckets``-way parallel and the
-    exact prefix offsets broadcast back from one tiny per-bucket
-    aggregate."""
-    import pandas as pd
-
-    spark = g.sparkSession
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    edge_rows = g.groupBy("feature").agg(
-        F.percentile_approx(
-            "value", F.array(*[F.lit(p) for p in probs]), 10_000
-        ).alias("edges")
-    ).collect()
-    bucket = F.lit(0)
-    for r in edge_rows:
-        b = F.lit(0)
-        for e in r["edges"]:
-            b = b + (F.col("value") > F.lit(float(e))).cast("int")
-        bucket = F.when(F.col("feature") == r["feature"], b).otherwise(bucket)
-    bucketed = g.withColumn("bkt", bucket)
-
-    offs_rows = bucketed.groupBy("feature", "bkt").agg(
-        F.sum("r").alias("rs"), F.sum("t").alias("ts")
-    ).collect()
-    per_feat: Dict[str, list] = {}
-    for r in offs_rows:
-        per_feat.setdefault(r["feature"], []).append(r)
-    offs = []
-    for feat, rows in per_feat.items():
-        rows = sorted(rows, key=lambda x: x["bkt"])
-        roff = toff = 0
-        for r in rows:
-            offs.append((feat, int(r["bkt"]), roff, toff))
-            roff += int(r["rs"])
-            toff += int(r["ts"])
-    offs_df = spark.createDataFrame(
-        offs, "feature string, bkt int, roff long, toff long"
-    )
-    nm_df = spark.createDataFrame(
-        pd.DataFrame(
-            [(f, n, m) for f, (n, m) in nm.items()], columns=["feature", "n", "m"]
-        )
-    )
-    w_cum = (
-        Window.partitionBy("feature", "bkt")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pre = bucketed.select(
-        "feature", "bkt", "r", "t",
-        F.sum("r").over(w_cum).alias("lcr"),
-        F.sum("t").over(w_cum).alias("lct"),
-    )
-    cvm, ad = _cvm_ad_terms(
-        F.col("lcr") + F.col("roff"), F.col("lct") + F.col("toff"),
-        F.col("r"), F.col("t"),
-        F.col("n"), F.col("m"),
-        quantize,
-    )
-    rows = (
-        pre.join(F.broadcast(offs_df), ["feature", "bkt"])
-        .join(F.broadcast(nm_df), "feature")
-        .select("feature", cvm.alias("cvm"), ad.alias("ad"))
-        .groupBy("feature")
-        .agg(
-            F.sum("cvm").cast("double").alias("cvm"),
-            F.sum("ad").cast("double").alias("ad"),
-        )
-        .collect()
-    )
-    return {
-        r["feature"]: (float(r["cvm"]), float(r["ad"]), *nm[r["feature"]])
-        for r in rows
-    }
 
 
 # ---------------------------------------------------------------------------

@@ -14,9 +14,9 @@ Scale design:
   parity); clamp → renormalize → sum((a-e)*ln(a/e)) runs as window +
   aggregate expressions.  Nothing about it collects row data; verdict
   output is O(parts x features).
-* KS D is the distributed per-value-pre-agg + cumulative-window plan of
-  driftspark.stats, windowed by (feature, part) — each partition's ECDF
-  merge parallelizes across the cluster; p-values for the O(parts x
+* KS D scores each (part, feature) test group against a BROADCAST
+  reference ECDF, fitted once (thinned, when over budget, on the exact
+  cumulative frame of driftspark.stats); p-values for the O(parts x
   features) D statistics are driver math.
 * chi-square categorical counts are one groupBy at (part, category, side)
   cardinality.
@@ -38,7 +38,18 @@ from driftspark.numerics import (
     severity_from_psi,
     severity_from_pvalue,
 )
-from driftspark.stats import bucket_expr, quantile_edges
+from driftspark.stats import (
+    _CDF_BUCKETED_THRESHOLD,
+    _W1_QUANTIZE,
+    _cdf_cum_frame,
+    _cdf_prescan,
+    _equal_mass_buckets,
+    _melt,
+    _uniform_buckets,
+    _w1_term_quantized,
+    bucket_expr,
+    quantile_edges,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -330,125 +341,31 @@ def _severity_from_psi_col(psi):
     )
 
 
-def ks_d_by_partition(
-    ref_df: DataFrame,
-    test_df: DataFrame,
-    cols: Sequence[str],
-    part_col: str = "part",
-) -> DataFrame:
-    """(part, feature, d, n, m) — KS D of each test partition's sample vs
-    the GLOBAL reference sample, distributed.
-
-    The reference ECDF is global, so its per-value counts are computed once
-    and re-ranked inside every (feature, part) window by cross-joining the
-    reference value counts with the partition ids — the window input stays
-    at (distinct values x parts), far below row count."""
-    spark = ref_df.sparkSession
-    structs = lambda df: [  # noqa: E731
-        F.struct(F.lit(c).alias("feature"), F.col(c).cast("double").alias("value"))
-        for c in cols
-    ]
-
-    def melt(df, with_part):
-        sel = [F.col(part_col).alias("part")] if with_part else []
-        return (
-            df.select(*sel, F.explode(F.array(*structs(df))).alias("fv"))
-            .select(*(["part"] if with_part else []), "fv.feature", "fv.value")
-            .where(F.col("value").isNotNull() & ~F.isnan("value"))
-        )
-
-    ref_vals = melt(ref_df, False).groupBy("feature", "value").agg(
-        F.count(F.lit(1)).alias("r")
-    )
-    # NULL partition ids belong to no partition: excluded here (the
-    # verdict-suite psi/chi2 paths count and warn about the same rows)
-    parts = (
-        test_df.where(F.col(part_col).isNotNull())
-        .select(F.col(part_col).alias("part"))
-        .distinct()
-    )
-    ref_per_part = ref_vals.crossJoin(F.broadcast(parts)).withColumn("t", F.lit(0))
-    test_vals = (
-        melt(test_df, True)
-        .groupBy("part", "feature", "value")
-        .agg(F.count(F.lit(1)).alias("t"))
-        .withColumn("r", F.lit(0))
-    )
-    u = ref_per_part.select("part", "feature", "value", "r", "t").unionByName(
-        test_vals.select("part", "feature", "value", "r", "t")
-    )
-    g = u.groupBy("part", "feature", "value").agg(
-        F.sum("r").alias("r"), F.sum("t").alias("t")
-    )
-    w_cum = (
-        Window.partitionBy("part", "feature")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("part", "feature")
-    # try_divide: the ref cross-join manufactures a (part, feature) group
-    # for EVERY partition, so a partition with no in-range test values for
-    # a feature has sum(t) = 0 — ANSI division would abort the job; the
-    # m = 0 groups are dropped below instead (no data, no verdict)
-    scored = g.select(
-        "part",
-        "feature",
-        F.abs(
-            F.try_divide(F.sum("r").over(w_cum), F.sum("r").over(w_all))
-            - F.try_divide(F.sum("t").over(w_cum), F.sum("t").over(w_all))
-        ).alias("diff"),
-        F.sum("r").over(w_all).alias("n"),
-        F.sum("t").over(w_all).alias("m"),
-    )
-    return (
-        scored.groupBy("part", "feature")
-        .agg(
-            F.max("diff").alias("d"),
-            F.first("n").alias("n"),
-            F.first("m").alias("m"),
-        )
-        .where((F.col("m") > 0) & (F.col("n") > 0))
-    )
-
-
 def w1_by_partition(
     ref_df: DataFrame,
     test_df: DataFrame,
     cols: Sequence[str],
     part_col: str = "part",
-    quantize: int = 9,
 ) -> DataFrame:
     """(part, feature, w1, n, m) — exact Wasserstein-1 of each test
     partition's sample vs the GLOBAL reference sample, distributed.
 
-    Same shape and scale contract as :func:`ks_d_by_partition` (global
-    reference value counts cross-joined with the partition ids, so the
-    per-(part, feature) window input stays at distinct values x parts),
-    plus the W1 value-gap term: |CDF_r - CDF_t| * (next value - value)
-    summed as quantized decimal — order-independent, engine-portable,
-    bit-identical under any layout (the wasserstein_all contract).
+    The global reference value counts are cross-joined with the partition
+    ids, so every (part, feature) group holds the whole reference ECDF;
+    the exact cumulative frame (:func:`driftspark.stats._cdf_cum_frame`)
+    then windows per (part, feature, value bucket), with uniform buckets
+    from one light prescan.  The W1 value-gap term |CDF_r - CDF_t| *
+    (next value - value) is summed as quantized decimal —
+    order-independent, engine-portable, bit-identical under any layout
+    (the wasserstein_all contract).
 
     Partition ids keep their ORIGINAL type; NULL-part rows belong to no
     partition and are excluded (the psi/chi2 paths count + warn the same
     rows); (part, feature) groups with no test values are dropped, never
     divided by zero (try_divide under ANSI).
     """
-    from driftspark.stats import _w1_term_quantized
-
-    structs = lambda df: [  # noqa: E731
-        F.struct(F.lit(c).alias("feature"), F.col(c).cast("double").alias("value"))
-        for c in cols
-    ]
-
-    def melt(df, with_part):
-        sel = [F.col(part_col).alias("part")] if with_part else []
-        return (
-            df.select(*sel, F.explode(F.array(*structs(df))).alias("fv"))
-            .select(*(["part"] if with_part else []), "fv.feature", "fv.value")
-            .where(F.col("value").isNotNull() & ~F.isnan("value"))
-        )
-
-    ref_vals = melt(ref_df, False).groupBy("feature", "value").agg(
+    prescan = _cdf_prescan(ref_df, test_df, cols, _CDF_BUCKETED_THRESHOLD)
+    ref_vals = _melt(ref_df, cols).groupBy("feature", "value").agg(
         F.count(F.lit(1)).alias("r")
     )
     parts = (
@@ -458,7 +375,8 @@ def w1_by_partition(
     )
     ref_per_part = ref_vals.crossJoin(F.broadcast(parts)).withColumn("t", F.lit(0))
     test_vals = (
-        melt(test_df, True)
+        _melt(test_df, cols, part_col)
+        .where(F.col("part").isNotNull())
         .groupBy("part", "feature", "value")
         .agg(F.count(F.lit(1)).alias("t"))
         .withColumn("r", F.lit(0))
@@ -469,30 +387,20 @@ def w1_by_partition(
     g = u.groupBy("part", "feature", "value").agg(
         F.sum("r").alias("r"), F.sum("t").alias("t")
     )
-    w_cum = (
-        Window.partitionBy("part", "feature")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cum = _cdf_cum_frame(
+        g, ["part", "feature"], _uniform_buckets(prescan, cols), with_gap=True
     )
-    w_all = Window.partitionBy("part", "feature")
-    w_lead = Window.partitionBy("part", "feature").orderBy("value")
-    gap = F.lead("value").over(w_lead) - F.col("value")
     diff = F.abs(
-        F.try_divide(F.sum("r").over(w_cum), F.sum("r").over(w_all))
-        - F.try_divide(F.sum("t").over(w_cum), F.sum("t").over(w_all))
+        F.try_divide(F.col("cr"), F.col("n")) - F.try_divide(F.col("ct"), F.col("m"))
     )
     term = _w1_term_quantized(
-        F.coalesce(diff * gap, F.lit(0.0)), quantize
-    )
-    scored = g.select(
-        "part", "feature", term.alias("term"),
-        F.sum("r").over(w_all).alias("n"),
-        F.sum("t").over(w_all).alias("m"),
+        F.coalesce(diff * (F.col("nxt") - F.col("value")), F.lit(0.0)),
+        _W1_QUANTIZE,
     )
     return (
-        scored.groupBy("part", "feature")
+        cum.groupBy("part", "feature")
         .agg(
-            F.sum("term").cast("double").alias("w1"),
+            F.sum(term).cast("double").alias("w1"),
             F.first("n").alias("n"),
             F.first("m").alias("m"),
         )
@@ -500,22 +408,18 @@ def w1_by_partition(
     )
 
 
-def _ref_ecdf_points(
-    ref_g: DataFrame,
-    max_points: int,
-    n_buckets: int = 64,
-) -> Dict[str, tuple]:
+def _ref_ecdf_points(ref_g: DataFrame, max_points: int) -> Dict[str, tuple]:
     """{feature: (sorted values, exact cumulative counts, n)} from a
     (feature, value, c) distinct-count frame, with DISTRIBUTED thinning.
 
     Features whose distinct count fits ``max_points`` collect exactly.
-    Larger features never reach the driver unthinned: values are coarsely
-    bucketed by approx-quantile edges (so each feature's cumulative window
-    runs over ``n_buckets`` independent groups — no single-task
-    feature-wide sort), exact within-bucket cumulative counts get their
-    bucket-prefix offsets added via a broadcast join, and a MASS-quantum
-    filter keeps every point whose cumulative count crosses a multiple of
-    ceil(n / max_points) (plus the last point, so n stays exact).
+    Larger features never reach the driver unthinned: the exact
+    cumulative frame (:func:`driftspark.stats._cdf_cum_frame`, with
+    r = c, t = 0 and equal-mass value buckets, so no single-task
+    feature-wide sort) gives every point its exact cumulative count, and
+    a MASS-quantum filter keeps every point whose cumulative count
+    crosses a multiple of ceil(n / max_points), plus the last point
+    (cum == n, since every c >= 1), so n stays exact.
     Retention is therefore uniform in probability mass, not rank: heavy
     values (zero-inflation, mode spikes) are always retained wherever
     they sit, and the ECDF gap between consecutive retained points is
@@ -523,107 +427,43 @@ def _ref_ecdf_points(
     by 1/max_points regardless of frequency skew.  Retained points carry
     EXACT cumulative counts."""
     # the distinct set feeds 2-4 jobs below (totals, small collect, big
-    # bucketing/offsets/window) — persist so the raw data is scanned once
+    # edges/thinned collect) — persist so the raw data is scanned once
     ref_g = ref_g.persist()
-    totals = ref_g.groupBy("feature").agg(
-        F.count(F.lit(1)).alias("nd"), F.sum("c").alias("n")
-    ).collect()
+    totals = ref_g.groupBy("feature").agg(F.count(F.lit(1)).alias("nd")).collect()
     nd_by_feat = {r["feature"]: int(r["nd"]) for r in totals}
     small = [f for f, nd in nd_by_feat.items() if nd <= max_points]
     big = [f for f, nd in nd_by_feat.items() if nd > max_points]
 
     ecdf: Dict[str, tuple] = {}
-    if small:
-        pdf = ref_g.where(F.col("feature").isin(small)).toPandas()
-        for feat, g in pdf.groupby("feature"):
-            g = g.sort_values("value")
-            vals = g["value"].values.astype(np.float64)
-            cums = np.cumsum(g["c"].values.astype(np.int64))
-            ecdf[feat] = (vals, cums, int(cums[-1]))
-    if not big:
-        ref_g.unpersist()
-        return ecdf
-
-    spark = ref_g.sparkSession
-    bg = ref_g.where(F.col("feature").isin(big))
     try:
-        probs = [i / n_buckets for i in range(1, n_buckets)]
-        edge_rows = bg.groupBy("feature").agg(
-            F.percentile_approx(
-                "value", F.array(*[F.lit(p) for p in probs]), 10_000
-            ).alias("edges")
-        ).collect()
-        bucket = F.lit(0)
-        for r in edge_rows:
-            b = F.lit(0)
-            for e in r["edges"]:
-                b = b + (F.col("value") > F.lit(float(e))).cast("int")
-            bucket = F.when(F.col("feature") == r["feature"], b).otherwise(bucket)
-        bucketed = bg.withColumn("bkt", bucket)
-
-        # bucket prefix offsets (counts + distinct ranks), tiny driver state
-        offs_rows = bucketed.groupBy("feature", "bkt").agg(
-            F.sum("c").alias("cnt"), F.count(F.lit(1)).alias("ndb")
-        ).collect()
-        offs: List[tuple] = []
-        per_feat: Dict[str, list] = {}
-        for r in offs_rows:
-            per_feat.setdefault(r["feature"], []).append(r)
-        for feat, rows in per_feat.items():
-            coff = roff = 0
-            for r in sorted(rows, key=lambda x: x["bkt"]):
-                offs.append((feat, int(r["bkt"]), coff, roff))
-                coff += int(r["cnt"])
-                roff += int(r["ndb"])
-        offs_df = spark.createDataFrame(
-            pd.DataFrame(offs, columns=["feature", "bkt", "coff", "roff"])
-        )
-
-        w_cum = (
-            Window.partitionBy("feature", "bkt")
-            .orderBy("value")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        w_rk = Window.partitionBy("feature", "bkt").orderBy("value")
-        scored = (
-            bucketed.select(
-                "feature", "bkt", "value", "c",
-                F.sum("c").over(w_cum).alias("lcum"),
-                F.row_number().over(w_rk).alias("lrk"),
+        if small:
+            pdf = ref_g.where(F.col("feature").isin(small)).toPandas()
+            for feat, g in pdf.groupby("feature"):
+                g = g.sort_values("value")
+                vals = g["value"].values.astype(np.float64)
+                cums = np.cumsum(g["c"].values.astype(np.int64))
+                ecdf[feat] = (vals, cums, int(cums[-1]))
+        if big:
+            bg = ref_g.where(F.col("feature").isin(big)).select(
+                "feature", "value", F.col("c").alias("r"), F.lit(0).alias("t")
             )
-            .join(F.broadcast(offs_df), ["feature", "bkt"])
-            .select(
-                "feature", "value", "c",
-                (F.col("lcum") + F.col("coff")).alias("cum"),
-                (F.col("lrk") + F.col("roff")).alias("rk"),
+            cum = _cdf_cum_frame(bg, ["feature"], _equal_mass_buckets(bg, big))
+            # keep a point iff its cumulative count crosses a mass quantum
+            # ms = ceil(n / max_points) — floor(cr/ms) > floor((cr - c)/ms)
+            # — plus the exact last point
+            ms = F.expr(f"(n + {max_points - 1}) div {max_points}")
+            kept = cum.where(
+                (F.floor(F.col("cr") / ms) > F.floor((F.col("cr") - F.col("r")) / ms))
+                | (F.col("cr") == F.col("n"))
             )
-        )
-        n_by_feat = {r["feature"]: int(r["n"]) for r in totals}
-        nd_df = spark.createDataFrame(
-            pd.DataFrame(
-                [
-                    (f, nd_by_feat[f],
-                     max(-(-n_by_feat[f] // max_points), 1))  # ceil(n/max)
-                    for f in big
-                ],
-                columns=["feature", "nd", "mass_stride"],
-            )
-        )
-        # keep a point iff its cumulative count crosses a mass quantum —
-        # floor(cum/ms) > floor((cum - c)/ms) — plus the exact last point
-        ms = F.col("mass_stride")
-        kept = scored.join(F.broadcast(nd_df), "feature").where(
-            (F.floor(F.col("cum") / ms) > F.floor((F.col("cum") - F.col("c")) / ms))
-            | (F.col("rk") == F.col("nd"))
-        )
-        pdf = kept.select("feature", "value", "cum").toPandas()
-        for feat, g in pdf.groupby("feature"):
-            g = g.sort_values("value")
-            ecdf[feat] = (
-                g["value"].values.astype(np.float64),
-                g["cum"].values.astype(np.int64),
-                int(g["cum"].values[-1]),
-            )
+            pdf = kept.select("feature", "value", "cr").toPandas()
+            for feat, g in pdf.groupby("feature"):
+                g = g.sort_values("value")
+                ecdf[feat] = (
+                    g["value"].values.astype(np.float64),
+                    g["cr"].values.astype(np.int64),
+                    int(g["cr"].values[-1]),
+                )
     finally:
         ref_g.unpersist()
     return ecdf
@@ -640,13 +480,9 @@ def ks_d_by_partition_broadcast(
     """(part, feature, d, n, m) — exact KS D per partition via a BROADCAST
     reference ECDF.
 
-    The window formulation (ks_d_by_partition) replicates the reference's
-    distinct values into every partition's window — O(distinct x parts)
-    sort work, which dominated the validation job when a high-cardinality
-    column (phash) met many partitions.  Here the global reference ECDF is
-    aggregated once, collected ({feature: sorted values + cumulative
-    counts}), broadcast, and each (part, feature) group's test sample
-    evaluates
+    The global reference ECDF is aggregated once, collected ({feature:
+    sorted values + cumulative counts}), broadcast, and each (part,
+    feature) group's test sample evaluates
 
         D = max_i max(|R(t_i) - T(t_i)|, |R(t_i^-) - T(t_{i-1})|)
 
@@ -658,29 +494,17 @@ def ks_d_by_partition_broadcast(
     distinct_ref).
 
     Thinning happens DISTRIBUTED, before anything reaches the driver: when
-    a feature's distinct-value count exceeds ``max_ref_ecdf_points``, a
-    per-feature cumulative window computes exact (value, cum_count) pairs
-    and an ntile-style rank filter keeps ~max points per feature (always
-    including the last = exact n).  The driver only ever collects
+    a feature's distinct-value count exceeds its share of
+    ``max_ref_ecdf_points``, the exact cumulative frame gives every value
+    its cumulative count and a mass-quantum filter keeps ~that many points
+    (always including the last = exact n; see :func:`_ref_ecdf_points`).
+    The driver only ever collects
     O(features x max_points) rows — at 10^12 rows the unthinned distinct
     set would not fit on any driver.  Retained points keep their EXACT
     cumulative counts, so the only error is R's value-resolution between
     retained points (<= 1/max_points of mass)."""
     ecdf = fit_ks_reference_ecdf(ref_df, cols, max_ref_ecdf_points)
     return ks_d_against_ecdf(test_df, cols, ecdf, part_col, preaggregate)
-
-
-def _melt_feature_values(df: DataFrame, cols: Sequence[str], part_col=None):
-    structs = [
-        F.struct(F.lit(c).alias("feature"), F.col(c).cast("double").alias("value"))
-        for c in cols
-    ]
-    sel = [F.col(part_col).alias("part")] if part_col else []
-    return (
-        df.select(*sel, F.explode(F.array(*structs)).alias("fv"))
-        .select(*(["part"] if part_col else []), "fv.feature", "fv.value")
-        .where(F.col("value").isNotNull() & ~F.isnan("value"))
-    )
 
 
 def fit_ks_reference_ecdf(
@@ -699,7 +523,7 @@ def fit_ks_reference_ecdf(
     driver memory is bounded regardless of how many columns are
     monitored."""
     ref_g = (
-        _melt_feature_values(ref_df, cols)
+        _melt(ref_df, cols)
         .groupBy("feature", "value")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -792,7 +616,7 @@ def ks_d_against_ecdf(
     # NULL-part rows are excluded like psi/chi2 (which count + warn about
     # them in the verdict suite) — a part=NULL verdict row belongs to no
     # partition; the filter is free (streaming's literal group never is)
-    melted = _melt_feature_values(test_df, cols, part_col).where(
+    melted = _melt(test_df, cols, part_col).where(
         F.col("part").isNotNull()
     )
     if preaggregate:

@@ -1,8 +1,10 @@
-"""Focused tests for the round-7 fused CDF machinery (stats._cdf_prescan /
+"""Focused tests for the exact-CDF machinery (stats._cdf_prescan /
 _cdf_cum_frame): the light prescan must count exactly the rows the melt
 keeps, and the bucket-parallel cumulative frame must reproduce the exact
 global cumulative counts a brute-force sort gives, for any bucket layout.
 """
+
+import pathlib
 
 import numpy as np
 import pandas as pd
@@ -10,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import driftspark.stats as st
+import driftspark.verdicts as vd
 
 
 @pytest.fixture(scope="module")
@@ -76,7 +79,9 @@ def test_cum_frame_exact_cumulative_counts(frames, rows_per_bucket, monkeypatch)
     u = st._melt(ref_df, cols).withColumn("r", F.lit(1)).withColumn("t", F.lit(0)) \
         .unionByName(st._melt(test_df, cols).withColumn("r", F.lit(0)).withColumn("t", F.lit(1)))
     g = u.groupBy("feature", "value").agg(F.sum("r").alias("r"), F.sum("t").alias("t"))
-    cum = st._cdf_cum_frame(g, pres, cols, with_gap=True).toPandas()
+    cum = st._cdf_cum_frame(
+        g, ["feature"], st._uniform_buckets(pres, cols), with_gap=True
+    ).toPandas()
     for c in cols:
         sub = cum[cum.feature == c].sort_values("value").reset_index(drop=True)
         rv = np.sort(ref[c].dropna().values)
@@ -93,16 +98,35 @@ def test_cum_frame_exact_cumulative_counts(frames, rows_per_bucket, monkeypatch)
         assert pd.isna(sub["nxt"].values[-1])
 
 
-def test_statistics_invariant_to_fused_bucket_count(frames, monkeypatch):
-    """KS/W1/CvM results must be bit-identical whether the fused path
-    uses one bucket or many (exact prefix offsets + order-independent
-    decimal sums)."""
+def test_statistics_invariant_to_fused_bucket_count(spark, frames, monkeypatch):
+    """KS/W1/CvM and per-partition W1 results must be bit-identical
+    whether the cumulative frame uses one bucket or many (exact prefix
+    offsets + order-independent decimal sums)."""
     ref, test, ref_df, test_df = frames
     cols = ["a", "b"]
+    parted = spark.createDataFrame(test.assign(part=np.arange(len(test)) % 3))
+
+    def w1_parts():
+        return sorted(tuple(r) for r in vd.w1_by_partition(ref_df, parted, cols).collect())
+
     base_ks = st.ks_d_all(ref_df, test_df, cols)
     base_w1 = st.wasserstein_all(ref_df, test_df, cols)
     base_cvm = st.cvm_ad_all(ref_df, test_df, cols)
+    base_w1_parts = w1_parts()
     monkeypatch.setattr(st, "_CDF_ROWS_PER_BUCKET", 40)
     assert st.ks_d_all(ref_df, test_df, cols) == base_ks
     assert st.wasserstein_all(ref_df, test_df, cols) == base_w1
     assert st.cvm_ad_all(ref_df, test_df, cols) == base_cvm
+    assert w1_parts() == base_w1_parts
+
+
+def test_one_cumulative_window_and_one_percentile_edge_block():
+    """Structural guard: the exact cumulative count has ONE home
+    (_cdf_cum_frame) and the equal-mass bucket edges ONE builder — a
+    hand copy of either in driftspark/ fails here."""
+    src = "".join(
+        p.read_text()
+        for p in (pathlib.Path(st.__file__).parent).glob("*.py")
+    )
+    assert src.count("rowsBetween(Window.unboundedPreceding, Window.currentRow)") == 1
+    assert src.count("percentile_approx(") == 1

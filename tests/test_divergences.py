@@ -93,17 +93,19 @@ def test_w1_shift_scale_sanity(spark):
     assert abs(w1 - 3.25) < 1e-6
 
 
-def test_w1_layout_and_bucketed_bit_parity(spark, samples):
+def test_w1_layout_and_bucketed_bit_parity(spark, samples, monkeypatch):
     x, y, u, v = samples
     ref, test = _frame(spark, {"a": (x, y), "b": (u, v)})
     base = wasserstein_all(ref, test, ["a", "b"])
     # layout invariance: quantized-decimal sum is order-independent
     relaid = wasserstein_all(ref.repartition(13), test.repartition(7), ["a", "b"])
     assert relaid == base
-    # bucketed decomposition (force it) is bit-identical to the window path
-    bucketed = wasserstein_all(
-        ref, test, ["a", "b"], bucketed_threshold=1, n_buckets=8
-    )
+    # equal-mass buckets (force them) are bit-identical to the uniform ones
+    import driftspark.stats as st
+
+    monkeypatch.setattr(st, "_CDF_BUCKETED_THRESHOLD", 1)
+    monkeypatch.setattr(st, "_CDF_PERCENTILE_BUCKETS", 8)
+    bucketed = wasserstein_all(ref, test, ["a", "b"])
     assert bucketed == base
 
 
@@ -303,7 +305,8 @@ def test_ad_pettitt_identity_tie_free():
     assert a2_disc == pytest.approx(a2_pettitt, abs=1e-10)
 
 
-def test_cvm_ad_layout_and_bucketed_bit_parity(spark, samples):
+def test_cvm_ad_layout_and_bucketed_bit_parity(spark, samples, monkeypatch):
+    import driftspark.stats as st
     from driftspark.stats import cvm_ad_all
 
     x, y, u, v = samples
@@ -311,7 +314,9 @@ def test_cvm_ad_layout_and_bucketed_bit_parity(spark, samples):
     base = cvm_ad_all(ref, test, ["a", "b"])
     relaid = cvm_ad_all(ref.repartition(13), test.repartition(7), ["a", "b"])
     assert relaid == base
-    bucketed = cvm_ad_all(ref, test, ["a", "b"], bucketed_threshold=1, n_buckets=8)
+    monkeypatch.setattr(st, "_CDF_BUCKETED_THRESHOLD", 1)
+    monkeypatch.setattr(st, "_CDF_PERCENTILE_BUCKETS", 8)
+    bucketed = cvm_ad_all(ref, test, ["a", "b"])
     assert bucketed == base
 
 

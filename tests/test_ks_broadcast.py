@@ -1,14 +1,16 @@
-"""Broadcast-ECDF per-partition KS == numpy oracle and window variant."""
+"""Broadcast-ECDF per-partition KS == numpy oracle; distributed ECDF
+thinning keeps exact cumulative counts."""
 
 import numpy as np
 import pytest
 
 from driftspark import numerics as nm
 from driftspark.synth import synth_image_table
-from driftspark.verdicts import ks_d_by_partition, ks_d_by_partition_broadcast
+import driftspark.stats as st
+from driftspark.verdicts import ks_d_by_partition_broadcast
 
 
-def test_broadcast_ks_matches_oracle_and_window(spark):
+def test_broadcast_ks_matches_oracle(spark):
     t = synth_image_table(spark, 8000, n_parts=4, drift=True, with_bytes=False).cache()
     ref = t.where("split='ref'")
     test = t.where("split='test'")
@@ -17,11 +19,7 @@ def test_broadcast_ks_matches_oracle_and_window(spark):
         (r["part"], r["feature"]): (r["d"], r["n"], r["m"])
         for r in ks_d_by_partition_broadcast(ref, test, cols).collect()
     }
-    win = {
-        (r["part"], r["feature"]): (r["d"], r["n"], r["m"])
-        for r in ks_d_by_partition(ref, test, cols).collect()
-    }
-    assert set(bc) == set(win)
+    assert set(bc) == {(p, f) for p in range(4) for f in cols}
     ref_pdf = ref.select(*cols).toPandas()
     test_pdf = test.select("part", *cols).toPandas()
     for (part, feat), (d, n, m) in bc.items():
@@ -29,7 +27,6 @@ def test_broadcast_ks_matches_oracle_and_window(spark):
         rv = ref_pdf[feat].values.astype(float)
         oracle = nm.ks_2samp_d(rv, tv)
         assert d == pytest.approx(oracle, abs=1e-12), (part, feat)
-        assert win[(part, feat)][0] == pytest.approx(oracle, abs=1e-12)
         assert (n, m) == (len(rv), len(tv))
 
 
@@ -52,7 +49,7 @@ def test_broadcast_ks_with_ties_and_duplicates(spark):
         assert d == pytest.approx(oracle, abs=1e-12)
 
 
-def test_distributed_ecdf_thinning(spark):
+def test_distributed_ecdf_thinning(spark, monkeypatch):
     """_ref_ecdf_points thins features above the cap WITHOUT collecting
     the full distinct set: retained points stay <= cap (+ exact last
     point), every retained cumulative count equals the exact ECDF at that
@@ -75,7 +72,8 @@ def test_distributed_ecdf_thinning(spark):
         .agg(F.count(F.lit(1)).alias("c"))
     )
     cap = 500
-    ecdf = _ref_ecdf_points(ref_g, cap, n_buckets=8)
+    monkeypatch.setattr(st, "_CDF_PERCENTILE_BUCKETS", 8)
+    ecdf = _ref_ecdf_points(ref_g, cap)
 
     # exact oracle
     def exact(vals):
@@ -134,7 +132,7 @@ def test_broadcast_ks_exact_under_cap_and_close_when_thinned(spark):
     assert abs(thin_d - exact_d) <= stride / len(ref) + 1e-12
 
 
-def test_thinned_ecdf_mass_aware_zero_inflated(spark):
+def test_thinned_ecdf_mass_aware_zero_inflated(spark, monkeypatch):
     """Retention is uniform in MASS: a zero-inflated feature (one value
     holding 50% of rows) keeps its heavy head point, so the thinned KS-D
     error stays within 1/max_points even under frequency skew."""
@@ -151,7 +149,8 @@ def test_thinned_ecdf_mass_aware_zero_inflated(spark):
         .agg(F.count(F.lit(1)).alias("c"))
     )
     cap = 100
-    tv, tc, n = _ref_ecdf_points(ref_g, cap, n_buckets=8)["z"]
+    monkeypatch.setattr(st, "_CDF_PERCENTILE_BUCKETS", 8)
+    tv, tc, n = _ref_ecdf_points(ref_g, cap)["z"]
     assert n == 10000
     assert len(tv) <= cap + 1
     assert tv[0] == 0.0 and tc[0] == 5000  # the heavy head IS retained

@@ -183,16 +183,17 @@ def test_approx_quantile_edges_close_to_exact(frame):
         assert np.max(np.abs(r_exact - r_approx)) <= 1
 
 
-def test_ks_d_bucketed_exactly_matches_window(frame, spark):
+def test_ks_d_bucketed_exactly_matches_window(frame, spark, monkeypatch):
     """The bucketed KS-D decomposition (engaged above the distinct-count
     threshold) produces EXACTLY the window plan's statistic — exact prefix
     offsets make it a reformulation, not an approximation."""
     pdf, df = frame
     ref = df.where("c < 3")
     test = df.where("c >= 3")
-    base = st.ks_d_all(ref, test, ["a", "b"])                     # window path
-    forced = st.ks_d_all(ref, test, ["a", "b"],
-                         bucketed_threshold=10, n_buckets=7)      # bucketed path
+    base = st.ks_d_all(ref, test, ["a", "b"])                     # uniform buckets
+    monkeypatch.setattr(st, "_CDF_BUCKETED_THRESHOLD", 10)
+    monkeypatch.setattr(st, "_CDF_PERCENTILE_BUCKETS", 7)
+    forced = st.ks_d_all(ref, test, ["a", "b"])                   # equal-mass buckets
     for col in ("a", "b"):
         assert forced[col][1:] == base[col][1:]
         assert abs(forced[col][0] - base[col][0]) < 1e-15

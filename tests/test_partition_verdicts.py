@@ -14,9 +14,10 @@ from driftspark.checkpoint import CheckpointManager, resumable_partition_drift
 from driftspark.stats import quantile_edges
 from driftspark.synth import synth_image_table
 from driftspark.verdicts import (
-    ks_d_by_partition,
+    ks_d_by_partition_broadcast,
     partition_verdicts,
     psi_by_partition,
+    w1_by_partition,
 )
 
 
@@ -68,7 +69,7 @@ def test_ks_by_partition_matches_numpy(spark, drifted):
     test = drifted.where("split = 'test'")
     rows = {
         (r["part"], r["feature"]): (r["d"], r["n"], r["m"])
-        for r in ks_d_by_partition(ref, test, ["w", "h"]).collect()
+        for r in ks_d_by_partition_broadcast(ref, test, ["w", "h"]).collect()
     }
     ref_pdf = ref.select("w", "h").toPandas()
     test_pdf = test.select("part", "w", "h").toPandas()
@@ -360,9 +361,8 @@ def test_all_nan_reference_ks_column_skipped_loudly(spark, caplog):
 
 def test_ks_null_part_rows_excluded(spark):
     """KS verdicts must not emit a part=NULL row (psi/chi2 exclude + warn;
-    KS used to silently include one)."""
-    from driftspark.verdicts import ks_d_by_partition_broadcast
-
+    KS used to silently include one), and the NULL-part rows must not
+    leak into the p1 statistic."""
     rng = np.random.RandomState(13)
     ref = spark.createDataFrame(pd.DataFrame({"x": rng.normal(0, 1, 1000)}))
     test = spark.createDataFrame(pd.DataFrame({
@@ -372,24 +372,26 @@ def test_ks_null_part_rows_excluded(spark):
     rows = ks_d_by_partition_broadcast(ref, test, ["x"]).collect()
     assert {r["part"] for r in rows} == {"p1"}
     assert all(r["m"] == 500 for r in rows)
-    # windowed variant: same exclusion + no empty manufactured groups
-    win = ks_d_by_partition(ref, test, ["x"]).collect()
-    assert {r["part"] for r in win} == {"p1"}
+    pdf = test.toPandas()
+    p1 = pdf[pdf["part"] == "p1"]["x"].values.astype(float)
+    ref_x = ref.toPandas()["x"].values.astype(float)
+    assert rows[0]["d"] == pytest.approx(nm.ks_2samp_d(ref_x, p1), abs=1e-12)
 
 
-def test_windowed_ks_partition_with_no_values(spark):
-    """The windowed KS variant cross-joins reference values with EVERY
-    partition — a partition whose rows are all NULL for a feature used to
-    divide by a zero test total under ANSI.  It must drop the empty
-    (part, feature) group instead of aborting."""
+def test_w1_by_partition_partition_with_no_values(spark):
+    """w1_by_partition cross-joins reference values with EVERY partition
+    — a partition whose rows are all NaN for a feature has a zero test
+    total, which must not divide by zero under ANSI.  It must drop the
+    empty (part, feature) group instead of aborting."""
     rng = np.random.RandomState(14)
     ref = spark.createDataFrame(pd.DataFrame({"x": rng.normal(0, 1, 500)}))
     test = spark.createDataFrame(pd.DataFrame({
         "x": np.concatenate([rng.normal(0, 1, 300), np.full(200, np.nan)]),
         "part": ["p1"] * 300 + ["p2"] * 200,
     }))
-    rows = ks_d_by_partition(ref, test, ["x"]).collect()
+    rows = w1_by_partition(ref, test, ["x"]).collect()
     assert {r["part"] for r in rows} == {"p1"}
+    assert (rows[0]["n"], rows[0]["m"]) == (500, 300)
 
 
 def test_approx_edges_constant_column_keeps_verdict(spark):
@@ -431,7 +433,6 @@ def test_all_null_numeric_cols_skip_psi_gracefully(spark, caplog):
 
 def test_w1_by_partition_single_part_equals_wasserstein_all(spark, drifted):
     from driftspark.stats import wasserstein_all
-    from driftspark.verdicts import w1_by_partition
 
     ref = drifted.where("split = 'ref'")
     test = drifted.where("split = 'test'").withColumn("part", F.lit("all"))
@@ -455,8 +456,6 @@ def test_w1_by_partition_string_parts_and_null_excluded(spark):
     df = spark.createDataFrame(pdf)
     ref = df.where("part = '?'").select("x")
     test = df.where("part <> '?'")
-    from driftspark.verdicts import w1_by_partition
-
     rows = {r["part"]: r for r in w1_by_partition(ref, test, ["x"]).collect()}
     # NULL-part rows belong to no partition (psi/chi2 convention)
     assert set(rows) == {"p1", "p2"}

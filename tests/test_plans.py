@@ -183,11 +183,12 @@ def test_supplier_rollup_broadcasts_dimensions(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_thinned_ecdf_offsets_join_broadcasts(spark):
+def test_thinned_ecdf_offsets_join_broadcasts(spark, monkeypatch):
     """The over-cap branch of _ref_ecdf_points joins tiny offset frames
     in broadcast — the distinct-value side must never shuffle for them."""
     import pandas as pd
 
+    import driftspark.stats as st
     from driftspark.verdicts import _ref_ecdf_points
 
     rng = np.random.RandomState(1)
@@ -196,7 +197,8 @@ def test_thinned_ecdf_offsets_join_broadcasts(spark):
              .groupBy("feature", "value").agg(F.count(F.lit(1)).alias("c")))
     # run it (over-cap) — correctness covered elsewhere; here we only
     # assert it completes with the bounded driver collect
-    ecdf = _ref_ecdf_points(ref_g, 200, n_buckets=8)
+    monkeypatch.setattr(st, "_CDF_PERCENTILE_BUCKETS", 8)
+    ecdf = _ref_ecdf_points(ref_g, 200)
     assert len(ecdf["f"][0]) <= 201
 
 
