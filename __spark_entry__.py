@@ -1642,7 +1642,7 @@ VALUE_EDGES = [0.0, 10.0, 25.0, 50.0, 100.0, 200.0, 600.0]
 def _q_rolling_psi(spark, sf_dir):
     """Temporal self-drift: PSI of each day's events.value histogram vs
     its trailing 7 days (verdicts.rolling_psi — dense bucket×bin grid,
-    psi_by_partition clamp/renormalize math verbatim)."""
+    numerics.psi_from_proportions clamp/renormalize math)."""
     import numpy as np
 
     from driftspark.verdicts import rolling_psi

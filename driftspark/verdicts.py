@@ -8,12 +8,11 @@ partition of the test split is compared against the GLOBAL reference split
 yielding one verdict row per (partition, feature, check).
 
 Scale design:
-* PSI is computed ENTIRELY in Spark SQL: one melt+groupBy produces
-  (part, feature, bin, side) counts; a dense (part, feature, bin) grid
-  left-join restores empty bins (pandas value_counts-over-Categorical
-  parity); clamp → renormalize → sum((a-e)*ln(a/e)) runs as window +
-  aggregate expressions.  Nothing about it collects row data; verdict
-  output is O(parts x features).
+* The PSI and KS reference state is fitted once and every batch of
+  partitions scores against it (:class:`_VerdictSuite`).
+* PSI is ONE test-side melt+groupBy collected as O(parts x features x
+  bins) (part, feature, bin) counts, then numerics.psi_from_proportions
+  per (part, feature) on the driver — the streaming monitor's math.
 * KS D scores each (part, feature) test group against a BROADCAST
   reference ECDF, fitted once (thinned, when over budget, on the exact
   cumulative frame of driftspark.stats); p-values for the O(parts x
@@ -25,6 +24,8 @@ Scale design:
 from __future__ import annotations
 
 import logging
+from collections import defaultdict
+from dataclasses import dataclass
 from typing import Dict, List, Optional, Sequence
 
 import numpy as np
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 from driftspark.numerics import (
     chi2_sf,
     ks_2samp_pvalue,
+    psi_from_proportions,
     severity_from_psi,
     severity_from_pvalue,
 )
@@ -63,28 +65,90 @@ def _melt_binned(
     df: DataFrame,
     edges_map: Dict[str, np.ndarray],
     part_expr,
-    is_ref: bool,
     keep_out_of_range: bool = False,
 ):
-    """(is_ref, part, feature, bin) long form; out-of-range/NULL values
-    carry a NULL bin and are dropped by default.  ``keep_out_of_range``
-    retains ONE NULL-bin row per (row, feature) so a single aggregation
-    can also observe the partition/row universe (psi_by_partition uses it
-    to avoid a second scan for the partition ids; NULL-bin rows never
-    join the dense bin grid, so histogram math is unchanged)."""
+    """(part, feature, bin) long form; out-of-range/NULL values carry a
+    NULL bin and are dropped by default.  ``keep_out_of_range`` retains
+    ONE NULL-bin row per (row, feature) so a single aggregation also
+    observes the partition universe (a partition with no in-range value
+    still gets its n_test = 0 PSI verdict)."""
     structs = [
         F.struct(F.lit(c).alias("feature"), bucket_expr(c, e).alias("bin"))
         for c, e in edges_map.items()
     ]
-    out = (
-        df.select(
-            F.lit(is_ref).alias("is_ref"),
-            part_expr.alias("part"),
-            F.explode(F.array(*structs)).alias("fb"),
-        )
-        .select("is_ref", "part", "fb.feature", "fb.bin")
-    )
+    out = df.select(
+        part_expr.alias("part"), F.explode(F.array(*structs)).alias("fb")
+    ).select("part", "fb.feature", "fb.bin")
     return out if keep_out_of_range else out.where(F.col("bin").isNotNull())
+
+
+def _bin_counts(df: DataFrame, edges_map: Dict[str, np.ndarray], part_expr):
+    """({part: {feature: in-range count per fitted bin}}, in-range values
+    with a NULL part) from ONE groupBy, collected as O(parts x features x
+    bins) rows.  Every part with any row gets every feature (all-zero when
+    no value is in range); parts keep their ORIGINAL type."""
+    rows = (
+        _melt_binned(df, edges_map, part_expr, keep_out_of_range=True)
+        .groupBy("part", "feature", "bin")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .collect()
+    )
+
+    def zeros():
+        return {f: np.zeros(len(e) - 1, np.int64) for f, e in edges_map.items()}
+
+    hists: Dict = defaultdict(zeros)
+    null_part = 0
+    for r in rows:
+        if r["part"] is None:
+            null_part += r["c"] if r["bin"] is not None else 0
+            continue
+        h = hists[r["part"]]
+        if r["bin"] is not None:
+            h[r["feature"]][r["bin"]] = r["c"]
+    return hists, null_part
+
+
+def _ref_bin_counts(ref_df: DataFrame, edges_map: Dict[str, np.ndarray]):
+    """{feature: in-range reference count per fitted bin} — the global
+    reference histogram every partition's PSI scores against."""
+    hists, _ = _bin_counts(ref_df, edges_map, F.lit(0))
+    return hists[0]  # all-zero for an empty reference
+
+
+def _psi_rows(
+    test_df: DataFrame,
+    edges_map: Dict[str, np.ndarray],
+    ref_counts: Dict[str, np.ndarray],
+    part_col: str,
+    min_bin_size: float = 0.001,
+) -> List[tuple]:
+    """[(part, feature, psi, n_ref, n_test)] vs the fitted reference
+    counts.  Reference parity: proportions are over in-range values only
+    and every fitted bin participates (psi.py:102-110).  A partition with
+    NO in-range value has all-zero proportions, which the clamp turns
+    uniform, and n_test = 0 marks it: PSI is an in-range-SHAPE statistic,
+    the mass exodus is the KS check's job."""
+    hists, null_part = _bin_counts(test_df, edges_map, F.col(part_col))
+    if null_part:
+        logger.warning(
+            "psi_by_partition: %d test value(s) have NULL %s and are "
+            "excluded from partition verdicts",
+            null_part,
+            part_col,
+        )
+
+    def props(c):
+        n = c.sum()
+        return c / n if n else np.zeros(len(c))
+
+    ref_props = {f: props(c) for f, c in ref_counts.items()}
+    return [
+        (part, f, psi_from_proportions(ref_props[f], props(t), min_bin_size),
+         int(ref_counts[f].sum()), int(t.sum()))
+        for part, by_feature in hists.items()
+        for f, t in by_feature.items()
+    ]
 
 
 def psi_by_partition(
@@ -94,123 +158,18 @@ def psi_by_partition(
     part_col: str = "part",
     min_bin_size: float = 0.001,
 ) -> DataFrame:
-    """(part, feature, psi) — PSI of each test partition vs the GLOBAL
-    reference histogram, computed fully in Spark SQL (no driver loops).
-
-    Reference-parity details: proportions are over in-range values only;
-    every fitted bin participates (empty → 0 → clamped to min_bin_size);
-    both sides clamped then renormalized before the PSI sum
-    (psi.py:102-110)."""
+    """(part, feature, psi, n_ref, n_test) — PSI of each test partition vs
+    the GLOBAL reference histogram (see :func:`_psi_rows`).  Test rows
+    with a NULL ``part_col`` belong to no partition: they are counted and
+    logged, never scored.  The part column keeps the input's type."""
     if not edges_map:
         raise ValueError("edges_map is empty")
-    spark = ref_df.sparkSession
-
-    # BOTH sides histogram in ONE scan: an explicit is_ref tag marks the
-    # reference rows (NULL part is no longer overloaded as the marker, so
-    # null-part test rows stay observable instead of silently vanishing);
-    # the aggregated counts are O(parts x features x bins) —
-    # localCheckpoint materializes them once so the branches below don't
-    # re-scan.  The part travels through the union as its ORIGINAL type
-    # (string, date, int, ...) — casting to a fixed type would NULL out
-    # non-castable partition values and silently merge those test rows
-    # into the reference histogram.
-    part_type = test_df.schema[part_col].dataType
-    # the test side keeps out-of-range values as NULL-bin rows so this ONE
-    # aggregation also yields the full partition universe (previously a
-    # second scan of test_df computed the distinct partition ids); NULL-bin
-    # rows never match the dense bin grid, so the histogram math is
-    # untouched and a fully-out-of-range partition still gets its
-    # n_test = 0 verdict rows from the grid
-    u = _melt_binned(
-        ref_df, edges_map, F.lit(None).cast(part_type), True
-    ).unionByName(
-        _melt_binned(
-            test_df, edges_map, F.col(part_col), False, keep_out_of_range=True
-        )
+    rows = _psi_rows(
+        test_df, edges_map, _ref_bin_counts(ref_df, edges_map), part_col, min_bin_size
     )
-    counts = (
-        u.groupBy("is_ref", "part", "feature", "bin")
-        .agg(F.count(F.lit(1)).alias("c"))
-        # lazy: the null-part probe below is the first action and
-        # materializes the checkpoint in the SAME job (an eager
-        # checkpoint here ran one extra job per call)
-        .localCheckpoint(eager=False)
-    )
-    dropped = (
-        counts.where(
-            ~F.col("is_ref") & F.col("part").isNull() & F.col("bin").isNotNull()
-        )
-        .agg(F.sum("c"))
-        .first()[0]
-    )
-    if dropped:
-        logger.warning(
-            "psi_by_partition: %d test value(s) have NULL %s and are "
-            "excluded from partition verdicts",
-            dropped,
-            part_col,
-        )
-    # reference histogram is global: one row per (feature, bin)
-    ref_cnt = counts.where(F.col("is_ref") & F.col("bin").isNotNull()).select(
-        "feature", "bin", F.col("c").alias("r")
-    )
-    test_cnt = counts.where(
-        ~F.col("is_ref") & F.col("part").isNotNull() & F.col("bin").isNotNull()
-    ).select("part", "feature", "bin", F.col("c").alias("t"))
-
-    # dense (part, feature, bin) grid so empty bins participate in the
-    # clamp+renormalize exactly like pandas' all-categories value_counts
-    bins_rows = [
-        (c, b) for c, e in edges_map.items() for b in range(len(e) - 1)
-    ]
-    grid_fb = spark.createDataFrame(pd.DataFrame(bins_rows, columns=["feature", "bin"]))
-    # the partition universe comes from the already-aggregated counts —
-    # NOT a second scan of test_df.  It is COMPLETE: the test melt keeps
-    # out-of-range values as NULL-bin rows, so every partition with any
-    # row at all appears here (incl. fully-out-of-range partitions, which
-    # then get their n_test = 0 verdict rows from the grid below).
-    parts = (
-        counts.where(~F.col("is_ref") & F.col("part").isNotNull())
-        .select("part")
-        .distinct()
-    )
-    grid = parts.crossJoin(F.broadcast(grid_fb))
-
-    j = (
-        grid.join(F.broadcast(ref_cnt), ["feature", "bin"], "left")
-        .join(test_cnt, ["part", "feature", "bin"], "left")
-        .na.fill({"r": 0, "t": 0})
-    )
-    w = Window.partitionBy("part", "feature")
-    rsum = F.sum("r").over(w)
-    tsum = F.sum("t").over(w)
-    # try_divide: a partition whose values are ALL out-of-range/NULL for a
-    # feature has tsum = 0 — under Spark's default ANSI mode a plain
-    # division would abort the whole job exactly on the fully-shifted
-    # partition it exists to flag.  NULL proportions clamp to
-    # min_bin_size (greatest skips NULLs): the no-in-range-data side
-    # renormalizes to uniform, and n_test = 0 in the verdict row marks the
-    # case.  PSI is an in-range-SHAPE statistic — the mass exodus itself
-    # is the KS check's job (it scores all values, D -> 1 here); locked by
-    # test_fully_shifted_partition_does_not_abort.
-    e = F.greatest(F.try_divide(F.col("r"), rsum), F.lit(min_bin_size))
-    a = F.greatest(F.try_divide(F.col("t"), tsum), F.lit(min_bin_size))
-    scored = j.select(
-        "part",
-        "feature",
-        e.alias("e"),
-        a.alias("a"),
-        F.sum(e).over(w).alias("esum"),
-        F.sum(a).over(w).alias("asum"),
-        rsum.alias("n_ref"),
-        tsum.alias("n_test"),
-    )
-    en = F.col("e") / F.col("esum")
-    an = F.col("a") / F.col("asum")
-    return scored.groupBy("part", "feature").agg(
-        F.sum((an - en) * F.log(an / en)).alias("psi"),
-        F.first("n_ref").alias("n_ref"),
-        F.first("n_test").alias("n_test"),
+    part_type = test_df.schema[part_col].dataType.simpleString()
+    return ref_df.sparkSession.createDataFrame(
+        rows, f"part {part_type}, feature string, psi double, n_ref long, n_test long"
     )
 
 
@@ -234,8 +193,9 @@ def rolling_psi(
     bins, so empty bins AND empty buckets participate in the clamp —
     the pandas all-categories semantic) → the trailing reference is a
     per-(feature, bin) window sum over the preceding ``trailing``
-    buckets.  PSI math is verbatim psi_by_partition (clamp to
-    min_bin_size via greatest-over-try_divide, renormalize, sum) — an
+    buckets.  PSI math is numerics.psi_from_proportions as column
+    expressions (clamp to min_bin_size via greatest-over-try_divide,
+    renormalize, sum) — an
     all-out-of-range or EMPTY bucket scores a ~0 shape drift with
     n_test = 0 marking it (volume is volume_report's job).
 
@@ -255,7 +215,7 @@ def rolling_psi(
 
     pts = df.where(F.col(ts_col).isNotNull())
     binned = _melt_binned(
-        pts, edges_map, F.date_trunc(bucket, F.col(ts_col)), False
+        pts, edges_map, F.date_trunc(bucket, F.col(ts_col))
     ).select(F.col("part").alias("__b"), "feature", "bin")
     counts = binned.groupBy("__b", "feature", "bin").agg(
         F.count(F.lit(1)).alias("t")
@@ -861,6 +821,178 @@ def chi2_from_count_maps(
     return stat, p, int(rc.sum()), int(tc.sum())
 
 
+def _verdict_schema(df: DataFrame, part_col: str) -> str:
+    """VERDICT_SCHEMA with the part column typed as ``df[part_col]``."""
+    part_type = df.schema[part_col].dataType.simpleString()
+    return VERDICT_SCHEMA.replace("part int", f"part {part_type}", 1)
+
+
+def _concurrently(*fns) -> list:
+    """Results of independent job-submitting callables run concurrently,
+    so their scheduling latency and shuffle waits overlap."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(fn) for fn in fns]
+        return [f.result() for f in futures]
+
+
+@dataclass
+class _VerdictSuite:
+    """:func:`partition_verdicts` as a reference FIT plus a per-batch
+    SCORE.  After :meth:`fit` (PSI edges + reference bin counts, and the
+    broadcast KS ECDF), every :meth:`score` reuses that state; without it,
+    each family's task fits its own half, overlapping the other families.
+    chi2 (its category cap counts ref ∪ test) and W1 read the reference
+    on every score."""
+
+    df: DataFrame
+    numeric_cols: Sequence[str]
+    cat_cols: Sequence[str] = ()
+    part_col: str = "part"
+    split_col: str = "split"
+    ref_value: str = "ref"
+    test_value: str = "test"
+    psi_threshold: float = 0.2
+    ks_threshold: float = 0.05
+    chi2_threshold: float = 0.05
+    n_bins: int = 10
+    approx_quantile_error: Optional[float] = None
+    ks_cols: Optional[Sequence[str]] = None
+    max_categories: int = 1000
+    ks_preaggregate: bool = False
+    w1_cols: Optional[Sequence[str]] = None
+    w1_threshold: float = 0.1
+
+    def __post_init__(self):
+        self.ref_df = self.df.where(F.col(self.split_col) == self.ref_value)
+        self.ks_cols = list(self.numeric_cols if self.ks_cols is None else self.ks_cols)
+        # [PSI state, KS state] once fit() ran
+        self.fitted: Optional[list] = None
+
+    def _fit_psi(self) -> tuple:
+        """(edges, {feature: in-range reference count per bin}); both empty
+        when no PSI column can be fitted."""
+        if not self.numeric_cols:
+            return {}, {}
+        if self.approx_quantile_error is not None:
+            # scale path: Greenwald-Khanna approximate edges (at 10^12 rows
+            # an exact percentile sort is not realistic; pd.qcut parity
+            # paths keep the exact default).  The shared helper applies the
+            # SAME post-processing as the exact path — duplicate edges
+            # dropped, constant columns fall back to uniform edges — so a
+            # constant-in-reference column keeps its PSI verdict here too.
+            from driftspark.stats import approx_quantile_edges
+
+            edges = approx_quantile_edges(
+                self.ref_df, list(self.numeric_cols), self.n_bins,
+                self.approx_quantile_error,
+            )
+        else:
+            edges = quantile_edges(self.ref_df, self.numeric_cols, self.n_bins)
+        if not edges:
+            # every numeric column all-NULL in the reference: no fitted
+            # bins means no PSI verdicts, not a failed verdict suite
+            logger.warning(
+                "partition_verdicts: no PSI edges could be fitted for %s "
+                "(all-NULL reference columns?) — PSI checks skipped",
+                list(self.numeric_cols),
+            )
+            return {}, {}
+        return edges, _ref_bin_counts(self.ref_df, edges)
+
+    def _fit_ks(self):
+        """The fitted KS reference ECDF as a Broadcast (None without KS
+        columns)."""
+        if not self.ks_cols:
+            return None
+        ecdf = fit_ks_reference_ecdf(self.ref_df, self.ks_cols)
+        return self.df.sparkSession.sparkContext.broadcast(ecdf)
+
+    def fit(self) -> "_VerdictSuite":
+        self.fitted = _concurrently(self._fit_psi, self._fit_ks)
+        return self
+
+    def score(self, parts: Optional[Sequence] = None) -> DataFrame:
+        """The verdict DataFrame for the test partitions in ``parts`` (all
+        of them when None), built on the driver."""
+        ref_df, part_col = self.ref_df, self.part_col
+        test_df = self.df.where(F.col(self.split_col) == self.test_value)
+        if parts is not None:
+            test_df = test_df.where(F.col(part_col).isin(list(parts)))
+
+        fitted = self.fitted
+
+        def run_psi():
+            edges, ref_counts = fitted[0] if fitted else self._fit_psi()
+            return _psi_rows(test_df, edges, ref_counts, part_col) if edges else []
+
+        def run_ks():
+            b_ecdf = fitted[1] if fitted else self._fit_ks()
+            if b_ecdf is None:
+                return []
+            return ks_d_against_ecdf(
+                test_df, self.ks_cols, b_ecdf, part_col, self.ks_preaggregate
+            ).collect()
+
+        def run_chi2():
+            return chi2_by_partition(
+                ref_df, test_df, self.cat_cols, part_col,
+                max_categories=self.max_categories,
+            )
+
+        def run_w1():
+            # opt-in scale-bearing check: normalized W1 (w1 / global ref std)
+            # per partition; the ratio severity ladder matches the
+            # WassersteinDistance detector.  Degenerate ref std (constant
+            # feature) scores raw w1 against 0 — any movement fails.
+            if not self.w1_cols:
+                return [], {}
+            from driftspark.stats import moment_stats
+
+            w1_cols = list(self.w1_cols)
+            stds = {c: s for c, (mu, s) in moment_stats(ref_df, w1_cols).items()}
+            return w1_by_partition(ref_df, test_df, w1_cols, part_col).collect(), stds
+
+        psi_rows, ks_rows, chi2_rows, (w1_rows, w1_stds) = _concurrently(
+            run_psi, run_ks, run_chi2, run_w1
+        )
+
+        rows = [
+            (part, f, "psi", psi, None, severity_from_psi(psi),
+             psi < self.psi_threshold, n_ref, n_test)
+            for part, f, psi, n_ref, n_test in psi_rows
+        ]
+        for r in ks_rows:
+            d, n, m = float(r["d"]), int(r["n"]), int(r["m"])
+            p = ks_2samp_pvalue(d, n, m)
+            rows.append(
+                (r["part"], r["feature"], "ks", d, p,
+                 severity_from_pvalue(p, self.ks_threshold),
+                 not (p < self.ks_threshold), n, m)
+            )
+        rows += [
+            (rec["part"], rec["feature"], "chi2", rec["stat"], rec["p"],
+             severity_from_pvalue(rec["p"], self.chi2_threshold),
+             not (rec["p"] < self.chi2_threshold), rec["n_ref"], rec["n_test"])
+            for rec in chi2_rows
+        ]
+        if w1_rows:
+            from driftspark.detectors.wasserstein import severity_from_ratio
+
+            for r in w1_rows:
+                w1, std = float(r["w1"]), w1_stds.get(r["feature"], 0.0)
+                norm = w1 / std if std > 0 else (0.0 if w1 == 0.0 else float("inf"))
+                rows.append(
+                    (r["part"], r["feature"], "w1", norm, None,
+                     severity_from_ratio(norm / self.w1_threshold),
+                     norm < self.w1_threshold, int(r["n"]), int(r["m"]))
+                )
+        return self.df.sparkSession.createDataFrame(
+            rows, _verdict_schema(self.df, part_col)
+        )
+
+
 def partition_verdicts(
     df: DataFrame,
     numeric_cols: Sequence[str],
@@ -887,151 +1019,14 @@ def partition_verdicts(
     as the input's partition column — int, string, date, ...): one row per
     (partition, feature, check) with statistic, p-value (where defined),
     reference severity ladder, and pass/fail.  ``parts`` restricts the run
-    to a subset of partitions (the checkpoint/resume hook).
+    to a subset of partitions (checkpoint.resumable_partition_drift scores
+    its batches on one fitted :class:`_VerdictSuite` instead).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark = df.sparkSession
-    part_sql_type = df.schema[part_col].dataType.simpleString()
-    out_schema = VERDICT_SCHEMA.replace("part int", f"part {part_sql_type}", 1)
-    ref_df = df.where(F.col(split_col) == ref_value)
-    test_df = df.where(F.col(split_col) == test_value)
-    if parts is not None:
-        test_df = test_df.where(F.col(part_col).isin(list(parts)))
-
-    rows: List[tuple] = []
-
-    def run_psi():
-        if not numeric_cols:
-            return []
-        if approx_quantile_error is not None:
-            # scale path: Greenwald-Khanna approximate edges (at 10^12 rows
-            # an exact percentile sort is not realistic; pd.qcut parity
-            # paths keep the exact default).  The shared helper applies the
-            # SAME post-processing as the exact path — duplicate edges
-            # dropped, constant columns fall back to uniform edges — so a
-            # constant-in-reference column keeps its PSI verdict here too.
-            from driftspark.stats import approx_quantile_edges
-
-            edges_map = approx_quantile_edges(
-                ref_df, list(numeric_cols), n_bins, approx_quantile_error
-            )
-        else:
-            edges_map = quantile_edges(ref_df, numeric_cols, n_bins)
-        if not edges_map:
-            # every numeric column all-NULL in the reference: no fitted
-            # bins means no PSI verdicts, not a failed verdict suite
-            logger.warning(
-                "partition_verdicts: no PSI edges could be fitted for %s "
-                "(all-NULL reference columns?) — PSI checks skipped",
-                list(numeric_cols),
-            )
-            return []
-        return psi_by_partition(ref_df, test_df, edges_map, part_col).collect()
-
-    def run_ks():
-        ks_columns = list(numeric_cols if ks_cols is None else ks_cols)
-        if not ks_columns:
-            return []
-        return ks_d_by_partition_broadcast(
-            ref_df, test_df, ks_columns, part_col,
-            preaggregate=ks_preaggregate,
-        ).collect()
-
-    def run_chi2():
-        return chi2_by_partition(
-            ref_df, test_df, cat_cols, part_col, max_categories=max_categories
-        )
-
-    def run_w1():
-        # opt-in scale-bearing check: normalized W1 (w1 / global ref std)
-        # per partition; the ratio severity ladder matches the
-        # WassersteinDistance detector.  Degenerate ref std (constant
-        # feature) scores raw w1 against 0 — any movement fails.
-        if not w1_cols:
-            return [], {}
-        from driftspark.stats import moment_stats
-
-        stds = {c: s for c, (mu, s) in moment_stats(ref_df, list(w1_cols)).items()}
-        return w1_by_partition(ref_df, test_df, list(w1_cols), part_col).collect(), stds
-
-    # the check families are independent — submit their Spark jobs
-    # concurrently so per-job scheduling latency overlaps (the scheduler
-    # interleaves stages; at scale this also overlaps shuffle waits)
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        psi_fut = pool.submit(run_psi)
-        ks_fut = pool.submit(run_ks)
-        chi2_fut = pool.submit(run_chi2)
-        w1_fut = pool.submit(run_w1)
-        psi_rows, ks_rows, chi2_rows = psi_fut.result(), ks_fut.result(), chi2_fut.result()
-        w1_rows, w1_stds = w1_fut.result()
-
-    for r in psi_rows:
-        psi = float(r["psi"])
-        rows.append(
-            (
-                r["part"],
-                r["feature"],
-                "psi",
-                psi,
-                None,
-                severity_from_psi(psi),
-                psi < psi_threshold,
-                int(r["n_ref"]),
-                int(r["n_test"]),
-            )
-        )
-    for r in ks_rows:
-        d, n, m = float(r["d"]), int(r["n"]), int(r["m"])
-        p = ks_2samp_pvalue(d, n, m)
-        rows.append(
-            (
-                r["part"],
-                r["feature"],
-                "ks",
-                d,
-                p,
-                severity_from_pvalue(p, ks_threshold),
-                not (p < ks_threshold),
-                n,
-                m,
-            )
-        )
-    for rec in chi2_rows:
-        p = rec["p"]
-        rows.append(
-            (
-                rec["part"],
-                rec["feature"],
-                "chi2",
-                rec["stat"],
-                p,
-                severity_from_pvalue(p, chi2_threshold),
-                not (p < chi2_threshold),
-                rec["n_ref"],
-                rec["n_test"],
-            )
-        )
-    if w1_rows:
-        from driftspark.detectors.wasserstein import severity_from_ratio
-
-        for r in w1_rows:
-            w1, std = float(r["w1"]), w1_stds.get(r["feature"], 0.0)
-            norm = w1 / std if std > 0 else (0.0 if w1 == 0.0 else float("inf"))
-            rows.append(
-                (
-                    r["part"],
-                    r["feature"],
-                    "w1",
-                    norm,
-                    None,
-                    severity_from_ratio(norm / w1_threshold),
-                    norm < w1_threshold,
-                    int(r["n"]),
-                    int(r["m"]),
-                )
-            )
-
-    if not rows:
-        return spark.createDataFrame([], out_schema)
-    return spark.createDataFrame(rows, out_schema)
+    return _VerdictSuite(
+        df, numeric_cols, cat_cols, part_col=part_col, split_col=split_col,
+        ref_value=ref_value, test_value=test_value, psi_threshold=psi_threshold,
+        ks_threshold=ks_threshold, chi2_threshold=chi2_threshold, n_bins=n_bins,
+        approx_quantile_error=approx_quantile_error, ks_cols=ks_cols,
+        max_categories=max_categories, ks_preaggregate=ks_preaggregate,
+        w1_cols=w1_cols, w1_threshold=w1_threshold,
+    ).score(parts)

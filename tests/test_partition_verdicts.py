@@ -3,6 +3,7 @@ checkpoint/resume."""
 
 import shutil
 import tempfile
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -128,6 +129,107 @@ def test_checkpoint_resume(spark, drifted):
         assert v3.count() == 0
         summary = cp.run_summary(run_id)
         assert summary["parts_done"] == 4
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+class _CrashAfterFirstBatch(CheckpointManager):
+    """A ledger that keeps each batch's verdict rows, as a caller
+    persisting them would, and dies right after the first mark_done."""
+
+    def __init__(self, spark, path):
+        super().__init__(spark, path)
+        self.persisted = []
+
+    def mark_done(self, run_id, verdicts, snapshot_id=None):
+        super().mark_done(run_id, verdicts, snapshot_id)
+        self.persisted += verdicts.collect()
+        raise RuntimeError("injected crash after the first batch")
+
+
+def _assert_same_verdicts(got, want):
+    """Keys, severity, passed, n_ref and n_test exactly; statistic and
+    p-value to a relative 1e-9."""
+    key = lambda r: (r["part"], r["feature"], r["check"])  # noqa: E731
+    by_key = {key(r): r for r in got}
+    assert len(by_key) == len(got) and set(by_key) == {key(r) for r in want}
+    for w in want:
+        g = by_key[key(w)]
+        exact = ("severity", "passed", "n_ref", "n_test")
+        assert [g[f] for f in exact] == [w[f] for f in exact], key(w)
+        assert g["statistic"] == pytest.approx(w["statistic"], rel=1e-9), key(w)
+        if w["p_value"] is None:
+            assert g["p_value"] is None, key(w)
+        else:
+            assert g["p_value"] == pytest.approx(w["p_value"], rel=1e-9), key(w)
+
+
+def test_crash_and_resume_equals_uninterrupted_and_fits_once(
+    spark, drifted, monkeypatch
+):
+    """A run that dies after its first persisted batch, then resumes,
+    yields exactly one uninterrupted partition_verdicts; and every
+    resumable_partition_drift call fits the PSI edges and the KS ECDF
+    once, whatever its batch count."""
+    import driftspark.verdicts as verdicts_mod
+
+    kw = dict(numeric_cols=["w", "h"], cat_cols=["fmt"])
+    want = partition_verdicts(drifted, **kw).collect()
+
+    calls = Counter()
+
+    def spy(name):
+        real = getattr(verdicts_mod, name)
+
+        def counted(*args, **kwargs):
+            calls[name] += 1
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(verdicts_mod, name, counted)
+
+    spy("quantile_edges")
+    spy("fit_ks_reference_ecdf")
+    once = {"quantile_edges": 1, "fit_ks_reference_ecdf": 1}
+    tmp = tempfile.mkdtemp()
+    try:
+        crashing = _CrashAfterFirstBatch(spark, f"{tmp}/ledger")
+        with pytest.raises(RuntimeError, match="injected crash"):
+            resumable_partition_drift(drifted, crashing, "crash01", batch_parts=1, **kw)
+        assert calls == once
+        assert len(crashing.completed_parts("crash01")) == 1
+
+        calls.clear()
+        resumed = resumable_partition_drift(
+            drifted, CheckpointManager(spark, f"{tmp}/ledger"), "crash01",
+            batch_parts=1, **kw,
+        ).collect()
+        assert calls == once  # three batches, one fit
+        assert len({r["part"] for r in resumed}) == 3
+        _assert_same_verdicts(crashing.persisted + resumed, want)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_resume_with_nothing_pending_keeps_string_part_type(spark):
+    """The ledger round-trips string partition ids, and a finished run
+    returns an empty frame typed like the run that computed the
+    verdicts (it used to be a hard-coded ``part int`` frame)."""
+    rng = np.random.RandomState(17)
+    df = spark.createDataFrame(pd.concat([
+        pd.DataFrame({"x": rng.normal(shift if split == "test" else 0.0, 1, 400),
+                      "part": part, "split": split})
+        for part, shift in [("eu-west", 0.0), ("us-east", 1.5)]
+        for split in ("ref", "test")
+    ]))
+    tmp = tempfile.mkdtemp()
+    try:
+        cp = CheckpointManager(spark, f"{tmp}/ledger")
+        first = resumable_partition_drift(df, cp, "str01", numeric_cols=["x"])
+        assert dict(first.dtypes)["part"] == "string"
+        assert cp.completed_parts("str01") == ["eu-west", "us-east"]
+        again = resumable_partition_drift(df, cp, "str01", numeric_cols=["x"])
+        assert again.count() == 0
+        assert again.schema == first.schema
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

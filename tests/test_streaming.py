@@ -190,6 +190,31 @@ def test_streaming_chi2_equals_batch(spark):
     assert rows[("chi2", "cat")]["p_value"] == pytest.approx(batch["p"], abs=1e-12)
 
 
+def test_streaming_psi_equals_batch(spark):
+    """One partition's test rows scored as a micro-batch give the PSI
+    statistic and pass/fail that partition_verdicts gives that partition:
+    both fit the same edges and run numerics.psi_from_proportions."""
+    from driftspark.synth import synth_image_table
+    from driftspark.verdicts import partition_verdicts
+
+    t = synth_image_table(spark, 8000, n_parts=4, drift=True, with_bytes=False).cache()
+    batch = {
+        (r["part"], r["feature"]): r
+        for r in partition_verdicts(t, numeric_cols=["w", "h"], ks_cols=[])
+        .where("check = 'psi'")
+        .collect()
+    }
+    monitor = StreamingDriftMonitor(t.where("split = 'ref'"), ["w", "h"], ks_cols=[])
+    for part in (0, 3):
+        rows = monitor.score_batch(t.where(f"split = 'test' AND part = {part}"))
+        assert {r["feature"] for r in rows} == {"w", "h"}
+        for r in rows:
+            b = batch[(part, r["feature"])]
+            assert r["statistic"] == pytest.approx(b["statistic"], rel=1e-12, abs=0)
+            assert r["passed"] == b["passed"]
+    t.unpersist()
+
+
 def test_streaming_chi2_capped_feature_bounded_collect(spark):
     """When the fitted reference capped a feature, batch-side tail/unseen
     categories remap into __chi2_other__ IN SPARK (the collect stays
