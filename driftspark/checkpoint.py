@@ -129,22 +129,30 @@ def resumable_partition_drift(
     per call, before the batch loop; each batch then scans only its own
     test partitions for PSI and KS.  Returns the verdicts computed in this
     invocation, typed like partition_verdicts' output even when nothing
-    is pending."""
+    is pending.  The partitions are the non-NULL part ids of the TEST
+    split, the ones partition_verdicts gives verdict rows."""
+    from driftspark.session import local_frame
     from driftspark.verdicts import _verdict_schema, _VerdictSuite
 
+    suite = _VerdictSuite(
+        df, numeric_cols, cat_cols, part_col=part_col, **verdict_kwargs
+    )
     all_parts = [
-        r["p"] for r in df.select(F.col(part_col).alias("p")).distinct().collect()
+        r["p"]
+        for r in suite.test_df.select(F.col(part_col).alias("p"))
+        .where(F.col("p").isNotNull())
+        .distinct()
+        .collect()
     ]
     pending = checkpoint.pending_parts(run_id, sorted(all_parts))
     if not pending:
-        return df.sparkSession.createDataFrame([], _verdict_schema(df, part_col))
-    suite = _VerdictSuite(
-        df, numeric_cols, cat_cols, part_col=part_col, **verdict_kwargs
-    ).fit()
+        return local_frame(df.sparkSession, [], _verdict_schema(df, part_col))
+    suite.fit()
     batches = []
     for i in range(0, len(pending), batch_parts):
-        # score() returns a driver-built local DataFrame: mark_done and the
-        # union below re-read it without another Spark job
+        # score() returns a LocalRelation (session.local_frame): mark_done's
+        # ledger write and the caller's reads scan it in the JVM, with no
+        # Python round trip and no recomputation
         v = suite.score(pending[i : i + batch_parts])
         checkpoint.mark_done(run_id, v, snapshot_id)
         batches.append(v)

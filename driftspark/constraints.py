@@ -28,6 +28,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from driftspark.session import local_frame
+
 logger = logging.getLogger(__name__)
 
 BROADCAST_ROW_LIMIT = 2_000_000
@@ -164,7 +166,7 @@ def uniqueness_check(
     # probe job runs at all (the report is returned as a local one-row
     # frame — collecting it twice would be free anyway)
     report_row = report.first()
-    report = df.sparkSession.createDataFrame([report_row], report.schema)
+    report = local_frame(df.sparkSession, [report_row], report.schema)
     dups = counted.where(F.col("c") > 1).withColumnRenamed("c", "dup_count")
     right = (
         F.broadcast(dups)

@@ -4,9 +4,21 @@
 split-tagged image table: per-partition column profile, uniqueness +
 referential constraints, per-partition drift verdicts (PSI / KS / chi2),
 optional decoded-payload checks, with optional checkpoint/resume and
-table sinks.  The four independent pass families run concurrently
-(driver threads; Spark interleaves their stages).  This is what
+table sinks.  The independent pass families run concurrently (driver
+threads; Spark interleaves their stages).  This is what
 tools/validate_job.py submits via spark-submit.
+
+Every output is computed once, inside its pass, and reading it afterwards
+does not re-run its plan:
+
+* driver-local (a ``LocalRelation``, session.local_frame — collecting it
+  submits no Spark job): verdicts, the uniqueness report, profile and
+  expectations, all O(partitions x columns) rows;
+* checkpointed once (``localCheckpoint(eager=True)``; the blocks are
+  reclaimed by the ContextCleaner when the frame is garbage-collected):
+  the row-grain referential violations, payload checks and contamination;
+* lazy: uniqueness violations — each row carries the full base row, so a
+  caller that never reads them does not pay for them.
 """
 
 from __future__ import annotations
@@ -19,11 +31,16 @@ from typing import Any, Dict, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from driftspark.session import local_frame
+
 
 @dataclass
 class ValidationResult:
-    """Handles to every output of a validation run (all DataFrames stay
-    distributed; write them with driftspark.sinks.write_table)."""
+    """Handles to every output of a validation run, each computed once
+    (see the module docstring): verdicts, uniqueness, profile and
+    expectations are driver-local; referential_violations, payload_checks
+    and contamination are checkpointed; uniqueness_violations stays lazy.
+    Write any of them with driftspark.sinks.write_table."""
 
     schema_check: Optional[Any] = None  # SchemaCheckResult
     expectations: Optional[DataFrame] = None
@@ -106,6 +123,7 @@ def run_validation(
     verdict_kwargs.setdefault("ks_preaggregate", True)
 
     res = ValidationResult()
+    spark = images.sparkSession
     t0 = time.time()
 
     if expected_schema is not None:
@@ -113,28 +131,31 @@ def run_validation(
 
         res.schema_check = check_schema(images, expected_schema)
 
-    res.n_images = images.count()
+    def collected(df: DataFrame) -> DataFrame:
+        # a partition-bounded aggregate: one job, then served on the driver
+        return local_frame(spark, df.collect(), df.schema)
 
     def pass_profile():
-        res.profile = profile_columns(
-            images,
-            columns=list(numeric_cols) + list(cat_cols),
-            group_cols=[part_col],
+        res.profile = collected(
+            profile_columns(
+                images,
+                columns=list(numeric_cols) + list(cat_cols),
+                group_cols=[part_col],
+            )
         )
-        res.profile.count()
 
     def pass_uniqueness():
         res.uniqueness, res.uniqueness_violations = uniqueness_check(
             images, list(key_cols)
         )
-        res.uniqueness.count()
+        # the report counts every row, NULL keys included
+        res.n_images = res.uniqueness.first()["n_rows"]
 
     def pass_referential():
         if parent is not None and fk_col in images.columns:
             res.referential_violations = referential_violations(
                 images, fk_col, parent, parent_key
-            )
-            res.referential_violations.count()
+            ).localCheckpoint(eager=True)
 
     def pass_verdicts():
         if checkpoint is not None and run_id is not None:
@@ -162,7 +183,6 @@ def run_validation(
                 approx_quantile_error=approx_quantile_error,
                 **verdict_kwargs,
             )
-        res.verdicts.count()
 
     def pass_payload():
         if pairs is None:
@@ -172,15 +192,14 @@ def run_validation(
         # split-table layout takes the full-outer join and WARNS above
         # the row threshold that the byte shuffle is the job at scale
         if "ref_bytes" in pairs.columns:
-            res.payload_checks = validate_image_payloads_auto(
-                pairs, min_psnr=min_psnr
-            )
+            checks = validate_image_payloads_auto(pairs, min_psnr=min_psnr)
         else:
-            res.payload_checks = validate_image_payloads_auto(
+            checks = validate_image_payloads_auto(
                 pairs.where(F.col(split_col) == "ref"),
                 pairs.where(F.col(split_col) == "test"),
                 min_psnr=min_psnr,
             )
+        res.payload_checks = checks.localCheckpoint(eager=True)
         res.n_pairs = res.payload_checks.count()
 
     def pass_contamination():
@@ -195,16 +214,16 @@ def run_validation(
             images.where(F.col(split_col) == "test"),
             contamination_ref,
             max_hamming=contamination_max_hamming,
-        )
-        res.contamination.count()
+        ).localCheckpoint(eager=True)
 
     def pass_expectations():
         if expectations is None:
             return
         from driftspark.schema import run_expectations
 
-        res.expectations = run_expectations(images, expectations, group_col=part_col)
-        res.expectations.count()
+        res.expectations = collected(
+            run_expectations(images, expectations, group_col=part_col)
+        )
 
     with ThreadPoolExecutor(max_workers=7) as pool:
         futs = [

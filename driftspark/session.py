@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import os
+from datetime import timezone
+from typing import Sequence, Union
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 
 def get_spark(
@@ -44,3 +47,31 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence, schema: Union[str, StructType]
+) -> DataFrame:
+    """A driver-built result frame as a ``LocalRelation``.
+
+    ``rows`` are tuples or ``Row``s in ``schema`` order; ``schema`` is a
+    DDL string or a StructType.  The rows go to the JVM as one
+    ``pyarrow.Table``, so every later read is a ``LocalTableScan`` served
+    on the driver — ``createDataFrame(list)`` would instead build a
+    pickled Python RDD and pay a Spark job on every read.  Naive
+    TimestampType values mean local time, as they do for
+    ``createDataFrame(list)``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for values, field, arrow_field in zip(columns, schema.fields, arrow_schema):
+        if isinstance(field.dataType, TimestampType):
+            values = [v if v is None else v.astimezone(timezone.utc) for v in values]
+        arrays.append(pa.array(values, type=arrow_field.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

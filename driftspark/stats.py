@@ -37,6 +37,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from driftspark.session import local_frame
+
 logger = logging.getLogger(__name__)
 
 MIN_BIN_SIZE_DEFAULT = 0.001
@@ -1004,9 +1006,11 @@ def category_shift_report(
     null rows).
     """
     if not cols:
-        return ref_df.sparkSession.createDataFrame(
-            [], "feature string, category string, n_ref long, n_test long, "
-                "ref_prop double, test_prop double, delta double",
+        return local_frame(
+            ref_df.sparkSession,
+            [],
+            "feature string, category string, n_ref long, n_test long, "
+            "ref_prop double, test_prop double, delta double",
         )
 
     def melt(df, tag):

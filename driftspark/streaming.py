@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from driftspark.numerics import psi_from_proportions, severity_from_psi
+from driftspark.session import local_frame
 from driftspark.stats import histogram_proportions_one, quantile_edges
 
 logger = logging.getLogger(__name__)
@@ -230,8 +231,8 @@ class StreamingDriftMonitor:
         # the microbatch session is a clone per trigger, so the tiny
         # membership table is recreated per batch from the once-built
         # row list (bounded at features x max_categories rows)
-        ref_members = batch_df.sparkSession.createDataFrame(
-            self._ref_member_rows, "feature string, v string"
+        ref_members = local_frame(
+            batch_df.sparkSession, self._ref_member_rows, "feature string, v string"
         ).withColumn("in_ref", F.lit(True))
         w_guard = Window.partitionBy("feature").orderBy(
             F.col("in_ref").desc(), F.col("c").desc(), "v"
@@ -297,7 +298,8 @@ class StreamingDriftMonitor:
             if n == 0:
                 return
             rows = self.score_batch(batch_df)
-            out = spark.createDataFrame(
+            out = local_frame(
+                spark,
                 [
                     (
                         int(batch_id), r["feature"], r["check"], r["statistic"],

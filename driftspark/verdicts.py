@@ -40,6 +40,7 @@ from driftspark.numerics import (
     severity_from_psi,
     severity_from_pvalue,
 )
+from driftspark.session import local_frame
 from driftspark.stats import (
     _CDF_BUCKETED_THRESHOLD,
     _W1_QUANTIZE,
@@ -168,8 +169,10 @@ def psi_by_partition(
         test_df, edges_map, _ref_bin_counts(ref_df, edges_map), part_col, min_bin_size
     )
     part_type = test_df.schema[part_col].dataType.simpleString()
-    return ref_df.sparkSession.createDataFrame(
-        rows, f"part {part_type}, feature string, psi double, n_ref long, n_test long"
+    return local_frame(
+        ref_df.sparkSession,
+        rows,
+        f"part {part_type}, feature string, psi double, n_ref long, n_test long",
     )
 
 
@@ -234,9 +237,7 @@ def rolling_psi(
     bins_rows = [
         (c, b) for c, e in edges_map.items() for b in range(len(e) - 1)
     ]
-    grid_fb = spark.createDataFrame(
-        pd.DataFrame(bins_rows, columns=["feature", "bin"])
-    )
+    grid_fb = local_frame(spark, bins_rows, "feature string, bin long")
     dense = (
         grid_fb.crossJoin(F.broadcast(grid_b))
         .join(counts, ["__b", "feature", "bin"], "left")
@@ -548,7 +549,7 @@ def ks_d_against_ecdf(
     part_sql_type = test_df.schema[part_col].dataType.simpleString()
     out_schema = f"part {part_sql_type}, feature string, d double, n long, m long"
     if not cols:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     def compute(key, pdf):
         part, feat = key
@@ -866,6 +867,7 @@ class _VerdictSuite:
 
     def __post_init__(self):
         self.ref_df = self.df.where(F.col(self.split_col) == self.ref_value)
+        self.test_df = self.df.where(F.col(self.split_col) == self.test_value)
         self.ks_cols = list(self.numeric_cols if self.ks_cols is None else self.ks_cols)
         # [PSI state, KS state] once fit() ran
         self.fitted: Optional[list] = None
@@ -916,8 +918,7 @@ class _VerdictSuite:
     def score(self, parts: Optional[Sequence] = None) -> DataFrame:
         """The verdict DataFrame for the test partitions in ``parts`` (all
         of them when None), built on the driver."""
-        ref_df, part_col = self.ref_df, self.part_col
-        test_df = self.df.where(F.col(self.split_col) == self.test_value)
+        ref_df, test_df, part_col = self.ref_df, self.test_df, self.part_col
         if parts is not None:
             test_df = test_df.where(F.col(part_col).isin(list(parts)))
 
@@ -988,9 +989,7 @@ class _VerdictSuite:
                      severity_from_ratio(norm / self.w1_threshold),
                      norm < self.w1_threshold, int(r["n"]), int(r["m"]))
                 )
-        return self.df.sparkSession.createDataFrame(
-            rows, _verdict_schema(self.df, part_col)
-        )
+        return local_frame(self.df.sparkSession, rows, _verdict_schema(self.df, part_col))
 
 
 def partition_verdicts(

@@ -39,6 +39,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from driftspark.session import local_frame
+
 logger = logging.getLogger(__name__)
 
 _BUCKETS = {"minute", "hour", "day", "week"}
@@ -224,8 +226,8 @@ def freshness_report(
         )
     out = per.crossJoin(F.broadcast(anchor))
     if expected_groups is not None:
-        exp = df.sparkSession.createDataFrame(
-            [(str(x),) for x in expected_groups], "group string"
+        exp = local_frame(
+            df.sparkSession, [(str(x),) for x in expected_groups], "group string"
         )
         out = exp.join(out, "group", "full")
     # parquet timestamps read as TIMESTAMP_NTZ; unix_micros needs TIMESTAMP.

@@ -234,6 +234,60 @@ def test_resume_with_nothing_pending_keeps_string_part_type(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _two_split_frame(spark, splits_by_part, split_col="split", values=("ref", "test")):
+    rng = np.random.RandomState(23)
+    rows = [
+        (float(x), part, values[split == "test"])
+        for part, splits in splits_by_part
+        for split in splits
+        for x in rng.normal(0, 1, 200)
+    ]
+    return spark.createDataFrame(rows, f"x double, part int, {split_col} string")
+
+
+def test_resume_skips_null_part_ids(spark):
+    """A NULL part id gets no verdict row, so it is never pending (it used
+    to make sorted() raise TypeError)."""
+    df = _two_split_frame(
+        spark, [(0, ("ref", "test")), (1, ("ref", "test")), (None, ("ref", "test"))]
+    )
+    tmp = tempfile.mkdtemp()
+    try:
+        cp = CheckpointManager(spark, f"{tmp}/ledger")
+        v = resumable_partition_drift(df, cp, "null01", numeric_cols=["x"])
+        assert sorted({r["part"] for r in v.collect()}) == [0, 1]
+        assert cp.completed_parts("null01") == [0, 1]
+        assert resumable_partition_drift(df, cp, "null01", numeric_cols=["x"]).count() == 0
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_resume_ignores_reference_only_part_ids(spark, monkeypatch):
+    """A part id only reference rows carry gets no verdict row: it must not
+    stay pending and be re-scored (with a reference refit) on every
+    resume.  The test split comes from the verdict kwargs."""
+    import driftspark.verdicts as verdicts_mod
+
+    df = _two_split_frame(
+        spark, [(0, ("ref", "test")), (1, ("ref", "test")), (9, ("ref",))],
+        split_col="side", values=("base", "cur"),
+    )
+    kw = dict(numeric_cols=["x"], split_col="side", ref_value="base", test_value="cur")
+    tmp = tempfile.mkdtemp()
+    try:
+        cp = CheckpointManager(spark, f"{tmp}/ledger")
+        v = resumable_partition_drift(df, cp, "refonly01", **kw)
+        assert sorted({r["part"] for r in v.collect()}) == [0, 1]
+        fits = []
+        monkeypatch.setattr(
+            verdicts_mod, "quantile_edges", lambda *a, **k: fits.append(a) or {}
+        )
+        again = resumable_partition_drift(df, cp, "refonly01", **kw)
+        assert again.count() == 0 and fits == []
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_psi_by_partition_string_partitions(spark):
     """Partition ids keep their original type through the fused one-scan
     plan: string parts (e.g. '2024-01') must NOT be cast-to-NULL and
