@@ -2,37 +2,53 @@
 
 North rule (BASELINE.json:6,14): runs are resumable from checkpoints with
 per-partition lineage and metrics persisted.  The reference has no
-streaming surface (SURVEY.md §2.9) — resume is batch: a persisted
-completion table keyed by (run_id, part), and a restart anti-joins the
-pending partition set.
+streaming surface (SURVEY.md §2.9) — resume is batch: a completion ledger
+keyed by (run_id, part), and a restart scores only the test partitions
+the ledger does not list as done.
 
-A resume fits the PSI/KS drift reference once per call and scores every
-batch of pending partitions against it.
+Storage: the ledger is a parquet directory written in append mode, one
+row per partition per completed batch.  A partition that is marked done
+twice keeps both rows; readers count each (run_id, part) once, with its
+latest row.
 
-Storage: an Iceberg table when a catalog is configured (snapshot_id column
-records the input snapshot for time-travel lineage), else a parquet
-directory in append mode — functionally identical for resume.  Writes are
-idempotent at the (run_id, part) grain: a partition re-run overwrites its
-verdict rows by rewrite-on-read filtering.
+The ledger directory also holds the fitted PSI/KS reference state of each
+run, at ``<path>/_fit/run_id=<id>/fp=<fingerprint>``: one small parquet
+frame plus its ``_SUCCESS`` marker.  Spark's file reader skips
+``_``-prefixed names, so reading the ledger never sees it.  A resume with
+the same run_id and fingerprint loads that state instead of refitting; the
+fingerprint covers the fit settings, the reference row count and a
+checksum of the fitted reference columns, so a changed reference refits
+(with a warning) and never mixes fits.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import logging
 import time
 import uuid
 from functools import reduce
 from typing import Optional, Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
+
+logger = logging.getLogger(__name__)
+
+#: one row per fitted (family, feature): PSI edges with the reference bin
+#: counts, or the KS ECDF's sorted values with their cumulative counts
+FIT_SCHEMA = "family string, feature string, values array<double>, counts array<bigint>"
 
 
 class CheckpointManager:
     """Per-partition completion ledger at ``path`` (parquet append): one
     (run_id, part, status, n_checks, n_failed, snapshot_id, completed_at)
     row per completed partition.  ``part`` keeps the verdicts' partition
-    type (int, string, date, ...)."""
+    type (int, string, date, ...).  ``<path>/_fit`` holds each run's
+    fitted reference state (:meth:`save_fit`, :meth:`load_fit`)."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -94,13 +110,17 @@ class CheckpointManager:
         ledger.write.mode("append").parquet(self.path)
 
     def run_summary(self, run_id: str) -> dict:
+        """Partitions done and failed checks, counting each partition once
+        (its latest ledger row) however often it was marked done."""
         df = self._read()
         if df is None:
             return {"run_id": run_id, "parts_done": 0, "n_failed": 0}
         row = (
             df.where(F.col("run_id") == run_id)
+            .groupBy("part")
+            .agg(F.max_by("n_failed", "completed_at").alias("n_failed"))
             .agg(
-                F.countDistinct("part").alias("parts_done"),
+                F.count(F.lit(1)).alias("parts_done"),
                 F.sum("n_failed").alias("n_failed"),
             )
             .first()
@@ -110,6 +130,96 @@ class CheckpointManager:
             "parts_done": int(row["parts_done"] or 0),
             "n_failed": int(row["n_failed"] or 0),
         }
+
+    def _fit_path(self, run_id: str, fingerprint: Optional[str] = None) -> str:
+        path = f"{self.path.rstrip('/')}/_fit/run_id={run_id}"
+        return path if fingerprint is None else f"{path}/fp={fingerprint}"
+
+    def _exists(self, path: str) -> bool:
+        """Whether ``path`` exists, on any file system Spark can write."""
+        sc = self.spark.sparkContext
+        p = sc._jvm.org.apache.hadoop.fs.Path(path)
+        return p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p)
+
+    def save_fit(self, run_id: str, fingerprint: str, state: tuple) -> None:
+        """Persist a fitted suite state (edges, reference bin counts, KS
+        ECDF or None) for ``run_id`` under ``fingerprint``."""
+        from driftspark.session import local_frame
+
+        edges, ref_counts, ecdf = state
+        rows = [("psi", f, e, ref_counts[f]) for f, e in edges.items()]
+        rows += [("ks", f, v, c) for f, (v, c, _) in (ecdf or {}).items()]
+        local_frame(self.spark, rows, FIT_SCHEMA).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(self._fit_path(run_id, fingerprint))
+
+    def load_fit(self, run_id: str, fingerprint: str) -> Optional[tuple]:
+        """The state :meth:`save_fit` stored for ``run_id`` under
+        ``fingerprint``, or None (with a warning when the run has a store
+        that cannot be used: another fingerprint, no ``_SUCCESS`` marker,
+        inconsistent lengths)."""
+        path = self._fit_path(run_id, fingerprint)
+        state = None
+        if self._exists(f"{path}/_SUCCESS"):
+            pdf = self.spark.read.schema(FIT_SCHEMA).parquet(path).toPandas()
+            state = _fit_state(pdf)
+        if state is None and self._exists(self._fit_path(run_id)):
+            logger.warning(
+                "resumable_partition_drift: run %s has no complete fit stored "
+                "for this reference and these settings (fingerprint %s) — "
+                "refitting",
+                run_id,
+                fingerprint,
+            )
+        return state
+
+
+def _fit_state(pdf) -> Optional[tuple]:
+    """(edges, reference bin counts, KS ECDF) from a stored fit frame, or
+    None when a row's lengths are inconsistent."""
+    edges, ref_counts, ecdf = {}, {}, {}
+    for family, feature, values, counts in pdf.itertuples(index=False):
+        if values is None or counts is None:
+            return None
+        values = np.asarray(values, dtype=np.float64)
+        counts = np.asarray(counts, dtype=np.int64)
+        if family == "psi" and len(values) == len(counts) + 1 and len(counts):
+            edges[feature], ref_counts[feature] = values, counts
+        elif family == "ks" and len(values) == len(counts) and len(counts):
+            ecdf[feature] = (values, counts, int(counts[-1]))
+        else:
+            return None
+    if len(edges) + len(ecdf) != len(pdf):  # a (family, feature) twice
+        return None
+    return edges, ref_counts, ecdf
+
+
+def _universe(suite) -> tuple:
+    """(the non-NULL test part ids, the fit fingerprint) from ONE
+    aggregation over both splits.  The fingerprint hashes the suite's fit
+    settings, the reference row count and an order-independent checksum
+    of the fitted reference columns: the decimal sum of per-row xxhash64
+    values cannot overflow under ANSI and, unlike an XOR, does not cancel
+    duplicate rows."""
+    split = F.col(suite.split_col)
+    is_ref = split == suite.ref_value
+    row_hash = F.xxhash64(*suite.fit_cols) if suite.fit_cols else F.lit(0)
+    rows = (
+        suite.df.where(is_ref | (split == suite.test_value))
+        .groupBy(
+            is_ref.alias("is_ref"),
+            F.when(~is_ref, F.col(suite.part_col)).alias("p"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(is_ref, row_hash.cast("decimal(38,0)"))).alias("h"),
+        )
+        .collect()
+    )
+    ref = [(r["n"], str(r["h"])) for r in rows if r["is_ref"]]
+    key = json.dumps([suite.fit_params, ref], default=str)
+    parts = [r["p"] for r in rows if not r["is_ref"] and r["p"] is not None]
+    return parts, hashlib.sha256(key.encode()).hexdigest()[:16]
 
 
 def resumable_partition_drift(
@@ -125,9 +235,11 @@ def resumable_partition_drift(
 ) -> DataFrame:
     """Run partition_verdicts over only the PENDING partitions of ``df``,
     persisting lineage per batch — a mid-run crash resumes where it left
-    off (idempotent per partition).  The PSI/KS reference is fitted ONCE
-    per call, before the batch loop; each batch then scans only its own
-    test partitions for PSI and KS.  Returns the verdicts computed in this
+    off (idempotent per partition).  The PSI/KS reference is fitted at
+    most ONCE per call, before the batch loop, and persisted in the
+    checkpoint: a resume whose reference and fit settings match loads it
+    and runs no fit job.  Each batch then scans only its own test
+    partitions for PSI and KS.  Returns the verdicts computed in this
     invocation, typed like partition_verdicts' output even when nothing
     is pending.  The partitions are the non-NULL part ids of the TEST
     split, the ones partition_verdicts gives verdict rows."""
@@ -137,17 +249,15 @@ def resumable_partition_drift(
     suite = _VerdictSuite(
         df, numeric_cols, cat_cols, part_col=part_col, **verdict_kwargs
     )
-    all_parts = [
-        r["p"]
-        for r in suite.test_df.select(F.col(part_col).alias("p"))
-        .where(F.col("p").isNotNull())
-        .distinct()
-        .collect()
-    ]
+    all_parts, fingerprint = _universe(suite)
     pending = checkpoint.pending_parts(run_id, sorted(all_parts))
     if not pending:
         return local_frame(df.sparkSession, [], _verdict_schema(df, part_col))
-    suite.fit()
+    state = checkpoint.load_fit(run_id, fingerprint)
+    if state is None:
+        checkpoint.save_fit(run_id, fingerprint, suite.fit().fitted)
+    else:
+        suite.use_fit(*state)
     batches = []
     for i in range(0, len(pending), batch_parts):
         # score() returns a LocalRelation (session.local_frame): mark_done's

@@ -50,11 +50,16 @@ from driftspark.stats import (
     _melt,
     _uniform_buckets,
     _w1_term_quantized,
+    approx_quantile_edges,
     bucket_expr,
     quantile_edges,
 )
 
 logger = logging.getLogger(__name__)
+
+#: total driver/broadcast budget of a fitted KS reference ECDF (points
+#: across all features; see fit_ks_reference_ecdf)
+MAX_REF_ECDF_POINTS = 4_000_000
 
 VERDICT_SCHEMA = (
     "part int, feature string, check string, statistic double, p_value double, "
@@ -435,7 +440,7 @@ def ks_d_by_partition_broadcast(
     test_df: DataFrame,
     cols: Sequence[str],
     part_col: str = "part",
-    max_ref_ecdf_points: int = 4_000_000,
+    max_ref_ecdf_points: int = MAX_REF_ECDF_POINTS,
     preaggregate: bool = False,
 ) -> DataFrame:
     """(part, feature, d, n, m) — exact KS D per partition via a BROADCAST
@@ -471,7 +476,7 @@ def ks_d_by_partition_broadcast(
 def fit_ks_reference_ecdf(
     ref_df: DataFrame,
     cols: Sequence[str],
-    max_ref_ecdf_points: int = 4_000_000,
+    max_ref_ecdf_points: int = MAX_REF_ECDF_POINTS,
 ) -> Dict[str, tuple]:
     """Fit the broadcast-ready thinned reference ECDF state ({feature:
     (sorted values, exact cumulative counts, n)}) ONCE, for reuse across
@@ -842,8 +847,9 @@ def _concurrently(*fns) -> list:
 class _VerdictSuite:
     """:func:`partition_verdicts` as a reference FIT plus a per-batch
     SCORE.  After :meth:`fit` (PSI edges + reference bin counts, and the
-    broadcast KS ECDF), every :meth:`score` reuses that state; without it,
-    each family's task fits its own half, overlapping the other families.
+    thinned KS ECDF) or :meth:`use_fit` (the same state, loaded from a
+    checkpoint), every :meth:`score` reuses that state; without it, each
+    family's task fits its own half, overlapping the other families.
     chi2 (its category cap counts ref ∪ test) and W1 read the reference
     on every score."""
 
@@ -869,8 +875,24 @@ class _VerdictSuite:
         self.ref_df = self.df.where(F.col(self.split_col) == self.ref_value)
         self.test_df = self.df.where(F.col(self.split_col) == self.test_value)
         self.ks_cols = list(self.numeric_cols if self.ks_cols is None else self.ks_cols)
-        # [PSI state, KS state] once fit() ran
-        self.fitted: Optional[list] = None
+        # (edges, reference bin counts, KS ECDF dict or None) once fitted
+        self.fitted: Optional[tuple] = None
+        self._b_ecdf = None
+
+    @property
+    def fit_cols(self) -> list:
+        """The reference columns the fit reads."""
+        return sorted(set(self.numeric_cols) | set(self.ks_cols))
+
+    @property
+    def fit_params(self) -> list:
+        """Every setting the fitted state depends on, besides the reference
+        rows themselves."""
+        return [
+            list(self.numeric_cols), self.ks_cols, self.n_bins,
+            self.approx_quantile_error, self.split_col, self.ref_value,
+            MAX_REF_ECDF_POINTS,
+        ]
 
     def _fit_psi(self) -> tuple:
         """(edges, {feature: in-range reference count per bin}); both empty
@@ -884,8 +906,6 @@ class _VerdictSuite:
             # SAME post-processing as the exact path — duplicate edges
             # dropped, constant columns fall back to uniform edges — so a
             # constant-in-reference column keeps its PSI verdict here too.
-            from driftspark.stats import approx_quantile_edges
-
             edges = approx_quantile_edges(
                 self.ref_df, list(self.numeric_cols), self.n_bins,
                 self.approx_quantile_error,
@@ -903,16 +923,26 @@ class _VerdictSuite:
             return {}, {}
         return edges, _ref_bin_counts(self.ref_df, edges)
 
-    def _fit_ks(self):
-        """The fitted KS reference ECDF as a Broadcast (None without KS
-        columns)."""
+    def _fit_ks(self) -> Optional[dict]:
+        """The thinned KS reference ECDF (None without KS columns)."""
         if not self.ks_cols:
             return None
-        ecdf = fit_ks_reference_ecdf(self.ref_df, self.ks_cols)
-        return self.df.sparkSession.sparkContext.broadcast(ecdf)
+        return fit_ks_reference_ecdf(self.ref_df, self.ks_cols, MAX_REF_ECDF_POINTS)
 
     def fit(self) -> "_VerdictSuite":
-        self.fitted = _concurrently(self._fit_psi, self._fit_ks)
+        (edges, ref_counts), ecdf = _concurrently(self._fit_psi, self._fit_ks)
+        return self.use_fit(edges, ref_counts, ecdf)
+
+    def use_fit(
+        self, edges: dict, ref_counts: dict, ecdf: Optional[dict]
+    ) -> "_VerdictSuite":
+        """Score against a given fitted state — :meth:`fit`'s, or one a
+        checkpoint persisted — and broadcast its KS ECDF once."""
+        ecdf = ecdf if self.ks_cols else None
+        self.fitted = (edges, ref_counts, ecdf)
+        self._b_ecdf = (
+            None if ecdf is None else self.df.sparkSession.sparkContext.broadcast(ecdf)
+        )
         return self
 
     def score(self, parts: Optional[Sequence] = None) -> DataFrame:
@@ -925,15 +955,15 @@ class _VerdictSuite:
         fitted = self.fitted
 
         def run_psi():
-            edges, ref_counts = fitted[0] if fitted else self._fit_psi()
+            edges, ref_counts = fitted[:2] if fitted else self._fit_psi()
             return _psi_rows(test_df, edges, ref_counts, part_col) if edges else []
 
         def run_ks():
-            b_ecdf = fitted[1] if fitted else self._fit_ks()
-            if b_ecdf is None:
+            ecdf = self._b_ecdf if fitted else self._fit_ks()
+            if ecdf is None:
                 return []
             return ks_d_against_ecdf(
-                test_df, self.ks_cols, b_ecdf, part_col, self.ks_preaggregate
+                test_df, self.ks_cols, ecdf, part_col, self.ks_preaggregate
             ).collect()
 
         def run_chi2():

@@ -1,9 +1,14 @@
 """Per-partition verdicts: SQL PSI vs pandas oracle, grouped KS, chi2,
 checkpoint/resume."""
 
+import glob
+import logging
+import os
 import shutil
 import tempfile
+import uuid
 from collections import Counter
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -11,7 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from driftspark import numerics as nm
-from driftspark.checkpoint import CheckpointManager, resumable_partition_drift
+from driftspark.checkpoint import FIT_SCHEMA, CheckpointManager, resumable_partition_drift
+from driftspark.session import local_frame
 from driftspark.stats import quantile_edges
 from driftspark.synth import synth_image_table
 from driftspark.verdicts import (
@@ -164,50 +170,273 @@ def _assert_same_verdicts(got, want):
             assert g["p_value"] == pytest.approx(w["p_value"], rel=1e-9), key(w)
 
 
-def test_crash_and_resume_equals_uninterrupted_and_fits_once(
-    spark, drifted, monkeypatch
-):
-    """A run that dies after its first persisted batch, then resumes,
-    yields exactly one uninterrupted partition_verdicts; and every
-    resumable_partition_drift call fits the PSI edges and the KS ECDF
-    once, whatever its batch count."""
+FIT_FUNCTIONS = (
+    "quantile_edges", "approx_quantile_edges", "fit_ks_reference_ecdf", "_ref_bin_counts"
+)
+
+
+@pytest.fixture
+def fit_spy(monkeypatch):
+    """Counts every reference-fit call in driftspark.verdicts, and keeps the
+    PSI edges each score ran with."""
     import driftspark.verdicts as verdicts_mod
 
-    kw = dict(numeric_cols=["w", "h"], cat_cols=["fmt"])
-    want = partition_verdicts(drifted, **kw).collect()
+    spy = SimpleNamespace(calls=Counter(), edges=[])
 
-    calls = Counter()
-
-    def spy(name):
+    def wrap(name, on_call):
         real = getattr(verdicts_mod, name)
 
-        def counted(*args, **kwargs):
-            calls[name] += 1
+        def wrapped(*args, **kwargs):
+            on_call(args)
             return real(*args, **kwargs)
 
-        monkeypatch.setattr(verdicts_mod, name, counted)
+        monkeypatch.setattr(verdicts_mod, name, wrapped)
 
-    spy("quantile_edges")
-    spy("fit_ks_reference_ecdf")
-    once = {"quantile_edges": 1, "fit_ks_reference_ecdf": 1}
+    for name in FIT_FUNCTIONS:
+        wrap(name, lambda args, name=name: spy.calls.update([name]))
+    wrap("_psi_rows", lambda args: spy.edges.append(args[1]))
+    return spy
+
+
+@pytest.fixture(scope="module")
+def drifted_parquet(spark, drifted, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("input") / "drifted.parquet")
+    drifted.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_crash_and_resume_equals_uninterrupted_and_fits_once(spark, drifted, fit_spy):
+    """A run that dies after its first persisted batch, then resumes,
+    yields exactly one uninterrupted partition_verdicts; the crashed call
+    fits the PSI edges and the KS ECDF once, whatever its batch count,
+    and the resume loads that fit from the checkpoint instead."""
+    kw = dict(numeric_cols=["w", "h"], cat_cols=["fmt"])
+    want = partition_verdicts(drifted, **kw).collect()
+    once = {"quantile_edges": 1, "fit_ks_reference_ecdf": 1, "_ref_bin_counts": 1}
     tmp = tempfile.mkdtemp()
     try:
         crashing = _CrashAfterFirstBatch(spark, f"{tmp}/ledger")
+        fit_spy.calls.clear()
         with pytest.raises(RuntimeError, match="injected crash"):
             resumable_partition_drift(drifted, crashing, "crash01", batch_parts=1, **kw)
-        assert calls == once
+        assert fit_spy.calls == once
         assert len(crashing.completed_parts("crash01")) == 1
 
-        calls.clear()
+        fit_spy.calls.clear()
         resumed = resumable_partition_drift(
             drifted, CheckpointManager(spark, f"{tmp}/ledger"), "crash01",
             batch_parts=1, **kw,
         ).collect()
-        assert calls == once  # three batches, one fit
+        assert fit_spy.calls == Counter()  # three batches, no fit
         assert len({r["part"] for r in resumed}) == 3
         _assert_same_verdicts(crashing.persisted + resumed, want)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+class _CrashAtFirstBatch(CheckpointManager):
+    """A ledger that dies at its first mark_done: after the fit is
+    persisted, before any partition is done."""
+
+    persisted = ()
+
+    def mark_done(self, run_id, verdicts, snapshot_id=None):
+        raise RuntimeError("injected crash before the first batch")
+
+
+def _assert_same_edges(got, want):
+    assert list(got) == list(want)
+    for f in want:
+        assert np.array_equal(got[f], want[f]), f
+
+
+@pytest.mark.parametrize("approx", [None, 1e-3], ids=["exact_edges", "approx_edges"])
+@pytest.mark.parametrize(
+    "crashing", [_CrashAtFirstBatch, _CrashAfterFirstBatch],
+    ids=["crash_after_fit", "crash_after_first_batch"],
+)
+def test_resume_loads_the_persisted_fit(
+    spark, drifted_parquet, fit_spy, tmp_path, crashing, approx
+):
+    """The crashed call persists its fit before the first batch; the
+    resume loads it, runs none of the fit functions, scores with the
+    crashed call's exact edges (GK approximate ones included), and with
+    the crashed call's batches equals one uninterrupted run."""
+    df = drifted_parquet
+    kw = dict(numeric_cols=["w", "h"], cat_cols=["fmt"], approx_quantile_error=approx)
+    want = partition_verdicts(df, **kw).collect()
+    ledger = str(tmp_path / "ledger")
+    crashed = crashing(spark, ledger)
+    fit_spy.calls.clear()
+    fit_spy.edges.clear()
+    with pytest.raises(RuntimeError, match="injected crash"):
+        resumable_partition_drift(df, crashed, "fit01", batch_parts=2, **kw)
+    edges_name = "quantile_edges" if approx is None else "approx_quantile_edges"
+    assert fit_spy.calls[edges_name] == fit_spy.calls["fit_ks_reference_ecdf"] == 1
+    (crash_edges,) = fit_spy.edges
+
+    fit_spy.calls.clear()
+    fit_spy.edges.clear()
+    resumed = resumable_partition_drift(
+        df, CheckpointManager(spark, ledger), "fit01", batch_parts=2, **kw
+    ).collect()
+    assert fit_spy.calls == Counter()
+    assert fit_spy.edges
+    for edges in fit_spy.edges:
+        _assert_same_edges(edges, crash_edges)
+    _assert_same_verdicts(list(crashed.persisted) + resumed, want)
+
+
+def _drop_success_marker(spark, store):
+    os.remove(f"{store}/_SUCCESS")
+
+
+def _truncate_stored_edges(spark, store):
+    rows = [
+        (r["family"], r["feature"],
+         r["values"][:-1] if r["family"] == "psi" else r["values"], r["counts"])
+        for r in spark.read.parquet(store).collect()
+    ]
+    local_frame(spark, rows, FIT_SCHEMA).write.mode("overwrite").parquet(store)
+
+
+def _shift_some_reference_values(df):
+    shifted = (F.col("split") == "ref") & (F.col("part") == 0)
+    return df.withColumn("w", F.when(shifted, F.col("w") + 1).otherwise(F.col("w")))
+
+
+@pytest.mark.parametrize(
+    "first_rows,resume_rows,resume_kw,damage",
+    [
+        (lambda df: df.where(F.col("part") < 2), None, {}, None),
+        (None, _shift_some_reference_values, {}, None),
+        (None, None, {"n_bins": 5}, None),
+        (None, None, {}, _drop_success_marker),
+        (None, None, {}, _truncate_stored_edges),
+    ],
+    ids=["fewer_parts", "changed_values", "changed_n_bins", "no_success_marker",
+         "inconsistent_lengths"],
+)
+def test_resume_refits_when_the_stored_fit_does_not_apply(
+    spark, drifted_parquet, fit_spy, tmp_path, caplog,
+    first_rows, resume_rows, resume_kw, damage,
+):
+    """A resume whose reference rows or fit settings differ from the
+    crashed call's, or whose stored fit is unfinished or inconsistent,
+    refits, warns, and equals a fresh partition_verdicts.  The new fit is
+    stored under its own fingerprint; the old one is never mixed in."""
+    kw = dict(numeric_cols=["w", "h"], cat_cols=["fmt"])
+    first = first_rows(drifted_parquet) if first_rows else drifted_parquet
+    df = resume_rows(drifted_parquet) if resume_rows else drifted_parquet
+    ledger = str(tmp_path / "ledger")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        resumable_partition_drift(
+            first, _CrashAfterFirstBatch(spark, ledger), "fp01", batch_parts=1, **kw
+        )
+    (store,) = glob.glob(f"{ledger}/_fit/run_id=fp01/fp=*")
+    if damage:
+        damage(spark, store)
+
+    fit_spy.calls.clear()
+    with caplog.at_level(logging.WARNING, logger="driftspark.checkpoint"):
+        resumed = resumable_partition_drift(
+            df, CheckpointManager(spark, ledger), "fp01", batch_parts=1,
+            **kw, **resume_kw,
+        ).collect()
+    assert fit_spy.calls["quantile_edges"] == fit_spy.calls["fit_ks_reference_ecdf"] == 1
+    assert any("refitting" in r.message for r in caplog.records)
+    parts = sorted({r["part"] for r in resumed})
+    assert parts == [1, 2, 3]
+    _assert_same_verdicts(
+        resumed, partition_verdicts(df, parts=parts, **kw, **resume_kw).collect()
+    )
+    stores = glob.glob(f"{ledger}/_fit/run_id=fp01/fp=*/_SUCCESS")
+    assert len(stores) == (1 if damage else 2)
+
+
+def test_fit_store_round_trips_exactly(spark, tmp_path):
+    """Float64 edges and ECDF values, and int64 counts, come back bit for
+    bit; a run with no store loads nothing and does not warn."""
+    cp = CheckpointManager(spark, str(tmp_path / "ledger"))
+    assert cp.load_fit("rt01", "0" * 16) is None
+    edges = {"x": np.array([-np.inf, 0.1 + 0.2, 5e-324, np.nextafter(1.0, 2.0)])}
+    counts = {"x": np.array([2**62, 0, 7], np.int64)}
+    ecdf = {"y": (np.array([-0.0, 1e308]), np.array([1, 2**53 + 1], np.int64), 2**53 + 1)}
+    cp.save_fit("rt01", "f" * 16, (edges, counts, ecdf))
+    got_edges, got_counts, got_ecdf = cp.load_fit("rt01", "f" * 16)
+    assert got_edges["x"].tobytes() == edges["x"].tobytes()
+    assert got_counts["x"].dtype == np.int64
+    assert np.array_equal(got_counts["x"], counts["x"])
+    vals, cums, n = got_ecdf["y"]
+    assert vals.tobytes() == ecdf["y"][0].tobytes()
+    assert np.array_equal(cums, ecdf["y"][1]) and n == 2**53 + 1
+
+
+def test_run_summary_counts_each_part_once(spark, tmp_path):
+    """A part marked done twice counts once, with its latest row; the fit
+    store inside the ledger directory changes no ledger read."""
+    cp = CheckpointManager(spark, str(tmp_path / "ledger"))
+    verdicts = "part int, passed boolean"
+    cp.mark_done("sum01", spark.createDataFrame([(0, False), (0, True), (1, False)], verdicts))
+    cp.mark_done("sum01", spark.createDataFrame([(0, False), (0, False)], verdicts))
+    cp.mark_done("other", spark.createDataFrame([(5, False)], verdicts))
+    want = {"run_id": "sum01", "parts_done": 2, "n_failed": 3}
+    assert cp.run_summary("sum01") == want
+    assert cp.completed_parts("sum01") == [0, 1]
+    cp.save_fit("sum01", "a" * 16, ({"x": np.array([0.0, 1.0])}, {"x": np.array([3])}, None))
+    assert cp.run_summary("sum01") == want
+    assert cp.completed_parts("sum01") == [0, 1]
+
+
+def _last_job_id(sc) -> int:
+    """The id of a marker job run now.  Spark numbers jobs in submission
+    order whichever thread submits them, so the gap between two markers
+    counts the jobs of driftspark's worker threads too."""
+    label = f"job-marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(label, label)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    (job,) = sc.statusTracker().getJobIdsForGroup(label)
+    return job
+
+
+def _jobs_of(sc, fn) -> int:
+    before = _last_job_id(sc)
+    fn()
+    return _last_job_id(sc) - before - 1
+
+
+#: Spark jobs of the fit-loading resume below: lower it when a change
+#: lowers the count
+RESUME_JOB_CEILING = 17
+
+
+def test_resume_job_budget(spark, drifted_parquet, tmp_path):
+    """Loading the stored fit submits fewer jobs than refitting the same
+    resume, and no more than the pinned ceiling."""
+    kw = dict(numeric_cols=["w", "h"], cat_cols=["fmt"])
+    crashed = tmp_path / "crashed"
+    with pytest.raises(RuntimeError, match="injected crash"):
+        resumable_partition_drift(
+            drifted_parquet, _CrashAfterFirstBatch(spark, str(crashed)), "job01",
+            batch_parts=2, **kw,
+        )
+    shutil.copytree(crashed, tmp_path / "loads")
+    shutil.copytree(crashed, tmp_path / "refits")
+    shutil.rmtree(tmp_path / "refits" / "_fit")
+
+    def resume(name):
+        cp = CheckpointManager(spark, str(tmp_path / name))
+        return lambda: resumable_partition_drift(
+            drifted_parquet, cp, "job01", batch_parts=2, **kw
+        ).collect()
+
+    sc = spark.sparkContext
+    loads, refits = _jobs_of(sc, resume("loads")), _jobs_of(sc, resume("refits"))
+    assert loads < refits, (loads, refits)
+    assert loads <= RESUME_JOB_CEILING, loads
 
 
 def test_resume_with_nothing_pending_keeps_string_part_type(spark):
