@@ -2636,7 +2636,7 @@ def _q_streaming_cumulative(spark, sf_dir):
         c: p[0] for c, p in histogram_proportions(ref, ref, edges).items()
     }
     grid = fit_ks_grid(ref, ["l_quantity"])
-    ref_counts, capped = fit_ref_category_counts(ref, ["l_returnflag"])
+    ref_counts, _ = fit_ref_category_counts(ref, ["l_returnflag"])
 
     def make_stream():
         return (
@@ -2648,12 +2648,7 @@ def _q_streaming_cumulative(spark, sf_dir):
     ops = {
         "psi": (lambda: cumulative_psi_stream(make_stream(), edges, ref_props), "psi"),
         "ks": (lambda: cumulative_ks_stream(make_stream(), grid), "ks_d"),
-        "chi2": (
-            lambda: cumulative_chi2_stream(
-                make_stream(), ref_counts, capped_features=capped
-            ),
-            "chi2_stat",
-        ),
+        "chi2": (lambda: cumulative_chi2_stream(make_stream(), ref_counts), "chi2_stat"),
     }
     work = tempfile.mkdtemp(prefix="driftspark_streamcum_")
     rows = []

@@ -10,8 +10,8 @@ of test counts vs reference-proportion-scaled expected counts
 edge (cbpe.py:170-175 — replicated exactly, including the bias);
 p-value severity ladder (cbpe.py:183-193).
 
-Spark execution: fit and detect are each ONE aggregation over the
-confidence expression (array_max for (n,k) probas — pure column math, no
+Spark execution: fit and detect are each ONE keyed count (stats.key_counts)
+of the confidence bin (array_max for (n,k) probas — pure column math, no
 UDF); the chi-square over <= n_bins numbers runs on the driver.
 """
 
@@ -27,7 +27,7 @@ from driftspark.detectors.base import BaseDriftDetector
 from driftspark.numerics import chisquare, severity_from_pvalue
 from driftspark.registry import DetectorRegistry
 from driftspark.results import DetectionResult, DriftSeverity
-from driftspark.stats import digitize_clip_expr
+from driftspark.stats import digitize_clip_expr, key_counts
 
 logger = logging.getLogger(__name__)
 
@@ -60,15 +60,15 @@ class CBPE(BaseDriftDetector):
         return F.col(ds.proba_col).cast("double")
 
     def _bin_counts(self, ds: SparkDataset) -> np.ndarray:
-        conf = self._confidence_col(ds)
-        tagged = ds.df.select(conf.alias("__conf"))
         b = digitize_clip_expr("__conf", self._bin_edges, self.n_bins)
-        aggs = [
-            F.sum(F.when(b == i, 1).otherwise(0)).alias(f"b{i}")
-            for i in range(self.n_bins)
-        ]
-        row = tagged.agg(*aggs).first()
-        return np.array([row[f"b{i}"] or 0 for i in range(self.n_bins)], dtype=np.int64)
+        counts = np.zeros(self.n_bins, dtype=np.int64)
+        rows = key_counts(
+            ds.df.select(self._confidence_col(ds).alias("__conf")), {"conf": b}
+        ).collect()
+        for r in rows:
+            if r["key"] is not None:
+                counts[r["key"]] = r["c"]
+        return counts
 
     def fit(self, reference_data: SparkDataset) -> None:
         super().fit(reference_data)

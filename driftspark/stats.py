@@ -41,9 +41,6 @@ from driftspark.session import local_frame
 
 logger = logging.getLogger(__name__)
 
-MIN_BIN_SIZE_DEFAULT = 0.001
-
-
 # ---------------------------------------------------------------------------
 # Null/NaN handling — pandas `.dropna()` parity for double columns
 # ---------------------------------------------------------------------------
@@ -192,39 +189,127 @@ def digitize_clip_expr(col: str, edges: np.ndarray, n_bins: int) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Histograms (PSI detect) — one scan for all features x bins x both sides
+# Keyed counts: the one melt, the one (part?, feature, key) count and the
+# one category cap behind PSI, chi2, CBPE and category shift
 # ---------------------------------------------------------------------------
 
+#: merged-tail key of a feature over its category cap (unlikely to collide
+#: with real category strings)
+CHI2_OTHER_BUCKET = "__chi2_other__"
 
-def histogram_proportions_one(
-    df: DataFrame, edges_map: Dict[str, np.ndarray]
-) -> Dict[str, np.ndarray]:
-    """Single-side variant of :func:`histogram_proportions` — identical
-    bin/denominator semantics, but ONE global aggregation over one frame
-    (no union, no group key): half the scan of passing the same frame as
-    both sides, which matters when the frame is every streaming
-    micro-batch.  An empty frame yields all-zero proportions."""
-    if not edges_map:
-        return {}
-    cols = list(edges_map)
-    aggs = []
-    for c in cols:
-        b = bucket_expr(c, edges_map[c])
-        for i in range(len(edges_map[c]) - 1):
-            aggs.append(
-                F.sum(F.when(b == i, F.lit(1)).otherwise(F.lit(0))).alias(f"{c}||{i}")
-            )
-        aggs.append(F.count(b).alias(f"{c}||total"))
-    r = df.select(*cols).agg(*aggs).first()
-    out: Dict[str, np.ndarray] = {}
-    for c in cols:
-        total = r[f"{c}||total"] or 0
-        counts = np.array(
-            [r[f"{c}||{i}"] or 0 for i in range(len(edges_map[c]) - 1)],
-            dtype=np.float64,
+
+def _melt_keys(
+    df: DataFrame, keys: Dict[str, Column], by: Sequence = ()
+) -> DataFrame:
+    """(*by, feature, key) long form: one row per (input row, feature),
+    the key being ``keys[feature]`` evaluated on the row (every key of one
+    type; NULL keys stay).  ``by`` are columns carried along.  THE melt of
+    every keyed count and of the exact CDF statistics.
+
+    Deliberately NOT spread_input-guarded: an interleaved A/B at sf0.1
+    showed the extra round-robin exchange costs more than the explode
+    saves (the heavy work happens after the groupBy exchange, which
+    already parallelizes it) — unlike the per-token md5/n-gram paths in
+    driftspark.dedup where the guard wins 3x."""
+    structs = [
+        F.struct(F.lit(f).alias("feature"), k.alias("key")) for f, k in keys.items()
+    ]
+    m = df.select(*by, F.explode(F.array(*structs)).alias("__fk"))
+    return m.select(*m.columns[:-1], "__fk.feature", "__fk.key")
+
+
+def key_counts(
+    df: DataFrame, keys: Dict[str, Column], by: Sequence = ()
+) -> DataFrame:
+    """Lazy (*by, feature, key, c) row counts from ONE groupBy over
+    :func:`_melt_keys`: map-side partial aggregation keeps the shuffle at
+    O(groups x features x keys) whatever the row count.  A NULL key (an
+    out-of-range bin, a NULL category) is a row of its own, so the same
+    aggregation also yields the group universe and the NULL counts.
+
+    A key is any Column: the ``bucket_expr`` bin for PSI, the
+    ``digitize_clip_expr`` bin for CBPE, the value for categoricals."""
+    m = _melt_keys(df, keys, by)
+    return m.groupBy(*m.columns).agg(F.count(F.lit(1)).alias("c"))
+
+
+def _cap_categories(
+    counts: DataFrame, max_categories: int, pinned: Optional[Column] = None
+) -> DataFrame:
+    """THE category cap, in Spark, before anything reaches the driver
+    (the aggregate-once, cut-top-k pattern of VLDB '23 cache-efficient
+    top-k aggregation): each feature of the (*by, feature, key, c) frame
+    ``counts`` (non-NULL keys) with MORE than ``max_categories`` keys
+    keeps its top ``max_categories - 1`` keys and folds the rest into
+    CHI2_OTHER_BUCKET.  Keys rank by (``pinned`` first, count summed over
+    ``by`` descending, key ascending), and a pinned key never folds.  A
+    feature at or under the cap passes through unchanged."""
+    pinned = F.lit(False) if pinned is None else pinned
+    by = counts.columns[:-3]
+    w_feat = Window.partitionBy("feature")
+    # one shuffle by feature serves the per-key total and the rank windows
+    ranked = (
+        counts.repartition("feature")
+        .withColumn("tot", F.sum("c").over(Window.partitionBy("feature", "key")))
+        .withColumn(
+            "rk",
+            F.dense_rank().over(
+                w_feat.orderBy(pinned.desc(), F.col("tot").desc(), "key")
+            ),
         )
-        out[c] = counts / total if total > 0 else counts
+    )
+    keep = (
+        pinned
+        | (F.col("rk") < max_categories)
+        | (F.max("rk").over(w_feat) <= max_categories)
+    )
+    key = F.when(keep, F.col("key")).otherwise(F.lit(CHI2_OTHER_BUCKET))
+    return (
+        ranked.select(*by, "feature", key.alias("key"), "c")
+        .groupBy(*by, "feature", "key")
+        .agg(F.sum("c").alias("c"))
+    )
+
+
+def _sides(ref_df: DataFrame, test_df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """``cols`` of both sides as one frame, ``is_ref`` marking the side."""
+    cols = list(dict.fromkeys(cols))
+    return ref_df.select(*cols, F.lit(True).alias("is_ref")).unionByName(
+        test_df.select(*cols, F.lit(False).alias("is_ref"))
+    )
+
+
+def _side_counts(
+    ref_df: DataFrame, test_df: DataFrame, cols: Sequence[str], keys: Dict[str, Column]
+) -> Dict[str, Tuple[dict, dict]]:
+    """{feature: ({key: ref count}, {key: test count})} over the non-NULL
+    keys, from one :func:`key_counts` job over both sides."""
+    out: Dict[str, Tuple[dict, dict]] = {f: ({}, {}) for f in keys}
+    counts = key_counts(_sides(ref_df, test_df, cols), keys, ["is_ref"])
+    for r in counts.where(F.col("key").isNotNull()).collect():
+        out[r["feature"]][0 if r["is_ref"] else 1][r["key"]] = r["c"]
     return out
+
+
+def _proportions(counts) -> np.ndarray:
+    """``counts`` over their total as float64 — all zeros when there are
+    none (an empty side or an all-out-of-range partition)."""
+    counts = np.asarray(counts, dtype=np.float64)
+    n = counts.sum()
+    return counts / n if n > 0 else counts
+
+
+def _aligned(ref_map: dict, test_map: dict) -> Tuple[List, np.ndarray, np.ndarray]:
+    """(categories, ref counts, test counts) over the sorted union of
+    observed categories, 0 on the side a category is missing from
+    (univariate.py:84-91 alignment; the reference sorts the union,
+    univariate.py:88)."""
+    cats = sorted(set(ref_map) | set(test_map))
+    return (
+        cats,
+        np.array([ref_map.get(k, 0) for k in cats], dtype=np.float64),
+        np.array([test_map.get(k, 0) for k in cats], dtype=np.float64),
+    )
 
 
 def histogram_proportions(
@@ -232,45 +317,15 @@ def histogram_proportions(
     test_df: DataFrame,
     edges_map: Dict[str, np.ndarray],
 ) -> Dict[str, Tuple[np.ndarray, np.ndarray]]:
-    """Per-feature in-range bin proportions for both sides.
-
-    ONE job over union(ref, test): conditional-sum aggregation produces
-    n_features x n_bins count columns with map-side partial aggregation —
-    no shuffle of row data, only of the tiny aggregate state.
+    """Per-feature in-range bin proportions for both sides, from ONE job
+    (:func:`psi_counts_fused` without categoricals).
 
     Matches ``value_counts(normalize=True, sort=False)`` over the pd.cut
     categorical (psi.py:153-154): every fitted bin present (0.0 when
-    empty), denominator = in-range non-null count.
+    empty), denominator = in-range non-null count.  An empty side gets
+    all-zero proportions.
     """
-    if not edges_map:
-        return {}
-    cols = list(edges_map)
-    aggs = []
-    for c in cols:
-        b = bucket_expr(c, edges_map[c])
-        n_bins = len(edges_map[c]) - 1
-        for i in range(n_bins):
-            aggs.append(
-                F.sum(F.when(b == i, F.lit(1)).otherwise(F.lit(0))).alias(f"{c}||{i}")
-            )
-        aggs.append(F.count(b).alias(f"{c}||total"))
-    u = ref_df.select(*cols).withColumn("__side", F.lit("ref")).unionByName(
-        test_df.select(*cols).withColumn("__side", F.lit("test"))
-    )
-    rows = {r["__side"]: r for r in u.groupBy("__side").agg(*aggs).collect()}
-    out: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
-    for c in cols:
-        n_bins = len(edges_map[c]) - 1
-        props = []
-        for side in ("ref", "test"):
-            r = rows[side]
-            total = r[f"{c}||total"] or 0
-            counts = np.array(
-                [r[f"{c}||{i}"] or 0 for i in range(n_bins)], dtype=np.float64
-            )
-            props.append(counts / total if total > 0 else counts)
-        out[c] = (props[0], props[1])
-    return out
+    return psi_counts_fused(ref_df, test_df, edges_map)[0]
 
 
 def psi_counts_fused(
@@ -283,130 +338,45 @@ def psi_counts_fused(
 ]:
     """Numeric bin proportions AND categorical side-counts in ONE job.
 
-    Each row explodes into (feature, key) pairs — numeric features emit the
-    pd.cut bucket index, categoricals their raw value — and a single
-    groupBy(feature, key) with conditional side-sums aggregates everything.
-    Map-side partial aggregation shrinks the shuffle to O(features x
-    (bins+categories)) state per task regardless of row count; versus one
-    wide-aggregation job for numerics plus one groupBy job PER categorical
-    column, this runs the whole detect() phase as one scan + one tiny
+    One :func:`key_counts` over both sides: numeric features key on the
+    pd.cut bucket index, categoricals on their raw value (both as
+    strings, one key type).  Map-side partial aggregation shrinks the
+    shuffle to O(features x (bins+categories)) state per task regardless
+    of row count, so the whole detect() phase is one scan + one tiny
     shuffle.
 
-    Returns ``(numeric_props, cat_counts)``: numeric_props matches
-    ``histogram_proportions`` exactly (every fitted bin present, in-range
-    denominator); cat_counts is {col: (ref_counts, test_counts)} over the
-    sorted union of observed categories (``categorical_counts`` alignment).
+    Returns ``(numeric_props, cat_counts)``: numeric_props as
+    :func:`histogram_proportions`; cat_counts is {col: (ref_counts,
+    test_counts)} over the sorted union of observed categories
+    (:func:`categorical_counts` alignment).
     """
-    num_cols = list(edges_map)
-    if not num_cols and not cat_cols:
+    if not edges_map and not cat_cols:
         return {}, {}
     # "#c:" namespace keeps a categorical named like a numeric distinct
-    structs = [
-        F.struct(
-            F.lit("#n:" + c).alias("feature"),
-            bucket_expr(c, edges_map[c]).cast("string").alias("key"),
+    keys = {"#n:" + c: bucket_expr(c, e).cast("string") for c, e in edges_map.items()}
+    keys.update({"#c:" + c: F.col(c).cast("string") for c in cat_cols})
+    counts = _side_counts(ref_df, test_df, [*edges_map, *cat_cols], keys)
+    numeric_props = {
+        c: tuple(
+            _proportions([side.get(str(i), 0) for i in range(len(e) - 1)])
+            for side in counts["#n:" + c]
         )
-        for c in num_cols
-    ] + [
-        F.struct(F.lit("#c:" + c).alias("feature"), F.col(c).cast("string").alias("key"))
-        for c in cat_cols
-    ]
-
-    def melt_side(df: DataFrame, is_ref: bool) -> DataFrame:
-        return (
-            df.select(F.explode(F.array(*structs)).alias("fk"))
-            .select("fk.feature", "fk.key")
-            .where(F.col("key").isNotNull())
-            .withColumn("r", F.lit(1 if is_ref else 0))
-            .withColumn("t", F.lit(0 if is_ref else 1))
-        )
-
-    cols_needed = list(dict.fromkeys(list(num_cols) + list(cat_cols)))
-    agg = (
-        melt_side(ref_df.select(*cols_needed), True)
-        .unionByName(melt_side(test_df.select(*cols_needed), False))
-        .groupBy("feature", "key")
-        .agg(F.sum("r").alias("r"), F.sum("t").alias("t"))
-        .collect()
-    )
-    num_rows: Dict[str, Dict[int, Tuple[int, int]]] = {c: {} for c in num_cols}
-    cat_rows: Dict[str, Dict[str, Tuple[int, int]]] = {c: {} for c in cat_cols}
-    for row in agg:
-        kind, name = row["feature"][:3], row["feature"][3:]
-        if kind == "#n:":
-            num_rows[name][int(row["key"])] = (row["r"], row["t"])
-        else:
-            cat_rows[name][row["key"]] = (row["r"], row["t"])
-
-    numeric_props: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
-    for c in num_cols:
-        n_bins = len(edges_map[c]) - 1
-        rc = np.array([num_rows[c].get(i, (0, 0))[0] for i in range(n_bins)], float)
-        tc = np.array([num_rows[c].get(i, (0, 0))[1] for i in range(n_bins)], float)
-        rn, tn = rc.sum(), tc.sum()
-        numeric_props[c] = (rc / rn if rn > 0 else rc, tc / tn if tn > 0 else tc)
-    cat_counts: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
-    for c in cat_cols:
-        cats = sorted(cat_rows[c])
-        cat_counts[c] = (
-            np.array([cat_rows[c][k][0] for k in cats], dtype=np.float64),
-            np.array([cat_rows[c][k][1] for k in cats], dtype=np.float64),
-        )
+        for c, e in edges_map.items()
+    }
+    cat_counts = {c: _aligned(*counts["#c:" + c])[1:] for c in cat_cols}
     return numeric_props, cat_counts
-
-
-# ---------------------------------------------------------------------------
-# Categorical frequencies (PSI categorical / chi-square alignment)
-# ---------------------------------------------------------------------------
 
 
 def categorical_counts(
     ref_df: DataFrame, test_df: DataFrame, col: str
 ) -> Tuple[List, np.ndarray, np.ndarray]:
-    """Aligned raw value counts over the union of observed categories,
-    missing side filled with 0 (univariate.py:84-91 alignment), categories
-    sorted ascending (reference sorts the union, univariate.py:88).
+    """Aligned raw value counts over the union of observed categories
+    (:func:`_aligned`), categories keeping the column's own type.
 
-    groupBy(col) keeps the shuffle at category cardinality; assumes the
+    One groupBy keeps the shuffle at category cardinality; assumes the
     categorical domain fits on the driver (true for fmt/lang-style enums).
     """
-    u = (
-        ref_df.select(F.col(col).alias("v")).where(F.col(col).isNotNull())
-        .withColumn("__side", F.lit("ref"))
-        .unionByName(
-            test_df.select(F.col(col).alias("v")).where(F.col(col).isNotNull())
-            .withColumn("__side", F.lit("test"))
-        )
-    )
-    agg = (
-        u.groupBy("v")
-        .agg(
-            F.sum(F.when(F.col("__side") == "ref", 1).otherwise(0)).alias("r"),
-            F.sum(F.when(F.col("__side") == "test", 1).otherwise(0)).alias("t"),
-        )
-        .collect()
-    )
-    cats = sorted(r["v"] for r in agg)
-    by_v = {r["v"]: r for r in agg}
-    ref_counts = np.array([by_v[c]["r"] for c in cats], dtype=np.float64)
-    test_counts = np.array([by_v[c]["t"] for c in cats], dtype=np.float64)
-    return cats, ref_counts, test_counts
-
-
-def categorical_proportions(
-    ref_df: DataFrame,
-    test_df: DataFrame,
-    col: str,
-    min_bin_size: float = MIN_BIN_SIZE_DEFAULT,
-) -> Tuple[np.ndarray, np.ndarray]:
-    """Aligned normalized frequencies with missing categories filled with
-    ``min_bin_size`` — exact `.align(fill_value=min_bin_size)` semantics of
-    psi.py:182-186."""
-    cats, ref_counts, test_counts = categorical_counts(ref_df, test_df, col)
-    rn, tn = ref_counts.sum(), test_counts.sum()
-    ref_p = np.where(ref_counts > 0, ref_counts / (rn if rn else 1.0), min_bin_size)
-    test_p = np.where(test_counts > 0, test_counts / (tn if tn else 1.0), min_bin_size)
-    return ref_p, test_p
+    return _aligned(*_side_counts(ref_df, test_df, [col], {col: F.col(col)})[col])
 
 
 # ---------------------------------------------------------------------------
@@ -417,24 +387,13 @@ def categorical_proportions(
 def _melt(
     df: DataFrame, cols: Sequence[str], part_col: Optional[str] = None
 ) -> DataFrame:
-    """(feature, value) long form, led by ``part`` when ``part_col`` is
-    given; NaN/null dropped (pandas dropna parity).
-
-    Deliberately NOT spread_input-guarded: an interleaved A/B at sf0.1
-    showed the extra round-robin exchange costs more than the explode
-    saves (the heavy work here happens after the groupBy exchange, which
-    already parallelizes it) — unlike the per-token md5/n-gram paths in
-    driftspark.dedup where the guard wins 3x."""
-    structs = [
-        F.struct(F.lit(c).alias("feature"), F.col(c).cast("double").alias("value"))
-        for c in cols
-    ]
-    sel = [F.col(part_col).alias("part")] if part_col else []
-    keys = ["part"] if part_col else []
+    """(feature, value) long form of the non-NULL, non-NaN values (pandas
+    dropna parity), led by ``part`` when ``part_col`` is given."""
+    by = [F.col(part_col).alias("part")] if part_col else []
     return (
-        df.select(*sel, F.explode(F.array(*structs)).alias("fv"))
-        .select(*keys, "fv.feature", "fv.value")
-        .where(F.col("value").isNotNull() & ~F.isnan("value"))
+        _melt_keys(df, {c: nn(c) for c in cols}, by)
+        .withColumnRenamed("key", "value")
+        .where(F.col("value").isNotNull())
     )
 
 
@@ -990,9 +949,9 @@ def category_shift_report(
     :func:`quantile_shift_report` (a chi2 says "composition drifted";
     this says "category X gained 4 points, Y lost 3").
 
-    ONE scan: both sides melt with a side tag into one groupBy(feature,
-    category) — categories absent from a side get proportion 0 via the
-    fused conditional sums, so appearing/disappearing categories are
+    ONE scan: both sides melt (:func:`_melt_keys`) with a side tag into
+    one groupBy(feature, category) counting each side — categories absent
+    from a side get proportion 0, so appearing/disappearing categories are
     first-class rows.  NULL category is kept as an explicit row (a null
     surge IS composition drift).  Cardinality guard: features whose
     category count exceeds ``max_categories`` are dropped with a warning
@@ -1013,22 +972,17 @@ def category_shift_report(
             "ref_prop double, test_prop double, delta double",
         )
 
-    def melt(df, tag):
-        structs = [
-            F.struct(
-                F.lit(c).alias("feature"),
-                F.col(c).cast("string").alias("category"),
-            )
-            for c in cols
-        ]
-        return df.select(F.explode(F.array(*structs)).alias("fc")).select(
-            "fc.feature", "fc.category", F.lit(tag).alias("is_ref")
+    g = (
+        _melt_keys(
+            _sides(ref_df, test_df, cols),
+            {c: F.col(c).cast("string") for c in cols},
+            ["is_ref"],
         )
-
-    u = melt(ref_df, 1).unionByName(melt(test_df, 0))
-    g = u.groupBy("feature", "category").agg(
-        F.sum("is_ref").alias("n_ref"),
-        F.sum(1 - F.col("is_ref")).alias("n_test"),
+        .groupBy("feature", F.col("key").alias("category"))
+        .agg(
+            F.count_if(F.col("is_ref")).alias("n_ref"),
+            F.count_if(~F.col("is_ref")).alias("n_test"),
+        )
     )
     # cardinality guard BEFORE any window: one partial-agg count
     card = g.groupBy("feature").agg(F.count(F.lit(1)).alias("nc"))

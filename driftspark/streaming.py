@@ -14,8 +14,11 @@ mass-quantum-thinned KS reference ECDF, and the cardinality-guarded
 chi-square category counts — is computed ONCE from the static reference
 DataFrame and captured in the closure (tiny, broadcast by Spark with each
 task); the stream never rescans the reference.  Each micro-batch runs the
-same plans as the batch paths, so batch and streaming verdicts are
-numerically identical for identical input rows (equality-locked tests).
+same plans as the batch paths — the keyed counts of driftspark.stats
+(key_counts, and the one category cap _cap_categories) — so batch and
+streaming verdicts are numerically identical for identical input rows
+(equality-locked tests); the cumulative operators melt with the same
+stats._melt_keys.
 
 Surfaces:
 - StreamingDriftMonitor: per-batch PSI + KS + chi2 verdicts via
@@ -35,12 +38,20 @@ import logging
 from typing import Dict, Optional, Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from driftspark.numerics import psi_from_proportions, severity_from_psi
 from driftspark.session import local_frame
-from driftspark.stats import histogram_proportions_one, quantile_edges
+from driftspark.stats import (
+    CHI2_OTHER_BUCKET,
+    _cap_categories,
+    _melt_keys,
+    _proportions,
+    bucket_expr,
+    key_counts,
+    quantile_edges,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -93,19 +104,12 @@ class StreamingDriftMonitor:
         self.ref_cat_counts, self._capped_cats = fit_ref_category_counts(
             reference_df, self.cat_cols, max_categories
         )
-        # fitted-category membership rows for the per-batch rank guard —
-        # derived once here, never per trigger
-        self._ref_member_rows = [
-            (c, v) for c, m in self.ref_cat_counts.items() for v in m
-        ]
         # fit once on the static reference; edges + reference proportions
         # + the thinned broadcast ECDF are the only state the stream needs
         self.edges: Dict[str, np.ndarray] = quantile_edges(
             reference_df, self.numeric_cols, n_bins
         )
-        self.ref_props: Dict[str, np.ndarray] = histogram_proportions_one(
-            reference_df, self.edges
-        )
+        self.ref_props: Dict[str, np.ndarray] = self._bin_props(reference_df)
         # the same mass-quantum-thinned ECDF state the batch verdict suite
         # broadcasts (verdicts.fit_ks_reference_ecdf) — fitted once here,
         # scored against every micro-batch
@@ -130,7 +134,7 @@ class StreamingDriftMonitor:
         from driftspark.numerics import ks_2samp_pvalue, severity_from_pvalue
         from driftspark.verdicts import ks_d_against_ecdf
 
-        hists = histogram_proportions_one(batch_df, self.edges)
+        hists = self._bin_props(batch_df)
         rows = []
         for c, test_p in hists.items():
             psi = (
@@ -186,83 +190,48 @@ class StreamingDriftMonitor:
                 )
         return rows
 
+    def _bin_props(self, df: DataFrame) -> Dict[str, np.ndarray]:
+        """{feature: in-range proportion per fitted bin} of ``df`` — all
+        zeros for an empty frame."""
+        from driftspark.verdicts import _ref_bin_counts
+
+        if not self.edges:
+            return {}
+        return {c: _proportions(n) for c, n in _ref_bin_counts(df, self.edges).items()}
+
     def _batch_cat_counts(self, batch_df: DataFrame) -> dict:
         """Cardinality-guarded per-feature category counts for one batch —
         the map chi2 scores against.  Public-ish for tests: asserting this
         map directly verifies the Spark-side fold (the chi-square alone
-        can be inf on both sides and hide a wrong fold)."""
-        from driftspark.verdicts import CHI2_OTHER_BUCKET
+        can be inf on both sides and hide a wrong fold).
 
-        def v_expr(c):
-            # for a feature the fit capped, remap unseen/tail batch
-            # categories into the other-bucket IN SPARK, so the collect
-            # stays bounded at max_categories rows per feature no
-            # matter what the batch contains
-            col = F.col(c).cast("string")
-            if c in self._capped_cats:
-                kept = list(self.ref_cat_counts[c].keys())
-                # NULL stays NULL (excluded below, never other-bucketed)
-                return F.when(col.isNull(), F.lit(None).cast("string")).when(
-                    col.isin(kept), col
-                ).otherwise(F.lit(CHI2_OTHER_BUCKET))
-            return col
-
-        structs = [
-            F.struct(F.lit(c).alias("feature"), v_expr(c).alias("v"))
+        A feature the fit capped folds every batch category outside its
+        fitted set into the other-bucket.  Every feature then passes the
+        category cap with its fitted reference members pinned, so a batch
+        with more than ``max_categories`` categories (ids/captions landing
+        in a cat col) folds its unfitted tail too, IN SPARK: the collect
+        stays bounded at O(features x max_categories) rows whatever the
+        batch contains, and under the cap nothing folds."""
+        keys = {
+            c: _fold_unfitted(F.col(c).cast("string"), self.ref_cat_counts[c])
+            if c in self._capped_cats
+            else F.col(c).cast("string")
             for c in self.cat_cols
-        ]
-        grouped = (
-            batch_df.select(F.explode(F.array(*structs)).alias("fv"))
-            .select("fv.feature", "fv.v")
-            .where(F.col("v").isNotNull())
-            .groupBy("feature", "v")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        # cardinality guard for EVERY feature, not only those the fit
-        # capped: rank each feature's batch categories with fitted
-        # reference members first, and fold everything past the cap
-        # into the other-bucket IN SPARK — so the collect is bounded
-        # at O(features x max_categories) no matter what the batch
-        # contains (ids/captions landing in a cat col).  Under the
-        # cap nothing folds: the verdict stays bit-identical to the
-        # unguarded path.  (Capped features are already bounded and
-        # other-bucketed by v_expr above; the rank guard is a no-op
-        # for them.)
-        # the microbatch session is a clone per trigger, so the tiny
-        # membership table is recreated per batch from the once-built
-        # row list (bounded at features x max_categories rows)
-        ref_members = local_frame(
-            batch_df.sparkSession, self._ref_member_rows, "feature string, v string"
-        ).withColumn("in_ref", F.lit(True))
-        w_guard = Window.partitionBy("feature").orderBy(
-            F.col("in_ref").desc(), F.col("c").desc(), "v"
-        )
-        w_feat = Window.partitionBy("feature")
-        # fold ONLY when the feature's distinct batch count actually
-        # EXCEEDS the cap (strict >, same convention as
-        # fit_ref_category_counts / chi2_by_partition) — at exactly
-        # max_categories nothing folds and no warning fires
-        batch_counts = (
-            grouped.join(F.broadcast(ref_members), ["feature", "v"], "left")
-            .withColumn("in_ref", F.coalesce(F.col("in_ref"), F.lit(False)))
-            .withColumn("rn", F.row_number().over(w_guard))
-            .withColumn("n_f", F.count(F.lit(1)).over(w_feat))
-            .withColumn(
-                "v",
-                F.when(
-                    F.col("in_ref")
-                    | (F.col("n_f") <= self.max_categories)
-                    | (F.col("rn") < self.max_categories),
-                    F.col("v"),
-                ).otherwise(F.lit(CHI2_OTHER_BUCKET)),
-            )
-            .groupBy("feature", "v")
-            .agg(F.sum("c").alias("c"))
-            .collect()
+        }
+        pinned = F.lit(False)
+        for c, members in self.ref_cat_counts.items():
+            if members:
+                pinned = F.when(
+                    F.col("feature") == c, F.col("key").isin(list(members))
+                ).otherwise(pinned)
+        counts = _cap_categories(
+            key_counts(batch_df, keys).where(F.col("key").isNotNull()),
+            self.max_categories,
+            pinned,
         )
         by_feat: dict = {c: {} for c in self.cat_cols}
-        for r in batch_counts:
-            by_feat[r["feature"]][r["v"]] = int(r["c"])
+        for r in counts.collect():
+            by_feat[r["feature"]][r["key"]] = int(r["c"])
         folded = sorted(
             c
             for c in self.cat_cols
@@ -345,19 +314,37 @@ def windowed_event_counts(
     )
 
 
-def _partial_count_stage(df: DataFrame, key_col: str, key_type: str) -> DataFrame:
-    """Stateless per-partition (feature, key) partial counts — the
+def _fold_unfitted(col: Column, members) -> Column:
+    """``col`` where it is one of the fitted ``members``, the other-bucket
+    otherwise; NULL stays NULL (excluded by the counts, never
+    other-bucketed)."""
+    return (
+        F.when(col.isNull(), F.lit(None).cast("string"))
+        .when(col.isin(list(members)), col)
+        .otherwise(F.lit(CHI2_OTHER_BUCKET))
+    )
+
+
+def _partial_count_stage(
+    stream_df: DataFrame, keys: Dict[str, Column], key_type: str
+) -> DataFrame:
+    """Stateless per-partition (feature, key) partial counts of the
+    non-NULL keys (:func:`driftspark.stats._melt_keys`) — the
     pre-aggregation every cumulative stream inserts BEFORE its stateful
     shuffle so the single per-feature state task receives aggregated
     rows, never raw row volume."""
-    return df.mapInPandas(
-        lambda it: (
-            pdf.groupby(["feature", key_col], as_index=False).size().rename(
-                columns={"size": "c"}
-            )
-            for pdf in it
-        ),
-        schema=f"feature string, {key_col} {key_type}, c long",
+    return (
+        _melt_keys(stream_df, keys)
+        .where(F.col("key").isNotNull())
+        .mapInPandas(
+            lambda it: (
+                pdf.groupby(["feature", "key"], as_index=False).size().rename(
+                    columns={"size": "c"}
+                )
+                for pdf in it
+            ),
+            schema=f"feature string, key {key_type}, c long",
+        )
     )
 
 
@@ -383,24 +370,12 @@ def cumulative_psi_stream(
     import pandas as pd_
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from driftspark.stats import bucket_expr
-
-    structs = [
-        F.struct(
-            F.lit(c).alias("feature"),
-            bucket_expr(c, e).cast("int").alias("bin"),
-        )
-        for c, e in edges_map.items()
-    ]
-    binned = (
-        stream_df.select(F.explode(F.array(*structs)).alias("fb"))
-        .select("fb.feature", "fb.bin")
-        .where(F.col("bin").isNotNull())
-    )
     # stateless per-partition partial counts BEFORE the stateful group: the
     # shuffle into each feature's single state task carries at most
     # partitions x n_bins rows per trigger, never the raw row volume
-    partials = _partial_count_stage(binned, "bin", "int")
+    partials = _partial_count_stage(
+        stream_df, {c: bucket_expr(c, e) for c, e in edges_map.items()}, "int"
+    )
     n_bins_by_feat = {c: len(e) - 1 for c, e in edges_map.items()}
     ref_props_plain = {c: [float(x) for x in p] for c, p in ref_props.items()}
 
@@ -413,7 +388,7 @@ def cumulative_psi_stream(
             else np.zeros(n_bins, dtype=np.int64)
         )
         for pdf in pdfs:
-            for b, c in zip(pdf["bin"].values, pdf["c"].values):
+            for b, c in zip(pdf["key"].values, pdf["c"].values):
                 counts[int(b)] += int(c)
         state.update((counts.tolist(),))
         total = int(counts.sum())
@@ -616,7 +591,6 @@ def cumulative_chi2_stream(
     stream_df: DataFrame,
     ref_cat_counts: Dict[str, Dict[str, int]],
     chi2_threshold: float = 0.05,
-    capped_features: Optional[set] = None,
 ) -> DataFrame:
     """Stateful cumulative chi-square (applyInPandasWithState): per-feature
     cumulative category counts persist across micro-batches, emitting the
@@ -628,40 +602,25 @@ def cumulative_chi2_stream(
     other-bucket IN SPARK, for every feature — a cumulative stream holds
     its state forever, so both the checkpointed state and the shuffle into
     each feature's single state task must stay bounded at the fitted
-    category set plus one bucket regardless of what the stream contains
-    (``capped_features`` is retained for signature compatibility; the
-    fold no longer depends on it).  A stateless mapInPandas partial-count
-    stage aggregates (feature, v) counts per partition BEFORE the stateful
-    shuffle, so the state task receives at most
-    partitions x (categories + 1) rows per trigger, never raw row volume
-    — the same bounding as cumulative_psi_stream / cumulative_ks_stream."""
+    category set plus one bucket regardless of what the stream contains.
+    A stateless mapInPandas partial-count stage aggregates (feature, key)
+    counts per partition BEFORE the stateful shuffle, so the state task
+    receives at most partitions x (categories + 1) rows per trigger, never
+    raw row volume — the same bounding as cumulative_psi_stream /
+    cumulative_ks_stream."""
     import pandas as pd_
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from driftspark.numerics import severity_from_pvalue
-    from driftspark.verdicts import CHI2_OTHER_BUCKET, chi2_from_count_maps
+    from driftspark.verdicts import chi2_from_count_maps
 
-    cols = list(ref_cat_counts.keys())
-
-    def v_expr(c):
-        col = F.col(c).cast("string")
-        kept = list(ref_cat_counts[c].keys())
-        return F.when(col.isNull(), F.lit(None).cast("string")).when(
-            col.isin(kept), col
-        ).otherwise(F.lit(CHI2_OTHER_BUCKET))
-
-    structs = [
-        F.struct(F.lit(c).alias("feature"), v_expr(c).alias("v")) for c in cols
-    ]
-    melted = (
-        stream_df.select(F.explode(F.array(*structs)).alias("fv"))
-        .select("fv.feature", "fv.v")
-        .where(F.col("v").isNotNull())
-    )
     # stateless per-partition partial counts BEFORE the stateful group —
-    # with the fold above, at most partitions x (categories+1) rows per
+    # with the fold, at most partitions x (categories+1) rows per
     # feature per trigger reach the state task
-    partials = _partial_count_stage(melted, "v", "string")
+    keys = {
+        c: _fold_unfitted(F.col(c).cast("string"), m) for c, m in ref_cat_counts.items()
+    }
+    partials = _partial_count_stage(stream_df, keys, "string")
     ref_plain = {c: dict(m) for c, m in ref_cat_counts.items()}
 
     def update(key, pdfs, state: GroupState):
@@ -669,7 +628,7 @@ def cumulative_chi2_stream(
         tmap: dict = dict(zip(*state.get)) if state.exists else {}
         tmap = {k: int(v) for k, v in tmap.items()}
         for pdf in pdfs:
-            for cat, c in zip(pdf["v"].values, pdf["c"].values):
+            for cat, c in zip(pdf["key"].values, pdf["c"].values):
                 tmap[cat] = tmap.get(cat, 0) + int(c)
         state.update((list(tmap.keys()), [int(v) for v in tmap.values()]))
         stat, p, _, n_seen = chi2_from_count_maps(ref_plain[feature], tmap)

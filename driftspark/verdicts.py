@@ -10,15 +10,18 @@ yielding one verdict row per (partition, feature, check).
 Scale design:
 * The PSI and KS reference state is fitted once and every batch of
   partitions scores against it (:class:`_VerdictSuite`).
-* PSI is ONE test-side melt+groupBy collected as O(parts x features x
-  bins) (part, feature, bin) counts, then numerics.psi_from_proportions
-  per (part, feature) on the driver — the streaming monitor's math.
+* PSI and chi-square count through the one keyed-count primitive,
+  driftspark.stats.key_counts.  PSI is ONE test-side (part, feature, bin)
+  count collected as O(parts x features x bins) rows, then
+  numerics.psi_from_proportions per (part, feature) on the driver — the
+  streaming monitor's math.
 * KS D scores each (part, feature) test group against a BROADCAST
   reference ECDF, fitted once (thinned, when over budget, on the exact
   cumulative frame of driftspark.stats); p-values for the O(parts x
   features) D statistics are driver math.
-* chi-square categorical counts are one groupBy at (part, category, side)
-  cardinality.
+* chi-square categorical counts are one (side, part, feature, category)
+  count over both sides; a feature over its category cap folds its tail
+  in Spark (stats._cap_categories) before the driver collect.
 """
 
 from __future__ import annotations
@@ -44,14 +47,20 @@ from driftspark.session import local_frame
 from driftspark.stats import (
     _CDF_BUCKETED_THRESHOLD,
     _W1_QUANTIZE,
+    CHI2_OTHER_BUCKET,
+    _aligned,
+    _cap_categories,
     _cdf_cum_frame,
     _cdf_prescan,
     _equal_mass_buckets,
     _melt,
+    _proportions,
+    _sides,
     _uniform_buckets,
     _w1_term_quantized,
     approx_quantile_edges,
     bucket_expr,
+    key_counts,
     quantile_edges,
 )
 
@@ -67,38 +76,14 @@ VERDICT_SCHEMA = (
 )
 
 
-def _melt_binned(
-    df: DataFrame,
-    edges_map: Dict[str, np.ndarray],
-    part_expr,
-    keep_out_of_range: bool = False,
-):
-    """(part, feature, bin) long form; out-of-range/NULL values carry a
-    NULL bin and are dropped by default.  ``keep_out_of_range`` retains
-    ONE NULL-bin row per (row, feature) so a single aggregation also
-    observes the partition universe (a partition with no in-range value
-    still gets its n_test = 0 PSI verdict)."""
-    structs = [
-        F.struct(F.lit(c).alias("feature"), bucket_expr(c, e).alias("bin"))
-        for c, e in edges_map.items()
-    ]
-    out = df.select(
-        part_expr.alias("part"), F.explode(F.array(*structs)).alias("fb")
-    ).select("part", "fb.feature", "fb.bin")
-    return out if keep_out_of_range else out.where(F.col("bin").isNotNull())
-
-
 def _bin_counts(df: DataFrame, edges_map: Dict[str, np.ndarray], part_expr):
     """({part: {feature: in-range count per fitted bin}}, in-range values
-    with a NULL part) from ONE groupBy, collected as O(parts x features x
-    bins) rows.  Every part with any row gets every feature (all-zero when
-    no value is in range); parts keep their ORIGINAL type."""
-    rows = (
-        _melt_binned(df, edges_map, part_expr, keep_out_of_range=True)
-        .groupBy("part", "feature", "bin")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    )
+    with a NULL part) from ONE :func:`key_counts`, collected as O(parts x
+    features x bins) rows.  Its NULL-bin rows give every part with any
+    row every feature (all-zero when no value is in range); parts keep
+    their ORIGINAL type."""
+    keys = {c: bucket_expr(c, e) for c, e in edges_map.items()}
+    rows = key_counts(df, keys, [part_expr.alias("part")]).collect()
 
     def zeros():
         return {f: np.zeros(len(e) - 1, np.int64) for f, e in edges_map.items()}
@@ -107,17 +92,18 @@ def _bin_counts(df: DataFrame, edges_map: Dict[str, np.ndarray], part_expr):
     null_part = 0
     for r in rows:
         if r["part"] is None:
-            null_part += r["c"] if r["bin"] is not None else 0
+            null_part += r["c"] if r["key"] is not None else 0
             continue
         h = hists[r["part"]]
-        if r["bin"] is not None:
-            h[r["feature"]][r["bin"]] = r["c"]
+        if r["key"] is not None:
+            h[r["feature"]][r["key"]] = r["c"]
     return hists, null_part
 
 
 def _ref_bin_counts(ref_df: DataFrame, edges_map: Dict[str, np.ndarray]):
-    """{feature: in-range reference count per fitted bin} — the global
-    reference histogram every partition's PSI scores against."""
+    """{feature: in-range count per fitted bin} of one frame — the global
+    reference histogram every partition's PSI scores against, or one
+    streaming micro-batch's."""
     hists, _ = _bin_counts(ref_df, edges_map, F.lit(0))
     return hists[0]  # all-zero for an empty reference
 
@@ -144,13 +130,9 @@ def _psi_rows(
             part_col,
         )
 
-    def props(c):
-        n = c.sum()
-        return c / n if n else np.zeros(len(c))
-
-    ref_props = {f: props(c) for f, c in ref_counts.items()}
+    ref_props = {f: _proportions(c) for f, c in ref_counts.items()}
     return [
-        (part, f, psi_from_proportions(ref_props[f], props(t), min_bin_size),
+        (part, f, psi_from_proportions(ref_props[f], _proportions(t), min_bin_size),
          int(ref_counts[f].sum()), int(t.sum()))
         for part, by_feature in hists.items()
         for f, t in by_feature.items()
@@ -196,7 +178,7 @@ def rolling_psi(
     global-reference partition verdicts (part_col=date_trunc answers "is
     today shaped like the FITTED reference").
 
-    One melt+bin scan → (feature, bucket, bin) counts → a DENSE
+    One :func:`key_counts` scan → (feature, bucket, bin) counts → a DENSE
     (feature, bucket, bin) grid (lazy sequence-explode buckets × fitted
     bins, so empty bins AND empty buckets participate in the clamp —
     the pandas all-categories semantic) → the trailing reference is a
@@ -222,11 +204,14 @@ def rolling_psi(
     spark = df.sparkSession
 
     pts = df.where(F.col(ts_col).isNotNull())
-    binned = _melt_binned(
-        pts, edges_map, F.date_trunc(bucket, F.col(ts_col))
-    ).select(F.col("part").alias("__b"), "feature", "bin")
-    counts = binned.groupBy("__b", "feature", "bin").agg(
-        F.count(F.lit(1)).alias("t")
+    counts = (
+        key_counts(
+            pts,
+            {c: bucket_expr(c, e) for c, e in edges_map.items()},
+            [F.date_trunc(bucket, F.col(ts_col)).alias("__b")],
+        )
+        .where(F.col("key").isNotNull())
+        .select("__b", "feature", F.col("key").alias("bin"), F.col("c").alias("t"))
     )
 
     # dense grids: lazy global [min,max] bucket span (volume_report
@@ -594,11 +579,6 @@ def ks_d_against_ecdf(
     )
 
 
-#: merged-tail bucket name used when a categorical feature exceeds
-#: ``max_categories`` (unlikely to collide with real category strings)
-CHI2_OTHER_BUCKET = "__chi2_other__"
-
-
 def chi2_by_partition(
     ref_df: DataFrame,
     test_df: DataFrame,
@@ -610,66 +590,56 @@ def chi2_by_partition(
     """Per-(part, feature) chi-square of test category counts vs global
     reference proportions (univariate.py:71-122 semantics, per-partition).
 
-    ALL categorical columns melt into one (part, feature, value)
-    aggregation — ONE Spark job regardless of column count.  The
-    chi-square over O(parts x features x categories) count rows runs on
-    the driver.
+    ALL categorical columns of both sides count in one :func:`key_counts`
+    (is_ref, part, feature, category) aggregation — ONE Spark job
+    regardless of column count.  The chi-square over O(parts x features x
+    categories) count rows runs on the driver.
 
     Scale guard: that driver loop assumes bounded category cardinality —
     a high-cardinality string column (ids, captions) would collect
     unbounded rows.  Any feature whose observed (ref ∪ test) category
-    count exceeds ``max_categories`` is remapped DISTRIBUTED to its
-    ``max_categories - 1`` globally most-frequent categories plus one
-    merged ``__chi2_other__`` tail bucket before anything reaches the
-    driver, with a logged warning naming the truncated features.
-    Features at or under the cap are bit-identical to the unguarded
-    path.  Test rows with a NULL partition id are excluded from verdicts
-    (they belong to no partition) but are now COUNTED in the same
+    count exceeds ``max_categories`` keeps its ``max_categories - 1``
+    globally most-frequent categories plus one merged ``__chi2_other__``
+    tail bucket (:func:`_cap_categories`, distributed, before anything
+    reaches the driver), with a logged warning naming the truncated
+    features.  Features at or under the cap are bit-identical to the
+    unguarded path.  Test rows with a NULL partition id are excluded from
+    verdicts (they belong to no partition) but are COUNTED in the same
     aggregation and logged, so drift concentrated in null-part rows
     can't vanish silently."""
     if not cat_cols:
         return []
-
-    def melted(df: DataFrame, part_expr, is_ref: bool) -> DataFrame:
-        structs = [
-            F.struct(F.lit(c).alias("feature"), F.col(c).cast("string").alias("v"))
-            for c in cat_cols
-        ]
-        return (
-            df.select(
-                F.lit(is_ref).alias("is_ref"),
-                part_expr.alias("part"),
-                F.explode(F.array(*structs)).alias("fv"),
-            )
-            .select("is_ref", "part", "fv.feature", "fv.v")
-            .where(F.col("v").isNotNull())
-        )
-
-    # explicit is_ref tag (NULL part no longer doubles as the ref marker,
+    # explicit is_ref tag (NULL part does not double as the ref marker,
     # so null-part test rows stay observable); part keeps its ORIGINAL type
     part_type = test_df.schema[part_col].dataType
-    u = melted(ref_df, F.lit(None).cast(part_type), True).unionByName(
-        melted(test_df, F.col(part_col), False)
+    u = _sides(
+        ref_df.withColumn("__part", F.lit(None).cast(part_type)),
+        test_df.withColumn("__part", F.col(part_col)),
+        [*cat_cols, "__part"],
     )
-    counts_df = (
-        u.groupBy("is_ref", "part", "feature", "v")
-        .agg(F.count(F.lit(1)).alias("c"))
+    counts = (
+        key_counts(
+            u,
+            {c: F.col(c).cast("string") for c in cat_cols},
+            ["is_ref", F.col("__part").alias("part")],
+        )
+        .where(F.col("key").isNotNull())
         # lazy: the cardinality-guard meta job materializes it (one
         # fewer job than an eager checkpoint)
         .localCheckpoint(eager=False)
     )
-
-    # ONE tiny job over the checkpointed aggregates fetches both guard
-    # inputs: per-feature distinct-category counts (cardinality guard) and
-    # the null-part test mass (silent-drop warning)
+    # ONE tiny job over the checkpointed counts fetches both guard inputs:
+    # per-feature category counts (cap) and the null-part test mass
+    # (silent-drop warning).  Capping only the features over the cap keeps
+    # the window stages off the common path, where chi2 runs next to the
+    # other verdict families.
     in_scope = F.col("is_ref") | F.col("part").isNotNull()
     meta = (
-        counts_df.groupBy("feature")
+        counts.groupBy("feature")
         .agg(
-            F.count_distinct(F.when(in_scope, F.col("v"))).alias("n"),
+            F.count_distinct(F.when(in_scope, F.col("key"))).alias("n"),
             F.sum(
-                F.when(~F.col("is_ref") & F.col("part").isNull(), F.col("c"))
-                .otherwise(F.lit(0))
+                F.when(~in_scope, F.col("c")).otherwise(F.lit(0))
             ).alias("dropped"),
         )
         .collect()
@@ -682,8 +652,7 @@ def chi2_by_partition(
             dropped,
             part_col,
         )
-    counts_df = counts_df.where(in_scope)
-
+    counts = counts.where(in_scope)
     over = sorted(r["feature"] for r in meta if r["n"] > max_categories)
     if over:
         logger.warning(
@@ -693,42 +662,15 @@ def chi2_by_partition(
             max_categories,
             CHI2_OTHER_BUCKET,
         )
-        w_top = Window.partitionBy("feature").orderBy(F.col("tot").desc(), "v")
-        keep = (
-            counts_df.where(F.col("feature").isin(over))
-            .groupBy("feature", "v")
-            .agg(F.sum("c").alias("tot"))
-            .withColumn("rn", F.row_number().over(w_top))
-            .where(F.col("rn") < max_categories)
-            .select("feature", "v", F.lit(True).alias("keep"))
-        )
-        cols5 = ["is_ref", "part", "feature", "v", "c"]
-        remapped = (
-            counts_df.where(F.col("feature").isin(over))
-            .join(F.broadcast(keep), ["feature", "v"], "left")
-            .withColumn(
-                "v",
-                F.when(F.col("keep"), F.col("v")).otherwise(
-                    F.lit(CHI2_OTHER_BUCKET)
-                ),
-            )
-            .groupBy("is_ref", "part", "feature", "v")
-            .agg(F.sum("c").alias("c"))
-        )
-        counts_df = (
-            counts_df.where(~F.col("feature").isin(over))
-            .select(*cols5)
-            .unionByName(remapped.select(*cols5))
-        )
+        counts = _cap_categories(counts, max_categories)
 
-    counts = counts_df.collect()
     ref_map: Dict[str, Dict] = {c: {} for c in cat_cols}
     by_part: Dict[tuple, Dict] = {}
-    for r in counts:
+    for r in counts.collect():
         if r["is_ref"]:
-            ref_map[r["feature"]][r["v"]] = r["c"]
+            ref_map[r["feature"]][r["key"]] = r["c"]
         else:
-            by_part.setdefault((r["part"], r["feature"]), {})[r["v"]] = r["c"]
+            by_part.setdefault((r["part"], r["feature"]), {})[r["key"]] = r["c"]
 
     out: List[dict] = []
     for (part, col), tmap in sorted(by_part.items()):
@@ -760,47 +702,19 @@ def fit_ref_category_counts(
     into the same bucket for capped features."""
     if not cat_cols:
         return {}, set()
-    structs = [
-        F.struct(F.lit(c).alias("feature"), F.col(c).cast("string").alias("v"))
-        for c in cat_cols
-    ]
-    counts_df = (
-        ref_df.select(F.explode(F.array(*structs)).alias("fv"))
-        .select("fv.feature", "fv.v")
-        .where(F.col("v").isNotNull())
-        .groupBy("feature", "v")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    ncats = counts_df.groupBy("feature").agg(F.count(F.lit(1)).alias("n")).collect()
-    capped = {r["feature"] for r in ncats if r["n"] > max_categories}
+    counts = key_counts(
+        ref_df, {c: F.col(c).cast("string") for c in cat_cols}
+    ).where(F.col("key").isNotNull())
+    out: Dict[str, Dict] = {c: {} for c in cat_cols}
+    for r in _cap_categories(counts, max_categories).collect():
+        out[r["feature"]][r["key"]] = int(r["c"])
+    capped = {c for c, m in out.items() if CHI2_OTHER_BUCKET in m}
     if capped:
         logger.warning(
             "fit_ref_category_counts: feature(s) %s exceed max_categories=%d; "
             "tail categories merged into %r",
             sorted(capped), max_categories, CHI2_OTHER_BUCKET,
         )
-        w_top = Window.partitionBy("feature").orderBy(F.col("c").desc(), "v")
-        counts_df = (
-            counts_df.withColumn(
-                "rn",
-                F.when(
-                    F.col("feature").isin(list(capped)),
-                    F.row_number().over(w_top),
-                ).otherwise(F.lit(1)),
-            )
-            .withColumn(
-                "v",
-                F.when(F.col("rn") < max_categories, F.col("v")).otherwise(
-                    F.lit(CHI2_OTHER_BUCKET)
-                ),
-            )
-            .groupBy("feature", "v")
-            .agg(F.sum("c").alias("c"))
-        )
-    out: Dict[str, Dict] = {c: {} for c in cat_cols}
-    for r in counts_df.collect():
-        out[r["feature"]][r["v"]] = int(r["c"])
     return out, capped
 
 
@@ -812,9 +726,7 @@ def chi2_from_count_maps(
     univariate.py:71-122 math: union-aligned categories, >=min_samples
     validity filter on either side, df = n_valid - 1).  Pure driver math,
     shared by the batch per-partition path and the streaming monitor."""
-    cats = sorted(set(rmap) | set(tmap))
-    rc = np.array([rmap.get(c, 0) for c in cats], dtype=np.float64)
-    tc = np.array([tmap.get(c, 0) for c in cats], dtype=np.float64)
+    _, rc, tc = _aligned(rmap, tmap)
     valid = (rc >= min_samples) | (tc >= min_samples)
     if valid.sum() < 2:
         stat, p = 0.0, 1.0

@@ -122,11 +122,14 @@ def test_statistics_invariant_to_fused_bucket_count(spark, frames, monkeypatch):
 
 def test_one_cumulative_window_and_one_percentile_edge_block():
     """Structural guard: the exact cumulative count has ONE home
-    (_cdf_cum_frame) and the equal-mass bucket edges ONE builder — a
-    hand copy of either in driftspark/ fails here."""
-    src = "".join(
-        p.read_text()
-        for p in (pathlib.Path(st.__file__).parent).glob("*.py")
-    )
+    (_cdf_cum_frame), the equal-mass bucket edges ONE builder, and the
+    keyed counts of stats, verdicts and streaming ONE melt
+    (stats._melt_keys) — a hand copy of any in driftspark/ fails here."""
+    pkg = pathlib.Path(st.__file__).parent
+    src = "".join(p.read_text() for p in pkg.glob("*.py"))
     assert src.count("rowsBetween(Window.unboundedPreceding, Window.currentRow)") == 1
     assert src.count("percentile_approx(") == 1
+    counters = "".join(
+        (pkg / f).read_text() for f in ("stats.py", "verdicts.py", "streaming.py")
+    )
+    assert counters.count("F.explode(F.array(") == 1

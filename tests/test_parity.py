@@ -6,12 +6,17 @@ out-of-range exclusion, value_counts normalization, np.digitize confidence
 bins, and the distributed KS D.
 """
 
+import math
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from driftspark import numerics as nm
 from driftspark import stats as st
+from driftspark import verdicts as vd
 
 
 @pytest.fixture(scope="module")
@@ -150,22 +155,303 @@ def test_mode_tie_break(spark):
     assert st.mode_of(df, "c") == pdf["c"].mode()[0] == "a"
 
 
-def test_psi_counts_fused_matches_separate_paths(frame, spark):
-    """The single-job fused detect path (numeric hists + all categoricals
-    in one explode-melt aggregation) is value-identical to the original
-    histogram_proportions + categorical_counts pair."""
-    pdf, df = frame
-    ref = df.where("c < 3")
-    test = df.where("c >= 3")
-    edges = st.quantile_edges(ref, ["a", "b"], 10)
-    old = st.histogram_proportions(ref, test, edges)
-    fused_num, fused_cat = st.psi_counts_fused(ref, test, edges, ["cat"])
-    for col in ("a", "b"):
-        assert np.allclose(old[col][0], fused_num[col][0], atol=0, rtol=0)
-        assert np.allclose(old[col][1], fused_num[col][1], atol=0, rtol=0)
-    _, rc, tc = st.categorical_counts(ref, test, "cat")
-    assert np.array_equal(rc, fused_cat["cat"][0])
-    assert np.array_equal(tc, fused_cat["cat"][1])
+#: fitted edges of the degenerate fixture: x has values exactly on every
+#: edge, y on the outer ones
+DEGENERATE_EDGES = {"x": np.array([-2.0, -1.0, 0.0, 1.0, 2.0]), "y": np.array([0.0, 0.5, 3.0])}
+
+
+@pytest.fixture(scope="module")
+def degenerate(spark):
+    """(rows, frame) with NULL, NaN, ±inf, out-of-range values and values
+    exactly on an edge, NULL int and string part ids, timestamps over six
+    days and a probability column for CBPE."""
+    import datetime
+
+    rng = np.random.RandomState(3)
+    x_special = [None, float("nan"), float("inf"), float("-inf"), 7.5, -9.0,
+                 -2.0, -1.0, 0.0, 1.0, 2.0]
+    y_special = [None, 0.0, 0.5, 3.0, 3.5, -1.0]
+    p_special = [None, float("nan"), 0.0, 1.0, 0.1, 0.7, -0.05, 1.05]
+    rows = []
+    for i in range(1200):
+        part = [0, 1, 2, None][rng.randint(4)]
+        rows.append({
+            "x": x_special[i % 40] if i % 40 < len(x_special) else round(rng.normal(0, 1.5), 1),
+            "y": y_special[i % 30] if i % 30 < len(y_special) else round(rng.uniform(0, 4), 1),
+            "cat": ["a", "b", "c", "d", "e", None][rng.randint(6)],
+            "part": part,
+            "spart": None if part is None else f"p{part}",
+            "split": "ref" if rng.rand() < 0.45 else "test",
+            "ts": datetime.datetime(2024, 1, 1) + datetime.timedelta(days=i % 6),
+            "p": p_special[i % 25] if i % 25 < len(p_special) else float(rng.uniform(0, 1)),
+        })
+    df = spark.createDataFrame(
+        [tuple(r.values()) for r in rows],
+        "x double, y double, cat string, part int, spart string, split string, "
+        "ts timestamp, p double",
+    )
+    return rows, df
+
+
+def _hist(rows, c):
+    """In-range count per fitted bin of ``c`` by pd.cut(include_lowest=True)."""
+    e = DEGENERATE_EDGES[c]
+    codes = pd.cut(pd.Series([r[c] for r in rows], dtype=float), e, include_lowest=True,
+                   labels=False)
+    return np.bincount(codes.dropna().astype(int), minlength=len(e) - 1).astype(np.int64)
+
+
+def _props(rows, c):
+    h = _hist(rows, c).astype(np.float64)
+    return h / h.sum() if h.sum() else h
+
+
+def _cat_counts(rows, c):
+    return dict(Counter(str(r[c]) for r in rows if r[c] is not None))
+
+
+def _capped(counts, max_categories, pinned=()):
+    """The documented over-cap rule, by hand: over the cap, the top K-1
+    keys by (pinned, count desc, key) stay and the rest fold."""
+    if len(counts) <= max_categories:
+        return dict(counts)
+    order = sorted(counts, key=lambda k: (k not in pinned, -counts[k], k))
+    out = Counter()
+    for rank, k in enumerate(order):
+        keep = k in pinned or rank < max_categories - 1
+        out[k if keep else vd.CHI2_OTHER_BUCKET] += counts[k]
+    return dict(out)
+
+
+def _eq(got, want):
+    if isinstance(want, np.ndarray):
+        assert got.dtype == want.dtype and np.array_equal(got, want), (got, want)
+    elif isinstance(want, (tuple, list)):
+        assert len(got) == len(want), (got, want)
+        for g, w in zip(got, want):
+            _eq(g, w)
+    elif isinstance(want, dict):
+        assert set(got) == set(want), (sorted(got), sorted(want))
+        for k in want:
+            _eq(got[k], want[k])
+    elif isinstance(want, float) and math.isnan(want):
+        assert math.isnan(got), got
+    else:
+        assert got == want, (got, want)
+
+
+def _check_histogram_proportions(ref, test, ref_rows, test_rows):
+    _eq(st.histogram_proportions(ref, test, DEGENERATE_EDGES),
+        {c: (_props(ref_rows, c), _props(test_rows, c)) for c in DEGENERATE_EDGES})
+
+
+def _check_psi_counts_fused(ref, test, ref_rows, test_rows):
+    num, cat = st.psi_counts_fused(ref, test, DEGENERATE_EDGES, ["cat", "spart"])
+    _eq(num, {c: (_props(ref_rows, c), _props(test_rows, c)) for c in DEGENERATE_EDGES})
+    for c in ("cat", "spart"):
+        _eq(cat[c], st._aligned(_cat_counts(ref_rows, c), _cat_counts(test_rows, c))[1:])
+
+
+def _check_categorical_counts(ref, test, ref_rows, test_rows):
+    for c in ("cat", "part"):  # the int column keeps its type and order
+        counts = [Counter(r[c] for r in side if r[c] is not None) for side in (ref_rows, test_rows)]
+        cats = sorted(set(counts[0]) | set(counts[1]))
+        want = (cats, *(np.array([n[k] for k in cats], dtype=np.float64) for n in counts))
+        _eq(st.categorical_counts(ref, test, c), want)
+
+
+def _check_category_shift_report(ref, test, ref_rows, test_rows):
+    got = {
+        (r["feature"], r["category"]): (r["n_ref"], r["n_test"], r["ref_prop"], r["test_prop"])
+        for r in st.category_shift_report(ref, test, ["cat", "part"]).collect()
+    }
+    want = {}
+    for c in ("cat", "part"):
+        n = [Counter(None if r[c] is None else str(r[c]) for r in side)
+             for side in (ref_rows, test_rows)]
+        for k in set(n[0]) | set(n[1]):
+            want[c, k] = (
+                n[0][k], n[1][k],
+                n[0][k] / len(ref_rows) if ref_rows else None,
+                n[1][k] / len(test_rows) if test_rows else None,
+            )
+    _eq(got, want)
+
+
+def _check_cdf_melt(ref, test, ref_rows, test_rows):
+    got = Counter(tuple(r) for r in st._melt(test, ["x", "y"], "spart").collect())
+    want = Counter(
+        (r["spart"], c, r[c]) for r in test_rows for c in ("x", "y")
+        if r[c] is not None and not math.isnan(r[c])
+    )
+    assert got == want
+
+
+def _check_bin_counts(ref, test, ref_rows, test_rows):
+    hists, null_part = vd._bin_counts(test, DEGENERATE_EDGES, F.col("spart"))
+    parts = {r["spart"] for r in test_rows} - {None}
+    _eq(dict(hists), {
+        p: {c: _hist([r for r in test_rows if r["spart"] == p], c) for c in DEGENERATE_EDGES}
+        for p in parts
+    })
+    null_rows = [r for r in test_rows if r["spart"] is None]
+    assert null_part == sum(int(_hist(null_rows, c).sum()) for c in DEGENERATE_EDGES)
+    for side, side_rows in ((ref, ref_rows), (test, test_rows)):
+        _eq(vd._ref_bin_counts(side, DEGENERATE_EDGES),
+            {c: _hist(side_rows, c) for c in DEGENERATE_EDGES})
+
+
+def _check_psi_by_partition(ref, test, ref_rows, test_rows):
+    got = {
+        (r["part"], r["feature"]): (r["psi"], r["n_ref"], r["n_test"])
+        for r in vd.psi_by_partition(ref, test, DEGENERATE_EDGES, "spart").collect()
+    }
+    want = {}
+    for p in {r["spart"] for r in test_rows} - {None}:
+        prows = [r for r in test_rows if r["spart"] == p]
+        for c in DEGENERATE_EDGES:
+            psi = nm.psi_from_proportions(_props(ref_rows, c), _props(prows, c), 0.001)
+            want[p, c] = (psi, int(_hist(ref_rows, c).sum()), int(_hist(prows, c).sum()))
+    _eq(got, want)
+
+
+def _check_rolling_psi(ref, test, ref_rows, test_rows):
+    got = {}
+    for r in vd.rolling_psi(test, "ts", DEGENERATE_EDGES, trailing=2, min_history=1).collect():
+        got.setdefault(r["feature"], []).append((r["bucket_ts"], r["n_test"]))
+    want = {}
+    if test_rows:
+        days = sorted({r["ts"] for r in test_rows})
+        for c in DEGENERATE_EDGES:
+            want[c] = [int(_hist([r for r in test_rows if r["ts"] == d], c).sum()) for d in days]
+    _eq({c: [n for _, n in sorted(v)] for c, v in got.items()}, want)
+
+
+def _check_chi2_by_partition(ref, test, ref_rows, test_rows):
+    scored = [r for r in test_rows if r["spart"] is not None]
+    for k in (1000, 4):
+        want = {}
+        for c in ("cat", "y"):
+            in_scope = Counter(_cat_counts(ref_rows, c)) + Counter(_cat_counts(scored, c))
+            kept = set(_capped(in_scope, k)) - {vd.CHI2_OTHER_BUCKET}
+
+            def folded(counts):
+                out = Counter()
+                for key, n in counts.items():
+                    out[key if key in kept else vd.CHI2_OTHER_BUCKET] += n
+                return dict(out)
+
+            rmap = folded(_cat_counts(ref_rows, c))
+            for p in {r["spart"] for r in scored}:
+                tmap = folded(_cat_counts([r for r in scored if r["spart"] == p], c))
+                if tmap:
+                    want[p, c] = vd.chi2_from_count_maps(rmap, tmap, 5)
+        got = {
+            (r["part"], r["feature"]): (r["stat"], r["p"], r["n_ref"], r["n_test"])
+            for r in vd.chi2_by_partition(ref, test, ["cat", "y"], "spart", max_categories=k)
+        }
+        _eq(got, want)
+
+
+def _check_fit_ref_category_counts(ref, test, ref_rows, test_rows):
+    for side, side_rows in ((ref, ref_rows), (test, test_rows)):
+        for k in (1000, 4):
+            counts = {c: _cat_counts(side_rows, c) for c in ("cat", "y")}
+            want = (
+                {c: _capped(n, k) for c, n in counts.items()},
+                {c for c, n in counts.items() if len(n) > k},
+            )
+            _eq(vd.fit_ref_category_counts(side, ["cat", "y"], k), want)
+
+
+def _check_streaming_monitor(ref, test, ref_rows, test_rows):
+    from driftspark.streaming import StreamingDriftMonitor
+
+    # y: 8 fitted categories, under the cap at fit, over it in the batch
+    # (pinned fold); cat: capped at fit when k = 4 (unfitted fold)
+    fit_rows = [r for r in ref_rows if r["y"] is None or r["y"] < 0.8]
+    fit_df = ref.where("y IS NULL OR y < 0.8")
+    for k in (1000, 12, 4):
+        mon = StreamingDriftMonitor(fit_df, ["x", "y"], ks_cols=[], cat_cols=["cat", "y"],
+                                    max_categories=k)
+        mon.edges = DEGENERATE_EDGES
+        mon.ref_props = mon._bin_props(fit_df)
+        _eq(mon.ref_props, {c: _props(fit_rows, c) for c in DEGENERATE_EDGES})
+        ref_counts = {c: _capped(_cat_counts(fit_rows, c), k) for c in ("cat", "y")}
+        _eq(mon.ref_cat_counts, ref_counts)
+        want = {}
+        for c in ("cat", "y"):
+            fit_capped = len(_cat_counts(fit_rows, c)) > k
+            batch = Counter()
+            for key, n in _cat_counts(test_rows, c).items():
+                unfitted = fit_capped and key not in ref_counts[c]
+                batch[vd.CHI2_OTHER_BUCKET if unfitted else key] += n
+            want[c] = _capped(dict(batch), k, pinned=set(ref_counts[c]))
+        _eq(mon._batch_cat_counts(test), want)
+        got = {(r["feature"], r["check"]): r["statistic"] for r in mon.score_batch(test)}
+        for c in DEGENERATE_EDGES:
+            t = _props(test_rows, c)
+            psi = nm.psi_from_proportions(mon.ref_props[c], t, 0.001) if t.sum() > 0 else 0.0
+            _eq(got[c, "psi"], float(psi))
+        for c in ("cat", "y"):
+            _eq(got[c, "chi2"], vd.chi2_from_count_maps(ref_counts[c], want[c])[0])
+
+
+def _check_partial_count_stage(ref, test, ref_rows, test_rows):
+    from driftspark.streaming import _fold_unfitted, _partial_count_stage
+
+    def summed(keys, key_type):
+        out = Counter()
+        for r in _partial_count_stage(test, keys, key_type).collect():
+            out[r["feature"], r["key"]] += r["c"]
+        return dict(out)
+
+    bins = summed({c: st.bucket_expr(c, e) for c, e in DEGENERATE_EDGES.items()}, "int")
+    _eq(bins, {(c, i): int(n) for c in DEGENERATE_EDGES
+               for i, n in enumerate(_hist(test_rows, c)) if n})
+    cats = summed({"cat": _fold_unfitted(F.col("cat"), ["a", "b"])}, "string")
+    want = Counter()
+    for key, n in _cat_counts(test_rows, "cat").items():
+        want["cat", key if key in ("a", "b") else vd.CHI2_OTHER_BUCKET] += n
+    _eq(cats, dict(want))
+
+
+def _check_cbpe(ref, test, ref_rows, test_rows):
+    from driftspark.dataset import SparkDataset
+    from driftspark.detectors.cbpe import CBPE
+
+    def brute(side_rows):
+        conf = np.array([r["p"] for r in side_rows if r["p"] is not None], dtype=float)
+        conf = conf[~np.isnan(conf)]
+        b = np.clip(np.digitize(conf, np.linspace(0, 1, 11)[:-1]) - 1, 0, 9)
+        return np.bincount(b, minlength=10).astype(np.int64)
+
+    d = CBPE()
+    d.fit(SparkDataset(ref, proba_col="p"))
+    _eq(d._reference_bins, brute(ref_rows))
+    _eq(d._bin_counts(SparkDataset(test, proba_col="p")), brute(test_rows))
+
+
+@pytest.mark.parametrize("counter", [
+    "histogram_proportions", "psi_counts_fused", "categorical_counts",
+    "category_shift_report", "cdf_melt", "bin_counts", "psi_by_partition",
+    "rolling_psi", "chi2_by_partition", "fit_ref_category_counts",
+    "streaming_monitor", "partial_count_stage", "cbpe",
+])
+def test_psi_counts_fused_matches_separate_paths(degenerate, counter):
+    """Every keyed counter equals numpy/pandas counts by hand on one
+    degenerate fixture, with both sides full, then each side empty in
+    turn: an empty side gets all-zero proportions, never a KeyError."""
+    rows, df = degenerate
+    check = globals()[f"_check_{counter}"]
+    for empty in (None, "test", "ref"):
+        sides = [
+            ([], df.where("false")) if side == empty
+            else ([r for r in rows if r["split"] == side], df.where(f"split = '{side}'"))
+            for side in ("ref", "test")
+        ]
+        (ref_rows, ref), (test_rows, test) = sides
+        check(ref, test, ref_rows, test_rows)
 
 
 def test_approx_quantile_edges_close_to_exact(frame):

@@ -15,6 +15,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import driftspark.stats as st
+import driftspark.verdicts as vd
 from driftspark import numerics as nm
 from driftspark.checkpoint import FIT_SCHEMA, CheckpointManager, resumable_partition_drift
 from driftspark.session import local_frame
@@ -437,6 +439,87 @@ def test_resume_job_budget(spark, drifted_parquet, tmp_path):
     loads, refits = _jobs_of(sc, resume("loads")), _jobs_of(sc, resume("refits"))
     assert loads < refits, (loads, refits)
     assert loads <= RESUME_JOB_CEILING, loads
+
+
+@pytest.fixture(scope="module")
+def budget_frame(spark):
+    """A 4,000-row split table (numeric w/h, categorical fmt and a
+    17-category hq, int parts, six days of timestamps, a probability p)
+    with its fitted PSI edges, a fitted streaming monitor and a fitted
+    CBPE detector."""
+    from driftspark.dataset import SparkDataset
+    from driftspark.detectors.cbpe import CBPE
+    from driftspark.streaming import StreamingDriftMonitor
+
+    rng = np.random.RandomState(29)
+    n = 4000
+    pdf = pd.DataFrame({
+        "w": rng.normal(0, 1, n),
+        "h": rng.uniform(0, 5, n),
+        "fmt": rng.choice(["png", "jpeg", "webp"], n),
+        "hq": rng.randint(0, 17, n).astype(str),
+        "part": rng.randint(0, 4, n),
+        "split": np.where(rng.rand(n) < 0.5, "ref", "test"),
+        "ts": pd.Timestamp("2024-01-01") + pd.to_timedelta(rng.randint(0, 6, n), unit="D"),
+        "p": rng.uniform(0, 1, n),
+    })
+    df = spark.createDataFrame(pdf).cache()
+    df.count()
+    ref, test = df.where("split = 'ref'"), df.where("split = 'test'")
+    cbpe = CBPE()
+    cbpe.fit(SparkDataset(ref, proba_col="p"))
+    return SimpleNamespace(
+        df=df, ref=ref, test=test, edges=quantile_edges(ref, ["w", "h"], 10),
+        monitor=StreamingDriftMonitor(
+            ref, ["w", "h"], cat_cols=["fmt", "hq"], max_categories=10
+        ),
+        cbpe=cbpe, test_ds=SparkDataset(test, proba_col="p"),
+    )
+
+
+#: {operator: (Spark-job ceiling on ``budget_frame``, the call)}: lower a
+#: ceiling when a change lowers the count
+JOB_BUDGET = {
+    "histogram_proportions": (
+        2, lambda f: st.histogram_proportions(f.ref, f.test, f.edges)),
+    "psi_counts_fused": (
+        2, lambda f: st.psi_counts_fused(f.ref, f.test, f.edges, ["fmt"])),
+    "categorical_counts": (
+        2, lambda f: st.categorical_counts(f.ref, f.test, "fmt")),
+    "category_shift_report": (
+        6, lambda f: st.category_shift_report(f.ref, f.test, ["fmt", "hq"]).collect()),
+    "ks_d_all": (
+        9, lambda f: st.ks_d_all(f.ref, f.test, ["w", "h"])),
+    "_ref_bin_counts": (
+        2, lambda f: vd._ref_bin_counts(f.ref, f.edges)),
+    "psi_by_partition": (
+        4, lambda f: vd.psi_by_partition(f.ref, f.test, f.edges).collect()),
+    "rolling_psi": (
+        7, lambda f: vd.rolling_psi(f.df, "ts", f.edges).collect()),
+    "chi2_by_partition": (
+        5, lambda f: vd.chi2_by_partition(f.ref, f.test, ["fmt", "hq"])),
+    "chi2_by_partition[capped]": (
+        6, lambda f: vd.chi2_by_partition(f.ref, f.test, ["fmt", "hq"], max_categories=10)),
+    "fit_ref_category_counts": (
+        3, lambda f: vd.fit_ref_category_counts(f.ref, ["fmt", "hq"])),
+    "fit_ref_category_counts[capped]": (
+        3, lambda f: vd.fit_ref_category_counts(f.ref, ["fmt", "hq"], 10)),
+    "StreamingDriftMonitor.score_batch": (
+        7, lambda f: f.monitor.score_batch(f.test)),
+    "CBPE.detect": (
+        4, lambda f: f.cbpe.detect(f.test_ds)),
+    "partition_verdicts": (
+        20, lambda f: vd.partition_verdicts(f.df, ["w", "h"], ["fmt", "hq"]).collect()),
+}
+
+
+@pytest.mark.parametrize("op", list(JOB_BUDGET))
+def test_operator_job_budget(spark, budget_frame, op):
+    """Each keyed-count operator submits no more Spark jobs than its
+    pinned ceiling."""
+    ceiling, call = JOB_BUDGET[op]
+    jobs = _jobs_of(spark.sparkContext, lambda: call(budget_frame))
+    assert jobs <= ceiling, (op, jobs)
 
 
 def test_resume_with_nothing_pending_keeps_string_part_type(spark):

@@ -359,7 +359,7 @@ def test_cumulative_chi2_stateful_stream(spark):
         ref_pdf = pd.DataFrame({
             "cat": rng.choice(["a", "b", "c"], 4000, p=[0.5, 0.3, 0.2])
         })
-        ref_counts, capped = fit_ref_category_counts(
+        ref_counts, _ = fit_ref_category_counts(
             spark.createDataFrame(ref_pdf), ["cat"]
         )
         b0 = pd.DataFrame({"cat": rng.choice(["a", "b", "c"], 1200, p=[0.3, 0.3, 0.4])})
@@ -373,7 +373,7 @@ def test_cumulative_chi2_stateful_stream(spark):
             .parquet(f"{tmp}/in/*")
         )
         q = (
-            cumulative_chi2_stream(stream, ref_counts, capped_features=capped)
+            cumulative_chi2_stream(stream, ref_counts)
             .writeStream.format("memory")
             .queryName("cumchi")
             .outputMode("update")
@@ -520,7 +520,7 @@ def test_cumulative_chi2_stream_partials_and_unseen_fold(spark):
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{tmp}/in/*")
         )
-        out_df = cumulative_chi2_stream(stream, ref_counts, capped_features=capped)
+        out_df = cumulative_chi2_stream(stream, ref_counts)
         plan = out_df._jdf.queryExecution().analyzed().toString()
         i_map, i_state = plan.find("MapInPandas"), plan.find("FlatMapGroupsInPandasWithState")
         assert i_map != -1 and i_state != -1
@@ -877,32 +877,3 @@ def test_fit_embedding_moments_summarizer_parity(spark):
     assert n_a == n_b == 300
     assert np.allclose(mean_a, mean_b, rtol=1e-12)
     assert np.allclose(var_a, var_b, rtol=1e-9)
-
-
-def test_histogram_proportions_one_parity(spark):
-    """The single-side histogram helper must match the two-sided union
-    version bin for bin (it halves the per-micro-batch scan)."""
-    import numpy as np
-    import pandas as pd
-
-    from driftspark.stats import (
-        histogram_proportions,
-        histogram_proportions_one,
-        quantile_edges,
-    )
-
-    rng = np.random.RandomState(22)
-    df = spark.createDataFrame(
-        pd.DataFrame({"x": rng.normal(0, 1, 2000), "y": rng.uniform(0, 5, 2000)})
-    )
-    edges = quantile_edges(df, ["x", "y"], 8)
-    two = histogram_proportions(df, df, edges)
-    one = histogram_proportions_one(df, edges)
-    for c in edges:
-        assert np.array_equal(one[c], two[c][0])
-        assert np.array_equal(one[c], two[c][1])
-    # empty frame: all-zero proportions, no KeyError
-    empty = df.where("false")
-    z = histogram_proportions_one(empty, edges)
-    for c in edges:
-        assert z[c].sum() == 0.0

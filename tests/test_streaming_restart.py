@@ -127,7 +127,7 @@ def test_cumulative_chi2_stream_restart(spark):
     tmp = tempfile.mkdtemp()
     try:
         rng = np.random.RandomState(47)
-        ref_counts, capped = fit_ref_category_counts(
+        ref_counts, _ = fit_ref_category_counts(
             spark.createDataFrame(
                 pd.DataFrame({"cat": rng.choice(["a", "b", "c"], 3000, p=[0.5, 0.3, 0.2])})
             ),
@@ -139,7 +139,7 @@ def test_cumulative_chi2_stream_restart(spark):
         b1 = pd.DataFrame({"cat": rng.choice(["a", "b", "z"], 900, p=[0.3, 0.3, 0.4])})
         restarted, solid = _restart_scenario(
             spark, tmp,
-            lambda s: cumulative_chi2_stream(s, ref_counts, capped_features=capped),
+            lambda s: cumulative_chi2_stream(s, ref_counts),
             "cat string", b0, b1, "rchi",
         )
         assert restarted["n_seen"] == solid["n_seen"] == 1800
