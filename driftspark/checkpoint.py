@@ -89,25 +89,26 @@ class CheckpointManager:
         snapshot_id: Optional[int] = None,
     ) -> None:
         """Persist per-partition lineage+metrics rows derived from a
-        verdict DataFrame (one ledger row per partition)."""
+        verdict DataFrame (one ledger row per partition).  The rows are
+        tallied on the driver — collecting the suite's LocalRelation
+        verdicts runs no job — and appended in one write."""
+        from driftspark.session import local_frame
+
         now = time.time()
-        ledger = (
-            verdicts.groupBy("part")
-            .agg(
-                F.count(F.lit(1)).alias("n_checks"),
-                F.sum((~F.col("passed")).cast("long")).alias("n_failed"),
-            )
-            .select(
-                F.lit(run_id).alias("run_id"),
-                "part",
-                F.lit("done").alias("status"),
-                "n_checks",
-                "n_failed",
-                F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-                F.lit(now).alias("completed_at"),
-            )
-        )
-        ledger.write.mode("append").parquet(self.path)
+        tally: dict = {}  # part -> [n_checks, n_failed]; SQL count/sum rules
+        for part, passed in verdicts.select("part", "passed").collect():
+            t = tally.setdefault(part, [0, None])
+            t[0] += 1
+            if passed is not None:
+                t[1] = (t[1] or 0) + (not passed)
+        part_type = verdicts.schema["part"].dataType.simpleString()
+        local_frame(
+            self.spark,
+            [(run_id, part, "done", n, failed, snapshot_id, now)
+             for part, (n, failed) in tally.items()],
+            f"run_id string, part {part_type}, status string, n_checks bigint, "
+            "n_failed bigint, snapshot_id bigint, completed_at double",
+        ).write.mode("append").parquet(self.path)
 
     def run_summary(self, run_id: str) -> dict:
         """Partitions done and failed checks, counting each partition once
@@ -238,19 +239,27 @@ def resumable_partition_drift(
     off (idempotent per partition).  The PSI/KS reference is fitted at
     most ONCE per call, before the batch loop, and persisted in the
     checkpoint: a resume whose reference and fit settings match loads it
-    and runs no fit job.  Each batch then scans only its own test
-    partitions for PSI and KS.  Returns the verdicts computed in this
+    and runs no fit job.  Each batch then runs two scans that filter the
+    input to its own test partitions: one count for PSI and chi2 (with
+    the reference rows when chi2 needs them) and one for KS.  The part
+    filter prunes no file, so each scan still reads the whole input.  The
+    ledger write that marks the batch done runs on the driver-built rows.
+    Returns the verdicts computed in this
     invocation, typed like partition_verdicts' output even when nothing
     is pending.  The partitions are the non-NULL part ids of the TEST
     split, the ones partition_verdicts gives verdict rows."""
     from driftspark.session import local_frame
-    from driftspark.verdicts import _verdict_schema, _VerdictSuite
+    from driftspark.verdicts import _concurrently, _verdict_schema, _VerdictSuite
 
     suite = _VerdictSuite(
         df, numeric_cols, cat_cols, part_col=part_col, **verdict_kwargs
     )
-    all_parts, fingerprint = _universe(suite)
-    pending = checkpoint.pending_parts(run_id, sorted(all_parts))
+    # the input and the ledger are different sources: read both at once
+    (all_parts, fingerprint), done = _concurrently(
+        lambda: _universe(suite), lambda: checkpoint.completed_parts(run_id)
+    )
+    done = set(done)
+    pending = [p for p in sorted(all_parts) if p not in done]
     if not pending:
         return local_frame(df.sparkSession, [], _verdict_schema(df, part_col))
     state = checkpoint.load_fit(run_id, fingerprint)
@@ -260,9 +269,9 @@ def resumable_partition_drift(
         suite.use_fit(*state)
     batches = []
     for i in range(0, len(pending), batch_parts):
-        # score() returns a LocalRelation (session.local_frame): mark_done's
-        # ledger write and the caller's reads scan it in the JVM, with no
-        # Python round trip and no recomputation
+        # score() returns a LocalRelation (session.local_frame): mark_done
+        # and the caller's reads get its rows without a job and without
+        # recomputation
         v = suite.score(pending[i : i + batch_parts])
         checkpoint.mark_done(run_id, v, snapshot_id)
         batches.append(v)

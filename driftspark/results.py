@@ -24,10 +24,6 @@ class DriftSeverity(Enum):
     CRITICAL = "critical"
 
 
-def severity_of(name: str) -> DriftSeverity:
-    return DriftSeverity(name)
-
-
 @dataclass
 class DetectionResult:
     """Drift detection outcome (reference result.py:18-42)."""

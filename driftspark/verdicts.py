@@ -7,21 +7,25 @@ partition of the test split is compared against the GLOBAL reference split
 (edges and expectations fitted once on reference, broadcast into the plan),
 yielding one verdict row per (partition, feature, check).
 
-Scale design:
+Scale design — a scored batch is two short job chains:
 * The PSI and KS reference state is fitted once and every batch of
   partitions scores against it (:class:`_VerdictSuite`).
-* PSI and chi-square count through the one keyed-count primitive,
-  driftspark.stats.key_counts.  PSI is ONE test-side (part, feature, bin)
-  count collected as O(parts x features x bins) rows, then
+* PSI and chi-square share ONE count through the keyed-count primitive,
+  driftspark.stats.key_counts (:func:`_score_counts`): the test rows,
+  plus the reference rows when chi-square (or an unfitted PSI) needs
+  them, grouped by (is_ref, part, feature, key).  It reaches the driver
+  through one collect bounded by :data:`MAX_REF_ECDF_POINTS` rows, which
+  also yields the NULL-part drop counts and the category counts the cap
+  needs; a chi-square feature over its category cap folds its tail in
+  Spark (stats._cap_categories).  PSI is then
   numerics.psi_from_proportions per (part, feature) on the driver — the
-  streaming monitor's math.
-* KS D scores each (part, feature) test group against a BROADCAST
-  reference ECDF, fitted once (thinned, when over budget, on the exact
-  cumulative frame of driftspark.stats); p-values for the O(parts x
-  features) D statistics are driver math.
-* chi-square categorical counts are one (side, part, feature, category)
-  count over both sides; a feature over its category cap folds its tail
-  in Spark (stats._cap_categories) before the driver collect.
+  streaming monitor's math — and chi-square likewise.
+* KS D scores each (part, feature) test group against a reference ECDF,
+  fitted once (thinned, when over budget, on the exact cumulative frame
+  of driftspark.stats).  Preaggregated test counts within the row budget
+  are scored on the driver, all groups at once; otherwise the ECDF is
+  broadcast into pandas groups.  p-values for the O(parts x features) D
+  statistics are driver math.
 """
 
 from __future__ import annotations
@@ -66,8 +70,10 @@ from driftspark.stats import (
 
 logger = logging.getLogger(__name__)
 
-#: total driver/broadcast budget of a fitted KS reference ECDF (points
-#: across all features; see fit_ks_reference_ecdf)
+#: the verdict suite's driver-row budget: the points of a fitted KS
+#: reference ECDF across all features (see fit_ks_reference_ecdf), and
+#: the rows each bounded count collect (_score_counts, preaggregated
+#: ks_d_against_ecdf) takes before it switches to its unbounded route
 MAX_REF_ECDF_POINTS = 4_000_000
 
 VERDICT_SCHEMA = (
@@ -76,60 +82,158 @@ VERDICT_SCHEMA = (
 )
 
 
-def _bin_counts(df: DataFrame, edges_map: Dict[str, np.ndarray], part_expr):
-    """({part: {feature: in-range count per fitted bin}}, in-range values
-    with a NULL part) from ONE :func:`key_counts`, collected as O(parts x
-    features x bins) rows.  Its NULL-bin rows give every part with any
-    row every feature (all-zero when no value is in range); parts keep
-    their ORIGINAL type."""
+def _ref_bin_counts(ref_df: DataFrame, edges_map: Dict[str, np.ndarray]):
+    """{feature: in-range count per fitted bin} of one frame, from one
+    :func:`key_counts` — the global reference histogram every partition's
+    PSI scores against, or one streaming micro-batch's.  All-zero for an
+    empty frame."""
+    out = {f: np.zeros(len(e) - 1, np.int64) for f, e in edges_map.items()}
     keys = {c: bucket_expr(c, e) for c, e in edges_map.items()}
-    rows = key_counts(df, keys, [part_expr.alias("part")]).collect()
+    for r in key_counts(ref_df, keys).where(F.col("key").isNotNull()).collect():
+        out[r["feature"]][r["key"]] = r["c"]
+    return out
+
+
+def _score_counts(
+    ref_df: DataFrame,
+    test_df: DataFrame,
+    edges_map: Dict[str, np.ndarray],
+    cat_cols: Sequence[str],
+    part_col: str = "part",
+    ref_psi: bool = True,
+    max_categories: int = 1000,
+) -> tuple:
+    """(reference bin counts, test bin counts by part, reference category
+    counts, test category counts by (part, feature)) from ONE
+    :func:`key_counts` over the test rows, plus the reference rows when
+    chi2 (``cat_cols``) or an unfitted PSI (``ref_psi``) needs them.
+
+    Keys use the :func:`psi_counts_fused` namespace: ``"#n:<col>"`` is the
+    fitted bin as a string (NULL on reference rows unless ``ref_psi``),
+    ``"#c:<col>"`` the category.  The rows reach the driver through one
+    bounded collect of at most :data:`MAX_REF_ECDF_POINTS` rows, which
+    also gives the NULL-part test rows (counted and logged, never scored)
+    and each chi2 feature's category count.  A chi2 feature over
+    ``max_categories`` folds its tail in Spark (:func:`_cap_categories`);
+    over the row budget, every chi2 feature goes through the cap (a no-op
+    at or under it) and the collect is unbounded, as the counts are
+    O(parts x features x (bins + capped categories)) rows.
+
+    Every part with any test row gets every PSI feature (all-zero bins
+    when no value is in range); parts keep their ORIGINAL type."""
+    with_ref = bool(cat_cols) or (ref_psi and bool(edges_map))
+    if with_ref:
+        part_type = test_df.schema[part_col].dataType
+        u = _sides(
+            ref_df.withColumn("__part", F.lit(None).cast(part_type)),
+            test_df.withColumn("__part", F.col(part_col)),
+            [*edges_map, *cat_cols, "__part"],
+        )
+    else:
+        u = test_df.select(
+            *edges_map, F.col(part_col).alias("__part"), F.lit(False).alias("is_ref")
+        )
+    keys = {
+        "#n:" + c: (
+            bucket_expr(c, e) if ref_psi else F.when(~F.col("is_ref"), bucket_expr(c, e))
+        ).cast("string")
+        for c, e in edges_map.items()
+    }
+    keys.update({"#c:" + c: F.col(c).cast("string") for c in cat_cols})
+    counts = key_counts(u, keys, ["is_ref", F.col("__part").alias("part")])
+
+    is_cat = F.col("feature").startswith("#c:")
+    in_scope = F.col("is_ref") | F.col("part").isNotNull()
+    cat_counts = counts.where(is_cat & F.col("key").isNotNull())
+
+    def capped(feats=None):
+        scoped = cat_counts.where(in_scope)
+        if feats is not None:
+            scoped = scoped.where(F.col("feature").isin(feats))
+        return _cap_categories(scoped, max_categories)
+
+    def scored(r) -> bool:  # a reference row, or a test row with a part
+        return r["is_ref"] or r["part"] is not None
+
+    rows = counts.limit(MAX_REF_ECDF_POINTS + 1).collect()
+    if len(rows) > MAX_REF_ECDF_POINTS:
+        # the NULL-part test rows of each chi2 feature sum into one row:
+        # they only feed the drop count
+        null_part = (
+            cat_counts.where(~in_scope)
+            .groupBy("is_ref", "part", "feature")
+            .agg(F.sum("c").alias("c"))
+            .withColumn("key", F.lit(CHI2_OTHER_BUCKET))
+        )
+        rows = (
+            counts.where(~is_cat).unionByName(capped()).unionByName(null_part).collect()
+        )
+        over = sorted(
+            {r["feature"] for r in rows if r["key"] == CHI2_OTHER_BUCKET and scored(r)}
+        )
+    else:
+        n_keys: Dict[str, set] = defaultdict(set)
+        for r in rows:
+            if r["feature"][1] == "c" and r["key"] is not None and scored(r):
+                n_keys[r["feature"]].add(r["key"])
+        over = sorted(f for f, k in n_keys.items() if len(k) > max_categories)
+        if over:
+            rows = [r for r in rows if r["feature"] not in over or not scored(r)]
+            rows += capped(over).collect()
+    if over:
+        logger.warning(
+            "chi2_by_partition: feature(s) %s exceed max_categories=%d; "
+            "tail categories merged into %r before collection",
+            [f[3:] for f in over],
+            max_categories,
+            CHI2_OTHER_BUCKET,
+        )
 
     def zeros():
         return {f: np.zeros(len(e) - 1, np.int64) for f, e in edges_map.items()}
 
+    ref_bins = zeros()
     hists: Dict = defaultdict(zeros)
-    null_part = 0
+    ref_cats: Dict[str, Dict] = {c: {} for c in cat_cols}
+    test_cats: Dict[tuple, Dict] = {}
+    dropped = {"n": 0, "c": 0}
     for r in rows:
-        if r["part"] is None:
-            null_part += r["c"] if r["key"] is not None else 0
+        is_ref, part, key, c = r["is_ref"], r["part"], r["key"], r["c"]
+        kind, feature = r["feature"][1], r["feature"][3:]
+        if kind == "n" and not is_ref and part is not None:
+            hists[part]  # a NULL-bin row still gives its part every feature
+        if key is None:
             continue
-        h = hists[r["part"]]
-        if r["key"] is not None:
-            h[r["feature"]][r["key"]] = r["c"]
-    return hists, null_part
-
-
-def _ref_bin_counts(ref_df: DataFrame, edges_map: Dict[str, np.ndarray]):
-    """{feature: in-range count per fitted bin} of one frame — the global
-    reference histogram every partition's PSI scores against, or one
-    streaming micro-batch's."""
-    hists, _ = _bin_counts(ref_df, edges_map, F.lit(0))
-    return hists[0]  # all-zero for an empty reference
+        if not scored(r):
+            dropped[kind] += c
+        elif kind == "n":
+            (ref_bins if is_ref else hists[part])[feature][int(key)] = c
+        elif is_ref:
+            ref_cats[feature][key] = c
+        else:
+            test_cats.setdefault((part, feature), {})[key] = c
+    for kind, family in (("n", "psi_by_partition"), ("c", "chi2_by_partition")):
+        if dropped[kind]:
+            logger.warning(
+                "%s: %d test value(s) have NULL %s and are excluded from "
+                "partition verdicts",
+                family,
+                dropped[kind],
+                part_col,
+            )
+    return ref_bins, hists, ref_cats, test_cats
 
 
 def _psi_rows(
-    test_df: DataFrame,
-    edges_map: Dict[str, np.ndarray],
-    ref_counts: Dict[str, np.ndarray],
-    part_col: str,
-    min_bin_size: float = 0.001,
+    hists: Dict, ref_counts: Dict[str, np.ndarray], min_bin_size: float = 0.001
 ) -> List[tuple]:
-    """[(part, feature, psi, n_ref, n_test)] vs the fitted reference
-    counts.  Reference parity: proportions are over in-range values only
-    and every fitted bin participates (psi.py:102-110).  A partition with
-    NO in-range value has all-zero proportions, which the clamp turns
-    uniform, and n_test = 0 marks it: PSI is an in-range-SHAPE statistic,
-    the mass exodus is the KS check's job."""
-    hists, null_part = _bin_counts(test_df, edges_map, F.col(part_col))
-    if null_part:
-        logger.warning(
-            "psi_by_partition: %d test value(s) have NULL %s and are "
-            "excluded from partition verdicts",
-            null_part,
-            part_col,
-        )
-
+    """[(part, feature, psi, n_ref, n_test)] of each part's bin counts vs
+    the reference counts.  Reference parity: proportions are over
+    in-range values only and every fitted bin participates
+    (psi.py:102-110).  A partition with NO in-range value has all-zero
+    proportions, which the clamp turns uniform, and n_test = 0 marks it:
+    PSI is an in-range-SHAPE statistic, the mass exodus is the KS check's
+    job."""
     ref_props = {f: _proportions(c) for f, c in ref_counts.items()}
     return [
         (part, f, psi_from_proportions(ref_props[f], _proportions(t), min_bin_size),
@@ -147,18 +251,17 @@ def psi_by_partition(
     min_bin_size: float = 0.001,
 ) -> DataFrame:
     """(part, feature, psi, n_ref, n_test) — PSI of each test partition vs
-    the GLOBAL reference histogram (see :func:`_psi_rows`).  Test rows
-    with a NULL ``part_col`` belong to no partition: they are counted and
+    the GLOBAL reference histogram, both counted in one
+    :func:`_score_counts` job (see :func:`_psi_rows`).  Test rows with a
+    NULL ``part_col`` belong to no partition: they are counted and
     logged, never scored.  The part column keeps the input's type."""
     if not edges_map:
         raise ValueError("edges_map is empty")
-    rows = _psi_rows(
-        test_df, edges_map, _ref_bin_counts(ref_df, edges_map), part_col, min_bin_size
-    )
+    ref_counts, hists, _, _ = _score_counts(ref_df, test_df, edges_map, (), part_col)
     part_type = test_df.schema[part_col].dataType.simpleString()
     return local_frame(
         ref_df.sparkSession,
-        rows,
+        _psi_rows(hists, ref_counts, min_bin_size),
         f"part {part_type}, feature string, psi double, n_ref long, n_test long",
     )
 
@@ -442,7 +545,8 @@ def ks_d_by_partition_broadcast(
     test ECDF is constant and R is monotone, so interval suprema are
     attained at the R(t_i^-) endpoints; negative-side interval extrema are
     dominated by the test-point terms).  Per-group work is O(m_part log
-    distinct_ref).
+    distinct_ref).  With ``preaggregate=True`` the same math runs on the
+    driver within the row budget (see :func:`ks_d_against_ecdf`).
 
     Thinning happens DISTRIBUTED, before anything reaches the driver: when
     a feature's distinct-value count exceeds its share of
@@ -502,44 +606,59 @@ def ks_d_against_ecdf(
     suite's psi/chi2 paths count and warn about the same rows).
 
     ``preaggregate=True`` reduces the test side to (part, feature, value,
-    count) before anything reaches the pandas groups, so the per-group
-    shuffle and the single-task sort inside each (part, feature) group
-    become O(distinct values), not O(rows) — for QUANTIZED columns (image
-    sizes, enum-ish ints; the north-rule w/h columns have a handful of
-    distinct values) a hot partition's group shrinks by orders of
-    magnitude, and the map-side partial combine absorbs the extra
-    aggregation; the validate job turns it on.  The weighted-unique math
-    is bit-identical to sorting the raw sample (the raw path reduces
-    through np.unique).  The default ships raw values in ONE shuffle —
-    right for continuous columns (distinct ≈ rows), where pre-aggregation
-    would double the shuffled volume for no shrink."""
+    count) first — for QUANTIZED columns (image sizes, enum-ish ints; the
+    north-rule w/h columns have a handful of distinct values) a hot
+    partition's group shrinks by orders of magnitude, and the map-side
+    partial combine absorbs the extra aggregation; the validate job turns
+    it on.  Those counts then reach the driver through one bounded
+    collect of at most :data:`MAX_REF_ECDF_POINTS` rows and are scored
+    there, every group at once (:func:`_ks_d_of_counts`).  Over that
+    budget they go to the pandas groups instead.  The weighted-unique
+    math is bit-identical to sorting the raw sample (the raw path reduces
+    through np.unique).  The default ships raw values in ONE shuffle to
+    the pandas groups — right for continuous columns (distinct ≈ rows),
+    where pre-aggregation would double the shuffled volume for no
+    shrink."""
     spark = test_df.sparkSession
     # accept a pre-made Broadcast so a long-running caller (the streaming
     # monitor scores every micro-batch against the same fitted state) does
     # not re-serialize and re-ship up to max_ref_ecdf_points pairs per call
     from pyspark.broadcast import Broadcast
 
-    if isinstance(ecdf, Broadcast):
-        b_ecdf, ecdf_keys = ecdf, set(ecdf.value)
-    else:
-        b_ecdf, ecdf_keys = spark.sparkContext.broadcast(ecdf), set(ecdf)
+    fitted = ecdf.value if isinstance(ecdf, Broadcast) else ecdf
     # a column absent from the fitted state (all-NULL/NaN reference
     # column — fit_ks_reference_ecdf's melt drops it) cannot be scored:
     # skip it loudly instead of a KeyError inside applyInPandas (the
     # streaming monitor applies the same filter, streaming.py)
-    missing = [c for c in cols if c not in ecdf_keys]
+    missing = [c for c in cols if c not in fitted]
     if missing:
         logger.warning(
             "ks_d_against_ecdf: no fitted reference ECDF for %s "
             "(all-NULL/NaN reference column?) — skipped",
             missing,
         )
-        cols = [c for c in cols if c in ecdf_keys]
+        cols = [c for c in cols if c in fitted]
     # output schema preserves the partition column's original type
     part_sql_type = test_df.schema[part_col].dataType.simpleString()
     out_schema = f"part {part_sql_type}, feature string, d double, n long, m long"
     if not cols:
         return local_frame(spark, [], out_schema)
+
+    # NULL-part rows are excluded like psi/chi2 (which count + warn about
+    # them in the verdict suite) — a part=NULL verdict row belongs to no
+    # partition; the filter is free (streaming's literal group never is)
+    melted = _melt(test_df, cols, part_col).where(
+        F.col("part").isNotNull()
+    )
+    if preaggregate:
+        melted = melted.groupBy("part", "feature", "value").agg(
+            F.count(F.lit(1)).alias("c")
+        )
+        counts = melted.limit(MAX_REF_ECDF_POINTS + 1).toArrow()
+        if counts.num_rows <= MAX_REF_ECDF_POINTS:
+            return local_frame(spark, _ks_d_of_counts(counts, fitted), out_schema)
+
+    b_ecdf = ecdf if isinstance(ecdf, Broadcast) else spark.sparkContext.broadcast(ecdf)
 
     def compute(key, pdf):
         part, feat = key
@@ -553,6 +672,9 @@ def ks_d_against_ecdf(
         m = int(tc.sum())
         T = np.cumsum(tc) / m
         T_prev = np.concatenate([[0.0], T[:-1]])
+        # _ks_d_of_counts repeats these lines rather than sharing a
+        # module-level helper, which every Python worker would then have
+        # to import driftspark for
         hi = np.searchsorted(vals, tv, side="right")
         lo = np.searchsorted(vals, tv, side="left")
         R_at = np.where(hi > 0, cums[np.maximum(hi - 1, 0)], 0) / n
@@ -564,19 +686,78 @@ def ks_d_against_ecdf(
             {"part": [part], "feature": [feat], "d": [d], "n": [n], "m": [m]}
         )
 
-    # NULL-part rows are excluded like psi/chi2 (which count + warn about
-    # them in the verdict suite) — a part=NULL verdict row belongs to no
-    # partition; the filter is free (streaming's literal group never is)
-    melted = _melt(test_df, cols, part_col).where(
-        F.col("part").isNotNull()
-    )
-    if preaggregate:
-        melted = melted.groupBy("part", "feature", "value").agg(
-            F.count(F.lit(1)).alias("c")
-        )
     return melted.groupBy("part", "feature").applyInPandas(
         compute, schema=out_schema
     )
+
+
+def _ks_d_of_counts(counts, ecdf: Dict[str, tuple]) -> List[tuple]:
+    """[(part, feature, d, n, m)] of a collected (part, feature, value, c)
+    Arrow table of distinct test values, every (part, feature) group
+    scored at once: the rows sort by (group, value), one cumulative sum
+    with per-group offsets gives each group's test ECDF, and one
+    searchsorted per feature reads the reference ECDF.  Per group this is
+    the pandas-group math of :func:`ks_d_against_ecdf`, float for float."""
+    part = counts.column("part").combine_chunks().dictionary_encode()
+    feature = counts.column("feature").combine_chunks().dictionary_encode()
+    feats = feature.dictionary.to_pylist()
+    n_parts = len(part.dictionary)
+    group = (
+        feature.indices.to_numpy().astype(np.int64) * n_parts
+        + part.indices.to_numpy().astype(np.int64)
+    )
+    value = counts.column("value").to_numpy().astype(np.float64)
+    c = counts.column("c").to_numpy().astype(np.int64)
+    if not len(c):
+        return []
+    order = np.lexsort((value, group))
+    group, value, c = group[order], value[order], c[order]
+
+    starts = np.flatnonzero(np.r_[True, group[1:] != group[:-1]])
+    sizes = np.diff(np.r_[starts, len(group)])
+    cum = np.cumsum(c)
+    cum -= np.repeat(cum[starts] - c[starts], sizes)  # per-group cumulative
+    m = np.repeat(cum[starts + sizes - 1], sizes)
+    T, T_prev = cum / m, (cum - c) / m
+    gap = np.empty(len(group))
+    feat_of_row = group // n_parts
+    bounds = np.searchsorted(feat_of_row, np.arange(len(feats) + 1))
+    for f, rows in enumerate(map(slice, bounds[:-1], bounds[1:])):
+        vals, cums, n = ecdf[feats[f]]
+        hi = np.searchsorted(vals, value[rows], side="right")
+        lo = np.searchsorted(vals, value[rows], side="left")
+        R_at = np.where(hi > 0, cums[np.maximum(hi - 1, 0)], 0) / n
+        R_before = np.where(lo > 0, cums[np.maximum(lo - 1, 0)], 0) / n
+        gap[rows] = np.maximum(np.abs(R_at - T[rows]), np.abs(R_before - T_prev[rows]))
+    d = np.maximum.reduceat(gap, starts)
+    g = group[starts]
+    n_of = np.array([ecdf[f][2] for f in feats], dtype=np.int64)
+    return list(zip(
+        np.asarray(part.dictionary.to_pylist(), dtype=object)[g % n_parts],
+        np.asarray(feats, dtype=object)[g // n_parts],
+        d.tolist(),
+        n_of[g // n_parts].tolist(),
+        m[starts].tolist(),
+    ))
+
+
+def _chi2_rows(ref_cats: Dict, test_cats: Dict, min_samples: int = 5) -> List[dict]:
+    """[{part, feature, stat, p, n_ref, n_test}] sorted by (part, feature)
+    from :func:`_score_counts`' category counts."""
+    out: List[dict] = []
+    for (part, col), tmap in sorted(test_cats.items()):
+        stat, p, n_ref, n_test = chi2_from_count_maps(ref_cats[col], tmap, min_samples)
+        out.append(
+            {
+                "part": part,
+                "feature": col,
+                "stat": stat,
+                "p": p,
+                "n_ref": n_ref,
+                "n_test": n_test,
+            }
+        )
+    return out
 
 
 def chi2_by_partition(
@@ -590,102 +771,28 @@ def chi2_by_partition(
     """Per-(part, feature) chi-square of test category counts vs global
     reference proportions (univariate.py:71-122 semantics, per-partition).
 
-    ALL categorical columns of both sides count in one :func:`key_counts`
-    (is_ref, part, feature, category) aggregation — ONE Spark job
-    regardless of column count.  The chi-square over O(parts x features x
-    categories) count rows runs on the driver.
+    ALL categorical columns of both sides count in one
+    :func:`_score_counts` (is_ref, part, feature, category) aggregation,
+    collected through the suite's bounded collect.  The chi-square over
+    O(parts x features x categories) count rows runs on the driver.
 
     Scale guard: that driver loop assumes bounded category cardinality —
     a high-cardinality string column (ids, captions) would collect
     unbounded rows.  Any feature whose observed (ref ∪ test) category
     count exceeds ``max_categories`` keeps its ``max_categories - 1``
     globally most-frequent categories plus one merged ``__chi2_other__``
-    tail bucket (:func:`_cap_categories`, distributed, before anything
-    reaches the driver), with a logged warning naming the truncated
-    features.  Features at or under the cap are bit-identical to the
-    unguarded path.  Test rows with a NULL partition id are excluded from
-    verdicts (they belong to no partition) but are COUNTED in the same
-    aggregation and logged, so drift concentrated in null-part rows
-    can't vanish silently."""
+    tail bucket (:func:`_cap_categories`, distributed), with a logged
+    warning naming the truncated features.  Features at or under the cap
+    are bit-identical to the unguarded path.  Test rows with a NULL
+    partition id are excluded from verdicts (they belong to no partition)
+    but are COUNTED in the same aggregation and logged, so drift
+    concentrated in null-part rows can't vanish silently."""
     if not cat_cols:
         return []
-    # explicit is_ref tag (NULL part does not double as the ref marker,
-    # so null-part test rows stay observable); part keeps its ORIGINAL type
-    part_type = test_df.schema[part_col].dataType
-    u = _sides(
-        ref_df.withColumn("__part", F.lit(None).cast(part_type)),
-        test_df.withColumn("__part", F.col(part_col)),
-        [*cat_cols, "__part"],
+    _, _, ref_cats, test_cats = _score_counts(
+        ref_df, test_df, {}, cat_cols, part_col, max_categories=max_categories
     )
-    counts = (
-        key_counts(
-            u,
-            {c: F.col(c).cast("string") for c in cat_cols},
-            ["is_ref", F.col("__part").alias("part")],
-        )
-        .where(F.col("key").isNotNull())
-        # lazy: the cardinality-guard meta job materializes it (one
-        # fewer job than an eager checkpoint)
-        .localCheckpoint(eager=False)
-    )
-    # ONE tiny job over the checkpointed counts fetches both guard inputs:
-    # per-feature category counts (cap) and the null-part test mass
-    # (silent-drop warning).  Capping only the features over the cap keeps
-    # the window stages off the common path, where chi2 runs next to the
-    # other verdict families.
-    in_scope = F.col("is_ref") | F.col("part").isNotNull()
-    meta = (
-        counts.groupBy("feature")
-        .agg(
-            F.count_distinct(F.when(in_scope, F.col("key"))).alias("n"),
-            F.sum(
-                F.when(~in_scope, F.col("c")).otherwise(F.lit(0))
-            ).alias("dropped"),
-        )
-        .collect()
-    )
-    dropped = sum(int(r["dropped"]) for r in meta)
-    if dropped:
-        logger.warning(
-            "chi2_by_partition: %d test value(s) have NULL %s and are "
-            "excluded from partition verdicts",
-            dropped,
-            part_col,
-        )
-    counts = counts.where(in_scope)
-    over = sorted(r["feature"] for r in meta if r["n"] > max_categories)
-    if over:
-        logger.warning(
-            "chi2_by_partition: feature(s) %s exceed max_categories=%d; "
-            "tail categories merged into %r before collection",
-            over,
-            max_categories,
-            CHI2_OTHER_BUCKET,
-        )
-        counts = _cap_categories(counts, max_categories)
-
-    ref_map: Dict[str, Dict] = {c: {} for c in cat_cols}
-    by_part: Dict[tuple, Dict] = {}
-    for r in counts.collect():
-        if r["is_ref"]:
-            ref_map[r["feature"]][r["key"]] = r["c"]
-        else:
-            by_part.setdefault((r["part"], r["feature"]), {})[r["key"]] = r["c"]
-
-    out: List[dict] = []
-    for (part, col), tmap in sorted(by_part.items()):
-        stat, p, n_ref, n_test = chi2_from_count_maps(ref_map[col], tmap, min_samples)
-        out.append(
-            {
-                "part": part,
-                "feature": col,
-                "stat": stat,
-                "p": p,
-                "n_ref": n_ref,
-                "n_test": n_test,
-            }
-        )
-    return out
+    return _chi2_rows(ref_cats, test_cats, min_samples)
 
 
 def fit_ref_category_counts(
@@ -760,10 +867,10 @@ class _VerdictSuite:
     """:func:`partition_verdicts` as a reference FIT plus a per-batch
     SCORE.  After :meth:`fit` (PSI edges + reference bin counts, and the
     thinned KS ECDF) or :meth:`use_fit` (the same state, loaded from a
-    checkpoint), every :meth:`score` reuses that state; without it, each
-    family's task fits its own half, overlapping the other families.
-    chi2 (its category cap counts ref ∪ test) and W1 read the reference
-    on every score."""
+    checkpoint), every :meth:`score` reuses that state; without it, the
+    PSI + chi2 count waits for the edges and the KS task fits its ECDF,
+    the two overlapping.  chi2 (its category cap counts ref ∪ test) and
+    W1 read the reference on every score."""
 
     df: DataFrame
     numeric_cols: Sequence[str]
@@ -806,11 +913,11 @@ class _VerdictSuite:
             MAX_REF_ECDF_POINTS,
         ]
 
-    def _fit_psi(self) -> tuple:
-        """(edges, {feature: in-range reference count per bin}); both empty
-        when no PSI column can be fitted."""
+    def _fit_edges(self) -> dict:
+        """The PSI bin edges of the reference; empty when no PSI column can
+        be fitted."""
         if not self.numeric_cols:
-            return {}, {}
+            return {}
         if self.approx_quantile_error is not None:
             # scale path: Greenwald-Khanna approximate edges (at 10^12 rows
             # an exact percentile sort is not realistic; pd.qcut parity
@@ -832,8 +939,13 @@ class _VerdictSuite:
                 "(all-NULL reference columns?) — PSI checks skipped",
                 list(self.numeric_cols),
             )
-            return {}, {}
-        return edges, _ref_bin_counts(self.ref_df, edges)
+        return edges
+
+    def _fit_psi(self) -> tuple:
+        """(edges, {feature: in-range reference count per bin}); both empty
+        when no PSI column can be fitted."""
+        edges = self._fit_edges()
+        return (edges, _ref_bin_counts(self.ref_df, edges)) if edges else ({}, {})
 
     def _fit_ks(self) -> Optional[dict]:
         """The thinned KS reference ECDF (None without KS columns)."""
@@ -859,16 +971,27 @@ class _VerdictSuite:
 
     def score(self, parts: Optional[Sequence] = None) -> DataFrame:
         """The verdict DataFrame for the test partitions in ``parts`` (all
-        of them when None), built on the driver."""
+        of them when None), built on the driver from two concurrent job
+        chains — the PSI + chi2 count and the KS scoring — plus W1 when
+        asked for."""
         ref_df, test_df, part_col = self.ref_df, self.test_df, self.part_col
         if parts is not None:
             test_df = test_df.where(F.col(part_col).isin(list(parts)))
 
         fitted = self.fitted
 
-        def run_psi():
-            edges, ref_counts = fitted[:2] if fitted else self._fit_psi()
-            return _psi_rows(test_df, edges, ref_counts, part_col) if edges else []
+        def run_counts():
+            # PSI and chi2 share one count; unfitted, it also gives the
+            # reference histogram once the edges are known
+            edges, ref_counts = fitted[:2] if fitted else (self._fit_edges(), None)
+            if not edges and not self.cat_cols:
+                return [], []
+            ref_bins, hists, ref_cats, test_cats = _score_counts(
+                ref_df, test_df, edges, self.cat_cols, part_col,
+                ref_counts is None, self.max_categories,
+            )
+            psi = _psi_rows(hists, ref_bins if ref_counts is None else ref_counts)
+            return psi, _chi2_rows(ref_cats, test_cats)
 
         def run_ks():
             ecdf = self._b_ecdf if fitted else self._fit_ks()
@@ -877,12 +1000,6 @@ class _VerdictSuite:
             return ks_d_against_ecdf(
                 test_df, self.ks_cols, ecdf, part_col, self.ks_preaggregate
             ).collect()
-
-        def run_chi2():
-            return chi2_by_partition(
-                ref_df, test_df, self.cat_cols, part_col,
-                max_categories=self.max_categories,
-            )
 
         def run_w1():
             # opt-in scale-bearing check: normalized W1 (w1 / global ref std)
@@ -897,8 +1014,8 @@ class _VerdictSuite:
             stds = {c: s for c, (mu, s) in moment_stats(ref_df, w1_cols).items()}
             return w1_by_partition(ref_df, test_df, w1_cols, part_col).collect(), stds
 
-        psi_rows, ks_rows, chi2_rows, (w1_rows, w1_stds) = _concurrently(
-            run_psi, run_ks, run_chi2, run_w1
+        (psi_rows, chi2_rows), ks_rows, (w1_rows, w1_stds) = _concurrently(
+            run_counts, run_ks, run_w1
         )
 
         rows = [

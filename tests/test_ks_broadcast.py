@@ -163,11 +163,15 @@ def test_thinned_ecdf_mass_aware_zero_inflated(spark, monkeypatch):
     assert gaps.max() <= -(-n // cap) + uc.max() - 1  # quantum + own mass
 
 
-def test_preagg_and_raw_paths_bit_identical(spark):
-    """ks_d_against_ecdf with preaggregate True/False returns bit-identical
-    (d, n, m) per group — the weighted-unique math equals sorting raw."""
+def test_preagg_and_raw_paths_bit_identical(spark, monkeypatch):
+    """ks_d_against_ecdf returns bit-identical (d, n, m) per group on all
+    three routes: preaggregated counts scored on the driver, the same
+    counts in pandas groups once they are over the driver-row budget, and
+    raw values in pandas groups — the weighted-unique math equals sorting
+    raw."""
     import pandas as pd
 
+    import driftspark.verdicts as vd
     from driftspark.verdicts import fit_ks_reference_ecdf, ks_d_against_ecdf
 
     rng = np.random.RandomState(31)
@@ -180,9 +184,18 @@ def test_preagg_and_raw_paths_bit_identical(spark):
         "q": rng.randint(0, 5, 3000).astype(float),
         "part": rng.randint(0, 3, 3000),
     }))
+    # fitted before the budget shrinks: the budget also thins the fit
     ecdf = fit_ks_reference_ecdf(ref, ["x", "q"])
-    a = {(r["part"], r["feature"]): (r["d"], r["n"], r["m"])
-         for r in ks_d_against_ecdf(test, ["x", "q"], ecdf, preaggregate=True).collect()}
-    b = {(r["part"], r["feature"]): (r["d"], r["n"], r["m"])
-         for r in ks_d_against_ecdf(test, ["x", "q"], ecdf, preaggregate=False).collect()}
-    assert a == b and len(a) == 6
+
+    def route(preaggregate):
+        out = ks_d_against_ecdf(test, ["x", "q"], ecdf, preaggregate=preaggregate)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        rows = {(r["part"], r["feature"]): (r["d"], r["n"], r["m"]) for r in out.collect()}
+        return rows, "FlatMapGroupsInPandas" in plan
+
+    driver, driver_udf = route(True)
+    raw, raw_udf = route(False)
+    monkeypatch.setattr(vd, "MAX_REF_ECDF_POINTS", 100)
+    over_budget, over_budget_udf = route(True)
+    assert (driver_udf, over_budget_udf, raw_udf) == (False, True, True)
+    assert driver == over_budget == raw and len(driver) == 6

@@ -8,6 +8,7 @@ bins, and the distributed KS D.
 
 import math
 from collections import Counter
+from unittest import mock
 
 import numpy as np
 import pandas as pd
@@ -288,17 +289,21 @@ def _check_cdf_melt(ref, test, ref_rows, test_rows):
 
 
 def _check_bin_counts(ref, test, ref_rows, test_rows):
-    hists, null_part = vd._bin_counts(test, DEGENERATE_EDGES, F.col("spart"))
+    with mock.patch.object(vd.logger, "warning") as warn:
+        ref_bins, hists, _, _ = vd._score_counts(ref, test, DEGENERATE_EDGES, (), "spart")
     parts = {r["spart"] for r in test_rows} - {None}
     _eq(dict(hists), {
         p: {c: _hist([r for r in test_rows if r["spart"] == p], c) for c in DEGENERATE_EDGES}
         for p in parts
     })
     null_rows = [r for r in test_rows if r["spart"] is None]
-    assert null_part == sum(int(_hist(null_rows, c).sum()) for c in DEGENERATE_EDGES)
+    null_part = sum(int(_hist(null_rows, c).sum()) for c in DEGENERATE_EDGES)
+    assert [w.args[2] for w in warn.call_args_list] == ([null_part] if null_part else [])
     for side, side_rows in ((ref, ref_rows), (test, test_rows)):
-        _eq(vd._ref_bin_counts(side, DEGENERATE_EDGES),
-            {c: _hist(side_rows, c) for c in DEGENERATE_EDGES})
+        want = {c: _hist(side_rows, c) for c in DEGENERATE_EDGES}
+        _eq(vd._ref_bin_counts(side, DEGENERATE_EDGES), want)
+        if side is ref:
+            _eq(ref_bins, want)
 
 
 def _check_psi_by_partition(ref, test, ref_rows, test_rows):

@@ -196,7 +196,7 @@ def fit_spy(monkeypatch):
 
     for name in FIT_FUNCTIONS:
         wrap(name, lambda args, name=name: spy.calls.update([name]))
-    wrap("_psi_rows", lambda args: spy.edges.append(args[1]))
+    wrap("_score_counts", lambda args: spy.edges.append(args[2]))
     return spy
 
 
@@ -390,6 +390,30 @@ def test_run_summary_counts_each_part_once(spark, tmp_path):
     assert cp.completed_parts("sum01") == [0, 1]
 
 
+@pytest.mark.parametrize("part_type,parts", [("int", (3, 7)), ("string", ("eu", "us"))])
+def test_ledger_schema_and_readers(spark, tmp_path, part_type, parts):
+    """mark_done writes one row per partition with the ledger's column
+    types, the part column typed like the verdicts', and run_summary and
+    completed_parts read it."""
+    cp = CheckpointManager(spark, str(tmp_path / "ledger"))
+    a, b = parts
+    verdicts = local_frame(
+        spark, [(a, True), (a, False), (a, False), (b, True)],
+        f"part {part_type}, passed boolean",
+    )
+    cp.mark_done("led01", verdicts, snapshot_id=42)
+    ledger = spark.read.parquet(str(tmp_path / "ledger"))
+    assert ledger.schema.simpleString() == (
+        f"struct<run_id:string,part:{part_type},status:string,n_checks:bigint,"
+        "n_failed:bigint,snapshot_id:bigint,completed_at:double>"
+    )
+    got = {r["part"]: (r["run_id"], r["status"], r["n_checks"], r["n_failed"], r["snapshot_id"])
+           for r in ledger.collect()}
+    assert got == {a: ("led01", "done", 3, 2, 42), b: ("led01", "done", 1, 0, 42)}
+    assert cp.completed_parts("led01") == sorted(parts)
+    assert cp.run_summary("led01") == {"run_id": "led01", "parts_done": 2, "n_failed": 2}
+
+
 def _last_job_id(sc) -> int:
     """The id of a marker job run now.  Spark numbers jobs in submission
     order whichever thread submits them, so the gap between two markers
@@ -412,7 +436,7 @@ def _jobs_of(sc, fn) -> int:
 
 #: Spark jobs of the fit-loading resume below: lower it when a change
 #: lowers the count
-RESUME_JOB_CEILING = 17
+RESUME_JOB_CEILING = 11
 
 
 def test_resume_job_budget(spark, drifted_parquet, tmp_path):
@@ -442,11 +466,12 @@ def test_resume_job_budget(spark, drifted_parquet, tmp_path):
 
 
 @pytest.fixture(scope="module")
-def budget_frame(spark):
+def budget_frame(spark, tmp_path_factory):
     """A 4,000-row split table (numeric w/h, categorical fmt and a
     17-category hq, int parts, six days of timestamps, a probability p)
-    with its fitted PSI edges, a fitted streaming monitor and a fitted
-    CBPE detector."""
+    with its fitted PSI edges and KS ECDF, its verdicts, an empty
+    checkpoint ledger, a fitted streaming monitor and a fitted CBPE
+    detector."""
     from driftspark.dataset import SparkDataset
     from driftspark.detectors.cbpe import CBPE
     from driftspark.streaming import StreamingDriftMonitor
@@ -470,6 +495,9 @@ def budget_frame(spark):
     cbpe.fit(SparkDataset(ref, proba_col="p"))
     return SimpleNamespace(
         df=df, ref=ref, test=test, edges=quantile_edges(ref, ["w", "h"], 10),
+        ecdf=vd.fit_ks_reference_ecdf(ref, ["w", "h"]),
+        verdicts=vd.partition_verdicts(df, ["w", "h"], ["fmt", "hq"]),
+        ledger=CheckpointManager(spark, str(tmp_path_factory.mktemp("budget") / "ledger")),
         monitor=StreamingDriftMonitor(
             ref, ["w", "h"], cat_cols=["fmt", "hq"], max_categories=10
         ),
@@ -493,13 +521,15 @@ JOB_BUDGET = {
     "_ref_bin_counts": (
         2, lambda f: vd._ref_bin_counts(f.ref, f.edges)),
     "psi_by_partition": (
-        4, lambda f: vd.psi_by_partition(f.ref, f.test, f.edges).collect()),
+        2, lambda f: vd.psi_by_partition(f.ref, f.test, f.edges).collect()),
     "rolling_psi": (
         7, lambda f: vd.rolling_psi(f.df, "ts", f.edges).collect()),
+    "ks_d_against_ecdf[preaggregate]": (
+        2, lambda f: vd.ks_d_against_ecdf(f.test, ["w", "h"], f.ecdf, preaggregate=True).collect()),
     "chi2_by_partition": (
-        5, lambda f: vd.chi2_by_partition(f.ref, f.test, ["fmt", "hq"])),
+        2, lambda f: vd.chi2_by_partition(f.ref, f.test, ["fmt", "hq"])),
     "chi2_by_partition[capped]": (
-        6, lambda f: vd.chi2_by_partition(f.ref, f.test, ["fmt", "hq"], max_categories=10)),
+        5, lambda f: vd.chi2_by_partition(f.ref, f.test, ["fmt", "hq"], max_categories=10)),
     "fit_ref_category_counts": (
         3, lambda f: vd.fit_ref_category_counts(f.ref, ["fmt", "hq"])),
     "fit_ref_category_counts[capped]": (
@@ -509,7 +539,9 @@ JOB_BUDGET = {
     "CBPE.detect": (
         4, lambda f: f.cbpe.detect(f.test_ds)),
     "partition_verdicts": (
-        20, lambda f: vd.partition_verdicts(f.df, ["w", "h"], ["fmt", "hq"]).collect()),
+        13, lambda f: vd.partition_verdicts(f.df, ["w", "h"], ["fmt", "hq"]).collect()),
+    "CheckpointManager.mark_done": (
+        1, lambda f: f.ledger.mark_done("budget01", f.verdicts)),
 }
 
 
@@ -520,6 +552,49 @@ def test_operator_job_budget(spark, budget_frame, op):
     ceiling, call = JOB_BUDGET[op]
     jobs = _jobs_of(spark.sparkContext, lambda: call(budget_frame))
     assert jobs <= ceiling, (op, jobs)
+
+
+def _null_part_warnings(records) -> list:
+    return sorted(r.getMessage() for r in records if "NULL part" in r.getMessage())
+
+
+@pytest.mark.parametrize("max_categories", [1000, 10], ids=["under_cap", "over_cap"])
+def test_score_count_routes_bit_identical(spark, budget_frame, monkeypatch, caplog, max_categories):
+    """The PSI + chi2 count collects through the driver-row budget; over
+    it, every chi2 feature goes through the Spark-side cap.  Both routes
+    give the same verdicts and chi2 rows, bit for bit, and the same
+    NULL-part warnings — under the category cap and over it (the
+    17-category hq at max_categories=10)."""
+    df = budget_frame.df.withColumn(
+        "part", F.when(F.col("w") > 1.2, None).otherwise(F.col("part"))
+    )
+    ref, test = df.where("split = 'ref'"), df.where("split = 'test'")
+    caps = []
+    real_cap = vd._cap_categories
+    monkeypatch.setattr(
+        vd, "_cap_categories", lambda *a, **k: caps.append(a[1]) or real_cap(*a, **k)
+    )
+
+    def run():
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger="driftspark.verdicts"):
+            verdicts = vd.partition_verdicts(
+                df, ["w", "h"], ["fmt", "hq"], ks_cols=[], max_categories=max_categories
+            ).collect()
+            chi2 = vd.chi2_by_partition(ref, test, ["fmt", "hq"], max_categories=max_categories)
+        return verdicts, chi2, _null_part_warnings(caplog.records)
+
+    verdicts, chi2, warnings = run()
+    assert len(caps) == (0 if max_categories == 1000 else 2)
+    assert {r["part"] for r in chi2} == {0, 1, 2, 3}
+    assert len(warnings) == 3  # PSI and chi2 in the suite, chi2 alone
+    monkeypatch.setattr(vd, "MAX_REF_ECDF_POINTS", 5)
+    caps.clear()
+    over_verdicts, over_chi2, over_warnings = run()
+    assert len(caps) == 2  # every chi2 feature capped, in both calls
+    assert sorted(map(repr, over_verdicts)) == sorted(map(repr, verdicts))
+    assert repr(over_chi2) == repr(chi2)
+    assert over_warnings == warnings
 
 
 def test_resume_with_nothing_pending_keeps_string_part_type(spark):
