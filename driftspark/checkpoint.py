@@ -256,7 +256,9 @@ def resumable_partition_drift(
     )
     # the input and the ledger are different sources: read both at once
     (all_parts, fingerprint), done = _concurrently(
-        lambda: _universe(suite), lambda: checkpoint.completed_parts(run_id)
+        df.sparkSession,
+        lambda: _universe(suite),
+        lambda: checkpoint.completed_parts(run_id),
     )
     done = set(done)
     pending = [p for p in sorted(all_parts) if p not in done]

@@ -24,7 +24,6 @@ does not re-run its plan:
 from __future__ import annotations
 
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any, Dict, Optional, Sequence
 
@@ -114,7 +113,7 @@ def run_validation(
     from driftspark.constraints import referential_violations, uniqueness_check
     from driftspark.imageops import validate_image_payloads_auto
     from driftspark.profile import profile_columns
-    from driftspark.verdicts import partition_verdicts
+    from driftspark.verdicts import _concurrently, partition_verdicts
 
     # the image-table KS columns default to w/h — heavily quantized, where
     # pre-aggregating the broadcast-KS test side shrinks hot-partition
@@ -225,21 +224,16 @@ def run_validation(
             run_expectations(images, expectations, group_col=part_col)
         )
 
-    with ThreadPoolExecutor(max_workers=7) as pool:
-        futs = [
-            pool.submit(f)
-            for f in (
-                pass_profile,
-                pass_uniqueness,
-                pass_referential,
-                pass_verdicts,
-                pass_payload,
-                pass_expectations,
-                pass_contamination,
-            )
-        ]
-        for f in futs:
-            f.result()
+    _concurrently(
+        images.sparkSession,
+        pass_profile,
+        pass_uniqueness,
+        pass_referential,
+        pass_verdicts,
+        pass_payload,
+        pass_expectations,
+        pass_contamination,
+    )
 
     res.elapsed_sec = time.time() - t0
     total = res.n_images + res.n_pairs

@@ -50,7 +50,6 @@ from driftspark.stats import (
     _proportions,
     bucket_expr,
     key_counts,
-    quantile_edges,
 )
 
 logger = logging.getLogger(__name__)
@@ -87,7 +86,7 @@ class StreamingDriftMonitor:
         chi2_threshold: float = 0.05,
         max_categories: int = 1000,
     ):
-        from driftspark.verdicts import fit_ks_reference_ecdf, fit_ref_category_counts
+        from driftspark.verdicts import fit_ref_category_counts, fit_reference
 
         self.numeric_cols = list(numeric_cols)
         self.n_bins = n_bins
@@ -104,20 +103,15 @@ class StreamingDriftMonitor:
         self.ref_cat_counts, self._capped_cats = fit_ref_category_counts(
             reference_df, self.cat_cols, max_categories
         )
-        # fit once on the static reference; edges + reference proportions
-        # + the thinned broadcast ECDF are the only state the stream needs
-        self.edges: Dict[str, np.ndarray] = quantile_edges(
-            reference_df, self.numeric_cols, n_bins
+        # fit once on the static reference, as the batch verdict suite
+        # does (verdicts.fit_reference, max_ref_ecdf_points its budget):
+        # edges + reference proportions + the broadcast ECDF are the only
+        # state the stream needs
+        self.edges, ref_counts, self.ks_ecdf = fit_reference(
+            reference_df, self.numeric_cols, self.ks_cols, n_bins, None,
+            max_ref_ecdf_points,
         )
-        self.ref_props: Dict[str, np.ndarray] = self._bin_props(reference_df)
-        # the same mass-quantum-thinned ECDF state the batch verdict suite
-        # broadcasts (verdicts.fit_ks_reference_ecdf) — fitted once here,
-        # scored against every micro-batch
-        self.ks_ecdf: Dict[str, tuple] = (
-            fit_ks_reference_ecdf(reference_df, self.ks_cols, max_ref_ecdf_points)
-            if self.ks_cols
-            else {}
-        )
+        self.ref_props = {c: _proportions(n) for c, n in ref_counts.items()}
         # broadcast the fitted ECDF ONCE: per-trigger scoring passes this
         # handle so the (potentially tens-of-MB) state is not re-serialized
         # and re-shipped on every micro-batch
@@ -131,8 +125,8 @@ class StreamingDriftMonitor:
         """Verdict rows for one (micro-)batch — shared by foreachBatch and
         direct batch calls, so streaming == batch numerics.  Each row:
         {feature, check, statistic, p_value, severity, passed}."""
-        from driftspark.numerics import ks_2samp_pvalue, severity_from_pvalue
-        from driftspark.verdicts import ks_d_against_ecdf
+        from driftspark.numerics import ks_2samp_pvalue
+        from driftspark.verdicts import ks_d_against_ecdf, pvalue_verdict
 
         hists = self._bin_props(batch_df)
         rows = []
@@ -158,14 +152,15 @@ class StreamingDriftMonitor:
             by_feat = self._batch_cat_counts(batch_df)
             for c in self.cat_cols:
                 stat, p, _, _ = chi2_from_count_maps(self.ref_cat_counts[c], by_feat[c])
+                severity, passed = pvalue_verdict(p, self.chi2_threshold)
                 rows.append(
                     {
                         "feature": c,
                         "check": "chi2",
                         "statistic": stat,
                         "p_value": float(p),
-                        "severity": severity_from_pvalue(p, self.chi2_threshold),
-                        "passed": bool(not (p < self.chi2_threshold)),
+                        "severity": severity,
+                        "passed": passed,
                     }
                 )
         if self.ks_ecdf:
@@ -178,14 +173,15 @@ class StreamingDriftMonitor:
             for r in ks_rows:
                 d, n, m = float(r["d"]), int(r["n"]), int(r["m"])
                 p = ks_2samp_pvalue(d, n, m)
+                severity, passed = pvalue_verdict(p, self.ks_threshold)
                 rows.append(
                     {
                         "feature": r["feature"],
                         "check": "ks",
                         "statistic": d,
                         "p_value": float(p),
-                        "severity": severity_from_pvalue(p, self.ks_threshold),
-                        "passed": bool(not (p < self.ks_threshold)),
+                        "severity": severity,
+                        "passed": passed,
                     }
                 )
         return rows
@@ -611,8 +607,7 @@ def cumulative_chi2_stream(
     import pandas as pd_
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from driftspark.numerics import severity_from_pvalue
-    from driftspark.verdicts import chi2_from_count_maps
+    from driftspark.verdicts import chi2_from_count_maps, pvalue_verdict
 
     # stateless per-partition partial counts BEFORE the stateful group —
     # with the fold, at most partitions x (categories+1) rows per
@@ -632,14 +627,15 @@ def cumulative_chi2_stream(
                 tmap[cat] = tmap.get(cat, 0) + int(c)
         state.update((list(tmap.keys()), [int(v) for v in tmap.values()]))
         stat, p, _, n_seen = chi2_from_count_maps(ref_plain[feature], tmap)
+        severity, passed = pvalue_verdict(p, chi2_threshold)
         yield pd_.DataFrame(
             {
                 "feature": [feature],
                 "n_seen": [n_seen],
                 "chi2_stat": [float(stat)],
                 "p_value": [float(p)],
-                "severity": [severity_from_pvalue(p, chi2_threshold)],
-                "passed": [bool(not (p < chi2_threshold))],
+                "severity": [severity],
+                "passed": [passed],
             }
         )
 

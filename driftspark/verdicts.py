@@ -7,21 +7,28 @@ partition of the test split is compared against the GLOBAL reference split
 (edges and expectations fitted once on reference, broadcast into the plan),
 yielding one verdict row per (partition, feature, check).
 
-Scale design — a scored batch is two short job chains:
+Scale design — a fit, then two short job chains per scored batch:
 * The PSI and KS reference state is fitted once and every batch of
-  partitions scores against it (:class:`_VerdictSuite`).
+  partitions scores against it (:class:`_VerdictSuite`).  The fit is ONE
+  distinct-value count of the reference (:func:`fit_reference`), bounded
+  by :data:`MAX_REF_ECDF_POINTS` rows on its way to the driver, where it
+  gives the exact PSI edges, the reference histogram and the KS ECDF;
+  over that budget the separate fits (per-column ``percentile`` edges,
+  a bin count, the ECDF thinned from the same persisted count) run
+  instead.
 * PSI and chi-square share ONE count through the keyed-count primitive,
   driftspark.stats.key_counts (:func:`_score_counts`): the test rows,
-  plus the reference rows when chi-square (or an unfitted PSI) needs
-  them, grouped by (is_ref, part, feature, key).  It reaches the driver
-  through one collect bounded by :data:`MAX_REF_ECDF_POINTS` rows, which
-  also yields the NULL-part drop counts and the category counts the cap
-  needs; a chi-square feature over its category cap folds its tail in
-  Spark (stats._cap_categories).  PSI is then
+  plus the reference rows when chi-square (or psi_by_partition, which
+  has no fitted reference histogram) needs them, grouped by (is_ref,
+  part, feature, key).  It reaches the driver through one collect
+  bounded by :data:`MAX_REF_ECDF_POINTS` rows, which also yields the
+  NULL-part drop counts and the category counts the cap needs; a
+  chi-square feature over its category cap folds its tail in Spark
+  (stats._cap_categories).  PSI is then
   numerics.psi_from_proportions per (part, feature) on the driver — the
   streaming monitor's math — and chi-square likewise.
-* KS D scores each (part, feature) test group against a reference ECDF,
-  fitted once (thinned, when over budget, on the exact cumulative frame
+* KS D scores each (part, feature) test group against the fitted
+  reference ECDF (thinned, when over budget, on the exact cumulative frame
   of driftspark.stats).  Preaggregated test counts within the row budget
   are scored on the driver, all groups at once; otherwise the ECDF is
   broadcast into pandas groups.  p-values for the O(parts x features) D
@@ -31,6 +38,7 @@ Scale design — a scored batch is two short job chains:
 from __future__ import annotations
 
 import logging
+import math
 from collections import defaultdict
 from dataclasses import dataclass
 from typing import Dict, List, Optional, Sequence
@@ -56,7 +64,9 @@ from driftspark.stats import (
     _cap_categories,
     _cdf_cum_frame,
     _cdf_prescan,
+    _edges_of,
     _equal_mass_buckets,
+    _exact_quantiles,
     _melt,
     _proportions,
     _sides,
@@ -72,8 +82,9 @@ logger = logging.getLogger(__name__)
 
 #: the verdict suite's driver-row budget: the points of a fitted KS
 #: reference ECDF across all features (see fit_ks_reference_ecdf), and
-#: the rows each bounded count collect (_score_counts, preaggregated
-#: ks_d_against_ecdf) takes before it switches to its unbounded route
+#: the rows each bounded count collect (fit_reference, _score_counts,
+#: preaggregated ks_d_against_ecdf) takes before it switches to its
+#: unbounded route
 MAX_REF_ECDF_POINTS = 4_000_000
 
 VERDICT_SCHEMA = (
@@ -480,46 +491,59 @@ def _ref_ecdf_points(ref_g: DataFrame, max_points: int) -> Dict[str, tuple]:
     strictly below one quantum — the KS-D error from thinning is bounded
     by 1/max_points regardless of frequency skew.  Retained points carry
     EXACT cumulative counts."""
-    # the distinct set feeds 2-4 jobs below (totals, small collect, big
+    # the distinct set feeds 2-4 jobs (totals, small collect, big
     # edges/thinned collect) — persist so the raw data is scanned once
     ref_g = ref_g.persist()
+    try:
+        return _ecdf_points_of(ref_g, _distinct_totals(ref_g), max_points)
+    finally:
+        ref_g.unpersist()
+
+
+def _distinct_totals(ref_g: DataFrame) -> Dict[str, int]:
+    """{feature: its number of distinct values} of a (feature, value, c)
+    distinct-count frame."""
     totals = ref_g.groupBy("feature").agg(F.count(F.lit(1)).alias("nd")).collect()
-    nd_by_feat = {r["feature"]: int(r["nd"]) for r in totals}
+    return {r["feature"]: int(r["nd"]) for r in totals}
+
+
+def _ecdf_points_of(
+    ref_g: DataFrame, nd_by_feat: Dict[str, int], max_points: int
+) -> Dict[str, tuple]:
+    """:func:`_ref_ecdf_points` of the features in ``nd_by_feat`` (their
+    distinct counts) on an already persisted ``ref_g``."""
     small = [f for f, nd in nd_by_feat.items() if nd <= max_points]
     big = [f for f, nd in nd_by_feat.items() if nd > max_points]
 
     ecdf: Dict[str, tuple] = {}
-    try:
-        if small:
-            pdf = ref_g.where(F.col("feature").isin(small)).toPandas()
-            for feat, g in pdf.groupby("feature"):
-                g = g.sort_values("value")
-                vals = g["value"].values.astype(np.float64)
-                cums = np.cumsum(g["c"].values.astype(np.int64))
-                ecdf[feat] = (vals, cums, int(cums[-1]))
-        if big:
-            bg = ref_g.where(F.col("feature").isin(big)).select(
-                "feature", "value", F.col("c").alias("r"), F.lit(0).alias("t")
+    if small:
+        pdf = ref_g.where(F.col("feature").isin(small)).toPandas()
+        for feat, g in pdf.groupby("feature"):
+            g = g.sort_values("value")
+            vals = g["value"].values.astype(np.float64)
+            cums = np.cumsum(g["c"].values.astype(np.int64))
+            ecdf[feat] = (vals, cums, int(cums[-1]))
+    if big:
+        bg = ref_g.where(F.col("feature").isin(big)).select(
+            "feature", "value", F.col("c").alias("r"), F.lit(0).alias("t")
+        )
+        cum = _cdf_cum_frame(bg, ["feature"], _equal_mass_buckets(bg, big))
+        # keep a point iff its cumulative count crosses a mass quantum
+        # ms = ceil(n / max_points) — floor(cr/ms) > floor((cr - c)/ms)
+        # — plus the exact last point
+        ms = F.expr(f"(n + {max_points - 1}) div {max_points}")
+        kept = cum.where(
+            (F.floor(F.col("cr") / ms) > F.floor((F.col("cr") - F.col("r")) / ms))
+            | (F.col("cr") == F.col("n"))
+        )
+        pdf = kept.select("feature", "value", "cr").toPandas()
+        for feat, g in pdf.groupby("feature"):
+            g = g.sort_values("value")
+            ecdf[feat] = (
+                g["value"].values.astype(np.float64),
+                g["cr"].values.astype(np.int64),
+                int(g["cr"].values[-1]),
             )
-            cum = _cdf_cum_frame(bg, ["feature"], _equal_mass_buckets(bg, big))
-            # keep a point iff its cumulative count crosses a mass quantum
-            # ms = ceil(n / max_points) — floor(cr/ms) > floor((cr - c)/ms)
-            # — plus the exact last point
-            ms = F.expr(f"(n + {max_points - 1}) div {max_points}")
-            kept = cum.where(
-                (F.floor(F.col("cr") / ms) > F.floor((F.col("cr") - F.col("r")) / ms))
-                | (F.col("cr") == F.col("n"))
-            )
-            pdf = kept.select("feature", "value", "cr").toPandas()
-            for feat, g in pdf.groupby("feature"):
-                g = g.sort_values("value")
-                ecdf[feat] = (
-                    g["value"].values.astype(np.float64),
-                    g["cr"].values.astype(np.int64),
-                    int(g["cr"].values[-1]),
-                )
-    finally:
-        ref_g.unpersist()
     return ecdf
 
 
@@ -577,16 +601,134 @@ def fit_ks_reference_ecdf(
     the KS-D thinning error stays <= 1e-4 even for wide feature sets) —
     driver memory is bounded regardless of how many columns are
     monitored."""
-    ref_g = (
-        _melt(ref_df, cols)
-        .groupBy("feature", "value")
-        .agg(F.count(F.lit(1)).alias("c"))
+    return _ref_ecdf_points(
+        _distinct_counts(ref_df, cols), _ecdf_share(max_ref_ecdf_points, len(cols))
     )
-    per_feature = max(
-        max_ref_ecdf_points // max(len(cols), 1),
-        min(max_ref_ecdf_points, 10_000),  # floor can't exceed the budget
-    )
-    return _ref_ecdf_points(ref_g, per_feature)
+
+
+def _distinct_counts(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """(feature, value, c): each column's distinct non-NULL, non-NaN
+    values with their counts."""
+    return _melt(df, cols).groupBy("feature", "value").agg(F.count(F.lit(1)).alias("c"))
+
+
+def _ecdf_share(max_points: int, n_features: int) -> int:
+    """Each feature's share of a total ECDF budget of ``max_points``: an
+    even split, floored at 10k points (the floor can't exceed the
+    budget)."""
+    return max(max_points // max(n_features, 1), min(max_points, 10_000))
+
+
+def fit_reference(
+    ref_df: DataFrame,
+    numeric_cols: Sequence[str],
+    ks_cols: Sequence[str],
+    n_bins: int = 10,
+    approx_quantile_error: Optional[float] = None,
+    max_points: int = MAX_REF_ECDF_POINTS,
+) -> tuple:
+    """(PSI edges, reference bin counts, KS ECDF) — the whole fitted
+    reference state of the verdict suite and the streaming monitor — from
+    ONE distinct-value count of the reference.
+
+    The (feature, value, c) counts of ``numeric_cols ∪ ks_cols``
+    (:func:`_distinct_counts`) reach the driver through one collect
+    bounded by ``max_points`` rows, whose size picks the route.  Within
+    the budget, with no KS feature over its :func:`_ecdf_share`, the
+    table is sorted once by (feature, value) and read three ways, each
+    equal to its separate fit: the exact PSI edges
+    (stats._exact_quantiles, the ``percentile`` aggregate's arithmetic,
+    then quantile_edges' post-processing), each bin's in-range reference
+    count (the bucket_expr rule) and each KS feature's exact ECDF
+    (fit_ks_reference_ecdf's points).  A zero edge may differ from
+    quantile_edges' in sign only: the GROUP BY normalizes -0.0.  With
+    ``approx_quantile_error`` the edges are approx_quantile_edges', run
+    concurrently with the count, which still gives the bin counts and the
+    ECDF.
+
+    Over the budget the separate fits run instead: the edges then
+    _ref_bin_counts, concurrently with the KS ECDF, thinned from the same
+    counts (persisted for this) rather than a second count.  The route
+    depends on the input's size alone.  A column with no non-NULL,
+    non-NaN reference value gets no edges and no ECDF; the ECDF is {}
+    without KS columns."""
+    numeric_cols, ks_cols = list(numeric_cols), list(ks_cols)
+    fit_cols = sorted(set(numeric_cols) | set(ks_cols))
+    if not fit_cols:
+        return {}, {}, {}
+    spark = ref_df.sparkSession
+    gk = approx_quantile_error is not None and bool(numeric_cols)
+    share = _ecdf_share(max_points, len(ks_cols))
+    counts = _distinct_counts(ref_df, fit_cols).persist()
+
+    def scan():
+        table = counts.limit(max_points + 1).toArrow()
+        return _distinct_points(table) if table.num_rows <= max_points else None
+
+    def gk_edges():
+        return approx_quantile_edges(ref_df, numeric_cols, n_bins, approx_quantile_error)
+
+    try:
+        points, edges = _concurrently(spark, scan, gk_edges) if gk else (scan(), None)
+        if points is None or any(len(points[c][0]) > share for c in ks_cols if c in points):
+            points = None  # the driver holds no collected rows from here
+
+            def psi():
+                e = edges if gk else quantile_edges(ref_df, numeric_cols, n_bins)
+                return e, (_ref_bin_counts(ref_df, e) if e else {})
+
+            def ks():
+                if not ks_cols:
+                    return {}
+                nd = _distinct_totals(counts.where(F.col("feature").isin(ks_cols)))
+                return _ecdf_points_of(counts, nd, share)
+
+            (edges, ref_counts), ecdf = _concurrently(spark, psi, ks)
+            return edges, ref_counts, ecdf
+    finally:
+        counts.unpersist()
+
+    if edges is None:
+        edges = {
+            c: _edges_of(_exact_quantiles(v, cums, n_bins), v[0], v[-1], n_bins)
+            for c in numeric_cols
+            if c in points
+            for v, cums in [points[c]]
+        }
+    ref_counts = {c: _bin_counts_of(*points[c], e) for c, e in edges.items()}
+    ecdf = {c: (v, cums, int(cums[-1])) for c, (v, cums) in points.items() if c in ks_cols}
+    return edges, ref_counts, ecdf
+
+
+def _distinct_points(table) -> Dict[str, tuple]:
+    """{feature: (ascending distinct values, their cumulative counts)},
+    features in name order, of a collected (feature, value, c) Arrow
+    table, sorted once by (feature, value)."""
+    feature = table.column("feature").combine_chunks().dictionary_encode()
+    f = feature.indices.to_numpy().astype(np.int64)
+    value = table.column("value").to_numpy().astype(np.float64)
+    c = table.column("c").to_numpy().astype(np.int64)
+    order = np.lexsort((value, f))
+    f, value, c = f[order], value[order], c[order]
+    names = feature.dictionary.to_pylist()
+    bounds = np.searchsorted(f, np.arange(len(names) + 1))
+    points = {
+        name: (value[a:b], np.cumsum(c[a:b]))
+        for name, a, b in zip(names, bounds[:-1], bounds[1:])
+    }
+    return dict(sorted(points.items()))
+
+
+def _bin_counts_of(values: np.ndarray, cums: np.ndarray, edges: np.ndarray) -> np.ndarray:
+    """In-range count per bin of ``edges`` over a sorted distinct-value
+    table (``values`` ascending, ``cums`` their cumulative counts) — the
+    :func:`bucket_expr` rule: first bin [e0, e1], then (e_i, e_i+1], values
+    outside [e0, e_last] in no bin.  Each bin is a difference of two
+    cumulative counts at searchsorted cuts, which order NaN last as Spark
+    does."""
+    cut = np.searchsorted(values, edges, "right")
+    cut[0] = np.searchsorted(values, edges[0], "left")
+    return np.diff(np.r_[0, cums].astype(np.int64)[cut])
 
 
 def ks_d_against_ecdf(
@@ -832,11 +974,19 @@ def chi2_from_count_maps(
     reference proportions from two {category: count} maps (the reference's
     univariate.py:71-122 math: union-aligned categories, >=min_samples
     validity filter on either side, df = n_valid - 1).  Pure driver math,
-    shared by the batch per-partition path and the streaming monitor."""
+    shared by the batch per-partition path and the streaming monitor.
+    An empty reference has no expected proportions: stat and p are NaN,
+    which :func:`pvalue_verdict` passes.  A non-empty reference with no
+    count in any valid category (every category replaced) is scored as a
+    single new category is: stat inf, p 0."""
     _, rc, tc = _aligned(rmap, tmap)
     valid = (rc >= min_samples) | (tc >= min_samples)
     if valid.sum() < 2:
         stat, p = 0.0, 1.0
+    elif rc.sum() == 0:
+        stat = p = float("nan")
+    elif rc[valid].sum() == 0:
+        stat, p = float("inf"), 0.0
     else:
         rv, tv = rc[valid], tc[valid]
         expected = rv / rv.sum() * tv.sum()
@@ -846,31 +996,44 @@ def chi2_from_count_maps(
     return stat, p, int(rc.sum()), int(tc.sum())
 
 
+def pvalue_verdict(p: float, threshold: float) -> tuple:
+    """(severity, passed) of a p-value verdict: the detector severity
+    ladder, failed iff p < threshold.  A NaN p (a chi2 with an empty
+    reference) is no evidence of drift: severity "none", passed."""
+    if math.isnan(p):
+        return "none", True
+    return severity_from_pvalue(p, threshold), not (p < threshold)
+
+
 def _verdict_schema(df: DataFrame, part_col: str) -> str:
     """VERDICT_SCHEMA with the part column typed as ``df[part_col]``."""
     part_type = df.schema[part_col].dataType.simpleString()
     return VERDICT_SCHEMA.replace("part int", f"part {part_type}", 1)
 
 
-def _concurrently(*fns) -> list:
+def _concurrently(spark, *fns) -> list:
     """Results of independent job-submitting callables run concurrently,
-    so their scheduling latency and shuffle waits overlap."""
+    so their scheduling latency and shuffle waits overlap.  Each runs with
+    the caller's job group and local properties, cloned per callable
+    (pyspark.util.inheritable_thread_target): a plain thread starts with
+    none, so its jobs would lose the caller's tag."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-        futures = [pool.submit(fn) for fn in fns]
+        futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
         return [f.result() for f in futures]
 
 
 @dataclass
 class _VerdictSuite:
     """:func:`partition_verdicts` as a reference FIT plus a per-batch
-    SCORE.  After :meth:`fit` (PSI edges + reference bin counts, and the
-    thinned KS ECDF) or :meth:`use_fit` (the same state, loaded from a
-    checkpoint), every :meth:`score` reuses that state; without it, the
-    PSI + chi2 count waits for the edges and the KS task fits its ECDF,
-    the two overlapping.  chi2 (its category cap counts ref ∪ test) and
-    W1 read the reference on every score."""
+    SCORE.  :meth:`fit` takes the PSI edges, the reference bin counts and
+    the KS ECDF from one :func:`fit_reference` scan; :meth:`use_fit` takes
+    the same state loaded from a checkpoint.  Every :meth:`score` reuses
+    that state, fitting it first when there is none.  chi2 (its category
+    cap counts ref ∪ test) and W1 read the reference on every score."""
 
     df: DataFrame
     numeric_cols: Sequence[str]
@@ -913,25 +1076,12 @@ class _VerdictSuite:
             MAX_REF_ECDF_POINTS,
         ]
 
-    def _fit_edges(self) -> dict:
-        """The PSI bin edges of the reference; empty when no PSI column can
-        be fitted."""
-        if not self.numeric_cols:
-            return {}
-        if self.approx_quantile_error is not None:
-            # scale path: Greenwald-Khanna approximate edges (at 10^12 rows
-            # an exact percentile sort is not realistic; pd.qcut parity
-            # paths keep the exact default).  The shared helper applies the
-            # SAME post-processing as the exact path — duplicate edges
-            # dropped, constant columns fall back to uniform edges — so a
-            # constant-in-reference column keeps its PSI verdict here too.
-            edges = approx_quantile_edges(
-                self.ref_df, list(self.numeric_cols), self.n_bins,
-                self.approx_quantile_error,
-            )
-        else:
-            edges = quantile_edges(self.ref_df, self.numeric_cols, self.n_bins)
-        if not edges:
+    def fit(self) -> "_VerdictSuite":
+        edges, ref_counts, ecdf = fit_reference(
+            self.ref_df, self.numeric_cols, self.ks_cols, self.n_bins,
+            self.approx_quantile_error, MAX_REF_ECDF_POINTS,
+        )
+        if self.numeric_cols and not edges:
             # every numeric column all-NULL in the reference: no fitted
             # bins means no PSI verdicts, not a failed verdict suite
             logger.warning(
@@ -939,22 +1089,6 @@ class _VerdictSuite:
                 "(all-NULL reference columns?) — PSI checks skipped",
                 list(self.numeric_cols),
             )
-        return edges
-
-    def _fit_psi(self) -> tuple:
-        """(edges, {feature: in-range reference count per bin}); both empty
-        when no PSI column can be fitted."""
-        edges = self._fit_edges()
-        return (edges, _ref_bin_counts(self.ref_df, edges)) if edges else ({}, {})
-
-    def _fit_ks(self) -> Optional[dict]:
-        """The thinned KS reference ECDF (None without KS columns)."""
-        if not self.ks_cols:
-            return None
-        return fit_ks_reference_ecdf(self.ref_df, self.ks_cols, MAX_REF_ECDF_POINTS)
-
-    def fit(self) -> "_VerdictSuite":
-        (edges, ref_counts), ecdf = _concurrently(self._fit_psi, self._fit_ks)
         return self.use_fit(edges, ref_counts, ecdf)
 
     def use_fit(
@@ -973,32 +1107,29 @@ class _VerdictSuite:
         """The verdict DataFrame for the test partitions in ``parts`` (all
         of them when None), built on the driver from two concurrent job
         chains — the PSI + chi2 count and the KS scoring — plus W1 when
-        asked for."""
+        asked for.  Fits the reference first when it is not fitted."""
+        if self.fitted is None:
+            self.fit()
         ref_df, test_df, part_col = self.ref_df, self.test_df, self.part_col
         if parts is not None:
             test_df = test_df.where(F.col(part_col).isin(list(parts)))
-
-        fitted = self.fitted
+        edges, ref_counts, _ = self.fitted
 
         def run_counts():
-            # PSI and chi2 share one count; unfitted, it also gives the
-            # reference histogram once the edges are known
-            edges, ref_counts = fitted[:2] if fitted else (self._fit_edges(), None)
+            # PSI and chi2 share one count
             if not edges and not self.cat_cols:
                 return [], []
-            ref_bins, hists, ref_cats, test_cats = _score_counts(
+            _, hists, ref_cats, test_cats = _score_counts(
                 ref_df, test_df, edges, self.cat_cols, part_col,
-                ref_counts is None, self.max_categories,
+                ref_psi=False, max_categories=self.max_categories,
             )
-            psi = _psi_rows(hists, ref_bins if ref_counts is None else ref_counts)
-            return psi, _chi2_rows(ref_cats, test_cats)
+            return _psi_rows(hists, ref_counts), _chi2_rows(ref_cats, test_cats)
 
         def run_ks():
-            ecdf = self._b_ecdf if fitted else self._fit_ks()
-            if ecdf is None:
+            if self._b_ecdf is None:
                 return []
             return ks_d_against_ecdf(
-                test_df, self.ks_cols, ecdf, part_col, self.ks_preaggregate
+                test_df, self.ks_cols, self._b_ecdf, part_col, self.ks_preaggregate
             ).collect()
 
         def run_w1():
@@ -1015,7 +1146,7 @@ class _VerdictSuite:
             return w1_by_partition(ref_df, test_df, w1_cols, part_col).collect(), stds
 
         (psi_rows, chi2_rows), ks_rows, (w1_rows, w1_stds) = _concurrently(
-            run_counts, run_ks, run_w1
+            self.df.sparkSession, run_counts, run_ks, run_w1
         )
 
         rows = [
@@ -1028,13 +1159,12 @@ class _VerdictSuite:
             p = ks_2samp_pvalue(d, n, m)
             rows.append(
                 (r["part"], r["feature"], "ks", d, p,
-                 severity_from_pvalue(p, self.ks_threshold),
-                 not (p < self.ks_threshold), n, m)
+                 *pvalue_verdict(p, self.ks_threshold), n, m)
             )
         rows += [
             (rec["part"], rec["feature"], "chi2", rec["stat"], rec["p"],
-             severity_from_pvalue(rec["p"], self.chi2_threshold),
-             not (rec["p"] < self.chi2_threshold), rec["n_ref"], rec["n_test"])
+             *pvalue_verdict(rec["p"], self.chi2_threshold),
+             rec["n_ref"], rec["n_test"])
             for rec in chi2_rows
         ]
         if w1_rows:

@@ -172,8 +172,11 @@ def _assert_same_verdicts(got, want):
             assert g["p_value"] == pytest.approx(w["p_value"], rel=1e-9), key(w)
 
 
+#: the one reference fit, then the separate fits it falls back to over
+#: its row budget (and the GK edges it runs alongside its count)
 FIT_FUNCTIONS = (
-    "quantile_edges", "approx_quantile_edges", "fit_ks_reference_ecdf", "_ref_bin_counts"
+    "fit_reference", "quantile_edges", "approx_quantile_edges",
+    "fit_ks_reference_ecdf", "_ref_bin_counts",
 )
 
 
@@ -210,11 +213,12 @@ def drifted_parquet(spark, drifted, tmp_path_factory):
 def test_crash_and_resume_equals_uninterrupted_and_fits_once(spark, drifted, fit_spy):
     """A run that dies after its first persisted batch, then resumes,
     yields exactly one uninterrupted partition_verdicts; the crashed call
-    fits the PSI edges and the KS ECDF once, whatever its batch count,
-    and the resume loads that fit from the checkpoint instead."""
+    fits the reference once (one fit_reference, within its budget),
+    whatever its batch count, and the resume loads that fit from the
+    checkpoint instead."""
     kw = dict(numeric_cols=["w", "h"], cat_cols=["fmt"])
     want = partition_verdicts(drifted, **kw).collect()
-    once = {"quantile_edges": 1, "fit_ks_reference_ecdf": 1, "_ref_bin_counts": 1}
+    once = {"fit_reference": 1}
     tmp = tempfile.mkdtemp()
     try:
         crashing = _CrashAfterFirstBatch(spark, f"{tmp}/ledger")
@@ -273,8 +277,10 @@ def test_resume_loads_the_persisted_fit(
     fit_spy.edges.clear()
     with pytest.raises(RuntimeError, match="injected crash"):
         resumable_partition_drift(df, crashed, "fit01", batch_parts=2, **kw)
-    edges_name = "quantile_edges" if approx is None else "approx_quantile_edges"
-    assert fit_spy.calls[edges_name] == fit_spy.calls["fit_ks_reference_ecdf"] == 1
+    once = {"fit_reference": 1}
+    if approx is not None:
+        once["approx_quantile_edges"] = 1  # the GK edges, beside the count
+    assert fit_spy.calls == once
     (crash_edges,) = fit_spy.edges
 
     fit_spy.calls.clear()
@@ -345,7 +351,7 @@ def test_resume_refits_when_the_stored_fit_does_not_apply(
             df, CheckpointManager(spark, ledger), "fp01", batch_parts=1,
             **kw, **resume_kw,
         ).collect()
-    assert fit_spy.calls["quantile_edges"] == fit_spy.calls["fit_ks_reference_ecdf"] == 1
+    assert fit_spy.calls == {"fit_reference": 1}
     assert any("refitting" in r.message for r in caplog.records)
     parts = sorted({r["part"] for r in resumed})
     assert parts == [1, 2, 3]
@@ -538,8 +544,10 @@ JOB_BUDGET = {
         7, lambda f: f.monitor.score_batch(f.test)),
     "CBPE.detect": (
         4, lambda f: f.cbpe.detect(f.test_ds)),
+    "fit_reference": (
+        3, lambda f: vd.fit_reference(f.ref, ["w", "h"], ["w", "h"])),
     "partition_verdicts": (
-        13, lambda f: vd.partition_verdicts(f.df, ["w", "h"], ["fmt", "hq"]).collect()),
+        7, lambda f: vd.partition_verdicts(f.df, ["w", "h"], ["fmt", "hq"]).collect()),
     "CheckpointManager.mark_done": (
         1, lambda f: f.ledger.mark_done("budget01", f.verdicts)),
 }
@@ -552,6 +560,84 @@ def test_operator_job_budget(spark, budget_frame, op):
     ceiling, call = JOB_BUDGET[op]
     jobs = _jobs_of(spark.sparkContext, lambda: call(budget_frame))
     assert jobs <= ceiling, (op, jobs)
+
+
+@pytest.mark.parametrize("call", ["partition_verdicts", "partition_verdicts[gk]",
+                                  "quantile_edges", "run_validation"])
+def test_worker_thread_jobs_keep_the_callers_job_group(spark, budget_frame, drifted, call):
+    """Every job a call submits, from driftspark's worker threads too,
+    carries the job group the caller set."""
+    from driftspark.runner import run_validation
+
+    f = budget_frame
+    fn = {
+        "partition_verdicts": lambda: vd.partition_verdicts(f.df, ["w", "h"], ["fmt"]),
+        "partition_verdicts[gk]": lambda: vd.partition_verdicts(
+            f.df, ["w", "h"], ["fmt"], approx_quantile_error=1e-3),
+        "quantile_edges": lambda: st.quantile_edges(f.ref, ["w", "h"], 10),
+        "run_validation": lambda: run_validation(drifted),
+    }[call]
+    sc = spark.sparkContext
+    label = f"caller-{uuid.uuid4().hex}"
+    before = _last_job_id(sc)
+    sc.setJobGroup(label, label)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = _last_job_id(sc) - before - 1
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert jobs > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(label)) == jobs
+
+
+def test_chi2_with_an_empty_reference_is_nan_and_passes(spark):
+    """chi2 against a reference with no category values has no expected
+    proportions: NaN statistic and p-value, computed without a numpy
+    warning, and the verdict passes with severity none and n_ref 0 — in
+    the batch suite and the streaming monitor alike."""
+    import warnings
+
+    from driftspark.streaming import StreamingDriftMonitor
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        stat, p, n_ref, n_test = vd.chi2_from_count_maps({}, {"a": 10, "b": 10})
+    assert np.isnan(stat) and np.isnan(p) and (n_ref, n_test) == (0, 20)
+
+    df = spark.createDataFrame(
+        [("ref", 0, None)] * 5 + [("test", 0, "a")] * 10 + [("test", 0, "b")] * 10,
+        "split string, part int, fmt string",
+    )
+    (row,) = partition_verdicts(df, [], ["fmt"], ks_cols=[]).collect()
+    assert row["check"] == "chi2" and np.isnan(row["statistic"]) and np.isnan(row["p_value"])
+    assert (row["severity"], row["passed"], row["n_ref"], row["n_test"]) == ("none", True, 0, 20)
+    monitor = StreamingDriftMonitor(df.where("split = 'ref'"), [], ks_cols=[], cat_cols=["fmt"])
+    (streamed,) = monitor.score_batch(df.where("split = 'test'"))
+    assert np.isnan(streamed["statistic"]) and np.isnan(streamed["p_value"])
+    assert (streamed["severity"], streamed["passed"]) == ("none", True)
+
+
+def test_chi2_with_every_category_replaced_fails(spark):
+    """A non-empty reference whose categories are all under min_samples
+    and absent from the test side (every category replaced) is not an
+    empty reference: stat inf, p 0, a critical failed verdict with the
+    reference's n_ref, computed without a numpy warning."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        stat, p, n_ref, n_test = vd.chi2_from_count_maps({"z": 4}, {"a": 10, "b": 10})
+    assert (stat, p, n_ref, n_test) == (float("inf"), 0.0, 4, 20)
+
+    df = spark.createDataFrame(
+        [("ref", 0, "z")] * 4 + [("test", 0, "a")] * 10 + [("test", 0, "b")] * 10,
+        "split string, part int, fmt string",
+    )
+    (row,) = partition_verdicts(df, [], ["fmt"], ks_cols=[]).collect()
+    assert (row["statistic"], row["p_value"]) == (float("inf"), 0.0)
+    assert (row["severity"], row["passed"], row["n_ref"], row["n_test"]) == (
+        "critical", False, 4, 20)
 
 
 def _null_part_warnings(records) -> list:
@@ -667,7 +753,7 @@ def test_resume_ignores_reference_only_part_ids(spark, monkeypatch):
         assert sorted({r["part"] for r in v.collect()}) == [0, 1]
         fits = []
         monkeypatch.setattr(
-            verdicts_mod, "quantile_edges", lambda *a, **k: fits.append(a) or {}
+            verdicts_mod, "fit_reference", lambda *a, **k: fits.append(a) or ({}, {}, {})
         )
         again = resumable_partition_drift(df, cp, "refonly01", **kw)
         assert again.count() == 0 and fits == []
