@@ -32,7 +32,7 @@ from functools import reduce
 from typing import Optional, Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
@@ -195,18 +195,16 @@ def _fit_state(pdf) -> Optional[tuple]:
     return edges, ref_counts, ecdf
 
 
-def _universe(suite) -> tuple:
+def _universe(df: DataFrame, is_ref: Column, is_test: Column, suite) -> tuple:
     """(the non-NULL test part ids, the fit fingerprint) from ONE
-    aggregation over both splits.  The fingerprint hashes the suite's fit
-    settings, the reference row count and an order-independent checksum
-    of the fitted reference columns: the decimal sum of per-row xxhash64
-    values cannot overflow under ANSI and, unlike an XOR, does not cancel
-    duplicate rows."""
-    split = F.col(suite.split_col)
-    is_ref = split == suite.ref_value
+    aggregation over both splits of ``df``.  The fingerprint hashes the
+    suite's fit settings, the reference row count and an
+    order-independent checksum of the fitted reference columns: the
+    decimal sum of per-row xxhash64 values cannot overflow under ANSI
+    and, unlike an XOR, does not cancel duplicate rows."""
     row_hash = F.xxhash64(*suite.fit_cols) if suite.fit_cols else F.lit(0)
     rows = (
-        suite.df.where(is_ref | (split == suite.test_value))
+        df.where(is_ref | is_test)
         .groupBy(
             is_ref.alias("is_ref"),
             F.when(~is_ref, F.col(suite.part_col)).alias("p"),
@@ -248,16 +246,19 @@ def resumable_partition_drift(
     invocation, typed like partition_verdicts' output even when nothing
     is pending.  The partitions are the non-NULL part ids of the TEST
     split, the ones partition_verdicts gives verdict rows."""
-    from driftspark.session import local_frame
-    from driftspark.verdicts import _concurrently, _verdict_schema, _VerdictSuite
+    from driftspark.session import concurrently, local_frame
+    from driftspark.verdicts import _verdict_schema, _VerdictSuite
 
+    split = F.col(verdict_kwargs.pop("split_col", "split"))
+    is_ref = split == verdict_kwargs.pop("ref_value", "ref")
+    is_test = split == verdict_kwargs.pop("test_value", "test")
     suite = _VerdictSuite(
-        df, numeric_cols, cat_cols, part_col=part_col, **verdict_kwargs
+        df.where(is_ref), numeric_cols, cat_cols, part_col=part_col, **verdict_kwargs
     )
     # the input and the ledger are different sources: read both at once
-    (all_parts, fingerprint), done = _concurrently(
+    (all_parts, fingerprint), done = concurrently(
         df.sparkSession,
-        lambda: _universe(suite),
+        lambda: _universe(df, is_ref, is_test, suite),
         lambda: checkpoint.completed_parts(run_id),
     )
     done = set(done)
@@ -274,7 +275,9 @@ def resumable_partition_drift(
         # score() returns a LocalRelation (session.local_frame): mark_done
         # and the caller's reads get its rows without a job and without
         # recomputation
-        v = suite.score(pending[i : i + batch_parts])
+        v = suite.score(
+            df.where(is_test & F.col(part_col).isin(pending[i : i + batch_parts]))
+        )
         checkpoint.mark_done(run_id, v, snapshot_id)
         batches.append(v)
     return reduce(DataFrame.unionByName, batches)

@@ -22,6 +22,7 @@ bit equality."""
 from __future__ import annotations
 
 import logging
+from functools import partial
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -32,6 +33,7 @@ from driftspark.numerics import severity_from_auc
 from driftspark.registry import DetectorRegistry
 from driftspark.results import DetectionResult, DriftSeverity
 from driftspark.sampling import content_keyed_top_n
+from driftspark.session import concurrently
 
 logger = logging.getLogger(__name__)
 
@@ -150,7 +152,6 @@ class DomainClassifier(BaseDriftDetector):
                 .collect()
             )
             n_by_side = {r["__side"]: r["n"] for r in counted}
-            capped = False
 
             def cap_side(side_df, total):
                 if self.sample_hash == "md5":
@@ -160,23 +161,16 @@ class DomainClassifier(BaseDriftDetector):
                 )
 
             # the xxhash64 pre-filter verification counts inside
-            # content_keyed_top_n are independent jobs per side — overlap
-            # them (MMD/partition_verdicts thread-pool precedent)
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                ref_fut = (
-                    pool.submit(cap_side, ref_side, n_by_side[0])
-                    if n_by_side.get(0, 0) > cap else None
-                )
-                test_fut = (
-                    pool.submit(cap_side, test_side, n_by_side[1])
-                    if n_by_side.get(1, 0) > cap else None
-                )
-                if ref_fut is not None:
-                    ref_side, capped = ref_fut.result(), True
-                if test_fut is not None:
-                    test_side, capped = test_fut.result(), True
+            # content_keyed_top_n are independent jobs per side: overlap them
+            sides = [ref_side, test_side]
+            over = [i for i in (0, 1) if n_by_side.get(i, 0) > cap]
+            for i, capped_side in zip(over, concurrently(
+                ref.df.sparkSession,
+                *[partial(cap_side, sides[i], n_by_side[i]) for i in over],
+            )):
+                sides[i] = capped_side
+            ref_side, test_side = sides
+            capped = bool(over)
         else:
             capped = False
         u = (
@@ -243,8 +237,6 @@ class DomainClassifier(BaseDriftDetector):
 
         auc_std = None
         if self.use_cross_val:
-            from concurrent.futures import ThreadPoolExecutor
-
             # deterministic content-keyed folds (partitioning-invariant);
             # md5 mode already carries the engine-portable fold column
             if "fold" in data.columns:
@@ -275,14 +267,13 @@ class DomainClassifier(BaseDriftDetector):
 
             # the k fold fits and the full-data importance fit are
             # independent Spark jobs — submit them concurrently (all
-            # JVM-side pyspark.ml work, same pattern as
-            # verdicts.partition_verdicts); wall time drops from 4 serial
+            # JVM-side pyspark.ml work); wall time drops from 4 serial
             # fits to ~max(one fit)
-            with ThreadPoolExecutor(max_workers=self.cv_folds + 1) as pool:
-                fold_futs = [pool.submit(fit_fold, k) for k in range(self.cv_folds)]
-                full_fut = pool.submit(fit_full)
-                scores = [f.result() for f in fold_futs]
-                self._classifier = full_fut.result()
+            *scores, self._classifier = concurrently(
+                folded.sparkSession,
+                *[partial(fit_fold, k) for k in range(self.cv_folds)],
+                fit_full,
+            )
             folded.unpersist()
             auc = float(np.mean(scores))
             auc_std = float(np.std(scores))

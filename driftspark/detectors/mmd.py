@@ -31,6 +31,7 @@ from driftspark.detectors.base import BaseDriftDetector
 from driftspark.numerics import severity_from_mmd
 from driftspark.registry import DetectorRegistry
 from driftspark.sampling import content_keyed_top_n
+from driftspark.session import concurrently
 from driftspark.results import DetectionResult, DriftSeverity
 
 logger = logging.getLogger(__name__)
@@ -146,14 +147,10 @@ class MMD(BaseDriftDetector):
 
         n_ref, n_test = counts.get(0, 0), counts.get(1, 0)
         # the two side collections are independent Spark jobs — overlap
-        # them (partition_verdicts thread-pool precedent) so the sample
-        # phase costs ~max(side) instead of the sum
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa = pool.submit(take, a, n_ref)
-            fb = pool.submit(take, b, n_test)
-            X, Y = fa.result(), fb.result()
+        # them so the sample phase costs ~max(side) instead of the sum
+        X, Y = concurrently(
+            a.sparkSession, lambda: take(a, n_ref), lambda: take(b, n_test)
+        )
         return X, n_ref, Y, n_test
 
     def _median_gamma(self, X: np.ndarray, Y: np.ndarray) -> float:

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import logging
 import zlib
+from functools import partial
 from typing import Any, List, Optional
 
 import numpy as np
@@ -28,6 +29,7 @@ from driftspark.dataset import SparkDataset
 from driftspark.registry import RCARegistry
 from driftspark.results import LocalizationResult, RCAResult
 from driftspark.sampling import content_keyed_top_n
+from driftspark.session import concurrently
 from driftspark.stats import moment_stats
 
 logger = logging.getLogger(__name__)
@@ -304,8 +306,6 @@ class PermutationImportanceRCA(BaseRootCauseAnalyzer):
         self.train_fraction = train_fraction
 
     def analyze(self, reference_data, test_data, localization=None, model=None) -> RCAResult:
-        from concurrent.futures import ThreadPoolExecutor
-
         import pandas as pd
         from pyspark.ml.classification import RandomForestClassifier
         from pyspark.ml.evaluation import BinaryClassificationEvaluator
@@ -382,8 +382,9 @@ class PermutationImportanceRCA(BaseRootCauseAnalyzer):
                 evaluator.evaluate(fitted.transform(assembler.transform(permuted)))
             )
 
-        with ThreadPoolExecutor(max_workers=min(len(cols), 8)) as pool:
-            permuted_aucs = dict(zip(cols, pool.map(score_permuted, cols)))
+        permuted_aucs = dict(zip(cols, concurrently(
+            spark, *[partial(score_permuted, c) for c in cols], max_workers=8
+        )))
         held_raw.unpersist()
 
         drops = {c: float(base_auc - a) for c, a in permuted_aucs.items()}

@@ -30,7 +30,7 @@ from typing import Any, Dict, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from driftspark.session import local_frame
+from driftspark.session import concurrently, local_frame
 
 
 @dataclass
@@ -113,7 +113,7 @@ def run_validation(
     from driftspark.constraints import referential_violations, uniqueness_check
     from driftspark.imageops import validate_image_payloads_auto
     from driftspark.profile import profile_columns
-    from driftspark.verdicts import _concurrently, partition_verdicts
+    from driftspark.verdicts import partition_verdicts
 
     # the image-table KS columns default to w/h — heavily quantized, where
     # pre-aggregating the broadcast-KS test side shrinks hot-partition
@@ -224,7 +224,7 @@ def run_validation(
             run_expectations(images, expectations, group_col=part_col)
         )
 
-    _concurrently(
+    concurrently(
         images.sparkSession,
         pass_profile,
         pass_uniqueness,

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import os
 from datetime import timezone
-from typing import Sequence, Union
+from typing import Callable, List, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, TimestampType
@@ -75,3 +75,24 @@ def local_frame(
         arrays.append(pa.array(values, type=arrow_field.type))
     table = pa.Table.from_arrays(arrays, schema=arrow_schema)
     return spark.createDataFrame(table, schema)
+
+
+def concurrently(
+    spark: SparkSession, *fns: Callable, max_workers: Optional[int] = None
+) -> List:
+    """Results of independent job-submitting callables, in order, run
+    concurrently (at most ``max_workers`` at once) so their scheduling
+    latency and shuffle waits overlap; a single callable runs inline.
+    Each runs with the caller's job group and local properties, cloned
+    per callable (pyspark.util.inheritable_thread_target): a plain thread
+    starts with none, so its jobs would lose the caller's tag.  This is
+    driftspark's one thread pool."""
+    if len(fns) <= 1:
+        return [fn() for fn in fns]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=min(len(fns), max_workers or len(fns))) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
+        return [f.result() for f in futures]

@@ -37,7 +37,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from driftspark.session import local_frame
+from driftspark.session import concurrently, local_frame
 
 logger = logging.getLogger(__name__)
 
@@ -89,38 +89,18 @@ def quantile_edges(
     """
     if not cols:
         return {}
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
     probs = F.array(*[F.lit(p) for p in _edge_probs(q)])
 
     def one(c: str):
-        return c, df.agg(
-            F.percentile(nn(c), probs).alias("pct"),
-            F.min(nn(c)).alias("mn"),
-            F.max(nn(c)).alias("mx"),
-        ).first()
+        return lambda: df.agg(F.percentile(nn(c), probs)).first()[0]
 
     # these are tiny driver .first() collects over the py4j socket, NOT
     # Arrow streams — the box's ~8-concurrent-Arrow-stream knee
     # (CLAUDE.md) does not apply, so nesting inside the verdict/runner
-    # pools is safe.  Each job carries the caller's job group (one
-    # wrapper per call: each clones the caller's local properties)
-    if len(cols) == 1:
-        rows = dict([one(cols[0])])
-    else:
-        with ThreadPoolExecutor(max_workers=min(len(cols), 8)) as pool:
-            futures = [
-                pool.submit(inheritable_thread_target(df.sparkSession)(one), c)
-                for c in cols
-            ]
-            rows = dict(f.result() for f in futures)
-    return {
-        c: _edges_of(rows[c]["pct"], rows[c]["mn"], rows[c]["mx"], q)
-        for c in cols
-        if rows[c]["pct"] is not None  # None: an all-null column
-    }
+    # pools is safe
+    pct = concurrently(df.sparkSession, *map(one, cols), max_workers=8)
+    # None: an all-null column
+    return {c: _edges_of(p, q) for c, p in zip(cols, pct) if p is not None}
 
 
 def approx_quantile_edges(
@@ -142,7 +122,7 @@ def approx_quantile_edges(
         return {}
     raw = df.approxQuantile(list(cols), _edge_probs(q), relative_error)
     return {
-        c: _edges_of(e, e[0], e[-1], q)
+        c: _edges_of(e, q)
         for c, e in zip(cols, raw)
         if len(e)  # empty: an all-null column
     }
@@ -153,12 +133,15 @@ def _edge_probs(q: int) -> List[float]:
     return [i / q for i in range(q + 1)]
 
 
-def _edges_of(quantiles, lo, hi, q: int) -> np.ndarray:
+def _edges_of(quantiles, q: int) -> np.ndarray:
     """THE edge post-processing of every quantile route (psi.py:70-82):
     duplicate quantiles dropped; a constant column (one distinct
-    quantile) falls back to uniform ``linspace(lo, hi, q + 1)`` edges."""
+    quantile) falls back to q + 1 copies of it.  That equals the
+    reference's ``linspace(min, max, q + 1)`` (min == max) on finite
+    values; linspace gives NaN edges for a column of only +inf (or only
+    -inf)."""
     edges = np.unique(np.asarray(quantiles, dtype=np.float64))
-    return edges if len(edges) >= 2 else np.linspace(lo, hi, q + 1)
+    return edges if len(edges) >= 2 else np.full(q + 1, edges[0])
 
 
 def _exact_quantiles(values: np.ndarray, cums: np.ndarray, q: int) -> np.ndarray:

@@ -9,15 +9,14 @@ computed in ``foreachBatch`` against a once-fitted reference state and
 appended to a verdict sink.  Late data is handled by watermarked
 event-time windows when a timestamp column is provided.
 
-Design: ALL fit state — PSI bin edges + reference proportions, the
-mass-quantum-thinned KS reference ECDF, and the cardinality-guarded
-chi-square category counts — is computed ONCE from the static reference
-DataFrame and captured in the closure (tiny, broadcast by Spark with each
-task); the stream never rescans the reference.  Each micro-batch runs the
-same plans as the batch paths — the keyed counts of driftspark.stats
-(key_counts, and the one category cap _cap_categories) — so batch and
-streaming verdicts are numerically identical for identical input rows
-(equality-locked tests); the cumulative operators melt with the same
+Design: the monitor's PSI and KS ARE the batch verdict engine,
+driftspark.verdicts._VerdictSuite, fitted once on the static reference
+(edges, reference histogram, KS ECDF broadcast once); it scores each
+micro-batch as ONE partition, so batch and streaming verdicts are equal
+on identical rows (parity-locked test).  chi2 scores against the
+monitor's own fitted reference category counts, whose over-cap rule pins
+the fitted members where the batch rule ranks ref ∪ test.  The stream
+never rescans the reference; the cumulative operators melt with the same
 stats._melt_keys.
 
 Surfaces:
@@ -42,17 +41,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from driftspark.numerics import psi_from_proportions, severity_from_psi
-from driftspark.session import local_frame
+from driftspark.session import concurrently, local_frame
 from driftspark.stats import (
     CHI2_OTHER_BUCKET,
     _cap_categories,
     _melt_keys,
-    _proportions,
     bucket_expr,
     key_counts,
 )
 
 logger = logging.getLogger(__name__)
+
+#: the part column a micro-batch is scored under: one literal partition
+_BATCH = "__batch"
+#: score_batch's row keys: a verdict row (verdicts.VERDICT_SCHEMA) less part
+_ROW_KEYS = (
+    "feature", "check", "statistic", "p_value", "severity", "passed", "n_ref", "n_test"
+)
 
 
 class StreamingDriftMonitor:
@@ -67,9 +72,11 @@ class StreamingDriftMonitor:
 
     Each micro-batch appends one verdict row per (feature, check) to the
     sink: (batch_id, feature, check, statistic, p_value, severity, passed,
-    n_test, processed_at) — the same row shape as the batch
-    partition-verdict suite, with checks "psi", "ks" and (when
-    ``cat_cols`` is given) "chi2".
+    n_test, processed_at), with checks "psi", "ks" and (when ``cat_cols``
+    is given) "chi2"; n_test is the micro-batch's row count.  PSI and KS
+    come from :attr:`suite`, the batch verdict suite fitted once in the
+    constructor (``max_ref_ecdf_points`` its driver-row budget), which
+    scores each micro-batch as one partition.
     """
 
     def __init__(
@@ -86,14 +93,8 @@ class StreamingDriftMonitor:
         chi2_threshold: float = 0.05,
         max_categories: int = 1000,
     ):
-        from driftspark.verdicts import fit_ref_category_counts, fit_reference
+        from driftspark.verdicts import _VerdictSuite, fit_ref_category_counts
 
-        self.numeric_cols = list(numeric_cols)
-        self.n_bins = n_bins
-        self.psi_threshold = psi_threshold
-        self.min_bin_size = min_bin_size
-        self.ks_cols = list(numeric_cols if ks_cols is None else ks_cols)
-        self.ks_threshold = ks_threshold
         self.cat_cols = list(cat_cols)
         self.chi2_threshold = chi2_threshold
         self.max_categories = max_categories
@@ -103,97 +104,40 @@ class StreamingDriftMonitor:
         self.ref_cat_counts, self._capped_cats = fit_ref_category_counts(
             reference_df, self.cat_cols, max_categories
         )
-        # fit once on the static reference, as the batch verdict suite
-        # does (verdicts.fit_reference, max_ref_ecdf_points its budget):
-        # edges + reference proportions + the broadcast ECDF are the only
-        # state the stream needs
-        self.edges, ref_counts, self.ks_ecdf = fit_reference(
-            reference_df, self.numeric_cols, self.ks_cols, n_bins, None,
-            max_ref_ecdf_points,
-        )
-        self.ref_props = {c: _proportions(n) for c, n in ref_counts.items()}
-        # broadcast the fitted ECDF ONCE: per-trigger scoring passes this
-        # handle so the (potentially tens-of-MB) state is not re-serialized
-        # and re-shipped on every micro-batch
-        self._b_ks_ecdf = (
-            reference_df.sparkSession.sparkContext.broadcast(self.ks_ecdf)
-            if self.ks_ecdf
-            else None
-        )
+        self.suite = _VerdictSuite(
+            reference_df, list(numeric_cols), part_col=_BATCH,
+            psi_threshold=psi_threshold, ks_threshold=ks_threshold, n_bins=n_bins,
+            ks_cols=ks_cols, min_bin_size=min_bin_size,
+        ).fit(max_ref_ecdf_points)
 
     def score_batch(self, batch_df: DataFrame) -> list:
         """Verdict rows for one (micro-)batch — shared by foreachBatch and
-        direct batch calls, so streaming == batch numerics.  Each row:
-        {feature, check, statistic, p_value, severity, passed}."""
-        from driftspark.numerics import ks_2samp_pvalue
-        from driftspark.verdicts import ks_d_against_ecdf, pvalue_verdict
+        direct batch calls.  Each row: {feature, check, statistic, p_value,
+        severity, passed, n_ref, n_test}, the counts those of the check as
+        in partition_verdicts.  PSI and KS are the suite's rows for the
+        batch as one partition, run concurrently with chi2."""
+        verdicts, chi2 = concurrently(
+            batch_df.sparkSession,
+            lambda: self.suite.rows(batch_df.withColumn(_BATCH, F.lit(0))),
+            lambda: self._chi2_rows(batch_df),
+        )
+        return [dict(zip(_ROW_KEYS, row[1:])) for row in verdicts + chi2]
 
-        hists = self._bin_props(batch_df)
-        rows = []
-        for c, test_p in hists.items():
-            psi = (
-                psi_from_proportions(self.ref_props[c], test_p, self.min_bin_size)
-                if test_p.sum() > 0
-                else 0.0
-            )
-            rows.append(
-                {
-                    "feature": c,
-                    "check": "psi",
-                    "statistic": float(psi),
-                    "p_value": None,
-                    "severity": severity_from_psi(psi),
-                    "passed": bool(psi < self.psi_threshold),
-                }
-            )
-        if self.ref_cat_counts:
-            from driftspark.verdicts import chi2_from_count_maps
+    def _chi2_rows(self, batch_df: DataFrame) -> list:
+        """The batch's chi2 verdict rows (the suite's row layout) against
+        the fitted reference category counts."""
+        from driftspark.verdicts import chi2_from_count_maps, pvalue_verdict
 
-            by_feat = self._batch_cat_counts(batch_df)
-            for c in self.cat_cols:
-                stat, p, _, _ = chi2_from_count_maps(self.ref_cat_counts[c], by_feat[c])
-                severity, passed = pvalue_verdict(p, self.chi2_threshold)
-                rows.append(
-                    {
-                        "feature": c,
-                        "check": "chi2",
-                        "statistic": stat,
-                        "p_value": float(p),
-                        "severity": severity,
-                        "passed": passed,
-                    }
-                )
-        if self.ks_ecdf:
-            ks_rows = ks_d_against_ecdf(
-                batch_df.withColumn("__grp", F.lit(0)),
-                [c for c in self.ks_cols if c in self.ks_ecdf],
-                self._b_ks_ecdf,
-                "__grp",
-            ).collect()
-            for r in ks_rows:
-                d, n, m = float(r["d"]), int(r["n"]), int(r["m"])
-                p = ks_2samp_pvalue(d, n, m)
-                severity, passed = pvalue_verdict(p, self.ks_threshold)
-                rows.append(
-                    {
-                        "feature": r["feature"],
-                        "check": "ks",
-                        "statistic": d,
-                        "p_value": float(p),
-                        "severity": severity,
-                        "passed": passed,
-                    }
-                )
-        return rows
-
-    def _bin_props(self, df: DataFrame) -> Dict[str, np.ndarray]:
-        """{feature: in-range proportion per fitted bin} of ``df`` — all
-        zeros for an empty frame."""
-        from driftspark.verdicts import _ref_bin_counts
-
-        if not self.edges:
-            return {}
-        return {c: _proportions(n) for c, n in _ref_bin_counts(df, self.edges).items()}
+        if not self.cat_cols:
+            return []
+        by_feat = self._batch_cat_counts(batch_df)
+        return [
+            (0, c, "chi2", stat, p, *pvalue_verdict(p, self.chi2_threshold), n_ref, n_test)
+            for c in self.cat_cols
+            for stat, p, n_ref, n_test in [
+                chi2_from_count_maps(self.ref_cat_counts[c], by_feat[c])
+            ]
+        ]
 
     def _batch_cat_counts(self, batch_df: DataFrame) -> dict:
         """Cardinality-guarded per-feature category counts for one batch —

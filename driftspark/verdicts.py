@@ -9,13 +9,14 @@ yielding one verdict row per (partition, feature, check).
 
 Scale design — a fit, then two short job chains per scored batch:
 * The PSI and KS reference state is fitted once and every batch of
-  partitions scores against it (:class:`_VerdictSuite`).  The fit is ONE
-  distinct-value count of the reference (:func:`fit_reference`), bounded
-  by :data:`MAX_REF_ECDF_POINTS` rows on its way to the driver, where it
-  gives the exact PSI edges, the reference histogram and the KS ECDF;
-  over that budget the separate fits (per-column ``percentile`` edges,
-  a bin count, the ECDF thinned from the same persisted count) run
-  instead.
+  partitions scores against it (:class:`_VerdictSuite`, also the
+  streaming monitor's PSI and KS: a micro-batch is one partition).  The
+  fit is ONE distinct-value count of the reference (:func:`fit_reference`),
+  bounded by :data:`MAX_REF_ECDF_POINTS` rows on its way to the driver,
+  where it gives the exact PSI edges, the reference histogram and the KS
+  ECDF; over that budget the separate fits (per-column ``percentile``
+  edges, a bin count, the ECDF thinned from the same persisted count)
+  run instead.
 * PSI and chi-square share ONE count through the keyed-count primitive,
   driftspark.stats.key_counts (:func:`_score_counts`): the test rows,
   plus the reference rows when chi-square (or psi_by_partition, which
@@ -25,8 +26,9 @@ Scale design — a fit, then two short job chains per scored batch:
   NULL-part drop counts and the category counts the cap needs; a
   chi-square feature over its category cap folds its tail in Spark
   (stats._cap_categories).  PSI is then
-  numerics.psi_from_proportions per (part, feature) on the driver — the
-  streaming monitor's math — and chi-square likewise.
+  numerics.psi_from_proportions per (part, feature) on the driver, and
+  chi-square likewise (chi2_from_count_maps, also the streaming
+  monitor's).
 * KS D scores each (part, feature) test group against the fitted
   reference ECDF (thinned, when over budget, on the exact cumulative frame
   of driftspark.stats).  Preaggregated test counts within the row budget
@@ -55,7 +57,7 @@ from driftspark.numerics import (
     severity_from_psi,
     severity_from_pvalue,
 )
-from driftspark.session import local_frame
+from driftspark.session import concurrently, local_frame
 from driftspark.stats import (
     _CDF_BUCKETED_THRESHOLD,
     _W1_QUANTIZE,
@@ -96,8 +98,7 @@ VERDICT_SCHEMA = (
 def _ref_bin_counts(ref_df: DataFrame, edges_map: Dict[str, np.ndarray]):
     """{feature: in-range count per fitted bin} of one frame, from one
     :func:`key_counts` — the global reference histogram every partition's
-    PSI scores against, or one streaming micro-batch's.  All-zero for an
-    empty frame."""
+    PSI scores against.  All-zero for an empty frame."""
     out = {f: np.zeros(len(e) - 1, np.int64) for f, e in edges_map.items()}
     keys = {c: bucket_expr(c, e) for c, e in edges_map.items()}
     for r in key_counts(ref_df, keys).where(F.col("key").isNotNull()).collect():
@@ -669,7 +670,7 @@ def fit_reference(
         return approx_quantile_edges(ref_df, numeric_cols, n_bins, approx_quantile_error)
 
     try:
-        points, edges = _concurrently(spark, scan, gk_edges) if gk else (scan(), None)
+        points, edges = concurrently(spark, scan, gk_edges) if gk else (scan(), None)
         if points is None or any(len(points[c][0]) > share for c in ks_cols if c in points):
             points = None  # the driver holds no collected rows from here
 
@@ -683,14 +684,14 @@ def fit_reference(
                 nd = _distinct_totals(counts.where(F.col("feature").isin(ks_cols)))
                 return _ecdf_points_of(counts, nd, share)
 
-            (edges, ref_counts), ecdf = _concurrently(spark, psi, ks)
+            (edges, ref_counts), ecdf = concurrently(spark, psi, ks)
             return edges, ref_counts, ecdf
     finally:
         counts.unpersist()
 
     if edges is None:
         edges = {
-            c: _edges_of(_exact_quantiles(v, cums, n_bins), v[0], v[-1], n_bins)
+            c: _edges_of(_exact_quantiles(v, cums, n_bins), n_bins)
             for c in numeric_cols
             if c in points
             for v, cums in [points[c]]
@@ -742,10 +743,11 @@ def ks_d_against_ecdf(
     vs a PRE-FITTED broadcast reference ECDF (see fit_ks_reference_ecdf).
 
     ``ecdf`` is the fitted dict OR an existing ``pyspark.Broadcast`` of it
-    (repeat callers — the streaming monitor — broadcast once and pass the
-    handle).  Columns absent from the fitted state are skipped with a
-    warning; test rows with a NULL ``part_col`` are excluded (the verdict
-    suite's psi/chi2 paths count and warn about the same rows).
+    (repeat callers — the verdict suite, scoring every resume batch or
+    micro-batch — broadcast once and pass the handle).  Columns absent
+    from the fitted state are skipped with a warning; test rows with a
+    NULL ``part_col`` are excluded (the verdict suite's psi/chi2 paths
+    count and warn about the same rows).
 
     ``preaggregate=True`` reduces the test side to (part, feature, value,
     count) first — for QUANTIZED columns (image sizes, enum-ish ints; the
@@ -762,16 +764,15 @@ def ks_d_against_ecdf(
     where pre-aggregation would double the shuffled volume for no
     shrink."""
     spark = test_df.sparkSession
-    # accept a pre-made Broadcast so a long-running caller (the streaming
-    # monitor scores every micro-batch against the same fitted state) does
-    # not re-serialize and re-ship up to max_ref_ecdf_points pairs per call
+    # accept a pre-made Broadcast so a long-running caller (the verdict
+    # suite scores every batch against the same fitted state) does not
+    # re-serialize and re-ship up to max_ref_ecdf_points pairs per call
     from pyspark.broadcast import Broadcast
 
     fitted = ecdf.value if isinstance(ecdf, Broadcast) else ecdf
     # a column absent from the fitted state (all-NULL/NaN reference
     # column — fit_ks_reference_ecdf's melt drops it) cannot be scored:
-    # skip it loudly instead of a KeyError inside applyInPandas (the
-    # streaming monitor applies the same filter, streaming.py)
+    # skip it loudly instead of a KeyError inside applyInPandas
     missing = [c for c in cols if c not in fitted]
     if missing:
         logger.warning(
@@ -788,7 +789,8 @@ def ks_d_against_ecdf(
 
     # NULL-part rows are excluded like psi/chi2 (which count + warn about
     # them in the verdict suite) — a part=NULL verdict row belongs to no
-    # partition; the filter is free (streaming's literal group never is)
+    # partition; the filter is free (a streaming micro-batch's literal
+    # part never is)
     melted = _melt(test_df, cols, part_col).where(
         F.col("part").isNotNull()
     )
@@ -1011,37 +1013,22 @@ def _verdict_schema(df: DataFrame, part_col: str) -> str:
     return VERDICT_SCHEMA.replace("part int", f"part {part_type}", 1)
 
 
-def _concurrently(spark, *fns) -> list:
-    """Results of independent job-submitting callables run concurrently,
-    so their scheduling latency and shuffle waits overlap.  Each runs with
-    the caller's job group and local properties, cloned per callable
-    (pyspark.util.inheritable_thread_target): a plain thread starts with
-    none, so its jobs would lose the caller's tag."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-        futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
-        return [f.result() for f in futures]
-
-
 @dataclass
 class _VerdictSuite:
-    """:func:`partition_verdicts` as a reference FIT plus a per-batch
-    SCORE.  :meth:`fit` takes the PSI edges, the reference bin counts and
-    the KS ECDF from one :func:`fit_reference` scan; :meth:`use_fit` takes
-    the same state loaded from a checkpoint.  Every :meth:`score` reuses
-    that state, fitting it first when there is none.  chi2 (its category
-    cap counts ref ∪ test) and W1 read the reference on every score."""
+    """THE verdict engine of :func:`partition_verdicts`, the checkpointed
+    resume and the streaming monitor: a reference FIT plus a SCORE of any
+    test frame.  :meth:`fit` takes the PSI edges, the reference bin counts
+    and the KS ECDF of ``ref_df`` from one :func:`fit_reference` scan;
+    :meth:`use_fit` takes the same state loaded from a checkpoint.
+    :meth:`rows` scores every partition of a test frame against that
+    state, fitting it first when there is none: a resume batch is a few
+    partitions, a streaming micro-batch is one.  chi2 (its category cap
+    counts ref ∪ test) and W1 read the reference on every score."""
 
-    df: DataFrame
+    ref_df: DataFrame
     numeric_cols: Sequence[str]
     cat_cols: Sequence[str] = ()
     part_col: str = "part"
-    split_col: str = "split"
-    ref_value: str = "ref"
-    test_value: str = "test"
     psi_threshold: float = 0.2
     ks_threshold: float = 0.05
     chi2_threshold: float = 0.05
@@ -1052,10 +1039,9 @@ class _VerdictSuite:
     ks_preaggregate: bool = False
     w1_cols: Optional[Sequence[str]] = None
     w1_threshold: float = 0.1
+    min_bin_size: float = 0.001
 
     def __post_init__(self):
-        self.ref_df = self.df.where(F.col(self.split_col) == self.ref_value)
-        self.test_df = self.df.where(F.col(self.split_col) == self.test_value)
         self.ks_cols = list(self.numeric_cols if self.ks_cols is None else self.ks_cols)
         # (edges, reference bin counts, KS ECDF dict or None) once fitted
         self.fitted: Optional[tuple] = None
@@ -1072,20 +1058,22 @@ class _VerdictSuite:
         rows themselves."""
         return [
             list(self.numeric_cols), self.ks_cols, self.n_bins,
-            self.approx_quantile_error, self.split_col, self.ref_value,
-            MAX_REF_ECDF_POINTS,
+            self.approx_quantile_error, MAX_REF_ECDF_POINTS,
         ]
 
-    def fit(self) -> "_VerdictSuite":
+    def fit(self, max_points: Optional[int] = None) -> "_VerdictSuite":
+        """Fit the reference, ``max_points`` (default
+        :data:`MAX_REF_ECDF_POINTS`) the driver-row budget."""
         edges, ref_counts, ecdf = fit_reference(
             self.ref_df, self.numeric_cols, self.ks_cols, self.n_bins,
-            self.approx_quantile_error, MAX_REF_ECDF_POINTS,
+            self.approx_quantile_error,
+            MAX_REF_ECDF_POINTS if max_points is None else max_points,
         )
         if self.numeric_cols and not edges:
             # every numeric column all-NULL in the reference: no fitted
             # bins means no PSI verdicts, not a failed verdict suite
             logger.warning(
-                "partition_verdicts: no PSI edges could be fitted for %s "
+                "verdict suite: no PSI edges could be fitted for %s "
                 "(all-NULL reference columns?) — PSI checks skipped",
                 list(self.numeric_cols),
             )
@@ -1099,20 +1087,18 @@ class _VerdictSuite:
         ecdf = ecdf if self.ks_cols else None
         self.fitted = (edges, ref_counts, ecdf)
         self._b_ecdf = (
-            None if ecdf is None else self.df.sparkSession.sparkContext.broadcast(ecdf)
+            None if ecdf is None else self.ref_df.sparkSession.sparkContext.broadcast(ecdf)
         )
         return self
 
-    def score(self, parts: Optional[Sequence] = None) -> DataFrame:
-        """The verdict DataFrame for the test partitions in ``parts`` (all
-        of them when None), built on the driver from two concurrent job
-        chains — the PSI + chi2 count and the KS scoring — plus W1 when
-        asked for.  Fits the reference first when it is not fitted."""
+    def rows(self, test_df: DataFrame) -> List[tuple]:
+        """The verdict rows (VERDICT_SCHEMA order) of every partition of
+        ``test_df``, built on the driver from two concurrent job chains —
+        the PSI + chi2 count and the KS scoring — plus W1 when asked for.
+        Fits the reference first when it is not fitted."""
         if self.fitted is None:
             self.fit()
-        ref_df, test_df, part_col = self.ref_df, self.test_df, self.part_col
-        if parts is not None:
-            test_df = test_df.where(F.col(part_col).isin(list(parts)))
+        ref_df, part_col = self.ref_df, self.part_col
         edges, ref_counts, _ = self.fitted
 
         def run_counts():
@@ -1123,7 +1109,10 @@ class _VerdictSuite:
                 ref_df, test_df, edges, self.cat_cols, part_col,
                 ref_psi=False, max_categories=self.max_categories,
             )
-            return _psi_rows(hists, ref_counts), _chi2_rows(ref_cats, test_cats)
+            return (
+                _psi_rows(hists, ref_counts, self.min_bin_size),
+                _chi2_rows(ref_cats, test_cats),
+            )
 
         def run_ks():
             if self._b_ecdf is None:
@@ -1145,8 +1134,8 @@ class _VerdictSuite:
             stds = {c: s for c, (mu, s) in moment_stats(ref_df, w1_cols).items()}
             return w1_by_partition(ref_df, test_df, w1_cols, part_col).collect(), stds
 
-        (psi_rows, chi2_rows), ks_rows, (w1_rows, w1_stds) = _concurrently(
-            self.df.sparkSession, run_counts, run_ks, run_w1
+        (psi_rows, chi2_rows), ks_rows, (w1_rows, w1_stds) = concurrently(
+            ref_df.sparkSession, run_counts, run_ks, run_w1
         )
 
         rows = [
@@ -1178,7 +1167,15 @@ class _VerdictSuite:
                      severity_from_ratio(norm / self.w1_threshold),
                      norm < self.w1_threshold, int(r["n"]), int(r["m"]))
                 )
-        return local_frame(self.df.sparkSession, rows, _verdict_schema(self.df, part_col))
+        return rows
+
+    def score(self, test_df: DataFrame) -> DataFrame:
+        """:meth:`rows` as a driver-built verdict DataFrame, the part
+        column typed as ``test_df``'s."""
+        return local_frame(
+            self.ref_df.sparkSession, self.rows(test_df),
+            _verdict_schema(test_df, self.part_col),
+        )
 
 
 def partition_verdicts(
@@ -1210,11 +1207,15 @@ def partition_verdicts(
     to a subset of partitions (checkpoint.resumable_partition_drift scores
     its batches on one fitted :class:`_VerdictSuite` instead).
     """
+    split = F.col(split_col)
+    test_df = df.where(split == test_value)
+    if parts is not None:
+        test_df = test_df.where(F.col(part_col).isin(list(parts)))
     return _VerdictSuite(
-        df, numeric_cols, cat_cols, part_col=part_col, split_col=split_col,
-        ref_value=ref_value, test_value=test_value, psi_threshold=psi_threshold,
-        ks_threshold=ks_threshold, chi2_threshold=chi2_threshold, n_bins=n_bins,
+        df.where(split == ref_value), numeric_cols, cat_cols, part_col=part_col,
+        psi_threshold=psi_threshold, ks_threshold=ks_threshold,
+        chi2_threshold=chi2_threshold, n_bins=n_bins,
         approx_quantile_error=approx_quantile_error, ks_cols=ks_cols,
         max_categories=max_categories, ks_preaggregate=ks_preaggregate,
         w1_cols=w1_cols, w1_threshold=w1_threshold,
-    ).score(parts)
+    ).score(test_df)

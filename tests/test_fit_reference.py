@@ -89,7 +89,8 @@ def test_fit_reference_bit_identical_to_separate_fits(
     monkeypatch.setattr(vd, "_ref_bin_counts", lambda *a: calls.append(a) or real(*a))
     monkeypatch.setattr(vd, "_distinct_counts", lambda *a: counted.append(a) or real_counts(*a))
     suite = vd._VerdictSuite(
-        degenerate_ref, NUMERIC, ks_cols=KS, n_bins=n_bins, approx_quantile_error=approx
+        degenerate_ref.where("split = 'ref'"), NUMERIC, ks_cols=KS, n_bins=n_bins,
+        approx_quantile_error=approx,
     )
     got = suite.fit().fitted
     assert len(calls) == (0 if budget is None else 1)
@@ -124,3 +125,38 @@ def test_fit_reference_without_columns_or_values(spark, degenerate_ref):
     assert vd.fit_reference(ref, [], [], 10) == ({}, {}, {})
     edges, counts, ecdf = vd.fit_reference(ref, ["nulls", "ties"], ["nulls"], 10)
     assert list(edges) == list(counts) == ["ties"] and ecdf == {}
+
+
+def test_all_inf_reference_column_gets_nan_free_edges(spark):
+    """A reference column holding only +inf (or only -inf) is a constant
+    column: every quantile route gives q + 1 copies of it, with no NaN
+    edge and no numpy warning, so all its reference rows land in bin 0 and
+    a test partition of the same value scores PSI 0."""
+    import warnings
+
+    rows = [("ref", 0, float("inf"), float("-inf"))] * 40
+    rows += [("test", 1, float("inf"), float("-inf"))] * 25
+    df = spark.createDataFrame(rows, "split string, part int, pinf double, ninf double")
+    ref = df.where("split = 'ref'")
+    cols = ["pinf", "ninf"]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        fits = {
+            "quantile_edges": st.quantile_edges(ref, cols, 10),
+            "approx_quantile_edges": st.approx_quantile_edges(ref, cols, 10, 1e-3),
+            "fit_reference": vd.fit_reference(ref, cols, cols, 10)[0],
+            "fit_reference[over budget]": vd.fit_reference(ref, cols, cols, 10, None, 1)[0],
+        }
+    for route, edges in fits.items():
+        for c, v in (("pinf", float("inf")), ("ninf", float("-inf"))):
+            assert np.array_equal(edges[c], np.full(11, v)), (route, c, edges[c])
+    counts = vd._ref_bin_counts(ref, fits["quantile_edges"])
+    for c in cols:
+        assert counts[c].tolist() == [40] + [0] * 9, (c, counts[c])
+    psi = {
+        r["feature"]: r
+        for r in vd.partition_verdicts(df, cols, ks_cols=[]).collect()
+    }
+    for c in cols:
+        assert (psi[c]["statistic"], psi[c]["n_ref"], psi[c]["n_test"]) == (0.0, 40, 25), psi[c]
+        assert psi[c]["passed"] and psi[c]["severity"] == "none"

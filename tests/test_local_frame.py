@@ -102,6 +102,16 @@ def test_no_list_built_frames_in_result_modules():
         assert "createDataFrame(" not in (PKG / f"{mod}.py").read_text(), mod
 
 
+def test_one_thread_pool():
+    """driftspark's concurrency goes through session.concurrently, the one
+    ThreadPoolExecutor, whose worker threads keep the caller's job group."""
+    users = sorted(
+        str(p.relative_to(PKG)) for p in PKG.rglob("*.py")
+        if "ThreadPoolExecutor" in p.read_text()
+    )
+    assert users == ["session.py"], users
+
+
 def _jobs(spark, label, fn):
     """Spark job ids that ``fn`` submits, tagged under a fresh job group."""
     sc = spark.sparkContext

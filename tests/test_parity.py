@@ -379,9 +379,9 @@ def _check_streaming_monitor(ref, test, ref_rows, test_rows):
     for k in (1000, 12, 4):
         mon = StreamingDriftMonitor(fit_df, ["x", "y"], ks_cols=[], cat_cols=["cat", "y"],
                                     max_categories=k)
-        mon.edges = DEGENERATE_EDGES
-        mon.ref_props = mon._bin_props(fit_df)
-        _eq(mon.ref_props, {c: _props(fit_rows, c) for c in DEGENERATE_EDGES})
+        bin_counts = vd._ref_bin_counts(fit_df, DEGENERATE_EDGES)
+        _eq(bin_counts, {c: _hist(fit_rows, c) for c in DEGENERATE_EDGES})
+        mon.suite.use_fit(DEGENERATE_EDGES, bin_counts, None)
         ref_counts = {c: _capped(_cat_counts(fit_rows, c), k) for c in ("cat", "y")}
         _eq(mon.ref_cat_counts, ref_counts)
         want = {}
@@ -394,10 +394,12 @@ def _check_streaming_monitor(ref, test, ref_rows, test_rows):
             want[c] = _capped(dict(batch), k, pinned=set(ref_counts[c]))
         _eq(mon._batch_cat_counts(test), want)
         got = {(r["feature"], r["check"]): r["statistic"] for r in mon.score_batch(test)}
-        for c in DEGENERATE_EDGES:
-            t = _props(test_rows, c)
-            psi = nm.psi_from_proportions(mon.ref_props[c], t, 0.001) if t.sum() > 0 else 0.0
-            _eq(got[c, "psi"], float(psi))
+        # the batch rule: an empty batch is no partition, so no PSI row
+        want_psi = {
+            c: float(nm.psi_from_proportions(_props(fit_rows, c), _props(test_rows, c), 0.001))
+            for c in DEGENERATE_EDGES
+        } if test_rows else {}
+        _eq({c: v for (c, check), v in got.items() if check == "psi"}, want_psi)
         for c in ("cat", "y"):
             _eq(got[c, "chi2"], vd.chi2_from_count_maps(ref_counts[c], want[c])[0])
 
