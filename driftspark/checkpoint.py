@@ -11,8 +11,8 @@ row per partition per completed batch.  A partition that is marked done
 twice keeps both rows; readers count each (run_id, part) once, with its
 latest row.
 
-The ledger directory also holds the fitted PSI/KS reference state of each
-run, at ``<path>/_fit/run_id=<id>/fp=<fingerprint>``: one small parquet
+The ledger directory also holds the fitted PSI/KS/chi2 reference state of
+each run, at ``<path>/_fit/run_id=<id>/fp=<fingerprint>``: one small parquet
 frame plus its ``_SUCCESS`` marker.  Spark's file reader skips
 ``_``-prefixed names, so reading the ledger never sees it.  A resume with
 the same run_id and fingerprint loads that state instead of refitting; the
@@ -39,8 +39,12 @@ from pyspark.sql.utils import AnalysisException
 logger = logging.getLogger(__name__)
 
 #: one row per fitted (family, feature): PSI edges with the reference bin
-#: counts, or the KS ECDF's sorted values with their cumulative counts
-FIT_SCHEMA = "family string, feature string, values array<double>, counts array<bigint>"
+#: counts, the KS ECDF's sorted values with their cumulative counts, or
+#: the chi2 reference categories (``keys``) with their capped counts
+FIT_SCHEMA = (
+    "family string, feature string, values array<double>, counts array<bigint>, "
+    "keys array<string>"
+)
 
 
 class CheckpointManager:
@@ -144,12 +148,14 @@ class CheckpointManager:
 
     def save_fit(self, run_id: str, fingerprint: str, state: tuple) -> None:
         """Persist a fitted suite state (edges, reference bin counts, KS
-        ECDF or None) for ``run_id`` under ``fingerprint``."""
+        ECDF or None, reference category counts) for ``run_id`` under
+        ``fingerprint``."""
         from driftspark.session import local_frame
 
-        edges, ref_counts, ecdf = state
-        rows = [("psi", f, e, ref_counts[f]) for f, e in edges.items()]
-        rows += [("ks", f, v, c) for f, (v, c, _) in (ecdf or {}).items()]
+        edges, ref_counts, ecdf, ref_cats = state
+        rows = [("psi", f, e, ref_counts[f], None) for f, e in edges.items()]
+        rows += [("ks", f, v, c, None) for f, (v, c, _) in (ecdf or {}).items()]
+        rows += [("chi2", f, None, list(m.values()), list(m)) for f, m in ref_cats.items()]
         local_frame(self.spark, rows, FIT_SCHEMA).coalesce(1).write.mode(
             "overwrite"
         ).parquet(self._fit_path(run_id, fingerprint))
@@ -176,23 +182,30 @@ class CheckpointManager:
 
 
 def _fit_state(pdf) -> Optional[tuple]:
-    """(edges, reference bin counts, KS ECDF) from a stored fit frame, or
-    None when a row's lengths are inconsistent."""
-    edges, ref_counts, ecdf = {}, {}, {}
-    for family, feature, values, counts in pdf.itertuples(index=False):
-        if values is None or counts is None:
+    """(edges, reference bin counts, KS ECDF, reference category counts)
+    from a stored fit frame, or None when a row's lengths are
+    inconsistent."""
+    edges, ref_counts, ecdf, ref_cats = {}, {}, {}, {}
+    for family, feature, values, counts, keys in pdf.itertuples(index=False):
+        is_chi2 = family == "chi2"  # keys, no values; the others the reverse
+        if counts is None or (values is None) != is_chi2 or (keys is None) == is_chi2:
             return None
-        values = np.asarray(values, dtype=np.float64)
         counts = np.asarray(counts, dtype=np.int64)
+        if is_chi2:
+            if len(keys) != len(counts):
+                return None
+            ref_cats[feature] = dict(zip(keys, counts.tolist()))
+            continue
+        values = np.asarray(values, dtype=np.float64)
         if family == "psi" and len(values) == len(counts) + 1 and len(counts):
             edges[feature], ref_counts[feature] = values, counts
         elif family == "ks" and len(values) == len(counts) and len(counts):
             ecdf[feature] = (values, counts, int(counts[-1]))
         else:
             return None
-    if len(edges) + len(ecdf) != len(pdf):  # a (family, feature) twice
+    if len(edges) + len(ecdf) + len(ref_cats) != len(pdf):  # a (family, feature) twice
         return None
-    return edges, ref_counts, ecdf
+    return edges, ref_counts, ecdf, ref_cats
 
 
 def _universe(df: DataFrame, is_ref: Column, is_test: Column, suite) -> tuple:
@@ -234,12 +247,12 @@ def resumable_partition_drift(
 ) -> DataFrame:
     """Run partition_verdicts over only the PENDING partitions of ``df``,
     persisting lineage per batch — a mid-run crash resumes where it left
-    off (idempotent per partition).  The PSI/KS reference is fitted at
-    most ONCE per call, before the batch loop, and persisted in the
+    off (idempotent per partition).  The PSI/KS/chi2 reference is fitted
+    at most ONCE per call, before the batch loop, and persisted in the
     checkpoint: a resume whose reference and fit settings match loads it
     and runs no fit job.  Each batch then runs two scans that filter the
-    input to its own test partitions: one count for PSI and chi2 (with
-    the reference rows when chi2 needs them) and one for KS.  The part
+    input to its own test partitions: one count for PSI and chi2 and one
+    for KS.  The part
     filter prunes no file, so each scan still reads the whole input.  The
     ledger write that marks the batch done runs on the driver-built rows.
     Returns the verdicts computed in this

@@ -248,42 +248,77 @@ def key_counts(
     return m.groupBy(*m.columns).agg(F.count(F.lit(1)).alias("c"))
 
 
-def _cap_categories(
-    counts: DataFrame, max_categories: int, pinned: Optional[Column] = None
-) -> DataFrame:
-    """THE category cap, in Spark, before anything reaches the driver
-    (the aggregate-once, cut-top-k pattern of VLDB '23 cache-efficient
-    top-k aggregation): each feature of the (*by, feature, key, c) frame
-    ``counts`` (non-NULL keys) with MORE than ``max_categories`` keys
-    keeps its top ``max_categories - 1`` keys and folds the rest into
-    CHI2_OTHER_BUCKET.  Keys rank by (``pinned`` first, count summed over
-    ``by`` descending, key ascending), and a pinned key never folds.  A
-    feature at or under the cap passes through unchanged."""
-    pinned = F.lit(False) if pinned is None else pinned
-    by = counts.columns[:-3]
-    w_feat = Window.partitionBy("feature")
-    # one shuffle by feature serves the per-key total and the rank windows
-    ranked = (
-        counts.repartition("feature")
-        .withColumn("tot", F.sum("c").over(Window.partitionBy("feature", "key")))
-        .withColumn(
-            "rk",
-            F.dense_rank().over(
-                w_feat.orderBy(pinned.desc(), F.col("tot").desc(), "key")
-            ),
-        )
-    )
-    keep = (
-        pinned
-        | (F.col("rk") < max_categories)
-        | (F.max("rk").over(w_feat) <= max_categories)
-    )
-    key = F.when(keep, F.col("key")).otherwise(F.lit(CHI2_OTHER_BUCKET))
+def _fold_unfitted(col: Column, members) -> Column:
+    """``col`` where it is one of the fitted ``members``, the other-bucket
+    otherwise; NULL stays NULL (excluded by the counts, never
+    other-bucketed)."""
     return (
-        ranked.select(*by, "feature", key.alias("key"), "c")
-        .groupBy(*by, "feature", "key")
-        .agg(F.sum("c").alias("c"))
+        F.when(col.isNull(), F.lit(None).cast("string"))
+        .when(col.isin(list(members)), col)
+        .otherwise(F.lit(CHI2_OTHER_BUCKET))
     )
+
+
+def _cap_counts(
+    counts: Dict[str, int], max_categories: int, members: Optional[dict] = None
+) -> Dict[str, int]:
+    """THE category rule, on the driver, for one group's {key: count}
+    (non-NULL keys): a feature's reference counts, or one scored (part,
+    feature) group's with ``members``, that feature's fitted reference
+    counts.  A feature the fit capped (its members hold CHI2_OTHER_BUCKET)
+    first folds every key outside its members into the bucket.  A group
+    with MORE than ``max_categories`` keys then keeps every member and its
+    top ``max_categories - 1`` keys by (member first, count descending,
+    key ascending), and folds the rest into CHI2_OTHER_BUCKET.  A group's
+    counts thus depend on its own rows and the reference alone.
+    :func:`_cap_categories` is the same rule in Spark."""
+    members = members or {}
+    if CHI2_OTHER_BUCKET in members:
+        counts = _fold(counts, members)
+    if len(counts) <= max_categories:
+        return counts
+    order = sorted(counts, key=lambda k: (k not in members, -counts[k], k))
+    return _fold(counts, {*members, *order[: max_categories - 1]})
+
+
+def _fold(counts: Dict[str, int], kept) -> Dict[str, int]:
+    """``counts`` with every key outside ``kept`` summed into CHI2_OTHER_BUCKET."""
+    out: Dict[str, int] = {}
+    for k, n in counts.items():
+        k = k if k in kept else CHI2_OTHER_BUCKET
+        out[k] = out.get(k, 0) + n
+    return out
+
+
+def _cap_categories(
+    counts: DataFrame, max_categories: int, members: Optional[Dict[str, dict]] = None
+) -> DataFrame:
+    """:func:`_cap_counts` in Spark, before anything reaches the driver
+    (the aggregate-once, cut-top-k pattern of VLDB '23 cache-efficient
+    top-k aggregation): every (*by, feature) group of the (*by, feature,
+    key, c) frame ``counts`` (non-NULL keys) is capped on its own,
+    ``members`` being {feature: its fitted reference counts}."""
+    members = {f: m for f, m in (members or {}).items() if m}
+    by = counts.columns[:-3]
+    key, pinned = F.col("key"), F.lit(False)
+    for f, m in members.items():
+        of_f = F.col("feature") == f
+        if CHI2_OTHER_BUCKET in m:
+            key = F.when(of_f, _fold_unfitted(F.col("key"), m)).otherwise(key)
+        pinned = F.when(of_f, F.col("key").isin(list(m))).otherwise(pinned)
+
+    def summed(frame, key):
+        return frame.withColumn("key", key).groupBy(*by, "feature", "key").agg(
+            F.sum("c").alias("c")
+        )
+
+    if any(CHI2_OTHER_BUCKET in m for m in members.values()):
+        counts = summed(counts, key)
+    group = Window.partitionBy(*by, "feature")
+    rank = F.row_number().over(group.orderBy(pinned.desc(), F.col("c").desc(), "key"))
+    n_keys = F.count(F.lit(1)).over(group)
+    keep = pinned | (rank < max_categories) | (n_keys <= max_categories)
+    return summed(counts, F.when(keep, F.col("key")).otherwise(F.lit(CHI2_OTHER_BUCKET)))
 
 
 def _sides(ref_df: DataFrame, test_df: DataFrame, cols: Sequence[str]) -> DataFrame:

@@ -6,18 +6,15 @@ surface), and the north rule's resumability is batch checkpoint/resume
 surface for continuously-landing data: a ``readStream`` source of new
 reference-vs-production micro-batches, with per-batch drift verdicts
 computed in ``foreachBatch`` against a once-fitted reference state and
-appended to a verdict sink.  Late data is handled by watermarked
-event-time windows when a timestamp column is provided.
+appended to a verdict sink.
 
-Design: the monitor's PSI and KS ARE the batch verdict engine,
+Design: the monitor's PSI, KS and chi2 ARE the batch verdict engine,
 driftspark.verdicts._VerdictSuite, fitted once on the static reference
-(edges, reference histogram, KS ECDF broadcast once); it scores each
-micro-batch as ONE partition, so batch and streaming verdicts are equal
-on identical rows (parity-locked test).  chi2 scores against the
-monitor's own fitted reference category counts, whose over-cap rule pins
-the fitted members where the batch rule ranks ref ∪ test.  The stream
-never rescans the reference; the cumulative operators melt with the same
-stats._melt_keys.
+(edges, reference histogram, KS ECDF broadcast once, capped reference
+category counts); it scores each micro-batch as ONE partition, so batch
+and streaming verdicts are equal on identical rows (parity-locked test),
+over the category cap too.  The stream never rescans the reference; the
+cumulative operators melt with the same stats._melt_keys.
 
 Surfaces:
 - StreamingDriftMonitor: per-batch PSI + KS + chi2 verdicts via
@@ -41,14 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from driftspark.numerics import psi_from_proportions, severity_from_psi
-from driftspark.session import concurrently, local_frame
-from driftspark.stats import (
-    CHI2_OTHER_BUCKET,
-    _cap_categories,
-    _melt_keys,
-    bucket_expr,
-    key_counts,
-)
+from driftspark.session import local_frame
+from driftspark.stats import _fold_unfitted, _melt_keys, bucket_expr
 
 logger = logging.getLogger(__name__)
 
@@ -73,8 +64,8 @@ class StreamingDriftMonitor:
     Each micro-batch appends one verdict row per (feature, check) to the
     sink: (batch_id, feature, check, statistic, p_value, severity, passed,
     n_test, processed_at), with checks "psi", "ks" and (when ``cat_cols``
-    is given) "chi2"; n_test is the micro-batch's row count.  PSI and KS
-    come from :attr:`suite`, the batch verdict suite fitted once in the
+    is given) "chi2"; n_test is the micro-batch's row count.  Every check
+    comes from :attr:`suite`, the batch verdict suite fitted once in the
     constructor (``max_ref_ecdf_points`` its driver-row budget), which
     scores each micro-batch as one partition.
     """
@@ -93,100 +84,22 @@ class StreamingDriftMonitor:
         chi2_threshold: float = 0.05,
         max_categories: int = 1000,
     ):
-        from driftspark.verdicts import _VerdictSuite, fit_ref_category_counts
+        from driftspark.verdicts import _VerdictSuite
 
-        self.cat_cols = list(cat_cols)
-        self.chi2_threshold = chi2_threshold
-        self.max_categories = max_categories
-        # global reference category counts (cardinality-guarded), fitted
-        # once — each micro-batch's chi-square is then pure driver math
-        # over that batch's own category counts
-        self.ref_cat_counts, self._capped_cats = fit_ref_category_counts(
-            reference_df, self.cat_cols, max_categories
-        )
         self.suite = _VerdictSuite(
-            reference_df, list(numeric_cols), part_col=_BATCH,
-            psi_threshold=psi_threshold, ks_threshold=ks_threshold, n_bins=n_bins,
-            ks_cols=ks_cols, min_bin_size=min_bin_size,
+            reference_df, list(numeric_cols), list(cat_cols), part_col=_BATCH,
+            psi_threshold=psi_threshold, ks_threshold=ks_threshold,
+            chi2_threshold=chi2_threshold, n_bins=n_bins, ks_cols=ks_cols,
+            max_categories=max_categories, min_bin_size=min_bin_size,
         ).fit(max_ref_ecdf_points)
 
     def score_batch(self, batch_df: DataFrame) -> list:
         """Verdict rows for one (micro-)batch — shared by foreachBatch and
         direct batch calls.  Each row: {feature, check, statistic, p_value,
-        severity, passed, n_ref, n_test}, the counts those of the check as
-        in partition_verdicts.  PSI and KS are the suite's rows for the
-        batch as one partition, run concurrently with chi2."""
-        verdicts, chi2 = concurrently(
-            batch_df.sparkSession,
-            lambda: self.suite.rows(batch_df.withColumn(_BATCH, F.lit(0))),
-            lambda: self._chi2_rows(batch_df),
-        )
-        return [dict(zip(_ROW_KEYS, row[1:])) for row in verdicts + chi2]
-
-    def _chi2_rows(self, batch_df: DataFrame) -> list:
-        """The batch's chi2 verdict rows (the suite's row layout) against
-        the fitted reference category counts."""
-        from driftspark.verdicts import chi2_from_count_maps, pvalue_verdict
-
-        if not self.cat_cols:
-            return []
-        by_feat = self._batch_cat_counts(batch_df)
-        return [
-            (0, c, "chi2", stat, p, *pvalue_verdict(p, self.chi2_threshold), n_ref, n_test)
-            for c in self.cat_cols
-            for stat, p, n_ref, n_test in [
-                chi2_from_count_maps(self.ref_cat_counts[c], by_feat[c])
-            ]
-        ]
-
-    def _batch_cat_counts(self, batch_df: DataFrame) -> dict:
-        """Cardinality-guarded per-feature category counts for one batch —
-        the map chi2 scores against.  Public-ish for tests: asserting this
-        map directly verifies the Spark-side fold (the chi-square alone
-        can be inf on both sides and hide a wrong fold).
-
-        A feature the fit capped folds every batch category outside its
-        fitted set into the other-bucket.  Every feature then passes the
-        category cap with its fitted reference members pinned, so a batch
-        with more than ``max_categories`` categories (ids/captions landing
-        in a cat col) folds its unfitted tail too, IN SPARK: the collect
-        stays bounded at O(features x max_categories) rows whatever the
-        batch contains, and under the cap nothing folds."""
-        keys = {
-            c: _fold_unfitted(F.col(c).cast("string"), self.ref_cat_counts[c])
-            if c in self._capped_cats
-            else F.col(c).cast("string")
-            for c in self.cat_cols
-        }
-        pinned = F.lit(False)
-        for c, members in self.ref_cat_counts.items():
-            if members:
-                pinned = F.when(
-                    F.col("feature") == c, F.col("key").isin(list(members))
-                ).otherwise(pinned)
-        counts = _cap_categories(
-            key_counts(batch_df, keys).where(F.col("key").isNotNull()),
-            self.max_categories,
-            pinned,
-        )
-        by_feat: dict = {c: {} for c in self.cat_cols}
-        for r in counts.collect():
-            by_feat[r["feature"]][r["key"]] = int(r["c"])
-        folded = sorted(
-            c
-            for c in self.cat_cols
-            if c not in self._capped_cats and CHI2_OTHER_BUCKET in by_feat[c]
-        )
-        if folded:
-            logger.warning(
-                "StreamingDriftMonitor: batch category count exceeded "
-                "max_categories=%d for feature(s) %s; tail categories "
-                "merged into %r for this batch's chi2",
-                self.max_categories,
-                folded,
-                CHI2_OTHER_BUCKET,
-            )
-        return by_feat
+        severity, passed, n_ref, n_test}, the suite's rows for the batch as
+        one partition; an empty batch is no partition and gets none."""
+        rows = self.suite.rows(batch_df.withColumn(_BATCH, F.lit(0)))
+        return [dict(zip(_ROW_KEYS, row[1:])) for row in rows]
 
     def start(
         self,
@@ -229,40 +142,6 @@ class StreamingDriftMonitor:
         elif processing_time:
             writer = writer.trigger(processingTime=processing_time)
         return writer.start()
-
-
-def windowed_event_counts(
-    stream_df: DataFrame,
-    ts_col: str,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-    group_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Watermarked event-time windowed counts — the late-data-tolerant
-    aggregation shape for streaming quality metrics (rows landing later
-    than the watermark are dropped deterministically)."""
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration).alias("w"), *group_cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            *group_cols,
-            "n",
-        )
-    )
-
-
-def _fold_unfitted(col: Column, members) -> Column:
-    """``col`` where it is one of the fitted ``members``, the other-bucket
-    otherwise; NULL stays NULL (excluded by the counts, never
-    other-bucketed)."""
-    return (
-        F.when(col.isNull(), F.lit(None).cast("string"))
-        .when(col.isin(list(members)), col)
-        .otherwise(F.lit(CHI2_OTHER_BUCKET))
-    )
 
 
 def _partial_count_stage(

@@ -8,27 +8,29 @@ partition of the test split is compared against the GLOBAL reference split
 yielding one verdict row per (partition, feature, check).
 
 Scale design — a fit, then two short job chains per scored batch:
-* The PSI and KS reference state is fitted once and every batch of
+* The PSI, KS and chi2 reference state is fitted once and every batch of
   partitions scores against it (:class:`_VerdictSuite`, also the
-  streaming monitor's PSI and KS: a micro-batch is one partition).  The
-  fit is ONE distinct-value count of the reference (:func:`fit_reference`),
-  bounded by :data:`MAX_REF_ECDF_POINTS` rows on its way to the driver,
-  where it gives the exact PSI edges, the reference histogram and the KS
-  ECDF; over that budget the separate fits (per-column ``percentile``
-  edges, a bin count, the ECDF thinned from the same persisted count)
-  run instead.
-* PSI and chi-square share ONE count through the keyed-count primitive,
-  driftspark.stats.key_counts (:func:`_score_counts`): the test rows,
-  plus the reference rows when chi-square (or psi_by_partition, which
-  has no fitted reference histogram) needs them, grouped by (is_ref,
-  part, feature, key).  It reaches the driver through one collect
-  bounded by :data:`MAX_REF_ECDF_POINTS` rows, which also yields the
-  NULL-part drop counts and the category counts the cap needs; a
-  chi-square feature over its category cap folds its tail in Spark
-  (stats._cap_categories).  PSI is then
+  streaming monitor's: a micro-batch is one partition).  The fit is ONE
+  distinct-value count of the reference (:func:`fit_reference`), bounded
+  by :data:`MAX_REF_ECDF_POINTS` rows on its way to the driver, where it
+  gives the exact PSI edges, the reference histogram, the KS ECDF and
+  each categorical feature's counts, capped over the reference alone;
+  over that budget the separate fits (per-column ``percentile`` edges, a
+  bin count, the ECDF thinned from the same persisted count, the
+  category cap in Spark) run instead.
+* PSI and chi-square share ONE count of the test rows through the
+  keyed-count primitive, driftspark.stats.key_counts
+  (:func:`_score_counts`; psi_by_partition and chi2_by_partition, which
+  have no fitted reference, count the reference rows in it too), grouped
+  by (is_ref, part, feature, key).  It reaches the driver through one
+  collect bounded by :data:`MAX_REF_ECDF_POINTS` rows, which also yields
+  the NULL-part drop counts.  Categories follow ONE rule
+  (stats._cap_counts, in Spark over the budget): each (part, feature)
+  group folds what a capped reference did not keep and is capped on its
+  own with the reference members pinned, so a partition's chi2 depends
+  on its own rows and the reference alone.  PSI is then
   numerics.psi_from_proportions per (part, feature) on the driver, and
-  chi-square likewise (chi2_from_count_maps, also the streaming
-  monitor's).
+  chi-square likewise (chi2_from_count_maps).
 * KS D scores each (part, feature) test group against the fitted
   reference ECDF (thinned, when over budget, on the exact cumulative frame
   of driftspark.stats).  Preaggregated test counts within the row budget
@@ -43,10 +45,11 @@ import logging
 import math
 from collections import defaultdict
 from dataclasses import dataclass
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, List, NamedTuple, Optional, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -64,12 +67,14 @@ from driftspark.stats import (
     CHI2_OTHER_BUCKET,
     _aligned,
     _cap_categories,
+    _cap_counts,
     _cdf_cum_frame,
     _cdf_prescan,
     _edges_of,
     _equal_mass_buckets,
     _exact_quantiles,
     _melt,
+    _melt_keys,
     _proportions,
     _sides,
     _uniform_buckets,
@@ -77,6 +82,7 @@ from driftspark.stats import (
     approx_quantile_edges,
     bucket_expr,
     key_counts,
+    nn,
     quantile_edges,
 )
 
@@ -107,106 +113,85 @@ def _ref_bin_counts(ref_df: DataFrame, edges_map: Dict[str, np.ndarray]):
 
 
 def _score_counts(
-    ref_df: DataFrame,
+    ref_df: Optional[DataFrame],
     test_df: DataFrame,
     edges_map: Dict[str, np.ndarray],
     cat_cols: Sequence[str],
     part_col: str = "part",
-    ref_psi: bool = True,
     max_categories: int = 1000,
+    ref_cats: Optional[Dict[str, Dict]] = None,
 ) -> tuple:
     """(reference bin counts, test bin counts by part, reference category
     counts, test category counts by (part, feature)) from ONE
     :func:`key_counts` over the test rows, plus the reference rows when
-    chi2 (``cat_cols``) or an unfitted PSI (``ref_psi``) needs them.
+    ``ref_df`` is given (psi_by_partition and chi2_by_partition, which
+    have no fitted reference).  The verdict suite passes no ``ref_df``
+    and its fitted ``ref_cats``.
 
     Keys use the :func:`psi_counts_fused` namespace: ``"#n:<col>"`` is the
-    fitted bin as a string (NULL on reference rows unless ``ref_psi``),
-    ``"#c:<col>"`` the category.  The rows reach the driver through one
-    bounded collect of at most :data:`MAX_REF_ECDF_POINTS` rows, which
-    also gives the NULL-part test rows (counted and logged, never scored)
-    and each chi2 feature's category count.  A chi2 feature over
-    ``max_categories`` folds its tail in Spark (:func:`_cap_categories`);
-    over the row budget, every chi2 feature goes through the cap (a no-op
-    at or under it) and the collect is unbounded, as the counts are
-    O(parts x features x (bins + capped categories)) rows.
+    fitted bin as a string, ``"#c:<col>"`` the category.  The rows reach
+    the driver through one bounded collect of at most
+    :data:`MAX_REF_ECDF_POINTS` rows, which also gives the NULL-part test
+    rows (counted and logged, never scored).  The category rule
+    (stats._cap_counts) then runs there: reference counts counted here
+    are capped on their own, and each (part, feature) group is capped on
+    its own with the reference members pinned, so a partition's chi2
+    depends on its own rows and the reference alone.  Over the row budget
+    the same rule runs in Spark (stats._cap_categories) and the collect
+    is unbounded, as the counts are O(parts x features x (bins + capped
+    categories)) rows.
 
     Every part with any test row gets every PSI feature (all-zero bins
     when no value is in range); parts keep their ORIGINAL type."""
-    with_ref = bool(cat_cols) or (ref_psi and bool(edges_map))
-    if with_ref:
+    cols = list(dict.fromkeys([*edges_map, *cat_cols]))
+    if ref_df is None:
+        u = test_df.select(
+            *cols, F.col(part_col).alias("__part"), F.lit(False).alias("is_ref")
+        )
+    else:
         part_type = test_df.schema[part_col].dataType
         u = _sides(
             ref_df.withColumn("__part", F.lit(None).cast(part_type)),
             test_df.withColumn("__part", F.col(part_col)),
-            [*edges_map, *cat_cols, "__part"],
+            [*cols, "__part"],
         )
-    else:
-        u = test_df.select(
-            *edges_map, F.col(part_col).alias("__part"), F.lit(False).alias("is_ref")
-        )
-    keys = {
-        "#n:" + c: (
-            bucket_expr(c, e) if ref_psi else F.when(~F.col("is_ref"), bucket_expr(c, e))
-        ).cast("string")
-        for c, e in edges_map.items()
-    }
+    keys = {"#n:" + c: bucket_expr(c, e).cast("string") for c, e in edges_map.items()}
     keys.update({"#c:" + c: F.col(c).cast("string") for c in cat_cols})
     counts = key_counts(u, keys, ["is_ref", F.col("__part").alias("part")])
 
     is_cat = F.col("feature").startswith("#c:")
-    in_scope = F.col("is_ref") | F.col("part").isNotNull()
     cat_counts = counts.where(is_cat & F.col("key").isNotNull())
-
-    def capped(feats=None):
-        scoped = cat_counts.where(in_scope)
-        if feats is not None:
-            scoped = scoped.where(F.col("feature").isin(feats))
-        return _cap_categories(scoped, max_categories)
 
     def scored(r) -> bool:  # a reference row, or a test row with a part
         return r["is_ref"] or r["part"] is not None
 
     rows = counts.limit(MAX_REF_ECDF_POINTS + 1).collect()
-    if len(rows) > MAX_REF_ECDF_POINTS:
-        # the NULL-part test rows of each chi2 feature sum into one row:
-        # they only feed the drop count
-        null_part = (
-            cat_counts.where(~in_scope)
-            .groupBy("is_ref", "part", "feature")
-            .agg(F.sum("c").alias("c"))
-            .withColumn("key", F.lit(CHI2_OTHER_BUCKET))
-        )
-        rows = (
-            counts.where(~is_cat).unionByName(capped()).unionByName(null_part).collect()
-        )
-        over = sorted(
-            {r["feature"] for r in rows if r["key"] == CHI2_OTHER_BUCKET and scored(r)}
-        )
-    else:
-        n_keys: Dict[str, set] = defaultdict(set)
-        for r in rows:
-            if r["feature"][1] == "c" and r["key"] is not None and scored(r):
-                n_keys[r["feature"]].add(r["key"])
-        over = sorted(f for f, k in n_keys.items() if len(k) > max_categories)
-        if over:
-            rows = [r for r in rows if r["feature"] not in over or not scored(r)]
-            rows += capped(over).collect()
-    if over:
-        logger.warning(
-            "chi2_by_partition: feature(s) %s exceed max_categories=%d; "
-            "tail categories merged into %r before collection",
-            [f[3:] for f in over],
-            max_categories,
-            CHI2_OTHER_BUCKET,
-        )
+    in_budget = len(rows) <= MAX_REF_ECDF_POINTS
+    if not in_budget:
+        rows = counts.where(~is_cat)
+        if cat_cols:
+            if ref_cats is None:
+                ref_rows = cat_counts.where("is_ref").select("feature", "key", "c")
+                ref_cats = _category_counts_of(
+                    _cap_categories(ref_rows, max_categories).collect(), cat_cols
+                )
+            # the NULL-part test rows cap as one more group: they only
+            # feed the drop count
+            test_rows = cat_counts.where(~F.col("is_ref")).select(
+                "part", "feature", "key", "c"
+            )
+            capped = _cap_categories(
+                test_rows, max_categories, {"#c:" + c: m for c, m in ref_cats.items()}
+            )
+            rows = rows.unionByName(capped.withColumn("is_ref", F.lit(False)))
+        rows = rows.collect()
 
     def zeros():
         return {f: np.zeros(len(e) - 1, np.int64) for f, e in edges_map.items()}
 
     ref_bins = zeros()
     hists: Dict = defaultdict(zeros)
-    ref_cats: Dict[str, Dict] = {c: {} for c in cat_cols}
+    counted_ref: Dict[str, Dict] = {c: {} for c in cat_cols}
     test_cats: Dict[tuple, Dict] = {}
     dropped = {"n": 0, "c": 0}
     for r in rows:
@@ -221,9 +206,25 @@ def _score_counts(
         elif kind == "n":
             (ref_bins if is_ref else hists[part])[feature][int(key)] = c
         elif is_ref:
-            ref_cats[feature][key] = c
+            counted_ref[feature][key] = c
         else:
             test_cats.setdefault((part, feature), {})[key] = c
+    if in_budget:
+        if ref_cats is None:
+            ref_cats = {c: _cap_counts(m, max_categories) for c, m in counted_ref.items()}
+        test_cats = {
+            (part, f): _cap_counts(m, max_categories, ref_cats[f])
+            for (part, f), m in test_cats.items()
+        }
+    over = sorted(
+        {f for (_, f), m in test_cats.items() if CHI2_OTHER_BUCKET in m}
+        | {f for f, m in (ref_cats or {}).items() if CHI2_OTHER_BUCKET in m}
+    )
+    if over:
+        logger.warning(
+            "chi2: feature(s) %s exceed max_categories=%d; tail categories merged into %r",
+            over, max_categories, CHI2_OTHER_BUCKET,
+        )
     for kind, family in (("n", "psi_by_partition"), ("c", "chi2_by_partition")):
         if dropped[kind]:
             logger.warning(
@@ -607,10 +608,25 @@ def fit_ks_reference_ecdf(
     )
 
 
-def _distinct_counts(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """(feature, value, c): each column's distinct non-NULL, non-NaN
-    values with their counts."""
-    return _melt(df, cols).groupBy("feature", "value").agg(F.count(F.lit(1)).alias("c"))
+def _distinct_counts(
+    df: DataFrame, cols: Sequence[str], cat_cols: Sequence[str] = ()
+) -> DataFrame:
+    """(feature, value, cat, c) from one melt and one count: each of
+    ``cols``' distinct non-NULL, non-NaN values (``cat`` NULL), and each
+    of ``cat_cols``' distinct non-NULL categories as strings under the
+    feature ``"#c:<col>"`` (``value`` NULL), with their counts."""
+    def key(value=F.lit(None).cast("double"), cat=F.lit(None).cast("string")):
+        return F.struct(value.alias("value"), cat.alias("cat"))
+
+    keys = {c: key(value=nn(c)) for c in cols}
+    keys.update({"#c:" + c: key(cat=F.col(c).cast("string")) for c in cat_cols})
+    return (
+        _melt_keys(df, keys)
+        .select("feature", "key.value", "key.cat")
+        .where(F.col("value").isNotNull() | F.col("cat").isNotNull())
+        .groupBy("feature", "value", "cat")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
 
 
 def _ecdf_share(max_points: int, n_features: int) -> int:
@@ -620,6 +636,15 @@ def _ecdf_share(max_points: int, n_features: int) -> int:
     return max(max_points // max(n_features, 1), min(max_points, 10_000))
 
 
+class _Fit(NamedTuple):
+    """The fitted reference state of the verdict suite."""
+
+    edges: Dict[str, np.ndarray]  # PSI bin edges
+    ref_counts: Dict[str, np.ndarray]  # reference count per PSI bin
+    ecdf: Optional[Dict[str, tuple]]  # KS ECDF: (values, cumulative counts, n)
+    ref_cats: Dict[str, Dict[str, int]]  # capped reference category counts
+
+
 def fit_reference(
     ref_df: DataFrame,
     numeric_cols: Sequence[str],
@@ -627,16 +652,21 @@ def fit_reference(
     n_bins: int = 10,
     approx_quantile_error: Optional[float] = None,
     max_points: int = MAX_REF_ECDF_POINTS,
-) -> tuple:
-    """(PSI edges, reference bin counts, KS ECDF) — the whole fitted
-    reference state of the verdict suite and the streaming monitor — from
-    ONE distinct-value count of the reference.
+    cat_cols: Sequence[str] = (),
+    max_categories: int = 1000,
+) -> _Fit:
+    """(PSI edges, reference bin counts, KS ECDF, reference category
+    counts) — the whole fitted reference state of the verdict suite and
+    the streaming monitor — from ONE distinct-value count of the
+    reference.
 
-    The (feature, value, c) counts of ``numeric_cols ∪ ks_cols``
-    (:func:`_distinct_counts`) reach the driver through one collect
-    bounded by ``max_points`` rows, whose size picks the route.  Within
-    the budget, with no KS feature over its :func:`_ecdf_share`, the
-    table is sorted once by (feature, value) and read three ways, each
+    The (feature, value, cat, c) counts of ``numeric_cols ∪ ks_cols`` and
+    ``cat_cols`` (:func:`_distinct_counts`) reach the driver through one
+    collect bounded by ``max_points`` rows, whose size picks the route.
+    Within the budget each categorical feature's counts are capped there
+    by the category rule (stats._cap_counts, over the reference alone),
+    and, with no KS feature over its :func:`_ecdf_share`, the numeric
+    rows are sorted once by (feature, value) and read three ways, each
     equal to its separate fit: the exact PSI edges
     (stats._exact_quantiles, the ``percentile`` aggregate's arithmetic,
     then quantile_edges' post-processing), each bin's in-range reference
@@ -647,32 +677,44 @@ def fit_reference(
     concurrently with the count, which still gives the bin counts and the
     ECDF.
 
-    Over the budget the separate fits run instead: the edges then
-    _ref_bin_counts, concurrently with the KS ECDF, thinned from the same
-    counts (persisted for this) rather than a second count.  The route
-    depends on the input's size alone.  A column with no non-NULL,
-    non-NaN reference value gets no edges and no ECDF; the ECDF is {}
-    without KS columns."""
-    numeric_cols, ks_cols = list(numeric_cols), list(ks_cols)
+    Otherwise the separate fits run: the edges then _ref_bin_counts,
+    concurrently with the KS ECDF, thinned from the same counts
+    (persisted for this) rather than a second count, and, over the
+    budget, the category cap in Spark (stats._cap_categories) on them.
+    The route depends on the input's size alone.  A column with no
+    non-NULL, non-NaN reference value gets no edges and no ECDF; the ECDF
+    is {} without KS columns, and every categorical feature gets its
+    (possibly empty) counts."""
+    numeric_cols, ks_cols, cat_cols = list(numeric_cols), list(ks_cols), list(cat_cols)
     fit_cols = sorted(set(numeric_cols) | set(ks_cols))
-    if not fit_cols:
-        return {}, {}, {}
+    if not fit_cols and not cat_cols:
+        return _Fit({}, {}, {}, {})
     spark = ref_df.sparkSession
     gk = approx_quantile_error is not None and bool(numeric_cols)
     share = _ecdf_share(max_points, len(ks_cols))
-    counts = _distinct_counts(ref_df, fit_cols).persist()
+    counts = _distinct_counts(ref_df, fit_cols, cat_cols).persist()
 
     def scan():
         table = counts.limit(max_points + 1).toArrow()
-        return _distinct_points(table) if table.num_rows <= max_points else None
+        return table if table.num_rows <= max_points else None
 
     def gk_edges():
         return approx_quantile_edges(ref_df, numeric_cols, n_bins, approx_quantile_error)
 
     try:
-        points, edges = concurrently(spark, scan, gk_edges) if gk else (scan(), None)
+        table, edges = concurrently(spark, scan, gk_edges) if gk else (scan(), None)
+        ref_cats = points = None
+        if table is not None:
+            cats = table.filter(pc.is_valid(table.column("cat")))
+            cats = zip(*(cats.column(n).to_pylist() for n in ("feature", "cat", "c")))
+            ref_cats = {
+                c: _cap_counts(m, max_categories)
+                for c, m in _category_counts_of(cats, cat_cols).items()
+            }
+            points = _distinct_points(table)
+        del table  # the driver holds no collected rows from here
         if points is None or any(len(points[c][0]) > share for c in ks_cols if c in points):
-            points = None  # the driver holds no collected rows from here
+            points = None
 
             def psi():
                 e = edges if gk else quantile_edges(ref_df, numeric_cols, n_bins)
@@ -684,8 +726,18 @@ def fit_reference(
                 nd = _distinct_totals(counts.where(F.col("feature").isin(ks_cols)))
                 return _ecdf_points_of(counts, nd, share)
 
-            (edges, ref_counts), ecdf = concurrently(spark, psi, ks)
-            return edges, ref_counts, ecdf
+            def categories():
+                if ref_cats is not None:
+                    return ref_cats
+                rows = counts.where(F.col("cat").isNotNull()).select(
+                    "feature", F.col("cat").alias("key"), "c"
+                )
+                return _category_counts_of(
+                    _cap_categories(rows, max_categories).collect(), cat_cols
+                )
+
+            (edges, ref_counts), ecdf, ref_cats = concurrently(spark, psi, ks, categories)
+            return _Fit(edges, ref_counts, ecdf, ref_cats)
     finally:
         counts.unpersist()
 
@@ -698,13 +750,14 @@ def fit_reference(
         }
     ref_counts = {c: _bin_counts_of(*points[c], e) for c, e in edges.items()}
     ecdf = {c: (v, cums, int(cums[-1])) for c, (v, cums) in points.items() if c in ks_cols}
-    return edges, ref_counts, ecdf
+    return _Fit(edges, ref_counts, ecdf, ref_cats)
 
 
 def _distinct_points(table) -> Dict[str, tuple]:
     """{feature: (ascending distinct values, their cumulative counts)},
-    features in name order, of a collected (feature, value, c) Arrow
-    table, sorted once by (feature, value)."""
+    features in name order, of the numeric rows of a collected (feature,
+    value, cat, c) Arrow table, sorted once by (feature, value)."""
+    table = table.filter(pc.is_valid(table.column("value")))
     feature = table.column("feature").combine_chunks().dictionary_encode()
     f = feature.indices.to_numpy().astype(np.int64)
     value = table.column("value").to_numpy().astype(np.float64)
@@ -718,6 +771,15 @@ def _distinct_points(table) -> Dict[str, tuple]:
         for name, a, b in zip(names, bounds[:-1], bounds[1:])
     }
     return dict(sorted(points.items()))
+
+
+def _category_counts_of(rows, cat_cols: Sequence[str]) -> Dict[str, Dict]:
+    """{col: {category: count}} of each of ``cat_cols`` from
+    (``"#c:<col>"``, category, count) rows."""
+    out: Dict[str, Dict] = {c: {} for c in cat_cols}
+    for f, k, c in rows:
+        out[f[3:]][k] = c
+    return out
 
 
 def _bin_counts_of(values: np.ndarray, cums: np.ndarray, edges: np.ndarray) -> np.ndarray:
@@ -922,19 +984,19 @@ def chi2_by_partition(
 
     Scale guard: that driver loop assumes bounded category cardinality —
     a high-cardinality string column (ids, captions) would collect
-    unbounded rows.  Any feature whose observed (ref ∪ test) category
-    count exceeds ``max_categories`` keeps its ``max_categories - 1``
-    globally most-frequent categories plus one merged ``__chi2_other__``
-    tail bucket (:func:`_cap_categories`, distributed), with a logged
-    warning naming the truncated features.  Features at or under the cap
-    are bit-identical to the unguarded path.  Test rows with a NULL
-    partition id are excluded from verdicts (they belong to no partition)
-    but are COUNTED in the same aggregation and logged, so drift
-    concentrated in null-part rows can't vanish silently."""
+    unbounded rows.  The verdict suite's one category rule applies
+    (stats._cap_counts: the reference capped alone, each partition capped
+    on its own with the reference members pinned), with a logged warning
+    naming the capped features, so a partition's chi2 depends on its own
+    rows and the reference alone.  Features at or under
+    ``max_categories`` are bit-identical to the unguarded path.  Test
+    rows with a NULL partition id are excluded from verdicts (they belong
+    to no partition) but are COUNTED in the same aggregation and logged,
+    so drift concentrated in null-part rows can't vanish silently."""
     if not cat_cols:
         return []
     _, _, ref_cats, test_cats = _score_counts(
-        ref_df, test_df, {}, cat_cols, part_col, max_categories=max_categories
+        ref_df, test_df, {}, cat_cols, part_col, max_categories
     )
     return _chi2_rows(ref_cats, test_cats, min_samples)
 
@@ -944,21 +1006,18 @@ def fit_ref_category_counts(
     cat_cols: Sequence[str],
     max_categories: int = 1000,
 ) -> tuple:
-    """({feature: {category: count}}, capped_features) — global reference
-    category counts for reuse across many chi-square scorings (streaming
-    micro-batches).  Same cardinality guard as chi2_by_partition: a
-    feature exceeding ``max_categories`` keeps its top max_categories-1
-    categories and merges the tail into CHI2_OTHER_BUCKET (distributed,
-    before the collect); callers must remap unseen/tail test categories
+    """({feature: {category: count}}, capped_features) — the verdict fit's
+    global reference category counts (:func:`fit_reference`), for reuse
+    across many chi-square scorings (the cumulative chi2 stream).  A
+    feature exceeding ``max_categories`` keeps its top
+    max_categories-1 categories and merges the tail into
+    CHI2_OTHER_BUCKET; callers must remap unseen/tail test categories
     into the same bucket for capped features."""
     if not cat_cols:
         return {}, set()
-    counts = key_counts(
-        ref_df, {c: F.col(c).cast("string") for c in cat_cols}
-    ).where(F.col("key").isNotNull())
-    out: Dict[str, Dict] = {c: {} for c in cat_cols}
-    for r in _cap_categories(counts, max_categories).collect():
-        out[r["feature"]][r["key"]] = int(r["c"])
+    out = fit_reference(
+        ref_df, [], [], cat_cols=cat_cols, max_categories=max_categories
+    ).ref_cats
     capped = {c for c, m in out.items() if CHI2_OTHER_BUCKET in m}
     if capped:
         logger.warning(
@@ -1017,13 +1076,14 @@ def _verdict_schema(df: DataFrame, part_col: str) -> str:
 class _VerdictSuite:
     """THE verdict engine of :func:`partition_verdicts`, the checkpointed
     resume and the streaming monitor: a reference FIT plus a SCORE of any
-    test frame.  :meth:`fit` takes the PSI edges, the reference bin counts
-    and the KS ECDF of ``ref_df`` from one :func:`fit_reference` scan;
-    :meth:`use_fit` takes the same state loaded from a checkpoint.
-    :meth:`rows` scores every partition of a test frame against that
-    state, fitting it first when there is none: a resume batch is a few
-    partitions, a streaming micro-batch is one.  chi2 (its category cap
-    counts ref ∪ test) and W1 read the reference on every score."""
+    test frame.  :meth:`fit` takes the PSI edges, the reference bin
+    counts, the KS ECDF and the capped reference category counts of
+    ``ref_df`` from one :func:`fit_reference` scan; :meth:`use_fit` takes
+    the same state loaded from a checkpoint.  :meth:`rows` scores every
+    partition of a test frame against that state, fitting it first when
+    there is none: a resume batch is a few partitions, a streaming
+    micro-batch is one.  Only the opt-in W1 reads the reference on every
+    score."""
 
     ref_df: DataFrame
     numeric_cols: Sequence[str]
@@ -1043,14 +1103,13 @@ class _VerdictSuite:
 
     def __post_init__(self):
         self.ks_cols = list(self.numeric_cols if self.ks_cols is None else self.ks_cols)
-        # (edges, reference bin counts, KS ECDF dict or None) once fitted
-        self.fitted: Optional[tuple] = None
+        self.fitted: Optional[_Fit] = None
         self._b_ecdf = None
 
     @property
     def fit_cols(self) -> list:
         """The reference columns the fit reads."""
-        return sorted(set(self.numeric_cols) | set(self.ks_cols))
+        return sorted(set(self.numeric_cols) | set(self.ks_cols) | set(self.cat_cols))
 
     @property
     def fit_params(self) -> list:
@@ -1059,17 +1118,19 @@ class _VerdictSuite:
         return [
             list(self.numeric_cols), self.ks_cols, self.n_bins,
             self.approx_quantile_error, MAX_REF_ECDF_POINTS,
+            list(self.cat_cols), self.max_categories,
         ]
 
     def fit(self, max_points: Optional[int] = None) -> "_VerdictSuite":
         """Fit the reference, ``max_points`` (default
         :data:`MAX_REF_ECDF_POINTS`) the driver-row budget."""
-        edges, ref_counts, ecdf = fit_reference(
+        fit = fit_reference(
             self.ref_df, self.numeric_cols, self.ks_cols, self.n_bins,
             self.approx_quantile_error,
             MAX_REF_ECDF_POINTS if max_points is None else max_points,
+            self.cat_cols, self.max_categories,
         )
-        if self.numeric_cols and not edges:
+        if self.numeric_cols and not fit.edges:
             # every numeric column all-NULL in the reference: no fitted
             # bins means no PSI verdicts, not a failed verdict suite
             logger.warning(
@@ -1077,15 +1138,15 @@ class _VerdictSuite:
                 "(all-NULL reference columns?) — PSI checks skipped",
                 list(self.numeric_cols),
             )
-        return self.use_fit(edges, ref_counts, ecdf)
+        return self.use_fit(*fit)
 
     def use_fit(
-        self, edges: dict, ref_counts: dict, ecdf: Optional[dict]
+        self, edges: dict, ref_counts: dict, ecdf: Optional[dict], ref_cats: dict
     ) -> "_VerdictSuite":
         """Score against a given fitted state — :meth:`fit`'s, or one a
         checkpoint persisted — and broadcast its KS ECDF once."""
         ecdf = ecdf if self.ks_cols else None
-        self.fitted = (edges, ref_counts, ecdf)
+        self.fitted = _Fit(edges, ref_counts, ecdf, ref_cats)
         self._b_ecdf = (
             None if ecdf is None else self.ref_df.sparkSession.sparkContext.broadcast(ecdf)
         )
@@ -1094,20 +1155,20 @@ class _VerdictSuite:
     def rows(self, test_df: DataFrame) -> List[tuple]:
         """The verdict rows (VERDICT_SCHEMA order) of every partition of
         ``test_df``, built on the driver from two concurrent job chains —
-        the PSI + chi2 count and the KS scoring — plus W1 when asked for.
-        Fits the reference first when it is not fitted."""
+        the PSI + chi2 count of the test rows and the KS scoring — plus W1
+        when asked for.  Fits the reference first when it is not fitted."""
         if self.fitted is None:
             self.fit()
         ref_df, part_col = self.ref_df, self.part_col
-        edges, ref_counts, _ = self.fitted
+        edges, ref_counts, _, ref_cats = self.fitted
 
         def run_counts():
             # PSI and chi2 share one count
             if not edges and not self.cat_cols:
                 return [], []
-            _, hists, ref_cats, test_cats = _score_counts(
-                ref_df, test_df, edges, self.cat_cols, part_col,
-                ref_psi=False, max_categories=self.max_categories,
+            _, hists, _, test_cats = _score_counts(
+                None, test_df, edges, self.cat_cols, part_col,
+                self.max_categories, ref_cats,
             )
             return (
                 _psi_rows(hists, ref_counts, self.min_bin_size),

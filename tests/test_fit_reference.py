@@ -56,7 +56,7 @@ def _assert_same_fit(got, want):
     """Bin counts and the ECDF bit for bit; edges with == (NaN equal to
     NaN): a zero edge may differ in sign, as the GROUP BY the one scan
     counts by normalizes -0.0 while the percentile aggregate keeps it."""
-    (edges, counts, ecdf), (want_edges, want_counts, want_ecdf) = got, want
+    (edges, counts, ecdf), (want_edges, want_counts, want_ecdf) = got[:3], want
     assert list(edges) == list(want_edges)
     for f, e in want_edges.items():
         assert edges[f].dtype == e.dtype and np.array_equal(edges[f], e, equal_nan=True), f
@@ -122,9 +122,29 @@ def test_fit_reference_without_columns_or_values(spark, degenerate_ref):
     """No fit columns: an empty state.  An all-NULL column: no edges, no
     ECDF."""
     ref = degenerate_ref.where("split = 'ref'")
-    assert vd.fit_reference(ref, [], [], 10) == ({}, {}, {})
-    edges, counts, ecdf = vd.fit_reference(ref, ["nulls", "ties"], ["nulls"], 10)
-    assert list(edges) == list(counts) == ["ties"] and ecdf == {}
+    assert vd.fit_reference(ref, [], [], 10) == ({}, {}, {}, {})
+    edges, counts, ecdf, cats = vd.fit_reference(ref, ["nulls", "ties"], ["nulls"], 10)
+    assert list(edges) == list(counts) == ["ties"] and ecdf == {} and cats == {}
+
+
+@pytest.mark.parametrize("max_points", [vd.MAX_REF_ECDF_POINTS, 2], ids=["one_scan", "fallback"])
+def test_fit_reference_caps_categories_over_the_reference(spark, max_points):
+    """The categorical features' reference counts come from the same
+    count, capped over the reference alone (top K-1 by count then key,
+    the rest in __chi2_other__; NULL excluded), on both routes, and a
+    column fitted both as numeric and as categorical keeps both fits."""
+    rows = [("a", 1.0)] * 5 + [("b", 1.0)] * 3 + [("c", 2.0)] * 3 + [("d", 2.0), (None, None)]
+    ref = spark.createDataFrame(rows, "cat string, num double")
+    fit = vd.fit_reference(ref, ["num"], ["num"], 4, None, max_points, ["cat", "num"], 3)
+    assert fit.ref_cats == {
+        "cat": {"a": 5, "b": 3, vd.CHI2_OTHER_BUCKET: 4}, "num": {"1.0": 8, "2.0": 4},
+    }
+    assert fit.ref_cats == vd.fit_ref_category_counts(ref, ["cat", "num"], 3)[0]
+    want = vd.fit_reference(ref, ["num"], ["num"], 4, None, max_points)
+    assert want.ref_cats == {}
+    assert np.array_equal(fit.edges["num"], want.edges["num"])
+    assert np.array_equal(fit.ref_counts["num"], want.ref_counts["num"])
+    assert all(np.array_equal(a, b) for a, b in zip(fit.ecdf["num"], want.ecdf["num"]))
 
 
 def test_all_inf_reference_column_gets_nan_free_edges(spark):

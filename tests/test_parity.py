@@ -224,6 +224,28 @@ def _capped(counts, max_categories, pinned=()):
     return dict(out)
 
 
+def _scored(counts, members, max_categories):
+    """The documented rule for one scored (part, feature) group, by hand:
+    a feature the fit capped folds the categories outside its fitted
+    ``members`` first, then the group is capped with the members pinned."""
+    fold = vd.CHI2_OTHER_BUCKET in members
+    out = Counter()
+    for key, n in counts.items():
+        out[vd.CHI2_OTHER_BUCKET if fold and key not in members else key] += n
+    return _capped(dict(out), max_categories, pinned=set(members))
+
+
+def _suite_cat_counts(suite, test_df):
+    """{feature: capped category counts} of ``test_df`` scored as one
+    partition by a fitted suite: the counts its chi2 rows score."""
+    one = test_df.withColumn(suite.part_col, F.lit(0))
+    _, _, _, cats = vd._score_counts(
+        None, one, {}, suite.cat_cols, suite.part_col, suite.max_categories,
+        suite.fitted.ref_cats,
+    )
+    return {f: m for (_, f), m in cats.items()}
+
+
 def _eq(got, want):
     if isinstance(want, np.ndarray):
         assert got.dtype == want.dtype and np.array_equal(got, want), (got, want)
@@ -337,18 +359,9 @@ def _check_chi2_by_partition(ref, test, ref_rows, test_rows):
     for k in (1000, 4):
         want = {}
         for c in ("cat", "y"):
-            in_scope = Counter(_cat_counts(ref_rows, c)) + Counter(_cat_counts(scored, c))
-            kept = set(_capped(in_scope, k)) - {vd.CHI2_OTHER_BUCKET}
-
-            def folded(counts):
-                out = Counter()
-                for key, n in counts.items():
-                    out[key if key in kept else vd.CHI2_OTHER_BUCKET] += n
-                return dict(out)
-
-            rmap = folded(_cat_counts(ref_rows, c))
+            rmap = _capped(_cat_counts(ref_rows, c), k)
             for p in {r["spart"] for r in scored}:
-                tmap = folded(_cat_counts([r for r in scored if r["spart"] == p], c))
+                tmap = _scored(_cat_counts([r for r in scored if r["spart"] == p], c), rmap, k)
                 if tmap:
                     want[p, c] = vd.chi2_from_count_maps(rmap, tmap, 5)
         got = {
@@ -381,27 +394,24 @@ def _check_streaming_monitor(ref, test, ref_rows, test_rows):
                                     max_categories=k)
         bin_counts = vd._ref_bin_counts(fit_df, DEGENERATE_EDGES)
         _eq(bin_counts, {c: _hist(fit_rows, c) for c in DEGENERATE_EDGES})
-        mon.suite.use_fit(DEGENERATE_EDGES, bin_counts, None)
         ref_counts = {c: _capped(_cat_counts(fit_rows, c), k) for c in ("cat", "y")}
-        _eq(mon.ref_cat_counts, ref_counts)
-        want = {}
-        for c in ("cat", "y"):
-            fit_capped = len(_cat_counts(fit_rows, c)) > k
-            batch = Counter()
-            for key, n in _cat_counts(test_rows, c).items():
-                unfitted = fit_capped and key not in ref_counts[c]
-                batch[vd.CHI2_OTHER_BUCKET if unfitted else key] += n
-            want[c] = _capped(dict(batch), k, pinned=set(ref_counts[c]))
-        _eq(mon._batch_cat_counts(test), want)
+        _eq(mon.suite.fitted.ref_cats, ref_counts)
+        mon.suite.use_fit(DEGENERATE_EDGES, bin_counts, None, ref_counts)
+        want = {c: _scored(_cat_counts(test_rows, c), ref_counts[c], k) for c in ("cat", "y")}
+        _eq(_suite_cat_counts(mon.suite, test), {c: m for c, m in want.items() if m})
         got = {(r["feature"], r["check"]): r["statistic"] for r in mon.score_batch(test)}
-        # the batch rule: an empty batch is no partition, so no PSI row
+        # the batch rule: an empty batch is no partition, so no PSI or
+        # chi2 row
         want_psi = {
             c: float(nm.psi_from_proportions(_props(fit_rows, c), _props(test_rows, c), 0.001))
             for c in DEGENERATE_EDGES
         } if test_rows else {}
         _eq({c: v for (c, check), v in got.items() if check == "psi"}, want_psi)
-        for c in ("cat", "y"):
-            _eq(got[c, "chi2"], vd.chi2_from_count_maps(ref_counts[c], want[c])[0])
+        _eq({c: v for (c, check), v in got.items() if check == "chi2"}, {
+            c: vd.chi2_from_count_maps(ref_counts[c], m)[0] for c, m in want.items() if m
+        })
+        if not test_rows:
+            assert mon.score_batch(test) == []
 
 
 def _check_partial_count_stage(ref, test, ref_rows, test_rows):

@@ -302,7 +302,7 @@ def _drop_success_marker(spark, store):
 def _truncate_stored_edges(spark, store):
     rows = [
         (r["family"], r["feature"],
-         r["values"][:-1] if r["family"] == "psi" else r["values"], r["counts"])
+         r["values"][:-1] if r["family"] == "psi" else r["values"], r["counts"], r["keys"])
         for r in spark.read.parquet(store).collect()
     ]
     local_frame(spark, rows, FIT_SCHEMA).write.mode("overwrite").parquet(store)
@@ -319,11 +319,12 @@ def _shift_some_reference_values(df):
         (lambda df: df.where(F.col("part") < 2), None, {}, None),
         (None, _shift_some_reference_values, {}, None),
         (None, None, {"n_bins": 5}, None),
+        (None, None, {"max_categories": 2}, None),
         (None, None, {}, _drop_success_marker),
         (None, None, {}, _truncate_stored_edges),
     ],
-    ids=["fewer_parts", "changed_values", "changed_n_bins", "no_success_marker",
-         "inconsistent_lengths"],
+    ids=["fewer_parts", "changed_values", "changed_n_bins", "changed_max_categories",
+         "no_success_marker", "inconsistent_lengths"],
 )
 def test_resume_refits_when_the_stored_fit_does_not_apply(
     spark, drifted_parquet, fit_spy, tmp_path, caplog,
@@ -363,15 +364,19 @@ def test_resume_refits_when_the_stored_fit_does_not_apply(
 
 
 def test_fit_store_round_trips_exactly(spark, tmp_path):
-    """Float64 edges and ECDF values, and int64 counts, come back bit for
-    bit; a run with no store loads nothing and does not warn."""
+    """Float64 edges and ECDF values, int64 counts and the chi2 reference
+    categories come back bit for bit; a run with no store loads nothing
+    and does not warn."""
     cp = CheckpointManager(spark, str(tmp_path / "ledger"))
     assert cp.load_fit("rt01", "0" * 16) is None
     edges = {"x": np.array([-np.inf, 0.1 + 0.2, 5e-324, np.nextafter(1.0, 2.0)])}
     counts = {"x": np.array([2**62, 0, 7], np.int64)}
     ecdf = {"y": (np.array([-0.0, 1e308]), np.array([1, 2**53 + 1], np.int64), 2**53 + 1)}
-    cp.save_fit("rt01", "f" * 16, (edges, counts, ecdf))
-    got_edges, got_counts, got_ecdf = cp.load_fit("rt01", "f" * 16)
+    cats = {"x": {"": 3, "é,\x00": 2**62, vd.CHI2_OTHER_BUCKET: 1}, "empty": {}}
+    cp.save_fit("rt01", "f" * 16, (edges, counts, ecdf, cats))
+    got_edges, got_counts, got_ecdf, got_cats = cp.load_fit("rt01", "f" * 16)
+    assert got_cats == cats
+    assert all(type(n) is int for m in got_cats.values() for n in m.values())
     assert got_edges["x"].tobytes() == edges["x"].tobytes()
     assert got_counts["x"].dtype == np.int64
     assert np.array_equal(got_counts["x"], counts["x"])
@@ -391,7 +396,9 @@ def test_run_summary_counts_each_part_once(spark, tmp_path):
     want = {"run_id": "sum01", "parts_done": 2, "n_failed": 3}
     assert cp.run_summary("sum01") == want
     assert cp.completed_parts("sum01") == [0, 1]
-    cp.save_fit("sum01", "a" * 16, ({"x": np.array([0.0, 1.0])}, {"x": np.array([3])}, None))
+    cp.save_fit(
+        "sum01", "a" * 16, ({"x": np.array([0.0, 1.0])}, {"x": np.array([3])}, None, {})
+    )
     assert cp.run_summary("sum01") == want
     assert cp.completed_parts("sum01") == [0, 1]
 
@@ -535,17 +542,20 @@ JOB_BUDGET = {
     "chi2_by_partition": (
         2, lambda f: vd.chi2_by_partition(f.ref, f.test, ["fmt", "hq"])),
     "chi2_by_partition[capped]": (
-        5, lambda f: vd.chi2_by_partition(f.ref, f.test, ["fmt", "hq"], max_categories=10)),
+        2, lambda f: vd.chi2_by_partition(f.ref, f.test, ["fmt", "hq"], max_categories=10)),
     "fit_ref_category_counts": (
         3, lambda f: vd.fit_ref_category_counts(f.ref, ["fmt", "hq"])),
     "fit_ref_category_counts[capped]": (
         3, lambda f: vd.fit_ref_category_counts(f.ref, ["fmt", "hq"], 10)),
     "StreamingDriftMonitor.score_batch": (
-        7, lambda f: f.monitor.score_batch(f.test)),
+        4, lambda f: f.monitor.score_batch(f.test)),
     "CBPE.detect": (
         4, lambda f: f.cbpe.detect(f.test_ds)),
     "fit_reference": (
         3, lambda f: vd.fit_reference(f.ref, ["w", "h"], ["w", "h"])),
+    "fit_reference[categorical]": (
+        3, lambda f: vd.fit_reference(
+            f.ref, ["w", "h"], ["w", "h"], cat_cols=["fmt", "hq"], max_categories=10)),
     "partition_verdicts": (
         7, lambda f: vd.partition_verdicts(f.df, ["w", "h"], ["fmt", "hq"]).collect()),
     "CheckpointManager.mark_done": (
@@ -671,13 +681,15 @@ def test_score_count_routes_bit_identical(spark, budget_frame, monkeypatch, capl
         return verdicts, chi2, _null_part_warnings(caplog.records)
 
     verdicts, chi2, warnings = run()
-    assert len(caps) == (0 if max_categories == 1000 else 2)
+    assert caps == []  # within the budget the rule runs on the driver
     assert {r["part"] for r in chi2} == {0, 1, 2, 3}
     assert len(warnings) == 3  # PSI and chi2 in the suite, chi2 alone
     monkeypatch.setattr(vd, "MAX_REF_ECDF_POINTS", 5)
     caps.clear()
     over_verdicts, over_chi2, over_warnings = run()
-    assert len(caps) == 2  # every chi2 feature capped, in both calls
+    # every chi2 feature capped in Spark, the reference then the scored
+    # parts, in both calls (the suite's reference in its fit)
+    assert len(caps) == 4
     assert sorted(map(repr, over_verdicts)) == sorted(map(repr, verdicts))
     assert repr(over_chi2) == repr(chi2)
     assert over_warnings == warnings
@@ -892,6 +904,55 @@ def test_chi2_high_cardinality_guard(spark, caplog):
     r_plain = chi2_by_partition(small_ref, small_test, ["cat"])
     r_guard = chi2_by_partition(small_ref, small_test, ["cat"], max_categories=10)
     assert r_plain == r_guard
+
+
+@pytest.fixture(scope="module")
+def over_cap_parts(spark):
+    """50 reference categories c00..c49 (c00 the most frequent); part 0
+    drawn from the reference without its 10 rarest categories, parts 1-3
+    each with the reference's categories plus 10 heavy new ones: 80
+    categories over the reference and all parts, 40-60 in each part."""
+    ref_counts = {f"c{i:02d}": 20 + 4 * (49 - i) for i in range(50)}
+    rows = [("ref", -1, k) for k, n in ref_counts.items() for _ in range(n)]
+    rows += [("test", 0, k) for k, n in ref_counts.items() if k < "c40" for _ in range(n // 2)]
+    for part in (1, 2, 3):
+        rows += [("test", part, k) for k, n in ref_counts.items() for _ in range(n // 4)]
+        rows += [("test", part, f"new{part}-{j}") for j in range(10) for _ in range(300)]
+    df = spark.createDataFrame(rows, "split string, part int, cat string").cache()
+    df.count()
+    yield SimpleNamespace(df=df, ref_counts=ref_counts)
+    df.unpersist()
+
+
+def test_over_cap_chi2_depends_on_its_own_partition(spark, over_cap_parts, tmp_path):
+    """Over max_categories a partition's chi2 depends on its own rows and
+    the reference alone: part 0 scores the same alone and beside parts
+    whose new categories push the reference ∪ test count over the cap, and
+    a crash and resume one partition per batch equals one uninterrupted
+    run."""
+    df, kw = over_cap_parts.df, dict(ks_cols=[], max_categories=60)
+
+    def part0(parts):
+        (row,) = partition_verdicts(df, [], ["cat"], parts=parts, **kw).where("part = 0").collect()
+        return row
+
+    alone, beside = part0([0]), part0([0, 1, 2, 3])
+    assert alone == beside
+    part0_counts = {k: n // 2 for k, n in over_cap_parts.ref_counts.items() if k < "c40"}
+    stat, p, n_ref, n_test = vd.chi2_from_count_maps(over_cap_parts.ref_counts, part0_counts)
+    assert (alone["statistic"], alone["p_value"], alone["n_ref"], alone["n_test"]) == (
+        stat, p, n_ref, n_test)
+
+    want = partition_verdicts(df, [], ["cat"], **kw).collect()
+    crashing = _CrashAfterFirstBatch(spark, str(tmp_path / "ledger"))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        resumable_partition_drift(df, crashing, "cap01", [], ["cat"], batch_parts=1, **kw)
+    resumed = resumable_partition_drift(
+        df, CheckpointManager(spark, str(tmp_path / "ledger")), "cap01", [], ["cat"],
+        batch_parts=1, **kw,
+    ).collect()
+    assert len({r["part"] for r in resumed}) == 3
+    _assert_same_verdicts(crashing.persisted + resumed, want)
 
 
 def test_null_part_rows_warned_not_silent(spark, caplog):

@@ -8,7 +8,20 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from driftspark.streaming import StreamingDriftMonitor, windowed_event_counts
+import driftspark.verdicts as vd
+from driftspark.streaming import StreamingDriftMonitor
+
+
+def _batch_cat_counts(monitor, batch_df):
+    """{feature: capped category counts} of one micro-batch: the counts
+    the monitor's chi2 rows score, from its suite's count of the batch as
+    one partition."""
+    suite = monitor.suite
+    _, _, _, cats = vd._score_counts(
+        None, batch_df.withColumn(suite.part_col, F.lit(0)), {}, suite.cat_cols,
+        suite.part_col, suite.max_categories, suite.fitted.ref_cats,
+    )
+    return {f: m for (_, f), m in cats.items()}
 
 
 def test_streaming_drift_monitor_end_to_end(spark):
@@ -77,22 +90,6 @@ def test_streaming_drift_monitor_end_to_end(spark):
         assert direct[("ks", "y")] == pytest.approx(batch_ks["y"][0], abs=1e-12)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_windowed_event_counts_batch_semantics(spark):
-    # the windowing expression is testable on a static frame
-    pdf = pd.DataFrame(
-        {
-            "ts": pd.to_datetime(
-                ["2026-01-01 00:10", "2026-01-01 00:50", "2026-01-01 01:10"]
-            ),
-            "kind": ["a", "a", "b"],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    out = windowed_event_counts(df, "ts", "1 hour", "2 hours", ["kind"]).toPandas()
-    assert len(out) == 2
-    assert sorted(out["n"].tolist()) == [1, 2]
 
 
 def test_cumulative_psi_stateful_stream(spark):
@@ -217,8 +214,8 @@ def test_streaming_psi_equals_batch(spark):
 
 def test_streaming_chi2_capped_feature_bounded_collect(spark):
     """When the fitted reference capped a feature, batch-side tail/unseen
-    categories remap into __chi2_other__ IN SPARK (the collect stays
-    bounded), NULLs stay excluded, and the verdict is still computable."""
+    categories remap into __chi2_other__, NULLs stay excluded, and the
+    verdict is still computable."""
     from driftspark.streaming import StreamingDriftMonitor
     from driftspark.verdicts import CHI2_OTHER_BUCKET
 
@@ -230,9 +227,9 @@ def test_streaming_chi2_capped_feature_bounded_collect(spark):
     monitor = StreamingDriftMonitor(
         spark.createDataFrame(ref_pdf), ["x"], cat_cols=["cat"], max_categories=10
     )
-    assert "cat" in monitor._capped_cats
-    assert CHI2_OTHER_BUCKET in monitor.ref_cat_counts["cat"]
-    assert len(monitor.ref_cat_counts["cat"]) <= 10
+    ref_cats = monitor.suite.fitted.ref_cats["cat"]
+    assert CHI2_OTHER_BUCKET in ref_cats  # the fit capped the feature
+    assert len(ref_cats) <= 10
 
     batch_pdf = pd.DataFrame({
         "x": rng.normal(0, 1, 1200),
@@ -396,10 +393,10 @@ def test_cumulative_chi2_stateful_stream(spark):
 
 def test_streaming_chi2_uncapped_feature_guarded_collect(spark):
     """A feature UNDER the cap at fit time but high-cardinality in an
-    incoming micro-batch (ids landing in a cat col) still collects
-    bounded: batch categories past max_categories fold into
-    __chi2_other__ IN SPARK, ranked reference-members-first, and the
-    statistic equals the same fold computed in pandas."""
+    incoming micro-batch (ids landing in a cat col) is still capped:
+    batch categories past max_categories fold into __chi2_other__, ranked
+    reference-members-first, and the statistic equals the same fold
+    computed in pandas."""
     from driftspark.streaming import StreamingDriftMonitor
     from driftspark.verdicts import CHI2_OTHER_BUCKET, chi2_from_count_maps
 
@@ -411,7 +408,8 @@ def test_streaming_chi2_uncapped_feature_guarded_collect(spark):
     monitor = StreamingDriftMonitor(
         spark.createDataFrame(ref_pdf), ["x"], cat_cols=["cat"], max_categories=10
     )
-    assert "cat" not in monitor._capped_cats  # under cap at fit time
+    ref_cats = monitor.suite.fitted.ref_cats["cat"]
+    assert CHI2_OTHER_BUCKET not in ref_cats  # under cap at fit time
 
     batch_cats = ["a"] * 300 + ["b"] * 300 + [f"id-{i}" for i in range(500)]
     batch_pdf = pd.DataFrame({
@@ -427,20 +425,20 @@ def test_streaming_chi2_uncapped_feature_guarded_collect(spark):
     counts = pd.Series(batch_cats).value_counts().to_dict()
     ranked = sorted(
         counts,
-        key=lambda v: (v not in monitor.ref_cat_counts["cat"], -counts[v], v),
+        key=lambda v: (v not in ref_cats, -counts[v], v),
     )
     tmap: dict = {}
     for rn, v in enumerate(ranked, start=1):
-        keep = v in monitor.ref_cat_counts["cat"] or rn < 10
+        keep = v in ref_cats or rn < 10
         key = v if keep else CHI2_OTHER_BUCKET
         tmap[key] = tmap.get(key, 0) + counts[v]
     assert tmap[CHI2_OTHER_BUCKET] == 493  # 500 novel ids, 7 kept
     # assert the COLLECTED COUNT MAP itself: the chi-square is inf on both
     # sides here (novel categories have ref count 0), so a statistic-only
     # comparison could not catch a wrong or missing fold
-    got_map = monitor._batch_cat_counts(spark.createDataFrame(batch_pdf))["cat"]
+    got_map = _batch_cat_counts(monitor, spark.createDataFrame(batch_pdf))["cat"]
     assert got_map == tmap
-    stat, p, _, _ = chi2_from_count_maps(monitor.ref_cat_counts["cat"], tmap)
+    stat, p, _, _ = chi2_from_count_maps(monitor.suite.fitted.ref_cats["cat"], tmap)
     r = rows[("chi2", "cat")]
     assert r["statistic"] == pytest.approx(stat, abs=1e-12)
     assert r["p_value"] == pytest.approx(p, abs=1e-12)
@@ -471,9 +469,9 @@ def test_streaming_chi2_novel_cats_under_cap_kept_separate(spark):
     tmap = pd.Series(batch_cats).value_counts().to_dict()
     # the map assertion is the real check (the statistic is inf on both
     # sides because of the novel categories): nothing may fold
-    got_map = monitor._batch_cat_counts(spark.createDataFrame(batch_pdf))["cat"]
+    got_map = _batch_cat_counts(monitor, spark.createDataFrame(batch_pdf))["cat"]
     assert got_map == tmap
-    stat, p, _, _ = chi2_from_count_maps(monitor.ref_cat_counts["cat"], tmap)
+    stat, p, _, _ = chi2_from_count_maps(monitor.suite.fitted.ref_cats["cat"], tmap)
     assert rows[("chi2", "cat")]["statistic"] == pytest.approx(stat, abs=1e-12)
     assert rows[("chi2", "cat")]["p_value"] == pytest.approx(p, abs=1e-12)
 
@@ -666,7 +664,7 @@ def test_streaming_chi2_guard_boundary_exactly_at_cap(spark):
 
     def batch_map(cats):
         pdf = pd.DataFrame({"x": rng.normal(0, 1, len(cats)), "cat": cats})
-        return monitor._batch_cat_counts(spark.createDataFrame(pdf))["cat"]
+        return _batch_cat_counts(monitor, spark.createDataFrame(pdf))["cat"]
 
     # exactly 10 distinct (2 ref + 8 novel): nothing folds (n_f <= cap)
     at_cap = ["a"] * 50 + ["b"] * 40 + sum(([f"n{i}"] * 6 for i in range(8)), [])
@@ -681,7 +679,7 @@ def test_streaming_chi2_guard_boundary_exactly_at_cap(spark):
     assert batch_map(over_cap) == counts
     # and score_batch consumes exactly that map
     r2 = score(over_cap)
-    stat2, p2, _, _ = chi2_from_count_maps(monitor.ref_cat_counts["cat"], counts)
+    stat2, p2, _, _ = chi2_from_count_maps(monitor.suite.fitted.ref_cats["cat"], counts)
     assert r2["statistic"] == pytest.approx(stat2, abs=1e-12)
     assert r2["p_value"] == pytest.approx(p2, abs=1e-12)
 
