@@ -13,24 +13,23 @@ driftspark.verdicts._VerdictSuite, fitted once on the static reference
 (edges, reference histogram, KS ECDF broadcast once, capped reference
 category counts); it scores each micro-batch as ONE partition, so batch
 and streaming verdicts are equal on identical rows (parity-locked test),
-over the category cap too.  The stream never rescans the reference; the
-cumulative operators melt with the same stats._melt_keys.
+over the category cap too.  The stream never rescans the reference.
 
 Surfaces:
 - StreamingDriftMonitor: per-batch PSI + KS + chi2 verdicts via
   foreachBatch (exactly-once parquet sink).
 - cumulative_psi_stream / cumulative_ks_stream / cumulative_chi2_stream:
-  stateful applyInPandasWithState operators whose bounded per-feature
-  state accumulates EVERYTHING seen, catching slow drift no single batch
-  exposes; stateless per-partition partial counts bound each feature's
-  state-task input regardless of stream volume.
+  one stateful count operator (_cumulative_counts) and three score
+  functions.  Each feature's bounded state, one count vector, accumulates
+  EVERYTHING seen, catching slow drift no single batch exposes;
+  stateless per-partition partial counts bound each feature's state-task
+  input regardless of stream volume.
 - start_payload_validation_stream: the north-rule per-row PSNR/caption
   invariant over continuously-landing co-located pairs.
 """
 
 from __future__ import annotations
 
-import logging
 from typing import Dict, Optional, Sequence
 
 import numpy as np
@@ -39,9 +38,13 @@ from pyspark.sql import functions as F
 
 from driftspark.numerics import psi_from_proportions, severity_from_psi
 from driftspark.session import local_frame
-from driftspark.stats import _fold_unfitted, _melt_keys, bucket_expr
-
-logger = logging.getLogger(__name__)
+from driftspark.stats import (
+    CHI2_OTHER_BUCKET,
+    _fold_unfitted,
+    _melt_keys,
+    _proportions,
+    bucket_expr,
+)
 
 #: the part column a micro-batch is scored under: one literal partition
 _BATCH = "__batch"
@@ -134,23 +137,35 @@ class StreamingDriftMonitor:
             ).withColumn("processed_at", F.current_timestamp())
             out.write.mode("append").parquet(sink_dir)
 
-        writer = stream_df.writeStream.foreachBatch(handle).option(
-            "checkpointLocation", checkpoint_dir
+        return _start_foreach_batch(
+            stream_df, handle, checkpoint_dir, trigger_available_now, processing_time
         )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
+
+
+def _start_foreach_batch(
+    stream_df: DataFrame, handle, checkpoint_dir: str, trigger_available_now: bool,
+    processing_time: Optional[str],
+):
+    """Start ``handle(batch_df, batch_id)`` on every micro-batch of
+    ``stream_df``, checkpointed in ``checkpoint_dir``: one availableNow
+    run, else a ``processing_time`` trigger when one is given."""
+    writer = stream_df.writeStream.foreachBatch(handle).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
 
 
 def _partial_count_stage(
     stream_df: DataFrame, keys: Dict[str, Column], key_type: str
 ) -> DataFrame:
-    """Stateless per-partition (feature, key) partial counts of the
-    non-NULL keys (:func:`driftspark.stats._melt_keys`) — the
-    pre-aggregation every cumulative stream inserts BEFORE its stateful
-    shuffle so the single per-feature state task receives aggregated
+    """Stateless per-partition (feature, key, c) partial counts of the
+    non-NULL keys (:func:`driftspark.stats._melt_keys`): the
+    pre-aggregation a cumulative stream inserts BEFORE its stateful
+    shuffle, so the single per-feature state task receives aggregated
     rows, never raw row volume."""
     return (
         _melt_keys(stream_df, keys)
@@ -167,6 +182,39 @@ def _partial_count_stage(
     )
 
 
+def _cumulative_counts(
+    partials: DataFrame, n_slots: Dict[str, int], score, score_schema: str
+) -> DataFrame:
+    """THE cumulative stream operator, over (feature, key int, c) partial
+    counts: each feature's state is one ``counts array<long>`` vector of
+    ``n_slots[feature]`` slots, to which every trigger adds its partial
+    counts, so the state stays O(features x slots) whatever the stream's
+    volume.  Each trigger emits (feature, n_seen, *score(feature, counts))
+    per feature with rows in it (``score_schema`` types the score), in
+    update mode; with no timeout Spark updates no other feature, so n_seen
+    is never 0."""
+    import pandas as pd_
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.types import StructType
+
+    out_schema = "feature string, n_seen long, " + score_schema
+    names = StructType.fromDDL(out_schema).fieldNames()
+
+    def update(key, pdfs, state: GroupState):
+        feature = key[0]
+        counts = np.array(state.get[0] if state.exists else [0] * n_slots[feature], np.int64)
+        for pdf in pdfs:
+            np.add.at(counts, pdf["key"].to_numpy(np.int64), pdf["c"].to_numpy(np.int64))
+        state.update((counts.tolist(),))
+        row = (feature, int(counts.sum()), *score(feature, counts))
+        yield pd_.DataFrame([row], columns=names)
+
+    return partials.groupBy("feature").applyInPandasWithState(
+        update, outputStructType=out_schema, stateStructType="counts array<long>",
+        outputMode="update", timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 def cumulative_psi_stream(
     stream_df: DataFrame,
     edges_map: Dict[str, np.ndarray],
@@ -174,68 +222,26 @@ def cumulative_psi_stream(
     psi_threshold: float = 0.2,
     min_bin_size: float = 0.001,
 ) -> DataFrame:
-    """Custom STATEFUL streaming operator (applyInPandasWithState): the
-    cumulative test-side histogram per feature persists in group state
-    across micro-batches, so every trigger emits the PSI of ALL data seen
-    so far vs the fitted reference — unlike the per-batch foreachBatch
-    monitor, slow drift that no single micro-batch exposes accumulates
-    until it crosses the threshold.
+    """Custom STATEFUL streaming operator: the cumulative test-side
+    histogram per feature persists in group state across micro-batches,
+    so every trigger emits the PSI of ALL data seen so far vs the fitted
+    reference — unlike the per-batch foreachBatch monitor, slow drift that
+    no single micro-batch exposes accumulates until it crosses the
+    threshold.  State per feature is the bin-count vector (n_bins longs);
+    values outside the fitted edges, NULL and NaN count in no bin.
+    Returns a streaming DataFrame (feature, n_seen, psi, severity, passed)
+    in update mode."""
+    ref = {c: np.asarray(p, dtype=np.float64) for c, p in ref_props.items()}
 
-    State per feature is just the bin-count vector (n_bins longs) — the
-    checkpointed state store stays O(features x bins) forever regardless
-    of stream volume.  Returns a streaming DataFrame
-    (feature, n_seen, psi, severity, passed) in update mode.
-    """
-    import pandas as pd_
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    def score(feature, counts):
+        psi = float(psi_from_proportions(ref[feature], _proportions(counts), min_bin_size))
+        return psi, severity_from_psi(psi), psi < psi_threshold
 
-    # stateless per-partition partial counts BEFORE the stateful group: the
-    # shuffle into each feature's single state task carries at most
-    # partitions x n_bins rows per trigger, never the raw row volume
-    partials = _partial_count_stage(
-        stream_df, {c: bucket_expr(c, e) for c, e in edges_map.items()}, "int"
-    )
-    n_bins_by_feat = {c: len(e) - 1 for c, e in edges_map.items()}
-    ref_props_plain = {c: [float(x) for x in p] for c, p in ref_props.items()}
-
-    def update(key, pdfs, state: GroupState):
-        feature = key[0]
-        n_bins = n_bins_by_feat[feature]
-        counts = (
-            np.array(state.get[0], dtype=np.int64)
-            if state.exists
-            else np.zeros(n_bins, dtype=np.int64)
-        )
-        for pdf in pdfs:
-            for b, c in zip(pdf["key"].values, pdf["c"].values):
-                counts[int(b)] += int(c)
-        state.update((counts.tolist(),))
-        total = int(counts.sum())
-        test_p = counts / total if total > 0 else counts.astype(float)
-        psi = (
-            psi_from_proportions(
-                np.array(ref_props_plain[feature]), test_p, min_bin_size
-            )
-            if total > 0
-            else 0.0
-        )
-        yield pd_.DataFrame(
-            {
-                "feature": [feature],
-                "n_seen": [total],
-                "psi": [float(psi)],
-                "severity": [severity_from_psi(psi)],
-                "passed": [bool(psi < psi_threshold)],
-            }
-        )
-
-    return partials.groupBy("feature").applyInPandasWithState(
-        update,
-        outputStructType="feature string, n_seen long, psi double, "
-                         "severity string, passed boolean",
-        stateStructType="counts array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    keys = {c: bucket_expr(c, e) for c, e in edges_map.items()}
+    return _cumulative_counts(
+        _partial_count_stage(stream_df, keys, "int"),
+        {c: len(e) - 1 for c, e in edges_map.items()},
+        score, "psi double, severity string, passed boolean",
     )
 
 
@@ -265,14 +271,9 @@ def start_payload_validation_stream(
         )
         out.write.mode("append").parquet(sink_dir)
 
-    writer = pairs_stream_df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        pairs_stream_df, handle, checkpoint_dir, trigger_available_now, processing_time
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def fit_ks_grid(
@@ -307,102 +308,52 @@ def cumulative_ks_stream(
     ks_grid: Dict[str, tuple],
     ks_threshold: float = 0.05,
 ) -> DataFrame:
-    """Custom STATEFUL streaming operator (applyInPandasWithState): the
-    cumulative test-side grid histogram per feature persists across
-    micro-batches, so every trigger emits the KS D of ALL data seen so far
-    vs the fitted reference — the KS analog of cumulative_psi_stream,
-    catching slow drift no single micro-batch exposes.
+    """Custom STATEFUL streaming operator: the cumulative test-side grid
+    histogram per feature persists across micro-batches, so every trigger
+    emits the KS D of ALL data seen so far vs the fitted reference — the
+    KS analog of cumulative_psi_stream.
 
     D is evaluated at the fitted grid points: exact there, and within
     one grid cell's mass of the true supremum (grid from ``fit_ks_grid``
     → error <= 1/n_grid of reference mass plus the test mass inside one
-    cell).  State per feature is one count vector of len(grid)+1 longs —
-    O(features x n_grid) in the state store forever, regardless of
-    stream volume.  Returns a streaming DataFrame
-    (feature, n_seen, ks_d, p_value, severity, passed) in update mode.
-    """
+    cell).  State per feature is one count vector of len(grid)+1 longs.
+    Returns a streaming DataFrame (feature, n_seen, ks_d, p_value,
+    severity, passed) in update mode."""
     import pandas as pd_
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from driftspark.numerics import ks_2samp_pvalue, severity_from_pvalue
+    from driftspark.numerics import ks_2samp_pvalue
+    from driftspark.verdicts import pvalue_verdict
 
-    cols = list(ks_grid.keys())
-    grid_plain = {
-        c: ([float(x) for x in g], [float(x) for x in r], n)
+    fitted = {
+        c: (np.asarray(g, dtype=np.float64), np.asarray(r, dtype=np.float64), n)
         for c, (g, r, n) in ks_grid.items()
     }
 
-    # stateless per-partition grid bucketing + partial counts BEFORE the
-    # stateful group: each feature's single state task receives at most
-    # partitions x (len(grid)+1) rows per trigger, never raw values
+    # stateless per-partition grid bucketing + partial counts in numpy: a
+    # 512-point comparison chain per value in Spark blows up whole-stage
+    # codegen (OPTIMIZATION_r07.md).  Key i <=> value <= grid[i], len(grid)
+    # beyond it
     def partial_counts(batches):
         for pdf in batches:
-            rows = {"feature": [], "bucket": [], "c": []}
-            for c in cols:
-                g = np.asarray(grid_plain[c][0])
+            for c, (g, _, _) in fitted.items():
                 v = pdf[c].values.astype(np.float64)
-                v = v[~np.isnan(v)]
-                if len(v) == 0:
-                    continue
-                # bucket i  <=>  value <= grid[i] (i == len(g) beyond it)
-                bc = np.bincount(
-                    np.searchsorted(g, v, side="left"), minlength=len(g) + 1
-                )
-                nz = np.nonzero(bc)[0]
-                rows["feature"].extend([c] * len(nz))
-                rows["bucket"].extend(int(i) for i in nz)
-                rows["c"].extend(int(x) for x in bc[nz])
-            yield pd_.DataFrame(
-                {
-                    "feature": pd_.Series(rows["feature"], dtype="string"),
-                    "bucket": pd_.Series(rows["bucket"], dtype="int32"),
-                    "c": pd_.Series(rows["c"], dtype="int64"),
-                }
-            )
+                bc = np.bincount(np.searchsorted(g, v[~np.isnan(v)]), minlength=len(g) + 1)
+                nz = np.flatnonzero(bc)
+                yield pd_.DataFrame({"feature": c, "key": nz.astype(np.int32), "c": bc[nz]})
 
-    partials = stream_df.select(*cols).mapInPandas(
-        partial_counts, schema="feature string, bucket int, c long"
-    )
-
-    def update(key, pdfs, state: GroupState):
-        feature = key[0]
-        grid, ref_cdf, n_ref = grid_plain[feature]
-        g = np.asarray(grid)
-        m = len(g)
-        counts = (
-            np.array(state.get[0], dtype=np.int64)
-            if state.exists
-            else np.zeros(m + 1, dtype=np.int64)
-        )
-        for pdf in pdfs:
-            for b, c in zip(pdf["bucket"].values, pdf["c"].values):
-                counts[int(b)] += int(c)
-        state.update((counts.tolist(),))
+    def score(feature, counts):
+        _, ref_cdf, n_ref = fitted[feature]
         n_seen = int(counts.sum())
-        if n_seen == 0:
-            d, p = 0.0, 1.0
-        else:
-            t_cdf = np.cumsum(counts[:m]) / n_seen
-            d = float(np.max(np.abs(np.asarray(ref_cdf) - t_cdf)))
-            p = float(ks_2samp_pvalue(d, n_ref, n_seen))
-        yield pd_.DataFrame(
-            {
-                "feature": [feature],
-                "n_seen": [n_seen],
-                "ks_d": [d],
-                "p_value": [p],
-                "severity": [severity_from_pvalue(p, ks_threshold)],
-                "passed": [bool(not (p < ks_threshold))],
-            }
-        )
+        d = float(np.max(np.abs(ref_cdf - np.cumsum(counts[:-1]) / n_seen)))
+        p = float(ks_2samp_pvalue(d, n_ref, n_seen))
+        return (d, p, *pvalue_verdict(p, ks_threshold))
 
-    return partials.groupBy("feature").applyInPandasWithState(
-        update,
-        outputStructType="feature string, n_seen long, ks_d double, "
-                         "p_value double, severity string, passed boolean",
-        stateStructType="counts array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    partials = stream_df.select(*fitted).mapInPandas(
+        partial_counts, schema="feature string, key int, c long"
+    )
+    return _cumulative_counts(
+        partials, {c: len(g) + 1 for c, (g, _, _) in fitted.items()},
+        score, "ks_d double, p_value double, severity string, passed boolean",
     )
 
 
@@ -411,10 +362,9 @@ def cumulative_chi2_stream(
     ref_cat_counts: Dict[str, Dict[str, int]],
     chi2_threshold: float = 0.05,
 ) -> DataFrame:
-    """Stateful cumulative chi-square (applyInPandasWithState): per-feature
-    cumulative category counts persist across micro-batches, emitting the
-    chi-square of ALL test data seen so far vs the fitted reference
-    proportions — completes the cumulative trio (PSI, KS, chi2).
+    """Stateful cumulative chi-square: per-feature cumulative category
+    counts persist across micro-batches, emitting the chi-square of ALL
+    test data seen so far vs the fitted reference proportions.
 
     ``ref_cat_counts`` comes from verdicts.fit_ref_category_counts.  Every
     stream category OUTSIDE the fitted reference set folds into the
@@ -422,53 +372,31 @@ def cumulative_chi2_stream(
     its state forever, so both the checkpointed state and the shuffle into
     each feature's single state task must stay bounded at the fitted
     category set plus one bucket regardless of what the stream contains.
-    A stateless mapInPandas partial-count stage aggregates (feature, key)
-    counts per partition BEFORE the stateful shuffle, so the state task
-    receives at most partitions x (categories + 1) rows per trigger, never
-    raw row volume — the same bounding as cumulative_psi_stream /
-    cumulative_ks_stream."""
-    import pandas as pd_
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    The state counts each key of sorted(fitted categories ∪
+    {__chi2_other__}); a broadcast join of the partial counts with a
+    (feature, category, slot) frame keys them by slot."""
     from driftspark.verdicts import chi2_from_count_maps, pvalue_verdict
 
-    # stateless per-partition partial counts BEFORE the stateful group —
-    # with the fold, at most partitions x (categories+1) rows per
-    # feature per trigger reach the state task
-    keys = {
-        c: _fold_unfitted(F.col(c).cast("string"), m) for c, m in ref_cat_counts.items()
-    }
-    partials = _partial_count_stage(stream_df, keys, "string")
-    ref_plain = {c: dict(m) for c, m in ref_cat_counts.items()}
+    keys = {c: sorted({*m, CHI2_OTHER_BUCKET}) for c, m in ref_cat_counts.items()}
+    folds = {c: _fold_unfitted(F.col(c).cast("string"), m) for c, m in ref_cat_counts.items()}
+    folded = _partial_count_stage(stream_df, folds, "string")
+    slots = local_frame(
+        stream_df.sparkSession,
+        [(c, k, i) for c, ks in keys.items() for i, k in enumerate(ks)],
+        "feature string, key string, slot int",
+    )
+    partials = folded.join(F.broadcast(slots), ["feature", "key"]).select(
+        "feature", F.col("slot").alias("key"), "c"
+    )
 
-    def update(key, pdfs, state: GroupState):
-        feature = key[0]
-        tmap: dict = dict(zip(*state.get)) if state.exists else {}
-        tmap = {k: int(v) for k, v in tmap.items()}
-        for pdf in pdfs:
-            for cat, c in zip(pdf["key"].values, pdf["c"].values):
-                tmap[cat] = tmap.get(cat, 0) + int(c)
-        state.update((list(tmap.keys()), [int(v) for v in tmap.values()]))
-        stat, p, _, n_seen = chi2_from_count_maps(ref_plain[feature], tmap)
-        severity, passed = pvalue_verdict(p, chi2_threshold)
-        yield pd_.DataFrame(
-            {
-                "feature": [feature],
-                "n_seen": [n_seen],
-                "chi2_stat": [float(stat)],
-                "p_value": [float(p)],
-                "severity": [severity],
-                "passed": [passed],
-            }
-        )
+    def score(feature, counts):
+        tmap = {k: c for k, c in zip(keys[feature], counts.tolist()) if c}
+        stat, p, _, _ = chi2_from_count_maps(ref_cat_counts[feature], tmap)
+        return (float(stat), float(p), *pvalue_verdict(p, chi2_threshold))
 
-    return partials.groupBy("feature").applyInPandasWithState(
-        update,
-        outputStructType="feature string, n_seen long, chi2_stat double, "
-                         "p_value double, severity string, passed boolean",
-        stateStructType="cats array<string>, counts array<long>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _cumulative_counts(
+        partials, {c: len(ks) for c, ks in keys.items()},
+        score, "chi2_stat double, p_value double, severity string, passed boolean",
     )
 
 

@@ -49,6 +49,7 @@ from typing import Dict, List, NamedTuple, Optional, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -475,9 +476,20 @@ def w1_by_partition(
     )
 
 
-def _ref_ecdf_points(ref_g: DataFrame, max_points: int) -> Dict[str, tuple]:
-    """{feature: (sorted values, exact cumulative counts, n)} from a
-    (feature, value, c) distinct-count frame, with DISTRIBUTED thinning.
+def _distinct_totals(ref_g: DataFrame) -> Dict[str, int]:
+    """{feature: its number of distinct values} of a (feature, value, c)
+    distinct-count frame."""
+    totals = ref_g.groupBy("feature").agg(F.count(F.lit(1)).alias("nd")).collect()
+    return {r["feature"]: int(r["nd"]) for r in totals}
+
+
+def _ecdf_points_of(
+    ref_g: DataFrame, nd_by_feat: Dict[str, int], max_points: int
+) -> Dict[str, tuple]:
+    """{feature: (sorted values, exact cumulative counts, n)} of the
+    features in ``nd_by_feat`` (their distinct counts) from an already
+    persisted (feature, value, c) distinct-count frame ``ref_g``, with
+    DISTRIBUTED thinning.
 
     Features whose distinct count fits ``max_points`` collect exactly.
     Larger features never reach the driver unthinned: the exact
@@ -493,27 +505,6 @@ def _ref_ecdf_points(ref_g: DataFrame, max_points: int) -> Dict[str, tuple]:
     strictly below one quantum — the KS-D error from thinning is bounded
     by 1/max_points regardless of frequency skew.  Retained points carry
     EXACT cumulative counts."""
-    # the distinct set feeds 2-4 jobs (totals, small collect, big
-    # edges/thinned collect) — persist so the raw data is scanned once
-    ref_g = ref_g.persist()
-    try:
-        return _ecdf_points_of(ref_g, _distinct_totals(ref_g), max_points)
-    finally:
-        ref_g.unpersist()
-
-
-def _distinct_totals(ref_g: DataFrame) -> Dict[str, int]:
-    """{feature: its number of distinct values} of a (feature, value, c)
-    distinct-count frame."""
-    totals = ref_g.groupBy("feature").agg(F.count(F.lit(1)).alias("nd")).collect()
-    return {r["feature"]: int(r["nd"]) for r in totals}
-
-
-def _ecdf_points_of(
-    ref_g: DataFrame, nd_by_feat: Dict[str, int], max_points: int
-) -> Dict[str, tuple]:
-    """:func:`_ref_ecdf_points` of the features in ``nd_by_feat`` (their
-    distinct counts) on an already persisted ``ref_g``."""
     small = [f for f, nd in nd_by_feat.items() if nd <= max_points]
     big = [f for f, nd in nd_by_feat.items() if nd > max_points]
 
@@ -578,7 +569,7 @@ def ks_d_by_partition_broadcast(
     a feature's distinct-value count exceeds its share of
     ``max_ref_ecdf_points``, the exact cumulative frame gives every value
     its cumulative count and a mass-quantum filter keeps ~that many points
-    (always including the last = exact n; see :func:`_ref_ecdf_points`).
+    (always including the last = exact n; see :func:`_ecdf_points_of`).
     The driver only ever collects
     O(features x max_points) rows — at 10^12 rows the unthinned distinct
     set would not fit on any driver.  Retained points keep their EXACT
@@ -602,10 +593,9 @@ def fit_ks_reference_ecdf(
     split evenly across the fitted features (floor 10k per feature, so
     the KS-D thinning error stays <= 1e-4 even for wide feature sets) —
     driver memory is bounded regardless of how many columns are
-    monitored."""
-    return _ref_ecdf_points(
-        _distinct_counts(ref_df, cols), _ecdf_share(max_ref_ecdf_points, len(cols))
-    )
+    monitored.  It is :func:`fit_reference`'s ECDF: exact within each
+    feature's share, thinned by :func:`_ecdf_points_of` over it."""
+    return fit_reference(ref_df, [], cols, max_points=max_ref_ecdf_points).ecdf
 
 
 def _distinct_counts(
@@ -670,9 +660,9 @@ def fit_reference(
     equal to its separate fit: the exact PSI edges
     (stats._exact_quantiles, the ``percentile`` aggregate's arithmetic,
     then quantile_edges' post-processing), each bin's in-range reference
-    count (the bucket_expr rule) and each KS feature's exact ECDF
-    (fit_ks_reference_ecdf's points).  A zero edge may differ from
-    quantile_edges' in sign only: the GROUP BY normalizes -0.0.  With
+    count (the bucket_expr rule) and each KS feature's exact ECDF.  A zero
+    edge may differ from quantile_edges' in sign only: the GROUP BY
+    normalizes -0.0.  With
     ``approx_quantile_error`` the edges are approx_quantile_edges', run
     concurrently with the count, which still gives the bin counts and the
     ECDF.
@@ -729,6 +719,8 @@ def fit_reference(
             def categories():
                 if ref_cats is not None:
                     return ref_cats
+                if not cat_cols:
+                    return {}
                 rows = counts.where(F.col("cat").isNotNull()).select(
                     "feature", F.col("cat").alias("key"), "c"
                 )
@@ -868,29 +860,16 @@ def ks_d_against_ecdf(
 
     def compute(key, pdf):
         part, feat = key
-        vals, cums, n = b_ecdf.value[feat]
         if "c" in pdf.columns:
-            order = np.argsort(pdf["value"].values, kind="stable")
-            tv = pdf["value"].values.astype(np.float64)[order]
-            tc = pdf["c"].values.astype(np.int64)[order]
+            tv, tc = pdf["value"].values, pdf["c"].values
         else:
             tv, tc = np.unique(pdf["value"].values.astype(np.float64), return_counts=True)
-        m = int(tc.sum())
-        T = np.cumsum(tc) / m
-        T_prev = np.concatenate([[0.0], T[:-1]])
-        # _ks_d_of_counts repeats these lines rather than sharing a
-        # module-level helper, which every Python worker would then have
-        # to import driftspark for
-        hi = np.searchsorted(vals, tv, side="right")
-        lo = np.searchsorted(vals, tv, side="left")
-        R_at = np.where(hi > 0, cums[np.maximum(hi - 1, 0)], 0) / n
-        R_before = np.where(lo > 0, cums[np.maximum(lo - 1, 0)], 0) / n
-        d = float(
-            np.max(np.maximum(np.abs(R_at - T), np.abs(R_before - T_prev)))
+        # one (part, feature) group: the output takes its part from the key
+        counts = pa.table(
+            {"part": np.zeros(len(tv), np.int64), "feature": [feat] * len(tv), "value": tv, "c": tc}
         )
-        return pd.DataFrame(
-            {"part": [part], "feature": [feat], "d": [d], "n": [n], "m": [m]}
-        )
+        ((_, _, d, n, m),) = _ks_d_of_counts(counts, {feat: b_ecdf.value[feat]})
+        return pd.DataFrame({"part": [part], "feature": [feat], "d": [d], "n": [n], "m": [m]})
 
     return melted.groupBy("part", "feature").applyInPandas(
         compute, schema=out_schema
@@ -902,8 +881,8 @@ def _ks_d_of_counts(counts, ecdf: Dict[str, tuple]) -> List[tuple]:
     Arrow table of distinct test values, every (part, feature) group
     scored at once: the rows sort by (group, value), one cumulative sum
     with per-group offsets gives each group's test ECDF, and one
-    searchsorted per feature reads the reference ECDF.  Per group this is
-    the pandas-group math of :func:`ks_d_against_ecdf`, float for float."""
+    searchsorted per feature reads the reference ECDF.  The pandas groups
+    of :func:`ks_d_against_ecdf` score each group through it too."""
     part = counts.column("part").combine_chunks().dictionary_encode()
     feature = counts.column("feature").combine_chunks().dictionary_encode()
     feats = feature.dictionary.to_pylist()

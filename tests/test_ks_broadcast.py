@@ -50,30 +50,24 @@ def test_broadcast_ks_with_ties_and_duplicates(spark):
 
 
 def test_distributed_ecdf_thinning(spark, monkeypatch):
-    """_ref_ecdf_points thins features above the cap WITHOUT collecting
-    the full distinct set: retained points stay <= cap (+ exact last
-    point), every retained cumulative count equals the exact ECDF at that
-    value, and features under the cap come back bit-exact."""
+    """fit_ks_reference_ecdf thins features above their share of the cap
+    WITHOUT collecting the full distinct set: retained points stay <= cap
+    (+ exact last point), every retained cumulative count equals the exact
+    ECDF at that value, and features under the cap come back bit-exact."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from driftspark.verdicts import _ref_ecdf_points
+    from driftspark.verdicts import _ecdf_share, fit_ks_reference_ecdf
 
     rng = np.random.RandomState(3)
     big_vals = rng.normal(0, 1, 5000)           # ~5000 distinct > cap
     small_vals = rng.randint(0, 50, 5000)       # 50 distinct < cap
-    pdf = pd.concat([
-        pd.DataFrame({"feature": "big", "value": big_vals}),
-        pd.DataFrame({"feature": "small", "value": small_vals.astype(float)}),
-    ])
-    ref_g = (
-        spark.createDataFrame(pdf)
-        .groupBy("feature", "value")
-        .agg(F.count(F.lit(1)).alias("c"))
+    ref = spark.createDataFrame(
+        pd.DataFrame({"big": big_vals, "small": small_vals.astype(float)})
     )
     cap = 500
+    assert _ecdf_share(cap, 2) == cap  # each feature's share is the whole cap
     monkeypatch.setattr(st, "_CDF_PERCENTILE_BUCKETS", 8)
-    ecdf = _ref_ecdf_points(ref_g, cap)
+    ecdf = fit_ks_reference_ecdf(ref, ["big", "small"], cap)
 
     # exact oracle
     def exact(vals):
@@ -137,20 +131,15 @@ def test_thinned_ecdf_mass_aware_zero_inflated(spark, monkeypatch):
     holding 50% of rows) keeps its heavy head point, so the thinned KS-D
     error stays within 1/max_points even under frequency skew."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from driftspark.verdicts import _ref_ecdf_points
+    from driftspark.verdicts import fit_ks_reference_ecdf
 
     rng = np.random.RandomState(7)
     vals = np.concatenate([np.zeros(5000), rng.uniform(1, 2, 5000)])
-    ref_g = (
-        spark.createDataFrame(pd.DataFrame({"feature": "z", "value": vals}))
-        .groupBy("feature", "value")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    ref = spark.createDataFrame(pd.DataFrame({"z": vals}))
     cap = 100
     monkeypatch.setattr(st, "_CDF_PERCENTILE_BUCKETS", 8)
-    tv, tc, n = _ref_ecdf_points(ref_g, cap)["z"]
+    tv, tc, n = fit_ks_reference_ecdf(ref, ["z"], cap)["z"]
     assert n == 10000
     assert len(tv) <= cap + 1
     assert tv[0] == 0.0 and tc[0] == 5000  # the heavy head IS retained

@@ -553,6 +553,8 @@ JOB_BUDGET = {
         4, lambda f: f.cbpe.detect(f.test_ds)),
     "fit_reference": (
         3, lambda f: vd.fit_reference(f.ref, ["w", "h"], ["w", "h"])),
+    "fit_ks_reference_ecdf": (
+        3, lambda f: vd.fit_ks_reference_ecdf(f.ref, ["w", "h"])),
     "fit_reference[categorical]": (
         3, lambda f: vd.fit_reference(
             f.ref, ["w", "h"], ["w", "h"], cat_cols=["fmt", "hq"], max_categories=10)),

@@ -184,21 +184,20 @@ def test_supplier_rollup_broadcasts_dimensions(spark):
 
 
 def test_thinned_ecdf_offsets_join_broadcasts(spark, monkeypatch):
-    """The over-cap branch of _ref_ecdf_points joins tiny offset frames
-    in broadcast — the distinct-value side must never shuffle for them."""
+    """The over-cap branch of fit_ks_reference_ecdf joins tiny offset
+    frames in broadcast — the distinct-value side must never shuffle for
+    them."""
     import pandas as pd
 
     import driftspark.stats as st
-    from driftspark.verdicts import _ref_ecdf_points
+    from driftspark.verdicts import fit_ks_reference_ecdf
 
     rng = np.random.RandomState(1)
-    pdf = pd.DataFrame({"feature": "f", "value": rng.normal(size=3000)})
-    ref_g = (spark.createDataFrame(pdf)
-             .groupBy("feature", "value").agg(F.count(F.lit(1)).alias("c")))
+    ref = spark.createDataFrame(pd.DataFrame({"f": rng.normal(size=3000)}))
     # run it (over-cap) — correctness covered elsewhere; here we only
     # assert it completes with the bounded driver collect
     monkeypatch.setattr(st, "_CDF_PERCENTILE_BUCKETS", 8)
-    ecdf = _ref_ecdf_points(ref_g, 200)
+    ecdf = fit_ks_reference_ecdf(ref, ["f"], 200)
     assert len(ecdf["f"][0]) <= 201
 
 

@@ -561,6 +561,69 @@ def test_streaming_module_has_no_rdd_conversions():
     assert ".rdd" not in inspect.getsource(m)
 
 
+def test_streaming_module_has_one_cumulative_count_operator():
+    """The cumulative PSI, KS and chi2 streams share one stateful
+    operator: the module calls applyInPandasWithState three times (that
+    operator, the embedding stream and the silence stream)."""
+    import inspect
+
+    import driftspark.streaming as m
+
+    assert inspect.getsource(m).count("applyInPandasWithState(") == 3
+
+
+def test_cumulative_psi_trigger_without_in_range_rows_emits_nothing(spark):
+    """A trigger whose rows are all out of the fitted range or NULL/NaN
+    for a feature gives that feature no partial rows, so the stateful
+    update is not called for it and no row is emitted; the other feature
+    still scores, and a later in-range trigger scores only its own
+    counts."""
+    from driftspark.stats import quantile_edges
+    from driftspark.streaming import cumulative_psi_stream
+
+    tmp = tempfile.mkdtemp()
+    try:
+        rng = np.random.RandomState(53)
+        ref_df = spark.createDataFrame(
+            pd.DataFrame({"x": rng.normal(0, 1, 2000), "y": rng.normal(0, 1, 2000)})
+        )
+        edges = quantile_edges(ref_df, ["x", "y"], 10)
+        props = {c: np.full(10, 0.1) for c in edges}
+        lo, hi = float(edges["x"][0]), float(edges["x"][-1])
+        # rows, not pandas: a pandas NaN would reach Spark as NULL
+        x0 = [lo - 1.0, hi + 1.0, None, float("nan")] * 25
+        b0 = list(zip(x0, rng.normal(0, 1, 100).tolist()))
+        b1 = pd.DataFrame({"x": rng.normal(0, 1, 50), "y": rng.normal(0, 1, 50)})
+        for name, b in (("b0", b0), ("b1", b1)):
+            spark.createDataFrame(b, "x double, y double").coalesce(1).write.parquet(
+                f"{tmp}/in/{name}"
+            )
+        stream = (
+            spark.readStream.schema("x double, y double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{tmp}/in/*")
+        )
+        q = (
+            cumulative_psi_stream(stream, edges, props)
+            .writeStream.foreachBatch(
+                lambda df, bid: df.withColumn("batch_id", F.lit(bid))
+                .write.mode("append").parquet(f"{tmp}/sink")
+            )
+            .outputMode("update")
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120), "stream timed out"
+        out = spark.read.parquet(f"{tmp}/sink").toPandas()
+        got = sorted(zip(out["batch_id"], out["feature"], out["n_seen"]))
+        in_range = int(((b1["x"] >= lo) & (b1["x"] <= hi)).sum())
+        assert in_range > 0
+        assert got == [(0, "y", 100), (1, "x", in_range), (1, "y", 150)]
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_streaming_monitor_skips_empty_batch(spark):
     """An empty micro-batch file appends NOTHING to the sink (single
     count() emptiness probe), while non-empty batches still score."""
@@ -743,17 +806,17 @@ def test_cumulative_stream_state_stays_bounded_under_adversarial_batches(spark):
                 .collect()
             )
             assert len(rows) == 1  # one state row per feature
-            gs = rows[0]["value"]["groupState"]
-            return dict(zip(gs["cats"], gs["counts"]))
+            return rows[0]["value"]["groupState"]["counts"]
 
         first, last = chi2_state(0), chi2_state(n_batches - 1)
-        # bounded: state categories are a subset of fitted-ref + other,
-        # NEVER the 1200 fresh ids the stream carried
-        assert set(last) <= set(ref_counts["cat"]) | {CHI2_OTHER_BUCKET}
-        # constant in N: no growth between the first and last version
-        assert len(last) == len(first)
-        assert last[CHI2_OTHER_BUCKET] == 200 * n_batches
-        assert last["a"] == 50 * n_batches
+        # bounded: one slot per key of sorted(fitted ref ∪ {other}), NEVER
+        # the 1200 fresh ids the stream carried, and constant in N: no
+        # growth between the first and last version
+        keys = sorted({*ref_counts["cat"], CHI2_OTHER_BUCKET})
+        assert len(keys) == len(ref_counts["cat"]) + 1
+        assert len(first) == len(last) == len(keys)
+        assert last[keys.index(CHI2_OTHER_BUCKET)] == 200 * n_batches
+        assert last[keys.index("a")] == 50 * n_batches
 
         # ---- KS: every batch is far outside the fitted grid's range
         ref_vals = pd.DataFrame({"x": rng.normal(0, 1, 3000)})
