@@ -6,15 +6,25 @@ streaming surface (SURVEY.md §2.9) — resume is batch: a completion ledger
 keyed by (run_id, part), and a restart scores only the test partitions
 the ledger does not list as done.
 
-Storage: the ledger is a parquet directory written in append mode, one
-row per partition per completed batch.  A partition that is marked done
-twice keeps both rows; readers count each (run_id, part) once, with its
-latest row.
+Storage: the ledger is a parquet directory, one file per completed batch
+with one row per partition.  A partition that is marked done twice keeps
+both rows; readers count each (run_id, part) once, with its latest row.
+
+Every ledger and fit file is small, driver-held metadata, so the driver
+writes and reads it itself through the session's Hadoop FileSystem (any
+file system Spark can write) and no ledger operation submits a Spark job
+— the way Structured Streaming keeps its offset and commit logs (Armbrust
+et al., SIGMOD 2018).  A file is written as ``_tmp-<uuid>.parquet`` and
+then renamed to ``part-<uuid>.parquet``: every reader (this one and
+Spark's) skips ``_``- and ``.``-prefixed names, so a crash mid-write
+leaves no visible half-file, and concurrent appends never share a name
+or a ``_temporary`` directory.  Ledgers that Spark's parquet writer made
+(``part-*.snappy.parquet`` plus ``_SUCCESS``) read the same.
 
 The ledger directory also holds the fitted PSI/KS/chi2 reference state of
 each run, at ``<path>/_fit/run_id=<id>/fp=<fingerprint>``: one small parquet
-frame plus its ``_SUCCESS`` marker.  Spark's file reader skips
-``_``-prefixed names, so reading the ledger never sees it.  A resume with
+file plus its ``_SUCCESS`` marker, written the same way.  Readers skip the
+``_``-prefixed directory, so reading the ledger never sees it.  A resume with
 the same run_id and fingerprint loads that state instead of refitting; the
 fingerprint covers the fit settings, the reference row count and a
 checksum of the fitted reference columns, so a changed reference refits
@@ -32,11 +42,17 @@ from functools import reduce
 from typing import Optional, Sequence
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
+
+from driftspark.session import arrow_table
 
 logger = logging.getLogger(__name__)
+
+#: bytes per Py4J call when a file is written through the Hadoop FileSystem
+_CHUNK = 8 << 20
 
 #: one row per fitted (family, feature): PSI edges with the reference bin
 #: counts, the KS ECDF's sorted values with their cumulative counts, or
@@ -48,39 +64,96 @@ FIT_SCHEMA = (
 
 
 class CheckpointManager:
-    """Per-partition completion ledger at ``path`` (parquet append): one
+    """Per-partition completion ledger at ``path`` (parquet files): one
     (run_id, part, status, n_checks, n_failed, snapshot_id, completed_at)
     row per completed partition.  ``part`` keeps the verdicts' partition
     type (int, string, date, ...).  ``<path>/_fit`` holds each run's
-    fitted reference state (:meth:`save_fit`, :meth:`load_fit`)."""
+    fitted reference state (:meth:`save_fit`, :meth:`load_fit`).  Every
+    read and write runs on the driver, through the session's Hadoop
+    FileSystem, and submits no Spark job."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
-    def _read(self) -> Optional[DataFrame]:
-        # the schema comes from the files: a fixed one would pin the part
-        # type and fail on a ledger of string or date partitions
+    def _hadoop(self, path: str) -> tuple:
+        """(the Hadoop FileSystem of ``path``, its Hadoop Path)."""
+        sc = self.spark.sparkContext
+        p = sc._jvm.org.apache.hadoop.fs.Path(path)
+        return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
+
+    def _exists(self, path: str) -> bool:
+        """Whether ``path`` exists, on any file system Spark can write."""
+        fs, p = self._hadoop(path)
+        return fs.exists(p)
+
+    def _write(self, directory: str, table) -> None:
+        """Add ``table`` to ``directory`` as one new parquet file: written
+        as ``_tmp-<uuid>.parquet``, which every reader skips, then renamed
+        to ``part-<uuid>.parquet``.  Each file has its own name, so
+        concurrent writers never clobber each other."""
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf)
+        data = memoryview(buf.getvalue())
+        name = uuid.uuid4().hex
+        fs, tmp = self._hadoop(f"{directory.rstrip('/')}/_tmp-{name}.parquet")
+        out = fs.create(tmp, False)
         try:
-            return self.spark.read.parquet(self.path)
-        except AnalysisException:  # nothing written yet
-            return None
+            for i in range(0, len(data), _CHUNK):
+                out.write(bytes(data[i : i + _CHUNK]))
+        finally:
+            out.close()
+        _, final = self._hadoop(f"{directory.rstrip('/')}/part-{name}.parquet")
+        if not fs.rename(tmp, final):
+            raise IOError(f"could not rename {tmp} to {final}")
+
+    def _tables(self, directory: str) -> list:
+        """The ``pyarrow.Table`` of each visible parquet file directly in
+        ``directory`` (none when it does not exist): the files Spark's
+        reader would read, so ``_``- and ``.``-prefixed names (an
+        unfinished ``_tmp-`` file, ``_SUCCESS``, checksums, ``_fit``) are
+        skipped.  Reads files this class wrote and ones a Spark parquet
+        write made alike."""
+        fs, p = self._hadoop(directory)
+        if not fs.exists(p):
+            return []
+        tables = []
+        for status in fs.listStatus(p):
+            name = status.getPath().getName()
+            if name[0] in "_." or not name.endswith(".parquet") or not status.isFile():
+                continue
+            stream = fs.open(status.getPath())
+            try:
+                data = stream.readAllBytes()
+            finally:
+                stream.close()
+            tables.append(pq.read_table(pa.BufferReader(data)))
+        return tables
+
+    def _ledger_rows(self, run_id: str) -> list:
+        """The ledger rows of ``run_id``, as dicts, parts as Spark's
+        collect gives them."""
+        rows = []
+        for table in self._tables(self.path):
+            i = table.schema.get_field_index("part")
+            t = table.schema.field(i).type
+            instant = pa.types.is_timestamp(t) and (t.tz is not None or t.unit == "ns")
+            if instant:  # a TIMESTAMP part (``ns``: a Spark write's INT96)
+                table = table.set_column(i, "part", table.column(i).cast(pa.timestamp("us", "UTC")))
+            for r in table.to_pylist():
+                if r["run_id"] == run_id:
+                    if instant and r["part"] is not None:
+                        # Spark's collect rule: a naive local-time datetime
+                        r["part"] = r["part"].astimezone().replace(tzinfo=None)
+                    rows.append(r)
+        return rows
 
     @staticmethod
     def new_run_id() -> str:
         return uuid.uuid4().hex[:16]
 
     def completed_parts(self, run_id: str) -> list:
-        df = self._read()
-        if df is None:
-            return []
-        rows = (
-            df.where((F.col("run_id") == run_id) & (F.col("status") == "done"))
-            .select("part")
-            .distinct()
-            .collect()
-        )
-        return sorted(r["part"] for r in rows)
+        return sorted({r["part"] for r in self._ledger_rows(run_id) if r["status"] == "done"})
 
     def pending_parts(self, run_id: str, all_parts: Sequence) -> list:
         done = set(self.completed_parts(run_id))
@@ -95,9 +168,7 @@ class CheckpointManager:
         """Persist per-partition lineage+metrics rows derived from a
         verdict DataFrame (one ledger row per partition).  The rows are
         tallied on the driver — collecting the suite's LocalRelation
-        verdicts runs no job — and appended in one write."""
-        from driftspark.session import local_frame
-
+        verdicts runs no job — and appended as one new file."""
         now = time.time()
         tally: dict = {}  # part -> [n_checks, n_failed]; SQL count/sum rules
         for part, passed in verdicts.select("part", "passed").collect():
@@ -106,59 +177,43 @@ class CheckpointManager:
             if passed is not None:
                 t[1] = (t[1] or 0) + (not passed)
         part_type = verdicts.schema["part"].dataType.simpleString()
-        local_frame(
-            self.spark,
+        self._write(self.path, arrow_table(
             [(run_id, part, "done", n, failed, snapshot_id, now)
              for part, (n, failed) in tally.items()],
             f"run_id string, part {part_type}, status string, n_checks bigint, "
             "n_failed bigint, snapshot_id bigint, completed_at double",
-        ).write.mode("append").parquet(self.path)
+        ))
 
     def run_summary(self, run_id: str) -> dict:
         """Partitions done and failed checks, counting each partition once
         (its latest ledger row) however often it was marked done."""
-        df = self._read()
-        if df is None:
-            return {"run_id": run_id, "parts_done": 0, "n_failed": 0}
-        row = (
-            df.where(F.col("run_id") == run_id)
-            .groupBy("part")
-            .agg(F.max_by("n_failed", "completed_at").alias("n_failed"))
-            .agg(
-                F.count(F.lit(1)).alias("parts_done"),
-                F.sum("n_failed").alias("n_failed"),
-            )
-            .first()
-        )
-        return {
-            "run_id": run_id,
-            "parts_done": int(row["parts_done"] or 0),
-            "n_failed": int(row["n_failed"] or 0),
-        }
+        latest: dict = {}  # part -> its latest row
+        for r in self._ledger_rows(run_id):
+            last = latest.get(r["part"])
+            if last is None or r["completed_at"] > last["completed_at"]:
+                latest[r["part"]] = r
+        failed = [r["n_failed"] for r in latest.values() if r["n_failed"] is not None]
+        return {"run_id": run_id, "parts_done": len(latest), "n_failed": int(sum(failed))}
 
     def _fit_path(self, run_id: str, fingerprint: Optional[str] = None) -> str:
         path = f"{self.path.rstrip('/')}/_fit/run_id={run_id}"
         return path if fingerprint is None else f"{path}/fp={fingerprint}"
 
-    def _exists(self, path: str) -> bool:
-        """Whether ``path`` exists, on any file system Spark can write."""
-        sc = self.spark.sparkContext
-        p = sc._jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p)
-
     def save_fit(self, run_id: str, fingerprint: str, state: tuple) -> None:
         """Persist a fitted suite state (edges, reference bin counts, KS
         ECDF or None, reference category counts) for ``run_id`` under
-        ``fingerprint``."""
-        from driftspark.session import local_frame
-
+        ``fingerprint``: one parquet file, then the ``_SUCCESS`` marker,
+        replacing whatever that fingerprint held."""
         edges, ref_counts, ecdf, ref_cats = state
         rows = [("psi", f, e, ref_counts[f], None) for f, e in edges.items()]
         rows += [("ks", f, v, c, None) for f, (v, c, _) in (ecdf or {}).items()]
         rows += [("chi2", f, None, list(m.values()), list(m)) for f, m in ref_cats.items()]
-        local_frame(self.spark, rows, FIT_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(self._fit_path(run_id, fingerprint))
+        path = self._fit_path(run_id, fingerprint)
+        fs, p = self._hadoop(path)
+        fs.delete(p, True)
+        self._write(path, arrow_table(rows, FIT_SCHEMA))
+        _, success = self._hadoop(f"{path}/_SUCCESS")
+        fs.create(success, True).close()
 
     def load_fit(self, run_id: str, fingerprint: str) -> Optional[tuple]:
         """The state :meth:`save_fit` stored for ``run_id`` under
@@ -168,8 +223,7 @@ class CheckpointManager:
         path = self._fit_path(run_id, fingerprint)
         state = None
         if self._exists(f"{path}/_SUCCESS"):
-            pdf = self.spark.read.schema(FIT_SCHEMA).parquet(path).toPandas()
-            state = _fit_state(pdf)
+            state = _fit_state(self._tables(path))
         if state is None and self._exists(self._fit_path(run_id)):
             logger.warning(
                 "resumable_partition_drift: run %s has no complete fit stored "
@@ -181,12 +235,27 @@ class CheckpointManager:
         return state
 
 
-def _fit_state(pdf) -> Optional[tuple]:
+def _fit_state(tables) -> Optional[tuple]:
     """(edges, reference bin counts, KS ECDF, reference category counts)
-    from a stored fit frame, or None when a row's lengths are
-    inconsistent."""
+    from the parquet tables of a stored fit, or None when a row's lengths
+    are inconsistent."""
+
+    def rows(table):
+        cols = [table.column(n).combine_chunks() for n in ("values", "counts", "keys")]
+        for i, (family, feature) in enumerate(
+            zip(table.column("family").to_pylist(), table.column("feature").to_pylist())
+        ):
+            values, counts, keys = (c[i].values for c in cols)  # None: a NULL list
+            yield (
+                family, feature,
+                None if values is None else values.to_numpy(zero_copy_only=False),
+                None if counts is None else counts.to_numpy(zero_copy_only=False),
+                None if keys is None else keys.to_pylist(),
+            )
+
+    n_rows = sum(t.num_rows for t in tables)
     edges, ref_counts, ecdf, ref_cats = {}, {}, {}, {}
-    for family, feature, values, counts, keys in pdf.itertuples(index=False):
+    for family, feature, values, counts, keys in (r for t in tables for r in rows(t)):
         is_chi2 = family == "chi2"  # keys, no values; the others the reverse
         if counts is None or (values is None) != is_chi2 or (keys is None) == is_chi2:
             return None
@@ -203,7 +272,7 @@ def _fit_state(pdf) -> Optional[tuple]:
             ecdf[feature] = (values, counts, int(counts[-1]))
         else:
             return None
-    if len(edges) + len(ecdf) + len(ref_cats) != len(pdf):  # a (family, feature) twice
+    if len(edges) + len(ecdf) + len(ref_cats) != n_rows:  # a (family, feature) twice
         return None
     return edges, ref_counts, ecdf, ref_cats
 
@@ -250,11 +319,12 @@ def resumable_partition_drift(
     off (idempotent per partition).  The PSI/KS/chi2 reference is fitted
     at most ONCE per call, before the batch loop, and persisted in the
     checkpoint: a resume whose reference and fit settings match loads it
-    and runs no fit job.  Each batch then runs two scans that filter the
-    input to its own test partitions: one count for PSI and chi2 and one
-    for KS.  The part
+    and runs no fit job.  Each batch then runs one count, filtered to its
+    own test partitions, that scores PSI, chi2 and (with
+    ``ks_preaggregate``) KS; raw-value KS adds its own scan.  The part
     filter prunes no file, so each scan still reads the whole input.  The
-    ledger write that marks the batch done runs on the driver-built rows.
+    ledger reads and the append that marks a batch done are driver-side
+    file operations that run no Spark job (see the module docstring).
     Returns the verdicts computed in this
     invocation, typed like partition_verdicts' output even when nothing
     is pending.  The partitions are the non-NULL part ids of the TEST

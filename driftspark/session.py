@@ -61,6 +61,16 @@ def local_frame(
     pickled Python RDD and pay a Spark job on every read.  Naive
     TimestampType values mean local time, as they do for
     ``createDataFrame(list)``."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
+
+
+def arrow_table(rows: Sequence, schema: Union[str, StructType]):
+    """``rows`` (tuples or ``Row``s in ``schema`` order) as the
+    ``pyarrow.Table`` of ``schema`` (DDL or StructType), the table
+    :func:`local_frame` hands to Spark.  Naive TimestampType values mean
+    local time."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -73,8 +83,7 @@ def local_frame(
         if isinstance(field.dataType, TimestampType):
             values = [v if v is None else v.astimezone(timezone.utc) for v in values]
         arrays.append(pa.array(values, type=arrow_field.type))
-    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
-    return spark.createDataFrame(table, schema)
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
 
 
 def concurrently(

@@ -49,8 +49,26 @@ logger = logging.getLogger(__name__)
 def nn(col: str) -> Column:
     """NULL out NaNs so Spark aggregates skip them like pandas dropna
     (reference drops NaN before every statistic, e.g. ks_test.py:96-97)."""
-    c = F.col(col).cast("double")
-    return F.when(~F.isnan(c), c)
+    return F.expr(_nn_sql(col))
+
+
+def _nn_sql(col: str) -> str:
+    """:func:`nn` as SQL text.  ``col`` names a column as ``F.col`` reads
+    it: dots separate nested fields, unless the name is backquoted."""
+    if "`" not in col:
+        col = ".".join(f"`{part}`" for part in col.split("."))
+    v = f"CAST({col} AS DOUBLE)"
+    return f"CASE WHEN NOT isnan({v}) THEN {v} END"
+
+
+def _sql_double(x: float) -> str:
+    """A SQL literal that parses back to exactly the double ``x``: the
+    shortest round-trip ``repr`` with the ``D`` suffix (-0.0 included), or
+    a cast of the special values' strings."""
+    x = float(x)
+    if math.isnan(x) or math.isinf(x):
+        return f"CAST('{x!r}' AS DOUBLE)"  # 'nan', 'inf', '-inf'
+    return f"{x!r}D"
 
 
 # ---------------------------------------------------------------------------
@@ -175,15 +193,13 @@ def bucket_expr(col: str, edges: np.ndarray) -> Column:
     Right-closed bins (e_{i}, e_{i+1}], first bin [e_0, e_1].  Returns NULL
     for out-of-range or null/NaN values.  Bin index = number of interior
     edges strictly below the value — a whole-stage-codegen'd sum of
-    comparisons, no UDF.
+    comparisons, no UDF, built from ONE SQL expression string (one Py4J
+    call, where chaining Column operators costs a round trip each).
     """
-    v = nn(col)
-    e = [float(x) for x in edges]
-    bin_idx = F.lit(0)
-    for interior in e[1:-1]:
-        bin_idx = bin_idx + (v > F.lit(interior)).cast("int")
-    in_range = (v >= F.lit(e[0])) & (v <= F.lit(e[-1]))
-    return F.when(in_range, bin_idx)
+    v = _nn_sql(col)
+    e = [_sql_double(x) for x in edges]
+    bin_idx = " + ".join(["0", *(f"CAST({v} > {x} AS INT)" for x in e[1:-1])])
+    return F.expr(f"CASE WHEN {v} >= {e[0]} AND {v} <= {e[-1]} THEN {bin_idx} END")
 
 
 def digitize_clip_expr(col: str, edges: np.ndarray, n_bins: int) -> Column:
@@ -192,15 +208,13 @@ def digitize_clip_expr(col: str, edges: np.ndarray, n_bins: int) -> Column:
 
     digitize(x, bins) - 1 == (# of cutoffs <= x) - 1; uses the exact
     linspace doubles as cutoffs so float-boundary behavior matches numpy.
-    NULL in → NULL out (NaN confidence is not meaningful).
+    NULL in → NULL out (NaN confidence is not meaningful).  One SQL
+    expression string, as :func:`bucket_expr`.
     """
-    v = nn(col)
-    cnt = F.lit(0)
-    for cutoff in [float(x) for x in edges[:-1]]:
-        cnt = cnt + (v >= F.lit(cutoff)).cast("int")
-    idx = cnt - F.lit(1)
-    clipped = F.least(F.greatest(idx, F.lit(0)), F.lit(n_bins - 1))
-    return F.when(v.isNotNull(), clipped)
+    v = _nn_sql(col)
+    cnt = " + ".join(["0", *(f"CAST({v} >= {_sql_double(x)} AS INT)" for x in edges[:-1])])
+    clipped = f"least(greatest(({cnt}) - 1, 0), {int(n_bins) - 1})"
+    return F.expr(f"CASE WHEN {v} IS NOT NULL THEN {clipped} END")
 
 
 # ---------------------------------------------------------------------------

@@ -7,7 +7,7 @@ partition of the test split is compared against the GLOBAL reference split
 (edges and expectations fitted once on reference, broadcast into the plan),
 yielding one verdict row per (partition, feature, check).
 
-Scale design — a fit, then two short job chains per scored batch:
+Scale design — a fit, then one short job chain per scored batch:
 * The PSI, KS and chi2 reference state is fitted once and every batch of
   partitions scores against it (:class:`_VerdictSuite`, also the
   streaming monitor's: a micro-batch is one partition).  The fit is ONE
@@ -18,11 +18,12 @@ Scale design — a fit, then two short job chains per scored batch:
   over that budget the separate fits (per-column ``percentile`` edges, a
   bin count, the ECDF thinned from the same persisted count, the
   category cap in Spark) run instead.
-* PSI and chi-square share ONE count of the test rows through the
-  keyed-count primitive, driftspark.stats.key_counts
+* PSI, chi-square and preaggregated KS share ONE count of the test rows
+  through the keyed-count primitive, driftspark.stats.key_counts
   (:func:`_score_counts`; psi_by_partition and chi2_by_partition, which
   have no fitted reference, count the reference rows in it too), grouped
-  by (is_ref, part, feature, key).  It reaches the driver through one
+  by (is_ref, part, feature, key), the key a (value double, cat string)
+  struct so KS values stay doubles.  It reaches the driver through one
   collect bounded by :data:`MAX_REF_ECDF_POINTS` rows, which also yields
   the NULL-part drop counts.  Categories follow ONE rule
   (stats._cap_counts, in Spark over the budget): each (part, feature)
@@ -34,9 +35,9 @@ Scale design — a fit, then two short job chains per scored batch:
 * KS D scores each (part, feature) test group against the fitted
   reference ECDF (thinned, when over budget, on the exact cumulative frame
   of driftspark.stats).  Preaggregated test counts within the row budget
-  are scored on the driver, all groups at once; otherwise the ECDF is
-  broadcast into pandas groups.  p-values for the O(parts x features) D
-  statistics are driver math.
+  (the shared count's KS rows, in the suite) are scored on the driver,
+  all groups at once; otherwise the ECDF is broadcast into pandas groups.
+  p-values for the O(parts x features) D statistics are driver math.
 """
 
 from __future__ import annotations
@@ -51,6 +52,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -121,30 +123,40 @@ def _score_counts(
     part_col: str = "part",
     max_categories: int = 1000,
     ref_cats: Optional[Dict[str, Dict]] = None,
+    ecdf=None,
+    ks_cols: Sequence[str] = (),
 ) -> tuple:
     """(reference bin counts, test bin counts by part, reference category
-    counts, test category counts by (part, feature)) from ONE
+    counts, test category counts by (part, feature), KS rows) from ONE
     :func:`key_counts` over the test rows, plus the reference rows when
     ``ref_df`` is given (psi_by_partition and chi2_by_partition, which
     have no fitted reference).  The verdict suite passes no ``ref_df``
-    and its fitted ``ref_cats``.
+    and its fitted ``ref_cats``, and, for preaggregated KS, its fitted
+    ``ecdf`` (dict or Broadcast) with ``ks_cols``.
 
-    Keys use the :func:`psi_counts_fused` namespace: ``"#n:<col>"`` is the
-    fitted bin as a string, ``"#c:<col>"`` the category.  The rows reach
-    the driver through one bounded collect of at most
+    Keys are (value double, cat string) structs under the
+    :func:`psi_counts_fused` feature namespace: ``"#n:<col>"`` is the
+    fitted bin as a string, ``"#c:<col>"`` the category and ``"#k:<col>"``
+    the KS value itself (the :func:`nn` double, never a string).  The rows
+    reach the driver through one bounded collect of at most
     :data:`MAX_REF_ECDF_POINTS` rows, which also gives the NULL-part test
-    rows (counted and logged, never scored).  The category rule
-    (stats._cap_counts) then runs there: reference counts counted here
-    are capped on their own, and each (part, feature) group is capped on
-    its own with the reference members pinned, so a partition's chi2
-    depends on its own rows and the reference alone.  Over the row budget
-    the same rule runs in Spark (stats._cap_categories) and the collect
-    is unbounded, as the counts are O(parts x features x (bins + capped
-    categories)) rows.
+    rows (counted and logged, never scored).  The KS rows are scored
+    there, every (part, feature) group at once (:func:`_ks_d_of_counts`,
+    as ks_d_against_ecdf's preaggregated route; KS rows are
+    [(part, feature, d, n, m)]).  The category rule (stats._cap_counts)
+    runs there too: reference counts counted here are capped on their
+    own, and each (part, feature) group is capped on its own with the
+    reference members pinned, so a partition's chi2 depends on its own
+    rows and the reference alone.  Over the row budget the same rule runs
+    in Spark (stats._cap_categories) and the PSI/chi2 collect is
+    unbounded, as the counts are O(parts x features x (bins + capped
+    categories)) rows, while the same count's KS rows go to the pandas
+    groups of ks_d_against_ecdf.
 
     Every part with any test row gets every PSI feature (all-zero bins
     when no value is in range); parts keep their ORIGINAL type."""
-    cols = list(dict.fromkeys([*edges_map, *cat_cols]))
+    ks_cols = _ks_fitted_cols(ks_cols, ecdf) if ks_cols else []
+    cols = list(dict.fromkeys([*edges_map, *cat_cols, *ks_cols]))
     if ref_df is None:
         u = test_df.select(
             *cols, F.col(part_col).alias("__part"), F.lit(False).alias("is_ref")
@@ -156,9 +168,16 @@ def _score_counts(
             test_df.withColumn("__part", F.col(part_col)),
             [*cols, "__part"],
         )
-    keys = {"#n:" + c: bucket_expr(c, e).cast("string") for c, e in edges_map.items()}
-    keys.update({"#c:" + c: F.col(c).cast("string") for c in cat_cols})
-    counts = key_counts(u, keys, ["is_ref", F.col("__part").alias("part")])
+
+    def key(value=F.lit(None).cast("double"), cat=F.lit(None).cast("string")):
+        return F.struct(value.alias("value"), cat.alias("cat"))
+
+    keys = {"#n:" + c: key(cat=bucket_expr(c, e).cast("string")) for c, e in edges_map.items()}
+    keys.update({"#c:" + c: key(cat=F.col(c).cast("string")) for c in cat_cols})
+    keys.update({"#k:" + c: key(value=nn(c)) for c in ks_cols})
+    counts = key_counts(u, keys, ["is_ref", F.col("__part").alias("part")]).select(
+        "is_ref", "part", "feature", "key.value", F.col("key.cat").alias("key"), "c"
+    )
 
     is_cat = F.col("feature").startswith("#c:")
     cat_counts = counts.where(is_cat & F.col("key").isNotNull())
@@ -166,26 +185,48 @@ def _score_counts(
     def scored(r) -> bool:  # a reference row, or a test row with a part
         return r["is_ref"] or r["part"] is not None
 
-    rows = counts.limit(MAX_REF_ECDF_POINTS + 1).collect()
-    in_budget = len(rows) <= MAX_REF_ECDF_POINTS
-    if not in_budget:
-        rows = counts.where(~is_cat)
-        if cat_cols:
-            if ref_cats is None:
-                ref_rows = cat_counts.where("is_ref").select("feature", "key", "c")
-                ref_cats = _category_counts_of(
-                    _cap_categories(ref_rows, max_categories).collect(), cat_cols
+    table = counts.limit(MAX_REF_ECDF_POINTS + 1).toArrow()
+    in_budget = table.num_rows <= MAX_REF_ECDF_POINTS
+    if in_budget:
+        is_ks = pc.starts_with(table.column("feature"), "#k:")
+        rows = table.filter(pc.invert(is_ks)).to_pylist()
+        ks = table.filter(is_ks)
+        ks = ks.filter(pc.and_(pc.is_valid(ks.column("part")), pc.is_valid(ks.column("value"))))
+        ks = ks.set_column(2, "feature", pc.utf8_slice_codeunits(ks.column("feature"), 3))
+        ks_rows = _ks_d_of_counts(ks, _fitted(ecdf)) if ks_cols else []
+    else:
+        del table  # the driver holds no collected rows while the recounts run
+
+        def psi_chi2():
+            rows = counts.where(F.col("feature").startswith("#n:")).drop("value")
+            if cat_cols:
+                test_rows = cat_counts.where(~F.col("is_ref")).select(
+                    "part", "feature", "key", "c"
                 )
-            # the NULL-part test rows cap as one more group: they only
-            # feed the drop count
-            test_rows = cat_counts.where(~F.col("is_ref")).select(
-                "part", "feature", "key", "c"
+                # the NULL-part test rows cap as one more group: they only
+                # feed the drop count
+                capped = _cap_categories(
+                    test_rows, max_categories, {"#c:" + c: m for c, m in ref_cats.items()}
+                )
+                rows = rows.unionByName(capped.withColumn("is_ref", F.lit(False)))
+            return rows.collect()
+
+        def ks():
+            if not ks_cols:
+                return []
+            values = counts.where(
+                F.col("feature").startswith("#k:")
+                & F.col("part").isNotNull()
+                & F.col("value").isNotNull()
+            ).select("part", F.substring("feature", 4, 1 << 30).alias("feature"), "value", "c")
+            return _ks_d_in_groups(values, ecdf, test_df.schema[part_col].dataType).collect()
+
+        if cat_cols and ref_cats is None:
+            ref_rows = cat_counts.where("is_ref").select("feature", "key", "c")
+            ref_cats = _category_counts_of(
+                _cap_categories(ref_rows, max_categories).collect(), cat_cols
             )
-            capped = _cap_categories(
-                test_rows, max_categories, {"#c:" + c: m for c, m in ref_cats.items()}
-            )
-            rows = rows.unionByName(capped.withColumn("is_ref", F.lit(False)))
-        rows = rows.collect()
+        rows, ks_rows = concurrently(test_df.sparkSession, psi_chi2, ks)
 
     def zeros():
         return {f: np.zeros(len(e) - 1, np.int64) for f, e in edges_map.items()}
@@ -235,7 +276,7 @@ def _score_counts(
                 dropped[kind],
                 part_col,
             )
-    return ref_bins, hists, ref_cats, test_cats
+    return ref_bins, hists, ref_cats, test_cats, ks_rows
 
 
 def _psi_rows(
@@ -271,7 +312,7 @@ def psi_by_partition(
     logged, never scored.  The part column keeps the input's type."""
     if not edges_map:
         raise ValueError("edges_map is empty")
-    ref_counts, hists, _, _ = _score_counts(ref_df, test_df, edges_map, (), part_col)
+    ref_counts, hists, _, _, _ = _score_counts(ref_df, test_df, edges_map, (), part_col)
     part_type = test_df.schema[part_col].dataType.simpleString()
     return local_frame(
         ref_df.sparkSession,
@@ -816,30 +857,14 @@ def ks_d_against_ecdf(
     through np.unique).  The default ships raw values in ONE shuffle to
     the pandas groups — right for continuous columns (distinct ≈ rows),
     where pre-aggregation would double the shuffled volume for no
-    shrink."""
+    shrink.  The verdict suite's preaggregated KS runs this math on the
+    KS rows of its one PSI/chi2 count instead (:func:`_score_counts`)."""
     spark = test_df.sparkSession
-    # accept a pre-made Broadcast so a long-running caller (the verdict
-    # suite scores every batch against the same fitted state) does not
-    # re-serialize and re-ship up to max_ref_ecdf_points pairs per call
-    from pyspark.broadcast import Broadcast
-
-    fitted = ecdf.value if isinstance(ecdf, Broadcast) else ecdf
-    # a column absent from the fitted state (all-NULL/NaN reference
-    # column — fit_ks_reference_ecdf's melt drops it) cannot be scored:
-    # skip it loudly instead of a KeyError inside applyInPandas
-    missing = [c for c in cols if c not in fitted]
-    if missing:
-        logger.warning(
-            "ks_d_against_ecdf: no fitted reference ECDF for %s "
-            "(all-NULL/NaN reference column?) — skipped",
-            missing,
-        )
-        cols = [c for c in cols if c in fitted]
+    cols = _ks_fitted_cols(cols, ecdf)
     # output schema preserves the partition column's original type
-    part_sql_type = test_df.schema[part_col].dataType.simpleString()
-    out_schema = f"part {part_sql_type}, feature string, d double, n long, m long"
+    part_type = test_df.schema[part_col].dataType
     if not cols:
-        return local_frame(spark, [], out_schema)
+        return local_frame(spark, [], _ks_schema(part_type))
 
     # NULL-part rows are excluded like psi/chi2 (which count + warn about
     # them in the verdict suite) — a part=NULL verdict row belongs to no
@@ -854,9 +879,48 @@ def ks_d_against_ecdf(
         )
         counts = melted.limit(MAX_REF_ECDF_POINTS + 1).toArrow()
         if counts.num_rows <= MAX_REF_ECDF_POINTS:
-            return local_frame(spark, _ks_d_of_counts(counts, fitted), out_schema)
+            return local_frame(spark, _ks_d_of_counts(counts, _fitted(ecdf)), _ks_schema(part_type))
+    return _ks_d_in_groups(melted, ecdf, part_type)
 
-    b_ecdf = ecdf if isinstance(ecdf, Broadcast) else spark.sparkContext.broadcast(ecdf)
+
+def _fitted(ecdf) -> Dict[str, tuple]:
+    """The fitted ECDF dict of ``ecdf``, a dict or its Broadcast."""
+    return ecdf.value if isinstance(ecdf, Broadcast) else ecdf
+
+
+def _ks_schema(part_type) -> str:
+    """KS rows' (part, feature, d, n, m) schema, part typed ``part_type``."""
+    return f"part {part_type.simpleString()}, feature string, d double, n long, m long"
+
+
+def _ks_fitted_cols(cols: Sequence[str], ecdf) -> List[str]:
+    """The ``cols`` that have a fitted reference ECDF in ``ecdf`` (a dict
+    or its Broadcast).  A column absent from the fitted state (an
+    all-NULL/NaN reference column, which the fit's melt drops) cannot be
+    scored: it is skipped loudly instead of a KeyError on the driver or
+    inside applyInPandas."""
+    fitted = _fitted(ecdf)
+    missing = [c for c in cols if c not in fitted]
+    if missing:
+        logger.warning(
+            "ks_d_against_ecdf: no fitted reference ECDF for %s "
+            "(all-NULL/NaN reference column?) — skipped",
+            missing,
+        )
+    return [c for c in cols if c in fitted]
+
+
+def _ks_d_in_groups(values: DataFrame, ecdf, part_type) -> DataFrame:
+    """(part, feature, d, n, m) of a (part, feature, value[, c]) frame of
+    non-NULL parts and values — raw values, or distinct values with their
+    counts ``c`` — each (part, feature) group scored in applyInPandas
+    against ``ecdf`` (a dict or its Broadcast), broadcast once by repeat
+    callers: the verdict suite scores every batch or micro-batch against
+    the same fitted state, and re-serializing up to max_ref_ecdf_points
+    pairs per call would cost each one."""
+    b_ecdf = ecdf
+    if not isinstance(ecdf, Broadcast):
+        b_ecdf = values.sparkSession.sparkContext.broadcast(ecdf)
 
     def compute(key, pdf):
         part, feat = key
@@ -871,8 +935,8 @@ def ks_d_against_ecdf(
         ((_, _, d, n, m),) = _ks_d_of_counts(counts, {feat: b_ecdf.value[feat]})
         return pd.DataFrame({"part": [part], "feature": [feat], "d": [d], "n": [n], "m": [m]})
 
-    return melted.groupBy("part", "feature").applyInPandas(
-        compute, schema=out_schema
+    return values.groupBy("part", "feature").applyInPandas(
+        compute, schema=_ks_schema(part_type)
     )
 
 
@@ -974,7 +1038,7 @@ def chi2_by_partition(
     so drift concentrated in null-part rows can't vanish silently."""
     if not cat_cols:
         return []
-    _, _, ref_cats, test_cats = _score_counts(
+    _, _, ref_cats, test_cats, _ = _score_counts(
         ref_df, test_df, {}, cat_cols, part_col, max_categories
     )
     return _chi2_rows(ref_cats, test_cats, min_samples)
@@ -1133,33 +1197,37 @@ class _VerdictSuite:
 
     def rows(self, test_df: DataFrame) -> List[tuple]:
         """The verdict rows (VERDICT_SCHEMA order) of every partition of
-        ``test_df``, built on the driver from two concurrent job chains —
-        the PSI + chi2 count of the test rows and the KS scoring — plus W1
-        when asked for.  Fits the reference first when it is not fitted."""
+        ``test_df``, built on the driver from one count of the test rows
+        (:func:`_score_counts`), which scores PSI, chi2 and, with
+        ``ks_preaggregate``, KS; the raw-value KS scoring and the opt-in
+        W1 run concurrently with it.  Fits the reference first when it is
+        not fitted."""
         if self.fitted is None:
             self.fit()
         ref_df, part_col = self.ref_df, self.part_col
         edges, ref_counts, _, ref_cats = self.fitted
+        shared_ks = self._b_ecdf is not None and self.ks_preaggregate
 
         def run_counts():
-            # PSI and chi2 share one count
-            if not edges and not self.cat_cols:
-                return [], []
-            _, hists, _, test_cats = _score_counts(
+            # PSI, chi2 and preaggregated KS share one count
+            if not edges and not self.cat_cols and not shared_ks:
+                return [], [], []
+            _, hists, _, test_cats, ks_rows = _score_counts(
                 None, test_df, edges, self.cat_cols, part_col,
                 self.max_categories, ref_cats,
+                ecdf=self._b_ecdf if shared_ks else None,
+                ks_cols=self.ks_cols if shared_ks else (),
             )
             return (
                 _psi_rows(hists, ref_counts, self.min_bin_size),
                 _chi2_rows(ref_cats, test_cats),
+                ks_rows,
             )
 
         def run_ks():
-            if self._b_ecdf is None:
+            if self._b_ecdf is None or shared_ks:
                 return []
-            return ks_d_against_ecdf(
-                test_df, self.ks_cols, self._b_ecdf, part_col, self.ks_preaggregate
-            ).collect()
+            return ks_d_against_ecdf(test_df, self.ks_cols, self._b_ecdf, part_col).collect()
 
         def run_w1():
             # opt-in scale-bearing check: normalized W1 (w1 / global ref std)
@@ -1174,7 +1242,7 @@ class _VerdictSuite:
             stds = {c: s for c, (mu, s) in moment_stats(ref_df, w1_cols).items()}
             return w1_by_partition(ref_df, test_df, w1_cols, part_col).collect(), stds
 
-        (psi_rows, chi2_rows), ks_rows, (w1_rows, w1_stds) = concurrently(
+        (psi_rows, chi2_rows, ks_rows), raw_ks_rows, (w1_rows, w1_stds) = concurrently(
             ref_df.sparkSession, run_counts, run_ks, run_w1
         )
 
@@ -1183,12 +1251,11 @@ class _VerdictSuite:
              psi < self.psi_threshold, n_ref, n_test)
             for part, f, psi, n_ref, n_test in psi_rows
         ]
-        for r in ks_rows:
-            d, n, m = float(r["d"]), int(r["n"]), int(r["m"])
+        for part, f, d, n, m in ks_rows + raw_ks_rows:
+            d, n, m = float(d), int(n), int(m)
             p = ks_2samp_pvalue(d, n, m)
             rows.append(
-                (r["part"], r["feature"], "ks", d, p,
-                 *pvalue_verdict(p, self.ks_threshold), n, m)
+                (part, f, "ks", d, p, *pvalue_verdict(p, self.ks_threshold), n, m)
             )
         rows += [
             (rec["part"], rec["feature"], "chi2", rec["stat"], rec["p"],

@@ -1,8 +1,11 @@
 """Broadcast-ECDF per-partition KS == numpy oracle; distributed ECDF
 thinning keeps exact cumulative counts."""
 
+from collections import Counter
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from driftspark import numerics as nm
 from driftspark.synth import synth_image_table
@@ -188,3 +191,57 @@ def test_preagg_and_raw_paths_bit_identical(spark, monkeypatch):
     over_budget, over_budget_udf = route(True)
     assert (driver_udf, over_budget_udf, raw_udf) == (False, True, True)
     assert driver == over_budget == raw and len(driver) == 6
+
+
+def test_suite_scores_ks_from_its_shared_count(spark, monkeypatch):
+    """With ks_preaggregate, the verdict suite's KS rows come from its one
+    PSI/chi2 count, not from a KS job chain of their own: D, n and m are
+    bit-identical to ks_d_against_ecdf's preaggregated and raw routes,
+    within the driver-row budget and over it, where the same count's KS
+    rows go to the pandas groups.  NULL parts and NaN values are not
+    scored."""
+    import pandas as pd
+
+    import driftspark.verdicts as vd
+    from driftspark.verdicts import _VerdictSuite, ks_d_against_ecdf
+
+    rng = np.random.RandomState(37)
+    n = 3000
+    ref = spark.createDataFrame(pd.DataFrame({
+        "x": rng.normal(0, 1, n),
+        "q": rng.randint(0, 5, n).astype(float),
+        "c": rng.choice(["a", "b", "c"], n),
+    }))
+    x = rng.normal(0.5, 1, n)
+    x[::97] = np.nan
+    part = rng.randint(0, 3, n).astype(float)
+    part[::89] = np.nan
+    test = spark.createDataFrame(pd.DataFrame({
+        "x": x, "q": rng.randint(0, 5, n).astype(float),
+        "c": rng.choice(["a", "b", "d"], n), "part": part,
+    })).withColumn("part", F.col("part").cast("int"))
+    suite = _VerdictSuite(ref, ["x", "q"], ["c"], ks_preaggregate=True).fit()
+    ecdf = suite.fitted.ecdf
+
+    def suite_ks():
+        return {(r[0], r[1]): (r[3], r[7], r[8]) for r in suite.rows(test) if r[2] == "ks"}
+
+    def route(preaggregate):
+        out = ks_d_against_ecdf(test, ["x", "q"], ecdf, preaggregate=preaggregate)
+        return {(r["part"], r["feature"]): (r["d"], r["n"], r["m"]) for r in out.collect()}
+
+    separate = Counter()
+    real_ks, real_groups = vd.ks_d_against_ecdf, vd._ks_d_in_groups
+    monkeypatch.setattr(vd, "ks_d_against_ecdf", lambda *a, **k: (
+        separate.update(["ks_d_against_ecdf"]), real_ks(*a, **k))[1])
+    monkeypatch.setattr(vd, "_ks_d_in_groups", lambda *a, **k: (
+        separate.update(["pandas_groups"]), real_groups(*a, **k))[1])
+    within = suite_ks()
+    assert separate == Counter()
+    monkeypatch.setattr(vd, "MAX_REF_ECDF_POINTS", 100)
+    over_budget = suite_ks()
+    assert separate == {"pandas_groups": 1}
+    monkeypatch.undo()
+    want = route(True)
+    assert want == route(False) and len(want) == 6
+    assert within == over_budget == want

@@ -239,7 +239,7 @@ def _suite_cat_counts(suite, test_df):
     """{feature: capped category counts} of ``test_df`` scored as one
     partition by a fitted suite: the counts its chi2 rows score."""
     one = test_df.withColumn(suite.part_col, F.lit(0))
-    _, _, _, cats = vd._score_counts(
+    _, _, _, cats, _ = vd._score_counts(
         None, one, {}, suite.cat_cols, suite.part_col, suite.max_categories,
         suite.fitted.ref_cats,
     )
@@ -312,7 +312,7 @@ def _check_cdf_melt(ref, test, ref_rows, test_rows):
 
 def _check_bin_counts(ref, test, ref_rows, test_rows):
     with mock.patch.object(vd.logger, "warning") as warn:
-        ref_bins, hists, _, _ = vd._score_counts(ref, test, DEGENERATE_EDGES, (), "spart")
+        ref_bins, hists, _, _, _ = vd._score_counts(ref, test, DEGENERATE_EDGES, (), "spart")
     parts = {r["spart"] for r in test_rows} - {None}
     _eq(dict(hists), {
         p: {c: _hist([r for r in test_rows if r["spart"] == p], c) for c in DEGENERATE_EDGES}
@@ -526,3 +526,65 @@ def test_ks_d_all_one_sided_feature_skipped_loudly(spark, caplog):
     assert set(d) == {"x"}
     assert d["x"][0] > 0.2
     assert any("skipped" in r.message for r in caplog.records)
+
+
+def _chained_bucket_expr(col, edges):
+    """bucket_expr as a chain of Column operators: the builder that the
+    one-string SQL form replaced, kept as its oracle."""
+    v = F.col(col).cast("double")
+    v = F.when(~F.isnan(v), v)
+    e = [float(x) for x in edges]
+    bin_idx = F.lit(0)
+    for interior in e[1:-1]:
+        bin_idx = bin_idx + (v > F.lit(interior)).cast("int")
+    return F.when((v >= F.lit(e[0])) & (v <= F.lit(e[-1])), bin_idx)
+
+
+def _chained_digitize_clip_expr(col, edges, n_bins):
+    v = F.col(col).cast("double")
+    v = F.when(~F.isnan(v), v)
+    cnt = F.lit(0)
+    for cutoff in [float(x) for x in edges[:-1]]:
+        cnt = cnt + (v >= F.lit(cutoff)).cast("int")
+    clipped = F.least(F.greatest(cnt - F.lit(1), F.lit(0)), F.lit(n_bins - 1))
+    return F.when(v.isNotNull(), clipped)
+
+
+SQL_EDGE_SETS = [
+    np.array([-2.0, -1.0, -0.0, 0.1 + 0.2, 1e-05, 5e-324, 1.7976931348623157e308]),
+    np.array([0.0, 0.5, 3.0]),
+    np.array([-np.inf, -1.5, 2.0 / 3.0, np.inf]),
+    np.full(11, np.inf),  # an all-+inf reference column's edges
+    np.full(11, -np.inf),
+    np.array([np.nextafter(1.0, 0.0), 1.0, np.nextafter(1.0, 2.0)]),
+]
+
+
+@pytest.mark.parametrize("edges", SQL_EDGE_SETS, ids=range(len(SQL_EDGE_SETS)))
+def test_sql_key_expressions_bin_like_the_chained_builders(spark, edges):
+    """bucket_expr, digitize_clip_expr and nn, each one SQL string, give
+    the bins and values of the Column-chain builders on NULL, NaN, ±inf,
+    ±0.0, every edge and its two neighbours: every literal round-trips its
+    double exactly."""
+    finite = [float(e) for e in edges if np.isfinite(e)]
+    values = [None, float("nan"), float("inf"), float("-inf"), 0.0, -0.0, 1e300, -1e300]
+    with np.errstate(over="ignore"):  # the neighbour of the largest double is inf
+        values += [float(x) for e in finite
+                   for x in (np.nextafter(e, -np.inf), e, np.nextafter(e, np.inf))]
+    df = spark.createDataFrame([(v,) for v in values], "x double")
+    n_bins = max(len(edges) - 1, 1)
+    got = df.select(
+        "x",
+        st.bucket_expr("x", edges).alias("b"),
+        _chained_bucket_expr("x", edges).alias("b0"),
+        st.digitize_clip_expr("x", edges, n_bins).alias("d"),
+        _chained_digitize_clip_expr("x", edges, n_bins).alias("d0"),
+        st.nn("x").alias("v"),
+    ).collect()
+    assert len(got) == len(values)
+    for r in got:
+        assert (r["b"], r["d"]) == (r["b0"], r["d0"]), r
+        x, v = r["x"], r["v"]
+        assert (v is None) == (x is None or math.isnan(x)), r
+        if v is not None:
+            assert np.float64(v).tobytes() == np.float64(x).tobytes(), r

@@ -427,6 +427,106 @@ def test_ledger_schema_and_readers(spark, tmp_path, part_type, parts):
     assert cp.run_summary("led01") == {"run_id": "led01", "parts_done": 2, "n_failed": 2}
 
 
+LEDGER_DDL = (
+    "run_id string, part int, status string, n_checks bigint, n_failed bigint, "
+    "snapshot_id bigint, completed_at double"
+)
+
+
+def test_a_spark_written_ledger_reads_the_same(spark, tmp_path):
+    """A ledger that Spark's parquet writer appended to (part files plus
+    _SUCCESS and checksums), then one more driver-written batch, reads
+    through completed_parts and run_summary as one ledger."""
+    path = str(tmp_path / "ledger")
+    rows = [("old01", 0, "done", 3, 1, 7, 1.0), ("old01", 1, "done", 3, 0, 7, 1.0),
+            ("old01", 0, "done", 3, 2, 7, 2.0), ("other", 5, "done", 1, 1, None, 1.0)]
+    local_frame(spark, rows[:2], LEDGER_DDL).write.mode("append").parquet(path)
+    local_frame(spark, rows[2:], LEDGER_DDL).write.mode("append").parquet(path)
+    assert os.path.exists(f"{path}/_SUCCESS")
+    cp = CheckpointManager(spark, path)
+    assert cp.completed_parts("old01") == [0, 1]
+    assert cp.run_summary("old01") == {"run_id": "old01", "parts_done": 2, "n_failed": 2}
+    cp.mark_done("old01", local_frame(spark, [(2, False), (2, True)], "part int, passed boolean"))
+    assert cp.completed_parts("old01") == [0, 1, 2]
+    assert cp.run_summary("old01") == {"run_id": "old01", "parts_done": 3, "n_failed": 3}
+    assert spark.read.parquet(path).count() == 5
+
+
+def test_timestamp_parts_read_as_spark_collects_them(spark, tmp_path):
+    """Timestamp part ids, appended by Spark (INT96) or by mark_done, come
+    back from completed_parts as the naive local datetimes Spark's collect
+    gives, so a resume recognises them as done."""
+    import datetime
+
+    path = str(tmp_path / "ledger")
+    ddl = LEDGER_DDL.replace("part int", "part timestamp")
+    t0 = datetime.datetime(2024, 3, 1, 12, 30, 15, 123456)
+    local_frame(spark, [("ts01", t0, "done", 1, 0, None, 1.0)], ddl).write.parquet(path)
+    cp = CheckpointManager(spark, path)
+    t1 = t0 + datetime.timedelta(days=1)
+    cp.mark_done("ts01", local_frame(spark, [(t1, True)], "part timestamp, passed boolean"))
+    want = sorted(r["part"] for r in spark.read.parquet(path).collect())
+    assert want == [t0, t1]
+    assert cp.completed_parts("ts01") == want
+    assert cp.pending_parts("ts01", [t0, t1, t1 + datetime.timedelta(days=1)]) == [
+        t1 + datetime.timedelta(days=1)]
+
+
+def test_an_unfinished_append_is_invisible(spark, tmp_path):
+    """A _tmp- file left by a crash in the middle of an append is read by
+    neither the ledger's readers nor Spark's."""
+    path = str(tmp_path / "ledger")
+    cp = CheckpointManager(spark, path)
+    cp.mark_done("tmp01", local_frame(spark, [(0, True)], "part int, passed boolean"))
+    (done,) = glob.glob(f"{path}/part-*.parquet")
+    shutil.copy(done, f"{path}/_tmp-{uuid.uuid4().hex}.parquet")
+    with open(f"{path}/_tmp-{uuid.uuid4().hex}.parquet", "wb") as half:
+        half.write(open(done, "rb").read()[:40])
+    assert cp.completed_parts("tmp01") == [0]
+    assert cp.run_summary("tmp01") == {"run_id": "tmp01", "parts_done": 1, "n_failed": 0}
+    assert spark.read.parquet(path).count() == 1
+
+
+def test_concurrent_appends_all_land(spark, tmp_path):
+    """mark_done calls from more threads than cores, on one ledger, all
+    persist: no append clobbers another."""
+    import sys
+    import threading
+
+    cp = CheckpointManager(spark, str(tmp_path / "ledger"))
+    n = 2 * (os.cpu_count() or 2)
+    frames = [local_frame(spark, [(p, True)], "part int, passed boolean") for p in range(n)]
+    start = threading.Barrier(n)
+
+    def append(v):
+        start.wait(timeout=60)
+        cp.mark_done("conc01", v)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=append, args=(v,)) for v in frames]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert cp.completed_parts("conc01") == list(range(n))
+    assert len(glob.glob(str(tmp_path / "ledger" / "part-*.parquet"))) == n
+
+
+def test_checkpoint_writes_no_spark_job():
+    """The ledger and the fit store are driver-written files: checkpoint.py
+    makes no DataFrameWriter call, so an append cannot slide back to a
+    Spark write job."""
+    import driftspark.checkpoint as checkpoint
+
+    with open(checkpoint.__file__) as f:
+        assert ".write." not in f.read()
+
+
 def _last_job_id(sc) -> int:
     """The id of a marker job run now.  Spark numbers jobs in submission
     order whichever thread submits them, so the gap between two markers
@@ -449,7 +549,7 @@ def _jobs_of(sc, fn) -> int:
 
 #: Spark jobs of the fit-loading resume below: lower it when a change
 #: lowers the count
-RESUME_JOB_CEILING = 11
+RESUME_JOB_CEILING = 6
 
 
 def test_resume_job_budget(spark, drifted_parquet, tmp_path):
@@ -506,16 +606,26 @@ def budget_frame(spark, tmp_path_factory):
     ref, test = df.where("split = 'ref'"), df.where("split = 'test'")
     cbpe = CBPE()
     cbpe.fit(SparkDataset(ref, proba_col="p"))
+    ledger = CheckpointManager(spark, str(tmp_path_factory.mktemp("budget") / "ledger"))
+    ledger.save_fit(
+        "budget01", "0" * 16,
+        vd.fit_reference(ref, ["w", "h"], ["w", "h"], cat_cols=["fmt", "hq"]),
+    )
     return SimpleNamespace(
         df=df, ref=ref, test=test, edges=quantile_edges(ref, ["w", "h"], 10),
         ecdf=vd.fit_ks_reference_ecdf(ref, ["w", "h"]),
         verdicts=vd.partition_verdicts(df, ["w", "h"], ["fmt", "hq"]),
-        ledger=CheckpointManager(spark, str(tmp_path_factory.mktemp("budget") / "ledger")),
+        ledger=ledger,
         monitor=StreamingDriftMonitor(
             ref, ["w", "h"], cat_cols=["fmt", "hq"], max_categories=10
         ),
         cbpe=cbpe, test_ds=SparkDataset(test, proba_col="p"),
     )
+
+
+def _loaded(state):
+    assert state is not None
+    return state
 
 
 #: {operator: (Spark-job ceiling on ``budget_frame``, the call)}: lower a
@@ -560,8 +670,15 @@ JOB_BUDGET = {
             f.ref, ["w", "h"], ["w", "h"], cat_cols=["fmt", "hq"], max_categories=10)),
     "partition_verdicts": (
         7, lambda f: vd.partition_verdicts(f.df, ["w", "h"], ["fmt", "hq"]).collect()),
+    "partition_verdicts[preaggregate]": (
+        5, lambda f: vd.partition_verdicts(
+            f.df, ["w", "h"], ["fmt", "hq"], ks_preaggregate=True).collect()),
     "CheckpointManager.mark_done": (
-        1, lambda f: f.ledger.mark_done("budget01", f.verdicts)),
+        0, lambda f: f.ledger.mark_done("budget01", f.verdicts)),
+    "CheckpointManager.completed_parts": (
+        0, lambda f: f.ledger.completed_parts("budget01")),
+    "CheckpointManager.load_fit": (
+        0, lambda f: _loaded(f.ledger.load_fit("budget01", "0" * 16))),
 }
 
 

@@ -17,7 +17,7 @@ def _batch_cat_counts(monitor, batch_df):
     the monitor's chi2 rows score, from its suite's count of the batch as
     one partition."""
     suite = monitor.suite
-    _, _, _, cats = vd._score_counts(
+    _, _, _, cats, _ = vd._score_counts(
         None, batch_df.withColumn(suite.part_col, F.lit(0)), {}, suite.cat_cols,
         suite.part_col, suite.max_categories, suite.fitted.ref_cats,
     )
